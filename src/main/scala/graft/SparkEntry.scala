@@ -20,59 +20,39 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_flagship_top10")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.RefQueries.queries ++
-      graft.queries.JoinQueries.queries ++
-      graft.queries.RelQueries.queries ++
-      graft.etl.EtlQueries.queries ++
-      graft.etl.Sampling.queries ++
-      graft.etl.Profiler.queries ++
-      graft.etl.Checks.queries ++
-      graft.etl.SkewJoin.queries ++
-      graft.queries.EventQueries.queries ++
-      graft.text.TextOps.queries ++
-      graft.text.CurationOps.queries ++
-      graft.text.BpeTrainer.queries ++
-      graft.text.Dedup.queries ++
-      graft.text.SpanDedup.queries ++
-      graft.text.CorpusPipeline.queries ++
-      graft.text.LangId.queries ++
-      graft.text.QualityModel.queries ++
-      graft.vec.VectorOps.queries ++
-      graft.graph.Components.queries ++
-      graft.multimodal.Media.queries ++
-      graft.sources.Sinks.queries ++
-      graft.streaming.CorpusStreaming.queries ++
-      graft.streaming.EventStreaming.queries ++
-      graft.streaming.VectorStreaming.queries
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** Every registered module: its queries (one per implemented operator
+    * from SURVEY.md §2) and, per query, the equivalent ANSI SQL runnable
+    * by DuckDB on the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    graft.queries.RefQueries.oracle ++
-      graft.queries.JoinQueries.oracle ++
-      graft.queries.RelQueries.oracle ++
-      graft.etl.EtlQueries.oracle ++
-      graft.etl.Sampling.oracle ++
-      graft.etl.Profiler.oracle ++
-      graft.etl.Checks.oracle ++
-      graft.etl.SkewJoin.oracle ++
-      graft.queries.EventQueries.oracle ++
-      graft.text.TextOps.oracle ++
-      graft.text.CurationOps.oracle ++
-      graft.text.BpeTrainer.oracle ++
-      graft.text.Dedup.oracle ++
-      graft.text.SpanDedup.oracle ++
-      graft.text.CorpusPipeline.oracle ++
-      graft.text.LangId.oracle ++
-      graft.text.QualityModel.oracle ++
-      graft.vec.VectorOps.oracle ++
-      graft.graph.Components.oracle ++
-      graft.multimodal.Media.oracle ++
-      graft.sources.Sinks.oracle ++
-      graft.streaming.CorpusStreaming.oracle ++
-      graft.streaming.EventStreaming.oracle ++
-      graft.streaming.VectorStreaming.oracle
+  private[graft] def modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+    Seq(
+      (graft.queries.RefQueries.queries, graft.queries.RefQueries.oracle),
+      (graft.queries.JoinQueries.queries, graft.queries.JoinQueries.oracle),
+      (graft.queries.RelQueries.queries, graft.queries.RelQueries.oracle),
+      (graft.etl.EtlQueries.queries, graft.etl.EtlQueries.oracle),
+      (graft.etl.Sampling.queries, graft.etl.Sampling.oracle),
+      (graft.etl.Profiler.queries, graft.etl.Profiler.oracle),
+      (graft.etl.Checks.queries, graft.etl.Checks.oracle),
+      (graft.etl.SkewJoin.queries, graft.etl.SkewJoin.oracle),
+      (graft.queries.EventQueries.queries, graft.queries.EventQueries.oracle),
+      (graft.text.TextOps.queries, graft.text.TextOps.oracle),
+      (graft.text.CurationOps.queries, graft.text.CurationOps.oracle),
+      (graft.text.BpeTrainer.queries, graft.text.BpeTrainer.oracle),
+      (graft.text.Dedup.queries, graft.text.Dedup.oracle),
+      (graft.text.SpanDedup.queries, graft.text.SpanDedup.oracle),
+      (graft.text.CorpusPipeline.queries, graft.text.CorpusPipeline.oracle),
+      (graft.text.LangId.queries, graft.text.LangId.oracle),
+      (graft.text.QualityModel.queries, graft.text.QualityModel.oracle),
+      (graft.vec.VectorOps.queries, graft.vec.VectorOps.oracle),
+      (graft.graph.Components.queries, graft.graph.Components.oracle),
+      (graft.multimodal.Media.queries, graft.multimodal.Media.oracle),
+      (graft.sources.Sinks.queries, graft.sources.Sinks.oracle),
+      (graft.streaming.CorpusStreaming.queries, graft.streaming.CorpusStreaming.oracle),
+      (graft.streaming.EventStreaming.queries, graft.streaming.EventStreaming.oracle),
+      (graft.streaming.VectorStreaming.queries, graft.streaming.VectorStreaming.oracle))
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.map(_._1).reduce(_ ++ _)
+
+  def oracleSql: Map[String, String] = modules.map(_._2).reduce(_ ++ _)
 }

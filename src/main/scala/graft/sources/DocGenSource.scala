@@ -110,17 +110,9 @@ object DocGen {
     */
   def dsv2Scan(spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.format("graft.sources.DocGenSource")
-      .option("numDocs", DefaultNumDocs.toString)
-      .option("numPartitions", DefaultNumPartitions.toString)
-      .load()
-      .where(col("doc_id") >= 1000L && col("doc_id") < 26000L)
-      .groupBy(col("shard"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        expr("bit_xor(doc_id)").as("xor_ids"),
-        sum(when(substring(col("body"), 1, 1) === "a", 1L).otherwise(0L)).as("n_body_a"))
-      .orderBy("shard")
+    SinkLifecycles.shardRollup(
+      SinkLifecycles.docs(spark, DefaultNumDocs, DefaultNumPartitions, 1000L, 26000L),
+      sum(when(substring(col("body"), 1, 1) === "a", 1L).otherwise(0L)).as("n_body_a"))
   }
 
   val dsv2ScanSql: String =
@@ -145,17 +137,13 @@ object DocGen {
   def dsv2Columnar(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.format("graft.sources.DocGenSource")
-      .option("numDocs", DefaultNumDocs.toString)
-      .option("columnar", "true")
-      .load()
-      .where(col("doc_id") >= 3000L && col("doc_id") < 41000L)
-      .groupBy(col("shard"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        expr("bit_xor(doc_id)").as("xor_ids"),
-        sum(when(substring(col("body"), 1, 1) === "b", 1L).otherwise(0L)).as("n_body_b"))
-      .orderBy("shard")
+    SinkLifecycles.shardRollup(
+      spark.read.format("graft.sources.DocGenSource")
+        .option("numDocs", DefaultNumDocs.toString)
+        .option("columnar", "true")
+        .load()
+        .where(col("doc_id") >= 3000L && col("doc_id") < 41000L),
+      sum(when(substring(col("body"), 1, 1) === "b", 1L).otherwise(0L)).as("n_body_b"))
   }
 
   val dsv2ColumnarSql: String =
@@ -179,10 +167,7 @@ object DocGen {
   def dsv2AggPushdown(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.format("graft.sources.DocGenSource")
-      .option("numDocs", DefaultNumDocs.toString)
-      .load()
-      .where(col("doc_id") >= 777L && col("doc_id") < 44444L)
+    SinkLifecycles.docs(spark, DefaultNumDocs, DefaultNumPartitions, 777L, 44444L)
       .groupBy(col("shard"))
       .agg(
         count(col("doc_id")).as("n_docs"),
@@ -302,11 +287,7 @@ object DocGen {
   def dsv2Spj(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val s = spark.newSession()
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = SinkLifecycles.withSpj(spark.newSession())
     def side(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
       .option("numDocs", DefaultNumDocs.toString)
       .option("partitionBy", "shard")
@@ -353,12 +334,8 @@ object DocGen {
   def dsv2SpjBucket(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_docgen", classOf[DocGenCatalog].getName)
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = SinkLifecycles.withSpj(
+      SinkLifecycles.session(spark, Seq("graft_docgen"), classOf[DocGenCatalog]))
     def side(lo: Long, hi: Long) = s.read.table("graft_docgen.docs_60000_b8")
       .where(col("doc_id") >= lo && col("doc_id") < hi)
     val a = side(0L, 30000L)
@@ -394,10 +371,7 @@ object DocGen {
   def dsv2MetadataCols(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.format("graft.sources.DocGenSource")
-      .option("numDocs", DefaultNumDocs.toString)
-      .option("numPartitions", DefaultNumPartitions.toString)
-      .load()
+    SinkLifecycles.docs(spark, DefaultNumDocs, DefaultNumPartitions)
       .select(col("doc_id"), col("_range_start").as("range_start"))
       .groupBy(col("range_start"))
       .agg(
@@ -428,8 +402,7 @@ object DocGen {
     */
   def dsv2CatalogFunction(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_docgen", classOf[DocGenCatalog].getName)
+    val s = SinkLifecycles.session(spark, Seq("graft_docgen"), classOf[DocGenCatalog])
     s.sql(
       """SELECT graft_docgen.bucket(5, doc_id) AS b,
         |       CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -502,8 +475,7 @@ object DocGen {
     // cannot be combined
     val streamed = sparkTuned.table(sink)
     val batch = rollup(
-      sparkTuned.read.format("graft.sources.DocGenSource")
-        .option("numDocs", nDocs.toString).option("numPartitions", "4").load())
+      SinkLifecycles.docs(sparkTuned, nDocs, 4))
     val nDiff = streamed.exceptAll(batch).union(batch.exceptAll(streamed)).count()
     val totals = streamed.agg(count(lit(1)), sum(col("n_docs"))).collect().head
     import spark.implicits._

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructType}
+import SinkLifecycles.scratchDir
 
 /** PER-COLUMN DATA-SKIPPING STATISTICS (round 15) — the Delta-style
   * min/max envelope for ARBITRARY data columns, beyond the dedicated
@@ -41,8 +42,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
   * `name:t:lo:hi:nc` with `t` ∈ `l`(integral) `d`(double) `s`(string);
   * string bounds are base64(UTF-8) so the manifest's regex parse never
   * meets a quote or brace; numeric bounds are their exact decimal forms;
-  * `!` bounds mark an all-null file; `nc` is the null count (absent on
-  * legacy 4-field tokens, which still decode and prune by bounds).
+  * `!` bounds mark an all-null file; `nc` is the null count. A token
+  * that does not decode carries no stats and never prunes.
   */
 object SinkColStats {
 
@@ -78,11 +79,11 @@ object SinkColStats {
 
   /** One column's recorded file statistics. `lo`/`hi` are the non-null
     * envelope (null = the file has NO non-null values for the column —
-    * encoded `!`); `nc` is the file's WRITE-TIME null count (None on
-    * legacy 4-field tokens). Under merge-on-read delete vectors both
-    * stay sound over-approximations: deletes can only remove rows, so
-    * nc == 0 still proves "no nulls" and boundless still proves "no
-    * values" — the two prune directions IS NULL / IS NOT NULL need.
+    * encoded `!`); `nc` is the file's WRITE-TIME null count (None:
+    * unknown). Under merge-on-read delete vectors both stay sound
+    * over-approximations: deletes can only remove rows, so nc == 0 still
+    * proves "no nulls" and boundless still proves "no values" — the two
+    * prune directions IS NULL / IS NOT NULL need.
     */
   final case class ColStat(t: Char, lo: String, hi: String, nc: Option[Long] = None)
 
@@ -211,8 +212,6 @@ object SinkColStats {
         else if (t == 's') ColStat('s', b64d(l), b64d(h), nc)
         else ColStat(t, l, h, nc)
       tok.split(":", -1) match {
-        case Array(name, t, l, h) if t.length == 1 => // legacy: no null count
-          Some(name -> bounds(t.charAt(0), l, h, None))
         case Array(name, t, l, h, nc) if t.length == 1 && nc.nonEmpty &&
           nc.length <= 18 && nc.forall(_.isDigit) =>
           Some(name -> bounds(t.charAt(0), l, h, Some(nc.toLong)))
@@ -239,7 +238,7 @@ object SinkColStats {
       else {
         // bounds union over members WITH values (a boundless member
         // contributes none); null counts SUM — but only when every
-        // member carries one (a legacy member blanks the union's count,
+        // member carries one (an unknown count blanks the union's,
         // never under-counts it)
         val bounded = stats.filter(_.lo != null)
         val nc: Option[Long] =
@@ -452,16 +451,10 @@ object SinkColStats {
   def colSkippingReport(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("cs:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkcs_$sfx")
-    SinkFs.deleteRecursively(dir)
-    def docs(lo: Long, hi: Long) = spark.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2200").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
-    docs(0L, 600L).write.format("graft.sources.ShardSinkSource")
-      .option("path", dir.getPath)
-      .mode(org.apache.spark.sql.SaveMode.Append).save() // v1: 3-column, no statsable payload predicate
+    val dir = scratchDir(sfDir, "sinkcs")
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(spark, 2200, 2, lo, hi)
+    // v1: 3-column, no statsable payload predicate
+    SinkLifecycles.appendTo(docs(0L, 600L), dir.getPath)
     def ingest(lo: Long, hi: Long, lang: Option[String]): Unit =
       docs(lo, hi)
         .withColumn("lang", lang.map(lit).getOrElse(lit(null).cast("string")))
@@ -474,8 +467,7 @@ object SinkColStats {
     ingest(1400L, 1800L, Some("de")) // v4
     ingest(1800L, 2200L, None) // v5: all-null lang — boundless envelopes
     val census = ShardSink.committedFiles(dir.getPath).count(_.endsWith(".tsv")).toLong
-    def read() = spark.read.format("graft.sources.ShardSinkSource")
-      .option("path", dir.getPath).load()
+    def read() = SinkLifecycles.readPath(spark, dir.getPath)
     def counted(df: => org.apache.spark.sql.DataFrame): (Array[org.apache.spark.sql.Row], Long) = {
       val before = ShardSink.dataFileReadCount.get()
       val rows = df.collect()
@@ -535,19 +527,14 @@ object SinkColStats {
   def zorderColsReport(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("zc:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkzc_$sfx")
-    SinkFs.deleteRecursively(dir)
-    spark.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2000").option("numPartitions", "2").load()
+    val dir = scratchDir(sfDir, "sinkzc")
+    SinkLifecycles.docs(spark, 2000, 2)
       .withColumn("lang", concat(lit("l"), (col("doc_id") % 5).cast("string")))
       .withColumn("score", ((col("doc_id") * 7L) % 1000L).cast("long"))
       .write.format("graft.sources.ShardSinkSource")
       .option("path", dir.getPath).option("mergeSchema", "true")
       .mode(org.apache.spark.sql.SaveMode.Append).save() // v1: interleaved
-    def read() = spark.read.format("graft.sources.ShardSinkSource")
-      .option("path", dir.getPath).load()
+    def read() = SinkLifecycles.readPath(spark, dir.getPath)
     def counted(df: => org.apache.spark.sql.DataFrame): (org.apache.spark.sql.Row, Long) = {
       val before = ShardSink.dataFileReadCount.get()
       val r = df.agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("x")).collect().head
@@ -587,22 +574,16 @@ object SinkColStats {
   def metaColMinMaxReport(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mcm:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmcm_$sfx")
-    SinkFs.deleteRecursively(dir)
+    val dir = scratchDir(sfDir, "sinkmcm")
     def ingest(lo: Long, hi: Long, lang: String): Unit =
-      spark.read.format("graft.sources.DocGenSource")
-        .option("numDocs", "1800").option("numPartitions", "2").load()
-        .where(col("doc_id") >= lo && col("doc_id") < hi)
+      SinkLifecycles.docs(spark, 1800, 2, lo, hi)
         .withColumn("lang", lit(lang))
         .withColumn("score", (col("doc_id") * 2L).cast("long"))
         .write.format("graft.sources.ShardSinkSource")
         .option("path", dir.getPath).option("mergeSchema", "true")
         .mode(org.apache.spark.sql.SaveMode.Append).save()
     ingest(0L, 600L, "pt"); ingest(600L, 1200L, "en"); ingest(1200L, 1800L, "de")
-    val df = spark.read.format("graft.sources.ShardSinkSource")
-      .option("path", dir.getPath).load()
+    val df = SinkLifecycles.readPath(spark, dir.getPath)
       .agg(
         min(col("score")).as("min_score"), max(col("score")).as("max_score"),
         min(col("lang")).as("min_lang"), max(col("lang")).as("max_lang"),

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import SinkLifecycles.{MorCdf, scratch}
 
 /** INCREMENTALLY-MAINTAINED MATERIALIZED VIEWS over a ShardSink table,
   * driven by the table's exact change feed — the Delta/Snowflake
@@ -759,20 +760,9 @@ object SinkMatView {
     * equals the full recompute under the hash gate, not just row counts.
     */
   def mvRefreshReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mv:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmv_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mv", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mv.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mv.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mv.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mv.cdf.enabled", "true")
+    val (s, root) = scratch(spark, sfDir, "sinkmv", Seq("graft_mv"), MorCdf)
     def append(lo: Long, hi: Long): Unit =
-      s.read.format("graft.sources.DocGenSource")
-        .option("numDocs", "2400").option("numPartitions", "2").load()
-        .where(col("doc_id") >= lo && col("doc_id") < hi)
+      SinkLifecycles.docs(s, 2400, 2, lo, hi)
         .writeTo("graft_mv.docs_mv").append()
     val dir = new java.io.File(root, "docs_mv").getPath
     val mvDir = mvDirOf(dir)
@@ -818,18 +808,8 @@ object SinkMatView {
     * bookkeeping under the DuckDB hash gate.
     */
   def mvRestoreReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvr:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvr_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvr", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvr.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvr.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvr.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvr.cdf.enabled", "true")
-    def src = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "1200").option("numPartitions", "2").load()
+    val (s, root) = scratch(spark, sfDir, "sinkmvr", Seq("graft_mvr"), MorCdf)
+    def src = SinkLifecycles.docs(s, 1200, 2)
     src.writeTo("graft_mvr.docs_mvr").append() // v1
     val dir = new java.io.File(root, "docs_mvr").getPath
     val mvDir = mvDirOf(dir)
@@ -892,19 +872,8 @@ object SinkMatView {
     * the watermark/currency cells are derived, not wall-clock.
     */
   def mvGroupsReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvg:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvg_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvg", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvg.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvg.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvg.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvg.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2000").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvg", Seq("graft_mvg"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2000, 2, lo, hi)
     docs(0L, 0L).writeTo("graft_mvg.docs_mvg").append() // bootstrap the table
     s.sql("ALTER TABLE graft_mvg.docs_mvg ADD COLUMN lang STRING")
     def ingest(lo: Long, hi: Long): Unit =
@@ -984,20 +953,9 @@ object SinkMatView {
     * hash gate.
     */
   def mvStreamParity(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvs:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvs_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = graft.streaming.StreamTune.session(spark)
-    s.conf.set("spark.sql.catalog.graft_mvs", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvs.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvs.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvs.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvs.cdf.enabled", "true")
+    val (s, root) = scratch(spark, sfDir, "sinkmvs", Seq("graft_mvs"), MorCdf, streaming = true)
     def append(lo: Long, hi: Long): Unit =
-      s.read.format("graft.sources.DocGenSource")
-        .option("numDocs", "2400").option("numPartitions", "2").load()
-        .where(col("doc_id") >= lo && col("doc_id") < hi)
+      SinkLifecycles.docs(s, 2400, 2, lo, hi)
         .writeTo("graft_mvs.docs_mvs").append()
     val dir = new java.io.File(root, "docs_mvs").getPath
     val mvDir = mvDirOf(dir)
@@ -1029,8 +987,7 @@ object SinkMatView {
         }
       }.start()
     try q.processAllAvailable() finally q.stop()
-    val full = s.read.format("graft.sources.ShardSinkSource")
-      .option("path", dir).load()
+    val full = SinkLifecycles.readPath(s, dir)
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
         expr("bit_xor(doc_id)").as("xor_ids"),

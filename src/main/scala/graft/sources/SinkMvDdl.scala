@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import SinkLifecycles.scratch
 
 /** SQL DDL SPELLINGS for distributed materialized views (round 19) — the
   * property-DDL channel every other governance feature already rides
@@ -139,18 +140,9 @@ object SinkMvDdl {
     *       rewrites, value parity) and the census goes empty.
     */
   def mvSqlDdlReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvsq:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvsq_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvsq", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvsq.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvsq.cdf.enabled", "true")
+    val (s, root) = scratch(spark, sfDir, "sinkmvsq", Seq("graft_mvsq"), Map("cdf.enabled" -> "true"))
     def ingest(lo: Long, hi: Long): Unit =
-      s.read.format("graft.sources.DocGenSource")
-        .option("numDocs", "1200").option("numPartitions", "2").load()
-        .where(col("doc_id") >= lo && col("doc_id") < hi)
+      SinkLifecycles.docs(s, 1200, 2, lo, hi)
         .writeTo("graft_mvsq.docs_mvsq").append()
     ingest(0L, 900L) // v1
     val dir = new java.io.File(root.getPath, "docs_mvsq").getPath

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import SinkLifecycles.{MorCdf, scratch}
 
 /** DISTRIBUTED materialized-view state (round 16) — the scale rung above
   * [[SinkMatView]]'s driver-resident blob. Same definition surface
@@ -38,24 +39,18 @@ object SinkMvDist {
   import SinkMatView.{MvAgg, MvConflict, RefreshStats}
 
   private val StateV = """_mvd\.v(\d+)\.json""".r
-  // "hashv" (absent in pre-round-17 headers → 1) versions the group→bucket
-  // hash INPUT: v1 joined key cells with the control char U+0001, which
-  // escCol does NOT escape, so multi-column keys containing that literal
-  // char shared a hash input (deterministic on both read/write sides, so correct, but
-  // adversarially skewable); v2 joins cells with a TAB, which gcellCol
-  // escapes OUT of cell content, so the input is unambiguous for every key
-  // shape. Existing MVs keep their persisted assignment until a `rebucket`
-  // migrates them.
+  // "hashv":2 names the group→bucket hash INPUT (key cells joined with a
+  // TAB, see [[bucketCol]]); a header without it does not parse.
   private val HeaderRe =
     ("""\{"src":"([^"]*)","group":"([^"]*)","gtype":"([^"]*)",""" +
-      """"pred":"([^"]*)","srcV":(\d+),"buckets":(\d+),(?:"hashv":(\d+),)?"aggs":\[(.*)\]\}""").r
+      """"pred":"([^"]*)","srcV":(\d+),"buckets":(\d+),"hashv":2,"aggs":\[(.*)\]\}""").r
   private val HeaderJoinRe =
     ("""\{"src":"([^"]*)","group":"([^"]*)","gtype":"([^"]*)",""" +
-      """"pred":"([^"]*)","srcV":(\d+),"buckets":(\d+),(?:"hashv":(\d+),)?""" +
+      """"pred":"([^"]*)","srcV":(\d+),"buckets":(\d+),"hashv":2,""" +
       """"dim":"([^"]*)","fk":"([^"]*)","pk":"([^"]*)","dimV":(\d+),"aggs":\[(.*)\]\}""").r
   private val HeaderDimsRe =
     ("""\{"src":"([^"]*)","group":"([^"]*)","gtype":"([^"]*)",""" +
-      """"pred":"([^"]*)","srcV":(\d+),"buckets":(\d+),(?:"hashv":(\d+),)?""" +
+      """"pred":"([^"]*)","srcV":(\d+),"buckets":(\d+),"hashv":2,""" +
       """"dims":\[(.*)\],"aggs":\[(.*)\]\}""").r
   private val DimRe =
     """\{"dim":"([^"]*)","fk":"([^"]*)","pk":"([^"]*)","pfx":"([^"]*)","dimV":(\d+)\}""".r
@@ -93,7 +88,7 @@ object SinkMvDist {
   private final case class MvdState(
       src: String, groups: Seq[String], gtypes: Seq[String], pred: String,
       srcV: Long, buckets: Int, aggs: Seq[MvAgg], refs: Seq[(Int, String)],
-      joins: Seq[MvdJoin] = Nil, hashv: Int = 2) {
+      joins: Seq[MvdJoin] = Nil) {
     /** Each dim's refresh/recompute window view (fromV = its watermark). */
     def windows(tos: Seq[Long]): Seq[SinkMvJoin.DimWindow] =
       joins.zip(tos).map { case (j, to) =>
@@ -119,7 +114,7 @@ object SinkMvDist {
     }
     s"""{"src":"${st.src}","group":"${st.groups.mkString(",")}",""" +
       s""""gtype":"${st.gtypes.mkString(",")}","pred":"${st.pred}",""" +
-      s""""srcV":${st.srcV},"buckets":${st.buckets},"hashv":${st.hashv},$join"aggs":$aggs}"""
+      s""""srcV":${st.srcV},"buckets":${st.buckets},"hashv":2,$join"aggs":$aggs}"""
   }
 
   private def writeHeader(mvDir: String, version: Long, st: MvdState): Unit = {
@@ -154,21 +149,20 @@ object SinkMvDist {
     }
     def aggsOf(as: String): Seq[MvAgg] = AggRe.findAllMatchIn(as)
       .map(m => MvAgg(m.group(1), m.group(2), m.group(3))).toSeq
-    def hv(s: String): Int = if (s == null) 1 else s.toInt
     def dimsOf(ds: String): Seq[MvdJoin] = DimRe.findAllMatchIn(ds)
       .map(m => MvdJoin(m.group(1), m.group(2), m.group(3), m.group(5).toLong,
         pfx = m.group(4))).toSeq
     lines.head match {
-      case HeaderJoinRe(s, g, t, pr, sv, b, h, dim, fk, pk, dv, as) =>
+      case HeaderJoinRe(s, g, t, pr, sv, b, dim, fk, pk, dv, as) =>
         MvdState(s, g.split(",", -1).toSeq, t.split(",", -1).toSeq, pr,
           sv.toLong, b.toInt, aggsOf(as), refsOf,
-          Seq(MvdJoin(dim, fk, pk, dv.toLong)), hashv = hv(h))
-      case HeaderDimsRe(s, g, t, pr, sv, b, h, ds, as) =>
+          Seq(MvdJoin(dim, fk, pk, dv.toLong)))
+      case HeaderDimsRe(s, g, t, pr, sv, b, ds, as) =>
         MvdState(s, g.split(",", -1).toSeq, t.split(",", -1).toSeq, pr,
-          sv.toLong, b.toInt, aggsOf(as), refsOf, dimsOf(ds), hashv = hv(h))
-      case HeaderRe(s, g, t, pr, sv, b, h, as) =>
+          sv.toLong, b.toInt, aggsOf(as), refsOf, dimsOf(ds))
+      case HeaderRe(s, g, t, pr, sv, b, as) =>
         MvdState(s, g.split(",", -1).toSeq, t.split(",", -1).toSeq, pr,
-          sv.toLong, b.toInt, aggsOf(as), refsOf, hashv = hv(h))
+          sv.toLong, b.toInt, aggsOf(as), refsOf)
       case other => sys.error(s"unparseable distributed-MV header at $mvDir: $other")
     }
   }
@@ -210,16 +204,12 @@ object SinkMvDist {
     * the group columns (state rows, delta rows, source rows): xxhash64 of
     * the null-marked, escaped key string. Both sides of every join derive
     * it the same way, so bucket-pruned reads can never miss a group.
-    * hashv 2 joins cells with a TAB — escaped out of gcellCol output, so
-    * the hash input is unambiguous for every key shape; hashv 1 used
-    * \u0001, which escCol does not escape, so keys containing a literal
-    * \u0001 shared an input (deterministic on both sides, hence correct,
-    * but adversarially skewable). Persisted assignments stay on hashv 1
-    * until a rebucket migrates the MV.
+    * Cells join with a TAB — escaped out of gcellCol output, so the hash
+    * input is unambiguous for every key shape.
     */
   private def bucketCol(st: MvdState, keys: Seq[Column]): Column =
-    pmod(xxhash64(concat_ws(if (st.hashv >= 2) "\t" else "\u0001",
-      keys.map(gcellCol): _*)), lit(st.buckets)).cast(IntegerType)
+    pmod(xxhash64(concat_ws("\t", keys.map(gcellCol): _*)), lit(st.buckets))
+      .cast(IntegerType)
 
   private def slotV(i: Int) = s"_v$i"
   private def slotC(i: Int) = s"_c$i"
@@ -916,19 +906,8 @@ object SinkMvDist {
     */
   def mvDistReport(
       spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvd:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvd_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvd", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvd.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvd.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvd.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvd.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2400").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvd", Seq("graft_mvd"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
     docs(0L, 0L).writeTo("graft_mvd.docs_mvd").append() // v1: bootstrap
     s.sql("ALTER TABLE graft_mvd.docs_mvd ADD COLUMN uid BIGINT") // v2
     def ingest(lo: Long, hi: Long): Unit =
@@ -1004,23 +983,12 @@ object SinkMvDist {
     * under the DuckDB hash gate.
     */
   def mvJoinDistReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvjd:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvjd_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvjd", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvjd.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvjd.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvjd.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvjd.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2400").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvjd", Seq("graft_mvjd"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
     // base tables (d1–d3: the 16-key region dim; f1–f3: the 1200-doc
     // uid-grain fact) copied from the JVM-shared star fixture — same
     // commits, versions and content as the inline build (round 19)
-    SinkFixtures.starInto(s, root.getPath, "dim_mvjd", "fact_mvjd")
+    SinkLifecycles.starInto(s, root.getPath, "dim_mvjd", "fact_mvjd")
     def ingest(lo: Long, hi: Long): Unit =
       docs(lo, hi).withColumn("uid", (col("doc_id") % 300L).cast("long"))
         .writeTo("graft_mvjd.fact_mvjd").append()
@@ -1093,22 +1061,11 @@ object SinkMvDist {
     * under the DuckDB hash gate.
     */
   def mvJoinStreamParity(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvjs:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvjs_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = graft.streaming.StreamTune.session(spark)
-    s.conf.set("spark.sql.catalog.graft_mvjs", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvjs.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvjs.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvjs.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvjs.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2400").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvjs", Seq("graft_mvjs"), MorCdf, streaming = true)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
     // base tables (d1–d3, f1–f3) from the JVM-shared star fixture —
     // identical commits/versions to the inline build (round 19)
-    SinkFixtures.starInto(s, root.getPath, "dim_mvjs", "fact_mvjs")
+    SinkLifecycles.starInto(s, root.getPath, "dim_mvjs", "fact_mvjs")
     def ingest(lo: Long, hi: Long): Unit =
       docs(lo, hi).withColumn("uid", (col("doc_id") % 300L).cast("long"))
         .writeTo("graft_mvjs.fact_mvjs").append()
@@ -1221,23 +1178,12 @@ object SinkMvDist {
     * sit under the DuckDB hash gate.
     */
   def mvSnowflakeStreamParity(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvss:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvss_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = graft.streaming.StreamTune.session(spark)
-    s.conf.set("spark.sql.catalog.graft_mvss", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvss.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvss.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvss.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvss.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2400").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvss", Seq("graft_mvss"), MorCdf, streaming = true)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
     // base tables (e1–e3: zone dim2; d1–d4: region/catk dim1; f1–f3: the
     // 1200-doc uid-grain fact) from the JVM-shared snowflake fixture —
     // identical commits/versions to the inline build (round 19)
-    SinkFixtures.snowInto(s, root.getPath, "dim2_mvss", "dim1_mvss", "fact_mvss")
+    SinkLifecycles.snowInto(s, root.getPath, "dim2_mvss", "dim1_mvss", "fact_mvss")
     def ingest(lo: Long, hi: Long): Unit =
       docs(lo, hi).withColumn("uid", (col("doc_id") % 150L).cast("long"))
         .writeTo("graft_mvss.fact_mvss").append()
@@ -1355,22 +1301,11 @@ object SinkMvDist {
     * lifecycle bookkeeping sits under the DuckDB hash gate.
     */
   def mvSnowflakeReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvsn:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvsn_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvsn", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvsn.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvsn.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvsn.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvsn.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2400").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvsn", Seq("graft_mvsn"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
     // base tables (e1–e3, d1–d4, f1–f3) from the JVM-shared snowflake
     // fixture — identical commits/versions to the inline build (round 19)
-    SinkFixtures.snowInto(s, root.getPath, "dim2_mvsn", "dim1_mvsn", "fact_mvsn")
+    SinkLifecycles.snowInto(s, root.getPath, "dim2_mvsn", "dim1_mvsn", "fact_mvsn")
     def ingest(lo: Long, hi: Long): Unit =
       docs(lo, hi).withColumn("uid", (col("doc_id") % 150L).cast("long"))
         .writeTo("graft_mvsn.fact_mvsn").append()
@@ -1542,19 +1477,17 @@ object SinkMvDist {
       val stateV = currentVersion(mvDir)
       require(stateV > 0L, s"no distributed materialized view at $mvDir")
       val st = readHeaderAt(mvDir, stateV)
-      if (st.buckets == newBuckets && st.hashv >= 2) {
-        // the desired end state already holds (same count, current hash
-        // input) — an IDEMPOTENT no-op on every attempt, not just after a
-        // lost flip: a concurrent rebucket to the same count that commits
-        // before this caller's first header read must not turn into an
-        // error one flip earlier than the identical race would succeed
-        // (review fix). The misuse signal is a counter, not an exception.
+      if (st.buckets == newBuckets) {
+        // the desired end state already holds — an IDEMPOTENT no-op on
+        // every attempt, not just after a lost flip: a concurrent
+        // rebucket to the same count that commits before this caller's
+        // first header read must not turn into an error one flip earlier
+        // than the identical race would succeed. The misuse signal is a
+        // counter, not an exception.
         rebucketNoops.incrementAndGet()
         return
       }
-      // same count + hashv 1 falls through: the rewrite IS the migration
-      // to the v2 (tab-separated) bucket hash input
-      val newSt = st.copy(buckets = newBuckets, hashv = 2)
+      val newSt = st.copy(buckets = newBuckets)
       val full = stateDf(spark, mvDir, st, None)
       try {
         val refs = writeSegments(mvDir, stateV + 1L, newSt, full)
@@ -1659,19 +1592,11 @@ object SinkMvDist {
     * read). A second policy call is a recorded non-trigger.
     */
   def mvAutoRebucketReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvar:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvar_$sfx")
-    SinkFs.deleteRecursively(root)
+    val (s, root) = scratch(spark, sfDir, "sinkmvar")
     val dir = new java.io.File(root, "docs_mvar").getPath
     val mvDir = dir + ".mvd"
-    val s = spark.newSession()
     def append(lo: Long, hi: Long): Unit =
-      s.read.format("graft.sources.DocGenSource")
-        .option("numDocs", "2400").option("numPartitions", "2").load()
-        .where(col("doc_id") >= lo && col("doc_id") < hi)
-        .write.format("graft.sources.ShardSinkSource")
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+      SinkLifecycles.appendTo(SinkLifecycles.docs(s, 2400, 2, lo, hi), dir)
     append(0L, 400L) // v1: small enough for 2 buckets
     create(s, dir, mvDir, Seq("doc_id"), Seq(
       MvAgg("n_docs", "count"),

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import SinkLifecycles.{MorCdf, scratch}
 
 /** MATERIALIZED VIEWS OVER A JOIN (round 16) — the star-schema rollup a
   * reporting MV actually materializes:
@@ -415,19 +416,8 @@ object SinkMvJoin {
     * the DuckDB hash gate against a from-scratch join recompute.
     */
   def mvJoinReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvj:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvj_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvj", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvj.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvj.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvj.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvj.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2400").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvj", Seq("graft_mvj"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
     // the DIM: keys 0..14 (15 deliberately missing), region = 'r'||k%3
     docs(0L, 0L).writeTo("graft_mvj.dim_mvj").append() // d1: bootstrap
     s.sql("ALTER TABLE graft_mvj.dim_mvj ADD COLUMN region STRING") // d2

@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import SinkLifecycles.{MorCdf, scratch}
 
 /** MV-AWARE AUTOMATIC QUERY REWRITE (rounds 17–18) — the capability gap
   * between "has MVs" and "uses MVs": a user writing the plain
@@ -1404,19 +1405,8 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     * re-derived by DuckDB.
     */
   def mvRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvrw18:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvrw_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvrw", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvrw.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvrw.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvrw.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvrw.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "1200").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvrw", Seq("graft_mvrw"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 1200, 2, lo, hi)
     docs(0L, 0L).writeTo("graft_mvrw.docs_mvrw").append() // v1: bootstrap
     s.sql("ALTER TABLE graft_mvrw.docs_mvrw ADD COLUMN score DOUBLE") // v2
     def ingest(lo: Long, hi: Long): Unit =
@@ -1600,20 +1590,9 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     * sit under the DuckDB hash gate.
     */
   def mvFilterRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvfr:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvfr_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvfr", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvfr.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvfr.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvfr.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvfr.cdf.enabled", "true")
+    val (s, root) = scratch(spark, sfDir, "sinkmvfr", Seq("graft_mvfr"), MorCdf)
     def ingest(lo: Long, hi: Long): Unit =
-      s.read.format("graft.sources.DocGenSource")
-        .option("numDocs", "1200").option("numPartitions", "2").load()
-        .where(col("doc_id") >= lo && col("doc_id") < hi)
+      SinkLifecycles.docs(s, 1200, 2, lo, hi)
         .writeTo("graft_mvfr.docs_mvfr").append()
     ingest(0L, 1000L) // v1
     val dir = new java.io.File(root.getPath, "docs_mvfr").getPath
@@ -1742,19 +1721,8 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     * by DuckDB.
     */
   def mvDistinctRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvdr:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvdr_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvdr", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvdr.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvdr.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvdr.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvdr.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "1200").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvdr", Seq("graft_mvdr"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 1200, 2, lo, hi)
     docs(0L, 0L).writeTo("graft_mvdr.docs_mvdr").append() // v1: bootstrap
     s.sql("ALTER TABLE graft_mvdr.docs_mvdr ADD COLUMN uid BIGINT") // v2
     def ingest(lo: Long, hi: Long): Unit =
@@ -1871,22 +1839,11 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     * DuckDB hash gate.
     */
   def mvJoinRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvjr:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvjr_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvjr", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvjr.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvjr.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvjr.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvjr.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2400").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvjr", Seq("graft_mvjr"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
     // base tables (d1–d3, f1–f3) from the JVM-shared star fixture —
     // identical commits/versions to the inline build (round 19)
-    SinkFixtures.starInto(s, root.getPath, "dim_mvjr", "fact_mvjr")
+    SinkLifecycles.starInto(s, root.getPath, "dim_mvjr", "fact_mvjr")
     def ingest(lo: Long, hi: Long): Unit =
       docs(lo, hi).withColumn("uid", (col("doc_id") % 300L).cast("long"))
         .writeTo("graft_mvjr.fact_mvjr").append()
@@ -1993,22 +1950,11 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     *      output (B ≡ D row-set equality rides as bd_equal).
     */
   def mvDimTailRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvdt:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvdt_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvdt", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvdt.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvdt.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvdt.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvdt.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "1200").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvdt", Seq("graft_mvdt"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 1200, 2, lo, hi)
     // base tables (d1–d3, f1–f3) from the JVM-shared star fixture —
     // identical commits/versions to the inline build (round 19)
-    SinkFixtures.starInto(s, root.getPath, "dim_mvdt", "fact_mvdt")
+    SinkLifecycles.starInto(s, root.getPath, "dim_mvdt", "fact_mvdt")
     val factDir = new java.io.File(root.getPath, "fact_mvdt").getPath
     val dimDir = new java.io.File(root.getPath, "dim_mvdt").getPath
     ShardSink.compact(factDir) // f4: shard-pure 16-file layout
@@ -2128,22 +2074,11 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     *      zero data files, the rX group move visible.
     */
   def mvSnowRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("mvsr:" + sfDir).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkmvsr_$sfx")
-    SinkFs.deleteRecursively(root)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graft_mvsr", classOf[ShardSinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvsr.root", root.getPath)
-    s.conf.set("spark.sql.catalog.graft_mvsr.delete.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvsr.rlo.mode", "merge-on-read")
-    s.conf.set("spark.sql.catalog.graft_mvsr.cdf.enabled", "true")
-    def docs(lo: Long, hi: Long) = s.read.format("graft.sources.DocGenSource")
-      .option("numDocs", "2400").option("numPartitions", "2").load()
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val (s, root) = scratch(spark, sfDir, "sinkmvsr", Seq("graft_mvsr"), MorCdf)
+    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
     // base tables (e1–e3, d1–d4, f1–f3) from the JVM-shared snowflake
     // fixture — identical commits/versions to the inline build (round 19)
-    SinkFixtures.snowInto(s, root.getPath, "dim2_mvsr", "dim1_mvsr", "fact_mvsr")
+    SinkLifecycles.snowInto(s, root.getPath, "dim2_mvsr", "dim1_mvsr", "fact_mvsr")
     def ingest(lo: Long, hi: Long): Unit =
       docs(lo, hi).withColumn("uid", (col("doc_id") % 150L).cast("long"))
         .writeTo("graft_mvsr.fact_mvsr").append()

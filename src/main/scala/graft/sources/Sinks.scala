@@ -66,17 +66,10 @@ object Sinks {
     */
   def bucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    // collision-free per-sfDir suffix: md5 of the full path (a 32-bit
-    // hashCode can collide across dirs, silently sharing tables/paths)
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val base = new java.io.File(sys.props("java.io.tmpdir"), s"graft_bucketed_$sfx").getPath
-    val (cT, oT) = (s"graft_bkt_c_$sfx", s"graft_bkt_o_$sfx")
+    val root = SinkLifecycles.scratchDir(sfDir, "bucketed")
+    val (base, cT, oT) = (root.getPath, s"${root.getName}_c", s"${root.getName}_o")
     spark.sql(s"DROP TABLE IF EXISTS $cT")
     spark.sql(s"DROP TABLE IF EXISTS $oT")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
     writeBucketedAt(
       graft.model.Tables.customer(spark, sfDir).select(col("c_custkey"), col("c_name")),
       cT, s"$base/c", "c_custkey", 8)
@@ -141,9 +134,7 @@ object Sinks {
         col("l_orderkey"),
         col("l_linenumber").cast("long").as("l_linenumber"),
         col("l_returnflag"))
-    val tmp = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_roundtrip_" + Integer.toHexString(sfDir.hashCode)).getPath
+    val tmp = SinkLifecycles.scratchDir(sfDir, "roundtrip").getPath
     writeCsv(slice, s"$tmp/csv")
     writeJson(slice, s"$tmp/json")
     writeOrc(slice, s"$tmp/orc")
@@ -168,157 +159,87 @@ object Sinks {
     Seq("csv", "json", "orc").map(audit).mkString("", "\nUNION ALL\n", "\nORDER BY format")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_format_roundtrip" -> (formatRoundtrip _),
-    "q_bucketed_join" -> (bucketedJoin _),
-    "q_dsv2_scan" -> (DocGen.dsv2Scan _),
-    "q_dsv2_columnar" -> (DocGen.dsv2Columnar _),
-    "q_dsv2_agg_pushdown" -> (DocGen.dsv2AggPushdown _),
-    "q_dsv2_shard_rollup" -> (DocGen.dsv2ShardRollup _),
-    "q_dsv2_spj" -> (DocGen.dsv2Spj _),
-    "q_dsv2_spj_bucket" -> (DocGen.dsv2SpjBucket _),
-    "q_dsv2_metadata_cols" -> (DocGen.dsv2MetadataCols _),
-    "q_dsv2_catalog_function" -> (DocGen.dsv2CatalogFunction _),
-    "q_dsv2_runtime_filter" -> (DocGen.dsv2RuntimeFilter _),
-    "q_dsv2_write_roundtrip" -> (ShardSink.writeRoundtrip _),
-    "q_dsv2_delete" -> (ShardSink.deleteRoundtrip _),
-    "q_dsv2_delete_mor" -> (ShardSink.morDeleteRoundtrip _),
-    "q_dsv2_merge_mor" -> (ShardSink.mergeMorRoundtrip _),
-    "q_dsv2_cdf" -> (ShardSink.changeFeedReport _),
-    "q_dsv2_cdf_update" -> (ShardSink.changeFeedUpdate _),
-    "q_dsv2_merge_full" -> (ShardSink.mergeFullSyncCow _),
-    "q_dsv2_merge_full_mor" -> (ShardSink.mergeFullSyncMor _),
-    "s_dsv2_cdc_parity" -> (ShardSink.cdcStreamParity _),
-    "s_dsv2_replica_sync" -> (ShardSink.replicaSyncParity _),
-    "q_dsv2_merge" -> (ShardSink.mergeRoundtrip _),
-    "s_shardsink_stream_parity" -> (ShardSink.streamWriteParity _),
-    "s_shardsink_tail_parity" -> (ShardSink.tailParity _),
-    "q_dsv2_time_travel" -> (ShardSink.timeTravel _),
-    "q_dsv2_time_travel_ts" -> (ShardSink.timeTravelTs _),
-    "q_dsv2_compact" -> (ShardSink.compactRoundtrip _),
-    "q_dsv2_history" -> (ShardSink.historyReport _),
-    "q_dsv2_stats_prune" -> (ShardSink.statsPrune _),
-    "q_dsv2_range_prune" -> (ShardSink.rangePrune _),
-    "q_dsv2_count_meta" -> (ShardSink.countMeta _),
-    "q_dsv2_minmax_meta" -> (ShardSink.minMaxMeta _),
-    "q_dsv2_evolve" -> (ShardSink.schemaEvolution _),
-    "q_dsv2_constraints" -> (ShardSink.constraintsReport _),
-    "q_dsv2_sink_spj" -> (ShardSink.sinkSpj _),
-    "q_dsv2_clone" -> (ShardSink.cloneReport _),
-    "q_dsv2_meta_tables" -> (ShardSink.metaTablesReport _),
-    "q_dsv2_ctas" -> (ShardSink.ctasReport _),
-    "q_dsv2_manifest_segments" -> (ShardSink.manifestSegmentsReport _),
-    "q_dsv2_auto_evolve" -> (ShardSink.autoEvolveReport _),
-    "q_dsv2_seg_envelope" -> (ShardSink.segEnvelopeReport _),
-    "q_dsv2_count_pruned" -> (ShardSink.countPrunedReport _),
-    "q_dsv2_groupby_meta" -> (ShardSink.groupByMetaReport _),
-    "q_dsv2_sink_dpp" -> (ShardSink.sinkDppReport _),
-    "q_dsv2_bloom_lookup" -> (ShardSink.bloomLookupReport _),
-    "q_dsv2_optimize_binpack" -> (ShardSink.binPackReport _),
-    "q_dsv2_auto_compact" -> (ShardSink.autoCompactReport _),
-    "q_dsv2_mv_refresh" -> (SinkMatView.mvRefreshReport _),
-    "q_dsv2_col_skipping" -> (SinkColStats.colSkippingReport _),
-    "s_mv_stream_parity" -> (SinkMatView.mvStreamParity _),
-    "q_dsv2_mv_groups" -> (SinkMatView.mvGroupsReport _),
-    "q_dsv2_mv_dist" -> (SinkMvDist.mvDistReport _),
-    "q_dsv2_mv_join" -> (SinkMvJoin.mvJoinReport _),
-    "q_dsv2_mv_restore" -> (SinkMatView.mvRestoreReport _),
-    "q_dsv2_mv_join_dist" -> (SinkMvDist.mvJoinDistReport _),
-    "s_mvjoin_stream_parity" -> (SinkMvDist.mvJoinStreamParity _),
-    "q_dsv2_mv_snowflake" -> (SinkMvDist.mvSnowflakeReport _),
-    "s_mvsnow_stream_parity" -> (SinkMvDist.mvSnowflakeStreamParity _),
-    "q_dsv2_mv_rewrite" -> (SinkMvRewrite.mvRewriteReport _),
-    "q_dsv2_mv_filter_rewrite" -> (SinkMvRewrite.mvFilterRewriteReport _),
-    "q_dsv2_mv_distinct_rewrite" -> (SinkMvRewrite.mvDistinctRewriteReport _),
-    "q_dsv2_mv_sql_ddl" -> (SinkMvDdl.mvSqlDdlReport _),
-    "q_dsv2_mv_dimtail_rewrite" -> (SinkMvRewrite.mvDimTailRewriteReport _),
-    "q_dsv2_mv_join_rewrite" -> (SinkMvRewrite.mvJoinRewriteReport _),
-    "q_dsv2_mv_snow_rewrite" -> (SinkMvRewrite.mvSnowRewriteReport _),
-    "q_dsv2_mv_auto_rebucket" -> (SinkMvDist.mvAutoRebucketReport _),
-    "q_dsv2_zorder_cols" -> (SinkColStats.zorderColsReport _),
-    "q_dsv2_meta_col_minmax" -> (SinkColStats.metaColMinMaxReport _),
-    "q_dsv2_restore" -> (ShardSink.restoreReport _),
-    "q_dsv2_replace_where" -> (ShardSink.replaceWhereReport _),
-    "q_dsv2_vacuum" -> (ShardSink.vacuumReport _),
-    "q_dsv2_zorder" -> (ShardSink.zorderRoundtrip _),
-    "q_dsv2_tags" -> (ShardSink.tagsReport _),
-    "s_dsv2_stream_parity" -> (DocGen.dsv2StreamParity _))
+  /** Every checked query of this module: its plan and its DuckDB twin. */
+  private val checked: Map[String, ((SparkSession, String) => DataFrame, String)] = Map(
+    "q_format_roundtrip" -> (formatRoundtrip _, formatRoundtripSql),
+    "q_bucketed_join" -> (bucketedJoin _, bucketedJoinSql),
+    "q_dsv2_scan" -> (DocGen.dsv2Scan _, DocGen.dsv2ScanSql),
+    "q_dsv2_columnar" -> (DocGen.dsv2Columnar _, DocGen.dsv2ColumnarSql),
+    "q_dsv2_agg_pushdown" -> (DocGen.dsv2AggPushdown _, DocGen.dsv2AggPushdownSql),
+    "q_dsv2_shard_rollup" -> (DocGen.dsv2ShardRollup _, DocGen.dsv2ShardRollupSql),
+    "q_dsv2_spj" -> (DocGen.dsv2Spj _, DocGen.dsv2SpjSql),
+    "q_dsv2_spj_bucket" -> (DocGen.dsv2SpjBucket _, DocGen.dsv2SpjBucketSql),
+    "q_dsv2_metadata_cols" -> (DocGen.dsv2MetadataCols _, DocGen.dsv2MetadataColsSql),
+    "q_dsv2_catalog_function" -> (DocGen.dsv2CatalogFunction _, DocGen.dsv2CatalogFunctionSql),
+    "q_dsv2_runtime_filter" -> (DocGen.dsv2RuntimeFilter _, DocGen.dsv2RuntimeFilterSql),
+    "q_dsv2_write_roundtrip" -> (SinkLifecycles.writeRoundtrip _, SinkLifecycles.writeRoundtripSql),
+    "q_dsv2_delete" -> (SinkLifecycles.deleteRoundtrip _, SinkLifecycles.deleteRoundtripSql),
+    "q_dsv2_delete_mor" -> (SinkLifecycles.morDeleteRoundtrip _, SinkLifecycles.morDeleteRoundtripSql),
+    "q_dsv2_merge_mor" -> (SinkLifecycles.mergeMorRoundtrip _, SinkLifecycles.mergeMorRoundtripSql),
+    "q_dsv2_cdf" -> (SinkLifecycles.changeFeedReport _, SinkLifecycles.changeFeedReportSql),
+    "q_dsv2_cdf_update" -> (SinkLifecycles.changeFeedUpdate _, SinkLifecycles.changeFeedUpdateSql),
+    "q_dsv2_merge_full" -> (SinkLifecycles.mergeFullSyncCow _, SinkLifecycles.mergeFullSyncSql),
+    "q_dsv2_merge_full_mor" -> (SinkLifecycles.mergeFullSyncMor _, SinkLifecycles.mergeFullSyncSql),
+    "s_dsv2_cdc_parity" -> (SinkLifecycles.cdcStreamParity _, SinkLifecycles.cdcStreamParitySql),
+    "s_dsv2_replica_sync" -> (SinkLifecycles.replicaSyncParity _, SinkLifecycles.replicaSyncParitySql),
+    "q_dsv2_merge" -> (SinkLifecycles.mergeRoundtrip _, SinkLifecycles.mergeRoundtripSql),
+    "s_shardsink_stream_parity" -> (SinkLifecycles.streamWriteParity _, SinkLifecycles.streamWriteParitySql),
+    "s_shardsink_tail_parity" -> (SinkLifecycles.tailParity _, SinkLifecycles.tailParitySql),
+    "q_dsv2_time_travel" -> (SinkLifecycles.timeTravel _, SinkLifecycles.timeTravelSql),
+    "q_dsv2_time_travel_ts" -> (SinkLifecycles.timeTravelTs _, SinkLifecycles.timeTravelTsSql),
+    "q_dsv2_compact" -> (SinkLifecycles.compactRoundtrip _, SinkLifecycles.compactRoundtripSql),
+    "q_dsv2_history" -> (SinkLifecycles.historyReport _, SinkLifecycles.historyReportSql),
+    "q_dsv2_stats_prune" -> (SinkLifecycles.statsPrune _, SinkLifecycles.statsPruneSql),
+    "q_dsv2_range_prune" -> (SinkLifecycles.rangePrune _, SinkLifecycles.rangePruneSql),
+    "q_dsv2_count_meta" -> (SinkLifecycles.countMeta _, SinkLifecycles.countMetaSql),
+    "q_dsv2_minmax_meta" -> (SinkLifecycles.minMaxMeta _, SinkLifecycles.minMaxMetaSql),
+    "q_dsv2_evolve" -> (SinkLifecycles.schemaEvolution _, SinkLifecycles.schemaEvolutionSql),
+    "q_dsv2_constraints" -> (SinkLifecycles.constraintsReport _, SinkLifecycles.constraintsReportSql),
+    "q_dsv2_sink_spj" -> (SinkLifecycles.sinkSpj _, SinkLifecycles.sinkSpjSql),
+    "q_dsv2_clone" -> (SinkLifecycles.cloneReport _, SinkLifecycles.cloneReportSql),
+    "q_dsv2_meta_tables" -> (SinkLifecycles.metaTablesReport _, SinkLifecycles.metaTablesReportSql),
+    "q_dsv2_ctas" -> (SinkLifecycles.ctasReport _, SinkLifecycles.ctasReportSql),
+    "q_dsv2_manifest_segments" -> (SinkLifecycles.manifestSegmentsReport _, SinkLifecycles.manifestSegmentsReportSql),
+    "q_dsv2_auto_evolve" -> (SinkLifecycles.autoEvolveReport _, SinkLifecycles.autoEvolveReportSql),
+    "q_dsv2_seg_envelope" -> (SinkLifecycles.segEnvelopeReport _, SinkLifecycles.segEnvelopeReportSql),
+    "q_dsv2_count_pruned" -> (SinkLifecycles.countPrunedReport _, SinkLifecycles.countPrunedReportSql),
+    "q_dsv2_groupby_meta" -> (SinkLifecycles.groupByMetaReport _, SinkLifecycles.groupByMetaReportSql),
+    "q_dsv2_sink_dpp" -> (SinkLifecycles.sinkDppReport _, SinkLifecycles.sinkDppReportSql),
+    "q_dsv2_bloom_lookup" -> (SinkLifecycles.bloomLookupReport _, SinkLifecycles.bloomLookupReportSql),
+    "q_dsv2_optimize_binpack" -> (SinkLifecycles.binPackReport _, SinkLifecycles.binPackReportSql),
+    "q_dsv2_auto_compact" -> (SinkLifecycles.autoCompactReport _, SinkLifecycles.autoCompactReportSql),
+    "q_dsv2_mv_refresh" -> (SinkMatView.mvRefreshReport _, SinkMatView.mvRefreshReportSql),
+    "q_dsv2_col_skipping" -> (SinkColStats.colSkippingReport _, SinkColStats.colSkippingReportSql),
+    "s_mv_stream_parity" -> (SinkMatView.mvStreamParity _, SinkMatView.mvStreamParitySql),
+    "q_dsv2_mv_groups" -> (SinkMatView.mvGroupsReport _, SinkMatView.mvGroupsReportSql),
+    "q_dsv2_mv_dist" -> (SinkMvDist.mvDistReport _, SinkMvDist.mvDistReportSql),
+    "q_dsv2_mv_join" -> (SinkMvJoin.mvJoinReport _, SinkMvJoin.mvJoinReportSql),
+    "q_dsv2_mv_restore" -> (SinkMatView.mvRestoreReport _, SinkMatView.mvRestoreReportSql),
+    "q_dsv2_mv_join_dist" -> (SinkMvDist.mvJoinDistReport _, SinkMvDist.mvJoinDistReportSql),
+    "s_mvjoin_stream_parity" -> (SinkMvDist.mvJoinStreamParity _, SinkMvDist.mvJoinStreamParitySql),
+    "q_dsv2_mv_snowflake" -> (SinkMvDist.mvSnowflakeReport _, SinkMvDist.mvSnowflakeReportSql),
+    "s_mvsnow_stream_parity" -> (SinkMvDist.mvSnowflakeStreamParity _, SinkMvDist.mvSnowflakeStreamParitySql),
+    "q_dsv2_mv_rewrite" -> (SinkMvRewrite.mvRewriteReport _, SinkMvRewrite.mvRewriteReportSql),
+    "q_dsv2_mv_filter_rewrite" -> (SinkMvRewrite.mvFilterRewriteReport _, SinkMvRewrite.mvFilterRewriteReportSql),
+    "q_dsv2_mv_distinct_rewrite" -> (SinkMvRewrite.mvDistinctRewriteReport _, SinkMvRewrite.mvDistinctRewriteReportSql),
+    "q_dsv2_mv_sql_ddl" -> (SinkMvDdl.mvSqlDdlReport _, SinkMvDdl.mvSqlDdlReportSql),
+    "q_dsv2_mv_dimtail_rewrite" -> (SinkMvRewrite.mvDimTailRewriteReport _, SinkMvRewrite.mvDimTailRewriteReportSql),
+    "q_dsv2_mv_join_rewrite" -> (SinkMvRewrite.mvJoinRewriteReport _, SinkMvRewrite.mvJoinRewriteReportSql),
+    "q_dsv2_mv_snow_rewrite" -> (SinkMvRewrite.mvSnowRewriteReport _, SinkMvRewrite.mvSnowRewriteReportSql),
+    "q_dsv2_mv_auto_rebucket" -> (SinkMvDist.mvAutoRebucketReport _, SinkMvDist.mvAutoRebucketReportSql),
+    "q_dsv2_zorder_cols" -> (SinkColStats.zorderColsReport _, SinkColStats.zorderColsReportSql),
+    "q_dsv2_meta_col_minmax" -> (SinkColStats.metaColMinMaxReport _, SinkColStats.metaColMinMaxReportSql),
+    "q_dsv2_restore" -> (SinkLifecycles.restoreReport _, SinkLifecycles.restoreReportSql),
+    "q_dsv2_replace_where" -> (SinkLifecycles.replaceWhereReport _, SinkLifecycles.replaceWhereReportSql),
+    "q_dsv2_vacuum" -> (SinkLifecycles.vacuumReport _, SinkLifecycles.vacuumReportSql),
+    "q_dsv2_zorder" -> (SinkLifecycles.zorderRoundtrip _, SinkLifecycles.zorderRoundtripSql),
+    "q_dsv2_tags" -> (SinkLifecycles.tagsReport _, SinkLifecycles.tagsReportSql),
+    "s_dsv2_stream_parity" -> (DocGen.dsv2StreamParity _, DocGen.dsv2StreamParitySql))
 
-  val oracle: Map[String, String] = Map(
-    "q_format_roundtrip" -> formatRoundtripSql,
-    "q_bucketed_join" -> bucketedJoinSql,
-    "q_dsv2_scan" -> DocGen.dsv2ScanSql,
-    "q_dsv2_columnar" -> DocGen.dsv2ColumnarSql,
-    "q_dsv2_agg_pushdown" -> DocGen.dsv2AggPushdownSql,
-    "q_dsv2_shard_rollup" -> DocGen.dsv2ShardRollupSql,
-    "q_dsv2_spj" -> DocGen.dsv2SpjSql,
-    "q_dsv2_spj_bucket" -> DocGen.dsv2SpjBucketSql,
-    "q_dsv2_metadata_cols" -> DocGen.dsv2MetadataColsSql,
-    "q_dsv2_catalog_function" -> DocGen.dsv2CatalogFunctionSql,
-    "q_dsv2_runtime_filter" -> DocGen.dsv2RuntimeFilterSql,
-    "q_dsv2_write_roundtrip" -> ShardSink.writeRoundtripSql,
-    "q_dsv2_delete" -> ShardSink.deleteRoundtripSql,
-    "q_dsv2_delete_mor" -> ShardSink.morDeleteRoundtripSql,
-    "q_dsv2_merge_mor" -> ShardSink.mergeMorRoundtripSql,
-    "q_dsv2_cdf" -> ShardSink.changeFeedReportSql,
-    "q_dsv2_cdf_update" -> ShardSink.changeFeedUpdateSql,
-    "q_dsv2_merge_full" -> ShardSink.mergeFullSyncSql,
-    "q_dsv2_merge_full_mor" -> ShardSink.mergeFullSyncSql,
-    "s_dsv2_cdc_parity" -> ShardSink.cdcStreamParitySql,
-    "s_dsv2_replica_sync" -> ShardSink.replicaSyncParitySql,
-    "q_dsv2_merge" -> ShardSink.mergeRoundtripSql,
-    "s_shardsink_stream_parity" -> ShardSink.streamWriteParitySql,
-    "s_shardsink_tail_parity" -> ShardSink.tailParitySql,
-    "q_dsv2_time_travel" -> ShardSink.timeTravelSql,
-    "q_dsv2_time_travel_ts" -> ShardSink.timeTravelTsSql,
-    "q_dsv2_compact" -> ShardSink.compactRoundtripSql,
-    "q_dsv2_history" -> ShardSink.historyReportSql,
-    "q_dsv2_stats_prune" -> ShardSink.statsPruneSql,
-    "q_dsv2_range_prune" -> ShardSink.rangePruneSql,
-    "q_dsv2_count_meta" -> ShardSink.countMetaSql,
-    "q_dsv2_minmax_meta" -> ShardSink.minMaxMetaSql,
-    "q_dsv2_evolve" -> ShardSink.schemaEvolutionSql,
-    "q_dsv2_constraints" -> ShardSink.constraintsReportSql,
-    "q_dsv2_sink_spj" -> ShardSink.sinkSpjSql,
-    "q_dsv2_clone" -> ShardSink.cloneReportSql,
-    "q_dsv2_meta_tables" -> ShardSink.metaTablesReportSql,
-    "q_dsv2_ctas" -> ShardSink.ctasReportSql,
-    "q_dsv2_manifest_segments" -> ShardSink.manifestSegmentsReportSql,
-    "q_dsv2_auto_evolve" -> ShardSink.autoEvolveReportSql,
-    "q_dsv2_seg_envelope" -> ShardSink.segEnvelopeReportSql,
-    "q_dsv2_count_pruned" -> ShardSink.countPrunedReportSql,
-    "q_dsv2_groupby_meta" -> ShardSink.groupByMetaReportSql,
-    "q_dsv2_sink_dpp" -> ShardSink.sinkDppReportSql,
-    "q_dsv2_bloom_lookup" -> ShardSink.bloomLookupReportSql,
-    "q_dsv2_optimize_binpack" -> ShardSink.binPackReportSql,
-    "q_dsv2_auto_compact" -> ShardSink.autoCompactReportSql,
-    "q_dsv2_mv_refresh" -> SinkMatView.mvRefreshReportSql,
-    "q_dsv2_col_skipping" -> SinkColStats.colSkippingReportSql,
-    "s_mv_stream_parity" -> SinkMatView.mvStreamParitySql,
-    "q_dsv2_mv_groups" -> SinkMatView.mvGroupsReportSql,
-    "q_dsv2_mv_dist" -> SinkMvDist.mvDistReportSql,
-    "q_dsv2_mv_join" -> SinkMvJoin.mvJoinReportSql,
-    "q_dsv2_mv_restore" -> SinkMatView.mvRestoreReportSql,
-    "q_dsv2_mv_join_dist" -> SinkMvDist.mvJoinDistReportSql,
-    "s_mvjoin_stream_parity" -> SinkMvDist.mvJoinStreamParitySql,
-    "q_dsv2_mv_snowflake" -> SinkMvDist.mvSnowflakeReportSql,
-    "s_mvsnow_stream_parity" -> SinkMvDist.mvSnowflakeStreamParitySql,
-    "q_dsv2_mv_rewrite" -> SinkMvRewrite.mvRewriteReportSql,
-    "q_dsv2_mv_filter_rewrite" -> SinkMvRewrite.mvFilterRewriteReportSql,
-    "q_dsv2_mv_distinct_rewrite" -> SinkMvRewrite.mvDistinctRewriteReportSql,
-    "q_dsv2_mv_sql_ddl" -> SinkMvDdl.mvSqlDdlReportSql,
-    "q_dsv2_mv_dimtail_rewrite" -> SinkMvRewrite.mvDimTailRewriteReportSql,
-    "q_dsv2_mv_join_rewrite" -> SinkMvRewrite.mvJoinRewriteReportSql,
-    "q_dsv2_mv_snow_rewrite" -> SinkMvRewrite.mvSnowRewriteReportSql,
-    "q_dsv2_mv_auto_rebucket" -> SinkMvDist.mvAutoRebucketReportSql,
-    "q_dsv2_zorder_cols" -> SinkColStats.zorderColsReportSql,
-    "q_dsv2_meta_col_minmax" -> SinkColStats.metaColMinMaxReportSql,
-    "q_dsv2_restore" -> ShardSink.restoreReportSql,
-    "q_dsv2_replace_where" -> ShardSink.replaceWhereReportSql,
-    "q_dsv2_vacuum" -> ShardSink.vacuumReportSql,
-    "q_dsv2_zorder" -> ShardSink.zorderRoundtripSql,
-    "q_dsv2_tags" -> ShardSink.tagsReportSql,
-    "s_dsv2_stream_parity" -> DocGen.dsv2StreamParitySql)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    checked.map { case (k, (q, _)) => k -> q }
+
+  val oracle: Map[String, String] = checked.map { case (k, (_, sql)) => k -> sql }
 
   /** PERMISSIVE CSV read: malformed lines land in `_corrupt_record` instead
     * of failing the job — the source-level twin of the reference's

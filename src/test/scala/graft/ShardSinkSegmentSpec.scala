@@ -264,4 +264,29 @@ class ShardSinkSegmentSpec extends SparkSpec {
       assert(blobFiles.count() >= 1L)
     } finally ShardSink.setSegmentTarget(512)
   }
+
+  test("a malformed manifest entry fails the read loudly, inline or in a segment") {
+    // a non-numeric row count: the entry regex misses the entry, which
+    // must throw instead of silently dropping the file from the read set
+    def corrupt(f: java.io.File): Unit = {
+      val body = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      java.nio.file.Files.write(
+        f.toPath, body.replaceFirst("\"rows\":", "\"rows\":x").getBytes("UTF-8"))
+    }
+    val inline = freshDir().getPath
+    append(inline, 0L, 300L)
+    corrupt(new java.io.File(inline, "_manifest.v1.json"))
+    val e1 = intercept[IllegalStateException](ShardSink.committedEntries(inline))
+    assert(e1.getMessage.contains(s"$inline/_manifest.v1.json"), e1.getMessage)
+    ShardSink.setSegmentTarget(1)
+    try {
+      val seg = freshDir().getPath
+      append(seg, 0L, 300L)
+      val name = SinkTestAccess.segmentRefs(seg, 1L).head
+      corrupt(new java.io.File(seg, name))
+      SinkTestAccess.clearSegmentCache()
+      val e2 = intercept[IllegalStateException](ShardSink.entriesAsOf(seg, None))
+      assert(e2.getMessage.contains(s"$seg/$name"), e2.getMessage)
+    } finally ShardSink.setSegmentTarget(512)
+  }
 }

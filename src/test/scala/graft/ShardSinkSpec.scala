@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{ShardSink, ShardSinkDataWriter, ShardSinkScan}
+import graft.sources.{ShardSink, ShardSinkDataWriter, ShardSinkScan, SinkLifecycles}
 import org.apache.spark.sql.functions._
 
 /** Round-11 DSv2 WRITE path: the manifest-commit protocol's transactional
@@ -95,7 +95,7 @@ class ShardSinkSpec extends SparkSpec {
   }
 
   test("streaming write: epoch commits accumulate; replayed epoch is idempotent") {
-    val r = ShardSink.streamWriteParity(spark, sf001).collect().head
+    val r = SinkLifecycles.streamWriteParity(spark, sf001).collect().head
     assert((r.getLong(0), r.getLong(1), r.getLong(3)) === ((16L, 20000L, 0L)))
     // replay idempotence at the protocol level: re-committing the SAME
     // epoch replaces its manifest entries instead of doubling them
@@ -1584,7 +1584,7 @@ class ShardSinkSpec extends SparkSpec {
 
   test("runtime filtering: a broadcast dim's shard values prune sink files at execution") {
     // the checked query's own structural booleans prove delivery + pruning
-    val df = ShardSink.sinkDppReport(spark, sf001)
+    val df = SinkLifecycles.sinkDppReport(spark, sf001)
     val rows = df.collect()
     assert(rows.map(_.getInt(0)).toSeq === (0 to 3))
     rows.foreach { r =>
@@ -1607,8 +1607,8 @@ class ShardSinkSpec extends SparkSpec {
   }
 
   test("q_dsv2_write_roundtrip: rerunning replaces the manifest atomically, same answer") {
-    val a = ShardSink.writeRoundtrip(spark, sf001).collect()
-    val b = ShardSink.writeRoundtrip(spark, sf001).collect()
+    val a = SinkLifecycles.writeRoundtrip(spark, sf001).collect()
+    val b = SinkLifecycles.writeRoundtrip(spark, sf001).collect()
     assert(a.toSeq === b.toSeq)
     assert(a.map(_.getLong(1)).sum === 20000L)
   }
@@ -1642,7 +1642,7 @@ class ShardSinkSpec extends SparkSpec {
   test("bin-packing compaction: in-band files keep their bytes, only fresh ingest rewrites") {
     // the checked query's own structural boolean: every first-pass chunk
     // name survives the second (binPack) pass verbatim
-    val r = ShardSink.binPackReport(spark, sf001).collect().head
+    val r = SinkLifecycles.binPackReport(spark, sf001).collect().head
     assert(r.getAs[Long]("kept_verbatim") === 1L)
     assert(r.getAs[Long]("n_docs") === 1000L)
     assert(r.getAs[Long]("n_shards") === 16L)
@@ -1733,7 +1733,7 @@ class ShardSinkSpec extends SparkSpec {
   }
 
   test("autoCompact writer option: each append re-packs its own ingest") {
-    val r = ShardSink.autoCompactReport(spark, sf001).collect().head
+    val r = SinkLifecycles.autoCompactReport(spark, sf001).collect().head
     assert(r.getAs[Long]("auto_packed") === 1L,
       "every file shard-pure, one maintenance commit per append")
     assert(r.getAs[Long]("n_docs") === 1000L)
@@ -1826,16 +1826,14 @@ class ShardSinkSpec extends SparkSpec {
     assert(graft.sources.DocBloom.mayContain("not-base64!!", 1L),
       "malformed payloads read the file, never skip")
     // the checked query's own structural boolean proves the skip
-    val r = ShardSink.bloomLookupReport(spark, sf001).collect().head
+    val r = SinkLifecycles.bloomLookupReport(spark, sf001).collect().head
     assert(r.getAs[Long]("doc_id") === 1337L)
     assert(r.getAs[Int]("shard") === (1337 % 16))
     assert(r.getAs[Long]("n_in") === 3L)
     assert(r.getAs[Long]("bloom_pruned") === 1L,
       "point lookups must open fewer files than the census")
     // plan surface: the scan advertises the bloom-point prune
-    val sfx = java.security.MessageDigest.getInstance("MD5")
-      .digest(("blm:" + sf001).getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sinkblm_$sfx")
+    val dir = SinkLifecycles.scratchRoot(sf001, "sinkblm")
     val d = spark.read.format("graft.sources.ShardSinkSource")
       .option("path", dir.getPath).load().where(col("doc_id") === 7L)
     assert(d.queryExecution.executedPlan.toString.contains("bloomPoints=1"),
@@ -2058,7 +2056,7 @@ class ShardSinkSpec extends SparkSpec {
     // the CHECKED query itself: two compacted sink tables, SPJ join +
     // per-shard rollup — the whole plan runs without one hash exchange
     // (the rollup rides the join's shard clustering)
-    val df = ShardSink.sinkSpj(spark, sf001)
+    val df = SinkLifecycles.sinkSpj(spark, sf001)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("Exchange hashpartitioning"),

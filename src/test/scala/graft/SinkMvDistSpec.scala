@@ -711,39 +711,17 @@ class SinkMvDistSpec extends SparkSpec {
       .agg(sum("n")).collect().head.getLong(0) === 604L)
   }
 
-  test("legacy (pre-hashv) headers read under the v1 bucket hash; rebucket migrates them") {
-    val dir = freshDir("mvd_legacy")
+  test("an MV header without the hash version is rejected, not read under another hash") {
+    val dir = freshDir("mvd_nohashv")
     val mvDir = mvDirOf(dir)
-    append(dir, 0L, 500L, n = 800)
-    // single group column: the v1 and v2 hash INPUTS coincide (one cell,
-    // no separator in play), so stripping the header field yields a
-    // faithful pre-round-17 MV whose persisted bucket assignment is
-    // still consistent with the v1 read-side hash
-    SinkMvDist.create(spark, dir, mvDir, Seq("doc_id"),
-      Seq(MvAgg("n", "count"), MvAgg("s", "sum", "doc_id")), buckets = 8)
+    append(dir, 0L, 100L, n = 800)
+    SinkMvDist.create(spark, dir, mvDir, Seq("doc_id"), Seq(MvAgg("n", "count")), buckets = 4)
     val header = new java.io.File(mvDir, "_mvd.v1.json")
-    val legacy = new String(
-      java.nio.file.Files.readAllBytes(header.toPath), "UTF-8")
+    val stripped = new String(java.nio.file.Files.readAllBytes(header.toPath), "UTF-8")
       .replace("\"hashv\":2,", "")
-    java.nio.file.Files.write(header.toPath, legacy.getBytes("UTF-8"))
-    // reads, lookups and refreshes keep working against the legacy layout
-    assert(SinkMvDist.read(spark, mvDir).count() === 500L)
-    assert(SinkMvDist.lookup(spark, mvDir, Seq(Long.box(42L))).count() === 1L)
-    append(dir, 500L, 520L, n = 800)
-    val st = SinkMvDist.refresh(spark, dir, mvDir)
-    assert(st.applied && st.changeRows === 20L)
-    assert(SinkMvDist.read(spark, mvDir).count() === 520L)
-    // a SAME-COUNT rebucket on a legacy MV is NOT a no-op: it is the
-    // migration rewrite to the v2 (tab-separated) hash input
-    val noops = SinkMvDist.rebucketNoops.get()
-    SinkMvDist.rebucket(spark, mvDir, 8)
-    assert(SinkMvDist.rebucketNoops.get() === noops, "migration counted as a no-op")
-    val migrated = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(mvDir, s"_mvd.v${SinkMvDist.currentVersion(mvDir)}.json").toPath),
-      "UTF-8")
-    assert(migrated.contains("\"hashv\":2,"), "rebucket did not migrate the hash version")
-    assert(SinkMvDist.read(spark, mvDir).count() === 520L)
-    assert(SinkMvDist.lookup(spark, mvDir, Seq(Long.box(510L))).count() === 1L)
+    java.nio.file.Files.write(header.toPath, stripped.getBytes("UTF-8"))
+    val e = intercept[RuntimeException](SinkMvDist.read(spark, mvDir).count())
+    assert(e.getMessage.contains("unparseable distributed-MV header"))
   }
 
   test("multi-column keys with embedded separator chars spread across buckets (v2 hash)") {
