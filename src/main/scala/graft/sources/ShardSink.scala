@@ -912,53 +912,6 @@ private[sources] object SinkFs {
   }
 }
 
-/** One committed file's manifest entry: name, LIVE rows, (when known) the
-  * shard range its rows span — written by every commit path since round
-  * 13 and absent from older manifests (parse degrades to stats-unknown,
-  * which every consumer must treat as "may contain anything") — and
-  * (merge-on-read deletes) the file's current delete vector: a tiny
-  * sidecar file of 0-based row positions every reader must skip. `rows`
-  * counts LIVE rows (physical minus deleted), so statistics, history
-  * deltas and admission decisions all see the table a reader sees.
-  */
-case class SinkEntry(
-    file: String, rows: Long, shardMin: Int = -1, shardMax: Int = -1,
-    dv: String = "", docMin: Long = -1L, docMax: Long = -1L,
-    bf: String = "", cs: String = "") {
-  def hasStats: Boolean = shardMin >= 0
-  def hasDocStats: Boolean = docMax >= 0L
-  def hasDeletes: Boolean = dv.nonEmpty
-  /** Conservative: unknown stats always intersect. (A delete vector can
-    * only narrow the true range — the recorded superset stays sound for
-    * may-contain pruning.)
-    */
-  def mayContainShard(shards: Set[Int]): Boolean =
-    !hasStats || shards.exists(v => v >= shardMin && v <= shardMax)
-  /** Same conservatism for the doc_id range stats ("d0"/"d1"): unknown
-    * always intersects; a recorded range is a sound superset under
-    * merge-on-read vectors.
-    */
-  def mayContainDocRange(lo: Long, hi: Long): Boolean =
-    !hasDocStats || (docMin <= hi && docMax >= lo)
-  /** Point-lookup skipping via the per-file doc_id bloom ("bf"): an
-    * absent bloom always reads; a present one skips the file only when
-    * EVERY sought id is definitely absent. Sound under delete vectors
-    * (they only remove rows) — false positives cost a read, a false
-    * skip is impossible.
-    */
-  def mayContainDocPoints(points: Set[Long]): Boolean =
-    bf.isEmpty || points.exists(v => DocBloom.mayContain(bf, v))
-  /** Per-COLUMN envelope skipping ("cs", round 15 — see [[SinkColStats]]):
-    * a file whose recorded min/max for some predicate column cannot
-    * intersect the pushed predicate is skipped. Absent stats (whole
-    * entry or per column) always read; under delete vectors the recorded
-    * envelope is a live-superset — sound for may-contain, like the
-    * shard range.
-    */
-  def mayMatchCols(preds: Seq[SinkColStats.ColPred]): Boolean =
-    SinkColStats.mayMatch(cs, preds)
-}
-
 /** The storage engine behind [[ShardSinkSource]] and [[ShardSinkCatalog]]:
   * the manifest commit protocol and its IO, file pruning, DML,
   * compaction, vacuum, time travel and table state. Only versioned
@@ -968,6 +921,7 @@ case class SinkEntry(
   */
 object ShardSink {
   import org.apache.hadoop.fs.Path
+  import SinkMeta.{Manifest, SegmentFile, SegmentRef, Tag}
 
   /** VERSIONED manifests (round 13): the committed view is the
     * HIGHEST-numbered `_manifest.v<N>.json`. Every flip writes a body to
@@ -1121,7 +1075,8 @@ object ShardSink {
     // base pinned at read; a commit landing mid-compaction (whose rows
     // would be silently un-compacted away) re-bases over blind appends
     // and aborts loudly on conflicting DML — data wins
-    val (baseV, entries) = resolveBase(dir)
+    val base = resolveBase(dir)
+    val (baseV, entries) = (base.v, base.entries)
     if (entries.isEmpty) return
     requireForeignLive(dir, entries)
     val minKeep = if (binPack) (targetRowsPerFile + 1L) / 2L else Long.MaxValue
@@ -1139,20 +1094,17 @@ object ShardSink {
       // file — anything weaker leaks, anything stronger never converges
       // (each horizon commit is itself a version, so an idle table would
       // commit forever chasing its own tail).
-      val hz = horizonOf(dir)
+      val hz = horizonIn(base.m)
       val tagFloor = listTags(dir).map(_._2).minOption.getOrElse(Long.MaxValue)
       val wouldHz = math.min(tagFloor,
         math.max(hz, math.max(1L, (baseV + 1L) - retainVersions)))
       if (wouldHz > hz) {
-        def refsOf(v: Long): Set[String] =
-          (entriesAtVersion(dir, v)
-            .flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil)) ++
-            manifestCdcAt(dir, v)).toSet
-        val keepAfter = (wouldHz to baseV).flatMap(refsOf).toSet ++
-          entries.flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil))
-        val releasable = (math.max(1L, hz) until wouldHz).flatMap(refsOf).toSet -- keepAfter
+        val keepAfter = (wouldHz to baseV).flatMap(refsAt(dir, _)).toSet ++
+          entries.flatMap(fileRefs)
+        val releasable =
+          (math.max(1L, hz) until wouldHz).flatMap(refsAt(dir, _)).toSet -- keepAfter
         if (releasable.nonEmpty)
-          publishCompaction(dir, baseV, entries, kept,
+          publishCompaction(dir, base, kept,
             compactCounter.incrementAndGet(), retainVersions)
       }
       return
@@ -1172,7 +1124,7 @@ object ShardSink {
     // rewrites re-derive the per-column envelopes from the surviving
     // rows (schema pinned at the compaction base — older files simply
     // have shorter rows, whose missing cells the accumulator skips)
-    val csTable = schemaAtVersion(dir, baseV)
+    val csTable = schemaIn(base.m)
     val newEntries = byShard.toSeq.sortBy(_._1).flatMap { case (shard, rows) =>
       val sorted = rows.sortBy(_._1)
       val chunks =
@@ -1200,7 +1152,7 @@ object ShardSink {
     // cover kept files too (an interloper's vector on a kept file would
     // otherwise be silently dropped by the carried-verbatim entry), and
     // the sweep spares them because the new manifest references them
-    publishCompaction(dir, baseV, entries, kept ++ newEntries, gen, retainVersions)
+    publishCompaction(dir, base, kept ++ newEntries, gen, retainVersions)
   }
 
   /** Deterministic interleave hook for the re-base specs: runs ONCE just
@@ -1231,35 +1183,36 @@ object ShardSink {
     * longer tells the truth. Data wins; maintenance adapts.
     */
   private def publishCompaction(
-      dir: String, baseV: Long, priorEntries: Seq[SinkEntry],
-      newEntries: Seq[SinkEntry], gen: Long, retainVersions: Int,
-      opName: String = "compact"): Unit = {
+      dir: String, base: Base, newEntries: Seq[SinkEntry], gen: Long,
+      retainVersions: Int, opName: String = "compact"): Unit = {
     Option(compactBarrier.getAndSet(null)).foreach(_.apply())
+    val (baseV, priorEntries) = (base.v, base.entries)
     val oldHz = horizonOf(dir)
     // tags HOLD the horizon (Iceberg refs pin snapshots against
     // expiration): the horizon never moves past the oldest tagged
     // version, so tagged snapshots stay readable until dropped
     val tagFloor = listTags(dir).map(_._2).minOption.getOrElse(Long.MaxValue)
     val inputFiles = priorEntries.map(_.file).toSet
-    var curBase = baseV
+    var curBase = base
     var carried: Seq[SinkEntry] = Nil
     var attempt = 0
     var committed = false
     var newV = 0L
     var newHz = 0L
     while (!committed) {
-      newV = curBase + 1
+      newV = curBase.v + 1
       newHz = math.min(tagFloor,
-        math.max(horizonOf(dir), math.max(1L, newV - retainVersions)))
+        math.max(horizonIn(curBase.m), math.max(1L, newV - retainVersions)))
       try {
         writeManifestAt(dir, newEntries ++ carried,
-          if (attempt == 0) s"c$gen" else s"c$gen-r$attempt", newV,
+          if (attempt == 0) s"c$gen" else s"c$gen-r$attempt", curBase,
           horizon = Some(newHz), op = Some(opName))
         committed = true
       } catch {
         case ShardSinkConflict(_, v) =>
           attempt += 1
-          val (nv, cur) = resolveBase(dir)
+          val next = resolveBase(dir)
+          val cur = next.entries
           val curByFile = cur.map(e => e.file -> e).toMap
           val inputsIntact =
             priorEntries.forall(e => curByFile.get(e.file).contains(e))
@@ -1275,24 +1228,20 @@ object ShardSink {
                    "attempts; aborted loudly — re-run"))
           // pure additions: carry the interlopers' entries forward
           carried = cur.filterNot(e => inputFiles.contains(e.file))
-          curBase = nv
+          curBase = next
       }
     }
-    val keep: Set[String] = (newHz to newV).flatMap { v =>
-      entriesAtVersion(dir, v)
-        .flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil)) ++
-        manifestCdcAt(dir, v)
-    }.toSet
+    // one manifest read per version: the kept range and the expired
+    // range are disjoint
+    val keep: Set[String] = (newHz to newV).flatMap(refsAt(dir, _)).toSet
     // EVERYTHING the newly-expired versions referenced is releasable,
     // not just the rewritten census (review follow-up: a file superseded
     // in an EARLIER retained version — a MOR-dropped data file, a
     // pre-compaction append a previous retaining pass held — leaked
     // forever once the horizon finally moved past it, because only
     // priorEntries were swept)
-    val expiredRefs: Set[String] = (math.max(1L, oldHz) until newHz).flatMap { v =>
-      entriesAtVersion(dir, v)
-        .flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil))
-    }.toSet
+    val expiredRefs: Set[String] =
+      (math.max(1L, oldHz) until newHz).flatMap(refsAt(dir, _)).toSet
     // foreign (cloned-in) files are the SOURCE's property: dropping the
     // entry is the whole removal — compacting a clone MATERIALIZES it
     deleteOwned(dir,
@@ -1323,7 +1272,8 @@ object ShardSink {
     */
   def compactZOrder(
       dir: String, rowsPerFile: Int, retainVersions: Int = 0): Unit = {
-    val (baseV, entries) = resolveBase(dir)
+    val base = resolveBase(dir)
+    val entries = base.entries
     if (entries.isEmpty) return
     // same shallow-clone guard as plain compact: a vacuumed source must
     // surface as the named error, not a raw FileNotFound mid-rewrite
@@ -1347,7 +1297,7 @@ object ShardSink {
       z
     }
     val gen = compactCounter.incrementAndGet()
-    val csTable = schemaAtVersion(dir, baseV)
+    val csTable = schemaIn(base.m)
     val sorted = rows.sortBy { case (d, s, _) => (morton(d, s), d) }
     val newEntries = sorted.grouped(math.max(1, rowsPerFile)).zipWithIndex.map {
       case (chunk, i) =>
@@ -1366,8 +1316,7 @@ object ShardSink {
           chunk.iterator.map(_._1).min, chunk.iterator.map(_._1).max,
           bf = DocBloom.encode(bloom), cs = csAcc.encode())
     }.toSeq
-    publishCompaction(dir, baseV, entries, newEntries, gen, retainVersions,
-      opName = "zorder")
+    publishCompaction(dir, base, newEntries, gen, retainVersions, opName = "zorder")
   }
 
   /** GENERALIZED Z-ORDER — `OPTIMIZE … ZORDER BY (c1, c2, …)` for
@@ -1393,10 +1342,11 @@ object ShardSink {
     require(cols.nonEmpty && cols.size <= 8,
       s"ZORDER BY takes 1..8 columns, got ${cols.size}")
     require(cols.distinct.size == cols.size, s"duplicate ZORDER BY columns: $cols")
-    val (baseV, entries) = resolveBase(dir)
+    val base = resolveBase(dir)
+    val entries = base.entries
     if (entries.isEmpty) return
     requireForeignLive(dir, entries)
-    val table = schemaAtVersion(dir, baseV)
+    val table = schemaIn(base.m)
     val keyCols: Seq[(Int, Char)] = cols.map { c =>
       require(table.fieldNames.contains(c),
         s"ZORDER BY column '$c' not in ${table.fieldNames.mkString(",")}")
@@ -1459,8 +1409,7 @@ object ShardSink {
           chunk.iterator.map(_._1(0).toLong).min, chunk.iterator.map(_._1(0).toLong).max,
           bf = DocBloom.encode(bloom), cs = csAcc.encode())
     }.toSeq
-    publishCompaction(dir, baseV, entries, newEntries, gen, retainVersions,
-      opName = "zorder")
+    publishCompaction(dir, base, newEntries, gen, retainVersions, opName = "zorder")
   }
 
   /** VACUUM — sweep files NO manifest version references: the garbage a
@@ -1484,12 +1433,9 @@ object ShardSink {
     val fs = SinkFs.fsOf(p)
     if (!fs.exists(p)) return Seq.empty
     val statuses = fs.listStatus(p).toSeq.filter(_.isFile)
-    val versions = statuses.map(_.getPath.getName).collect { case ManifestV(n) => n.toLong }
-    val refd: Set[String] = versions.flatMap { v =>
-      entriesAtVersion(dir, v)
-        .flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil)) ++
-        manifestCdcAt(dir, v)
-    }.toSet
+    val manifests = statuses.map(_.getPath.getName)
+      .collect { case ManifestV(n) => manifestAt(dir, n.toLong) }.flatten
+    val refd: Set[String] = manifests.flatMap(refsOf(dir, _)).toSet
     // segment files NO version's manifest list references — a crashed
     // writer's orphans (written before the list flip that never
     // happened), or a conflict loser whose in-handler cleanup died. The
@@ -1498,7 +1444,7 @@ object ShardSink {
     // mid-segment write are never referenced either, so the same rule
     // sweeps them.
     val refdSegs: Set[String] =
-      versions.flatMap(v => segmentRefsAt(dir, v).map(_.name)).toSet
+      manifests.flatMap(_.segs.getOrElse(Nil).map(_.name)).toSet
     val now = System.currentTimeMillis()
     val swept = statuses.filter { st =>
       val f = st.getPath.getName
@@ -1511,17 +1457,18 @@ object ShardSink {
     swept
   }
 
-  /** (version, operation, total rows, rows added vs previous version)
-    * per retained manifest — driver-tiny (one row per commit); pre-op
-    * manifests read as "write".
+  /** (version, operation, total rows, rows added vs previous version,
+    * commit timestamp) per retained manifest — driver-tiny (one row per
+    * commit); op-less manifests read as "write".
     */
-  def history(dir: String): Seq[(Long, String, Long, Long)] = {
+  def history(dir: String): Seq[(Long, String, Long, Long, Option[Long])] = {
     val current = currentManifestVersion(dir)
     // ONE manifest parse per version: the previous total folds forward
     var prev = 0L
     (1L to current).map { v =>
-      val rows = entriesAtVersion(dir, v).map(_.rows).sum
-      val row = (v, manifestOpAt(dir, v).getOrElse("write"), rows, rows - prev)
+      val m = manifestAt(dir, v)
+      val rows = m.map(entriesIn(dir, _)).getOrElse(Nil).map(_.rows).sum
+      val row = (v, m.flatMap(_.op).getOrElse("write"), rows, rows - prev, m.map(_.ts))
       prev = rows
       row
     }
@@ -1565,96 +1512,22 @@ object ShardSink {
   }
   def segmentTarget: Int = segmentTargetRef.get()
 
-  /** A manifest-list entry: the segment's file name, its entry count,
-    * and an ENVELOPE — the min/max of the per-file shard/doc stats over
-    * every entry inside (Iceberg's manifest-list partition summaries).
-    * The envelope lets [[entriesAsOfPruned]] skip reading WHOLE segments
-    * a pushed filter rules out: a 2,000-segment table answers a pruned
-    * scan by opening the handful of matching segments, not the census —
-    * O(matching) driver IO instead of O(files/segmentTarget). Sentinels
-    * (-1) mean unknown (an entry without stats inside, or a pre-envelope
-    * manifest): unknown always reads — conservative, same contract as
-    * [[SinkEntry]].
+  /** The ONE read of a table version's manifest: None when the version
+    * does not exist (0 = before any commit). A caller that needs several
+    * fields of a version reads it once and uses the record. Versions are
+    * immutable, but there is no JVM-wide cache: the same directory can be
+    * wiped and recommitted in one JVM, reusing version numbers.
     */
-  private[sources] final case class SegmentRef(
-      name: String, n: Int, shardMin: Int = -1, shardMax: Int = -1,
-      docMin: Long = -1L, docMax: Long = -1L, bf: String = "",
-      cs: String = "") {
-    def hasStats: Boolean = shardMin >= 0
-    def hasDocStats: Boolean = docMax >= 0L
-    def mayContainShard(shards: Set[Int]): Boolean =
-      !hasStats || shards.exists(v => v >= shardMin && v <= shardMax)
-    def mayContainDocRange(lo: Long, hi: Long): Boolean =
-      !hasDocStats || (docMin <= hi && docMax >= lo)
-    /** Whole-SEGMENT point skipping: the ref bloom is the bitwise OR of
-      * the member files' blooms — a sought id definitely absent from the
-      * union is absent from every member, so the segment goes unread.
-      * On a compacted stripe layout (every segment's doc RANGE overlaps
-      * every other's) this is what keeps `doc_id = K` at O(1 segment)
-      * driver IO instead of O(segments). Absent = read, as everywhere.
-      */
-    def mayContainDocPoints(points: Set[Long]): Boolean =
-      bf.isEmpty || points.exists(v => DocBloom.mayContain(bf, v))
-    /** Whole-SEGMENT per-column skipping: the ref's merged envelope
-      * ([[SinkColStats.mergeEnvelopes]], all-or-silent) answers pushed
-      * payload predicates before the segment is even read — the same
-      * driver-IO win the shard/doc envelope buys, for `lang = 'pt'`
-      * instead of `shard = 3`. Absent = read, as everywhere.
-      */
-    def mayMatchCols(preds: Seq[SinkColStats.ColPred]): Boolean =
-      SinkColStats.mayMatch(cs, preds)
-    def json: String = {
-      val stats = if (hasStats) s""","s0":$shardMin,"s1":$shardMax""" else ""
-      val docs = if (hasDocStats) s""","d0":$docMin,"d1":$docMax""" else ""
-      val bloom = if (bf.nonEmpty) s""","b":"$bf"""" else ""
-      val cse = if (cs.nonEmpty) s""","cs":"$cs"""" else ""
-      s"""{"f":"$name","n":$n$stats$docs$bloom$cse}"""
+  def manifestAt(dir: String, version: Long): Option[Manifest] =
+    if (version <= 0L) None
+    else {
+      val name = s"_manifest.v$version.json"
+      try Some(SinkMeta.decode[Manifest](SinkFs.readString(new Path(dir, name)), s"$dir/$name"))
+      catch { case _: java.io.FileNotFoundException => None }
     }
-  }
-
-  private val SegRef =
-    ("""\{"f":"([^"]+)","n":(\d+)(?:,"s0":(-?\d+),"s1":(-?\d+))?""" +
-      """(?:,"d0":(-?\d+),"d1":(-?\d+))?(?:,"b":"([^"]*)")?""" +
-      """(?:,"cs":"([^"]*)")?\}""").r
-
-  private def parseSegRefs(blob: String, dir: String, file: String): Seq[SegmentRef] = {
-    val refs = SegRef.findAllMatchIn(blob).map { m =>
-      val (s0, s1) =
-        if (m.group(3) == null) (-1, -1) else (m.group(3).toInt, m.group(4).toInt)
-      val (d0, d1) =
-        if (m.group(5) == null) (-1L, -1L) else (m.group(5).toLong, m.group(6).toLong)
-      SegmentRef(m.group(1), m.group(2).toInt, s0, s1, d0, d1,
-        if (m.group(7) == null) "" else m.group(7),
-        if (m.group(8) == null) "" else m.group(8))
-    }.toSeq
-    requireAllParsed(blob, "{\"f\":", refs.size, dir, file)
-    refs
-  }
-
-  /** Every entry opener in a manifest or segment blob must have parsed:
-    * an entry the regex misses would otherwise silently drop a file from
-    * the read set.
-    */
-  private def requireAllParsed(
-      blob: String, opener: String, parsed: Int, dir: String, file: String): Unit = {
-    val n = Iterator.iterate(blob.indexOf(opener))(i => blob.indexOf(opener, i + 1))
-      .takeWhile(_ >= 0).size
-    if (n != parsed)
-      throw new IllegalStateException(
-        s"malformed manifest entry in $dir/$file: ${n - parsed} of $n entries unparseable")
-  }
 
   private[sources] def segmentRefsAt(dir: String, version: Long): Seq[SegmentRef] =
-    if (version <= 0L) Seq.empty
-    else {
-      val p = new Path(dir, s"_manifest.v$version.json")
-      if (!SinkFs.exists(p)) Seq.empty
-      else {
-        val blob = SinkFs.readString(p)
-        if (!blob.contains("\"segs\":[")) Seq.empty
-        else parseSegRefs(blob, dir, p.getName)
-      }
-    }
+    manifestAt(dir, version).flatMap(_.segs).getOrElse(Nil)
 
   // immutable-once-referenced: safe to cache across the JVM. LRU at the
   // cap (access-ordered LinkedHashMap) — a full clear would force a
@@ -1700,21 +1573,11 @@ object ShardSink {
     else {
       // racing reads of the same immutable file are idempotent — no lock
       segmentReadCount.incrementAndGet()
-      val es = parseEntries(SinkFs.readString(new Path(dir, name)), dir, name)
+      val es = SinkMeta.decode[SegmentFile](
+        SinkFs.readString(new Path(dir, name)), s"$dir/$name").files
       segmentCache.put(key, es)
       es
     }
-  }
-
-  private def entryJson(e: SinkEntry): String = {
-    val stats = if (e.hasStats) s""","s0":${e.shardMin},"s1":${e.shardMax}""" else ""
-    val docs = if (e.hasDocStats) s""","d0":${e.docMin},"d1":${e.docMax}""" else ""
-    val dv = if (e.hasDeletes) s""","dv":"${e.dv}"""" else ""
-    val bf = if (e.bf.nonEmpty) s""","bf":"${e.bf}"""" else ""
-    // per-column envelopes ([[SinkColStats]]): string bounds are base64
-    // inside the token, so the value is regex-safe by construction
-    val cs = if (e.cs.nonEmpty) s""","cs":"${e.cs}"""" else ""
-    s"""{"file":"${e.file}","rows":${e.rows}$stats$docs$dv$bf$cs}"""
   }
 
   /** The envelope of a segment's entries: set only when EVERY entry
@@ -1749,8 +1612,7 @@ object ShardSink {
     val name = s"_manifest.seg-$tag-$nonce-$k.json"
     val tmp = new Path(dir, s"$name.tmp")
     val w = SinkFs.create(tmp)
-    try w.write(entries.map(entryJson).mkString("""{"files":[""", ",", "]}"))
-    finally w.close()
+    try w.write(SinkMeta.encode(SegmentFile(entries))) finally w.close()
     SinkFs.moveFresh(tmp, new Path(dir, name))
     val (s0, s1, d0, d1) = envelopeOf(entries)
     SegmentRef(name, entries.size, s0, s1, d0, d1, DocBloom.union(entries.map(_.bf)),
@@ -1768,7 +1630,7 @@ object ShardSink {
     */
   private def writeSegments(
       dir: String, desired: Seq[SinkEntry], tag: String,
-      version: Long): (Seq[SegmentRef], Seq[String]) = {
+      prev: Seq[SegmentRef]): (Seq[SegmentRef], Seq[String]) = {
     val target = segmentTargetRef.get()
     // attempt-unique nonce: segment names must be collision-proof across
     // JVMs/restarts (compaction/DDL tags come from per-process counters)
@@ -1778,19 +1640,12 @@ object ShardSink {
     val out = Seq.newBuilder[SegmentRef]
     val fresh = Seq.newBuilder[String]
     var k = 0
-    segmentRefsAt(dir, version - 1).foreach { ref =>
+    prev.foreach { ref =>
       val es = readSegment(dir, ref.name)
       val kept = es.filter(e => desiredSet.contains(e) && !covered.contains(e))
       if (kept.nonEmpty) {
-        if (kept.size == es.size) {
-          // reuse as-is; recompute the envelope (and the union bloom,
-          // and the per-column envelope) so pre-envelope segments gain
-          // them the first time any commit re-references them
-          val (s0, s1, d0, d1) = envelopeOf(es)
-          out += SegmentRef(ref.name, es.size, s0, s1, d0, d1,
-            DocBloom.union(es.map(_.bf)),
-            SinkColStats.mergeEnvelopes(es.map(_.cs)))
-        } else {
+        if (kept.size == es.size) out += ref // reused as-is, envelope and all
+        else {
           k += 1
           val r = writeSegmentFile(dir, tag, nonce, k, kept)
           out += r
@@ -1808,19 +1663,16 @@ object ShardSink {
     (out.result(), fresh.result())
   }
 
-  /** Parse a version blob in EITHER format: inline `"files"` or
-    * segment-referencing `"segs"`.
+  /** A version's entries in EITHER census layout, with ENVELOPE
+    * PRUNING: a segment whose ref-level envelope cannot intersect the
+    * pushed shard/doc predicates is skipped WITHOUT being read — the
+    * scale payoff of the two-level layout (see [[SegmentRef]]). Surviving
+    * segments' entries (and inline lists) then prune per-entry, so the
+    * result is identical to filtering the full census.
     */
-  /** Blob parse with ENVELOPE PRUNING: a segment whose ref-level
-    * envelope cannot intersect the pushed shard/doc predicates is
-    * skipped WITHOUT being read — the scale payoff of the two-level
-    * layout (see [[SegmentRef]]). Surviving segments' entries (and
-    * inline blobs) then prune per-entry as before, so the result is
-    * byte-identical to filtering the full census.
-    */
-  private def parseManifestBlobPruned(
-      dir: String, file: String, blob: String,
-      pruneShards: Option[Set[Int]], pruneDocs: Option[(Long, Long)],
+  private def entriesIn(
+      dir: String, m: Manifest,
+      pruneShards: Option[Set[Int]] = None, pruneDocs: Option[(Long, Long)] = None,
       prunePoints: Option[Set[Long]] = None,
       pruneCols: Seq[SinkColStats.ColPred] = Nil): Seq[SinkEntry] = {
     def perEntry(es: Seq[SinkEntry]): Seq[SinkEntry] = es
@@ -1831,56 +1683,54 @@ object ShardSink {
       // (segment refs keep their shard/doc envelope; surviving segments'
       // entries prune here, after the segment read)
       .filter(e => e.mayMatchCols(pruneCols))
-    if (blob.contains("\"segs\":["))
-      perEntry(parseSegRefs(blob, dir, file)
-        .filter(r => pruneShards.forall(r.mayContainShard))
-        .filter(r => pruneDocs.forall { case (lo, hi) => r.mayContainDocRange(lo, hi) })
-        // union-bloom segment skipping: on stripe layouts whose doc
-        // RANGES all overlap, this is the level that makes a point
-        // lookup O(matching segments) driver IO
-        .filter(r => prunePoints.forall(r.mayContainDocPoints))
-        // per-column envelope: `lang = 'pt'` skips whole segments too
-        .filter(r => r.mayMatchCols(pruneCols))
-        .flatMap(r => readSegment(dir, r.name)))
-    else perEntry(parseEntries(blob, dir, file))
+    m.segs match {
+      case Some(refs) =>
+        perEntry(refs
+          .filter(r => pruneShards.forall(r.mayContainShard))
+          .filter(r => pruneDocs.forall { case (lo, hi) => r.mayContainDocRange(lo, hi) })
+          // union-bloom segment skipping: on stripe layouts whose doc
+          // RANGES all overlap, this is the level that makes a point
+          // lookup O(matching segments) driver IO
+          .filter(r => prunePoints.forall(r.mayContainDocPoints))
+          // per-column envelope: `lang = 'pt'` skips whole segments too
+          .filter(r => r.mayMatchCols(pruneCols))
+          .flatMap(r => readSegment(dir, r.name)))
+      case None => perEntry(m.files)
+    }
   }
 
-  // minimal parse of {"files":[{"file":"...","rows":N[,"s0":M,"s1":K]
-  // [,"d0":A,"d1":B][,"dv":"..."]},...]} — names are writer-chosen
-  // (part-*.tsv / del-*.pos), never user input
-  private val EntryRe =
-    ("""\{"file":"([^"]*\.tsv)","rows":(\d+)(?:,"s0":(-?\d+),"s1":(-?\d+))?""" +
-      """(?:,"d0":(-?\d+),"d1":(-?\d+))?(?:,"dv":"([^"]*)")?(?:,"bf":"([^"]*)")?""" +
-      """(?:,"cs":"([^"]*)")?\}""").r
+  /** A file's data name plus its delete vector, if any. */
+  private[sources] def fileRefs(e: SinkEntry): Seq[String] =
+    e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil)
 
-  private def parseEntries(json: String, dir: String, file: String): Seq[SinkEntry] = {
-    val es = EntryRe.findAllMatchIn(json).map { m =>
-      val (s0, s1) =
-        if (m.group(3) == null) (-1, -1) else (m.group(3).toInt, m.group(4).toInt)
-      val (d0, d1) =
-        if (m.group(5) == null) (-1L, -1L) else (m.group(5).toLong, m.group(6).toLong)
-      SinkEntry(m.group(1), m.group(2).toLong, s0, s1,
-        if (m.group(7) == null) "" else m.group(7), d0, d1,
-        if (m.group(8) == null) "" else m.group(8),
-        if (m.group(9) == null) "" else m.group(9))
-    }.toSeq
-    requireAllParsed(json, "{\"file\":", es.size, dir, file)
-    es
-  }
+  /** Everything a version references: data files, delete vectors and
+    * its change sidecar.
+    */
+  private def refsOf(dir: String, m: Manifest): Seq[String] =
+    entriesIn(dir, m).flatMap(fileRefs) ++ m.cdc
+
+  private def refsAt(dir: String, version: Long): Seq[String] =
+    manifestAt(dir, version).map(refsOf(dir, _)).getOrElse(Nil)
 
   def committedFiles(dir: String): Seq[String] = committedFilesWithRows(dir).map(_._1)
 
   /** The base a commit builds on: the current version, resolved ONCE,
-    * with the entries of exactly that version. Every flip path pins this
-    * pair at read time and renames to base+1 — any interleaved commit is
-    * then GUARANTEED to collide on the fresh-name rename ([[moveFresh]]),
-    * closing the old TOCTOU window where a re-list between the
-    * conflict check and the rename could land a stale entry list one
-    * version past the interloper and silently drop its files.
+    * with its manifest record and entries. Every flip path pins this at
+    * read time and renames to base+1 — any interleaved commit is then
+    * GUARANTEED to collide on the fresh-name rename ([[moveFresh]]),
+    * closing the old TOCTOU window where a re-list between the conflict
+    * check and the rename could land a stale entry list one version past
+    * the interloper and silently drop its files. The record also carries
+    * the table state (horizon, schema, constraints) the next version
+    * inherits, so a commit reads its base manifest once.
     */
-  private[sources] def resolveBase(dir: String): (Long, Seq[SinkEntry]) = {
+  private[sources] final case class Base(v: Long, m: Option[Manifest], entries: Seq[SinkEntry])
+  private[sources] val NoBase = Base(0L, None, Nil)
+
+  private[sources] def resolveBase(dir: String): Base = {
     val v = currentManifestVersion(dir)
-    (v, if (v > 0L) entriesAtVersion(dir, v) else committedEntries(dir))
+    val m = manifestAt(dir, v)
+    Base(v, m, m.map(entriesIn(dir, _)).getOrElse(Nil))
   }
 
   /** A lost manifest-version race: some other commit renamed `version`
@@ -1911,39 +1761,35 @@ object ShardSink {
     * both layouts; state keys always live in the list blob.
     */
   private[sources] def writeManifestAt(
-      dir: String, files: Seq[SinkEntry], tag: String, version: Long,
+      dir: String, files: Seq[SinkEntry], tag: String, base: Base,
       cdc: Option[String] = None, horizon: Option[Long] = None,
       schema: Option[String] = None, op: Option[String] = None,
-      constraints: Option[String] = None): Unit = {
+      constraints: Option[Seq[(String, String)]] = None): Unit = {
+    val version = base.v + 1
     val mTmp = new Path(dir, s"_manifest.$tag.tmp")
-    val cdcKey = cdc.map(f => s""""cdc":"$f",""").getOrElse("")
-    // per-commit operation marker (NOT table state — never carried
+    // `op` is a per-commit marker (NOT table state — never carried
     // forward): a RESTORE commit's file-set diff is all genuine row
     // change (no physical rewrites ride a restore), so the change feed
-    // derives it with plain-diff semantics
-    val opKey = op.map(o => s""""op":"$o",""").getOrElse("")
-    // retention horizon, schema and CHECK constraints are table state:
-    // carried forward from the previous version unless this commit moves
-    // them (a retaining compaction / an ALTER TABLE)
-    val hz = horizon.orElse(manifestHzAt(dir, version - 1))
-    val hzKey = hz.map(h => s""""hz":$h,""").getOrElse("")
-    val sch = schema.orElse(manifestSchemaAt(dir, version - 1))
-    val schKey = sch.map(s => s""""schema":"$s",""").getOrElse("")
-    val ck = constraints.orElse(manifestCkAt(dir, version - 1))
-    val ckKey = ck.map(c => s""""ck":"$c",""").getOrElse("")
-    val head = s"""{"ts":${commitTimeMillis()},$opKey$hzKey$schKey$ckKey$cdcKey"""
-    // above the segment target the blob references immutable segment
+    // derives it with plain-diff semantics. Retention horizon, schema
+    // and CHECK constraints are table state: carried forward from the
+    // base version unless this commit moves them (a retaining
+    // compaction / an ALTER TABLE); an empty constraint list overrides
+    // once and is not carried
+    val head = Manifest(commitTimeMillis(), op,
+      horizon.orElse(base.m.flatMap(_.hz)), schema.orElse(base.m.flatMap(_.schema)),
+      constraints.orElse(base.m.flatMap(_.ck).filter(_.nonEmpty)), cdc)
+    // above the segment target the list references immutable segment
     // files instead of inlining the census — commit cost O(changed),
     // see the TWO-LEVEL MANIFESTS scaladoc
     var freshSegs: Seq[String] = Nil
-    val json =
-      if (files.size <= segmentTargetRef.get())
-        files.map(entryJson).mkString(head + """"files":[""", ",", "]}")
+    val json = SinkMeta.encode(
+      if (files.size <= segmentTargetRef.get()) head.copy(files = files)
       else {
-        val (refs, fresh) = writeSegments(dir, files, tag, version)
+        val (refs, fresh) =
+          writeSegments(dir, files, tag, base.m.flatMap(_.segs).getOrElse(Nil))
         freshSegs = fresh
-        refs.map(_.json).mkString(head + """"segs":[""", ",", "]}")
-      }
+        head.copy(segs = Some(refs))
+      })
     val w = SinkFs.create(mTmp)
     try w.write(json) finally w.close()
     val dest = new Path(dir, s"_manifest.v$version.json")
@@ -1974,17 +1820,16 @@ object ShardSink {
     * commit's artifacts stay invisible (never manifested).
     */
   private[sources] def flipFromBase(
-      dir: String, baseVersion: Long, files: Seq[SinkEntry], tag: String,
+      dir: String, base: Base, files: Seq[SinkEntry], tag: String,
       cdc: Option[String] = None, horizon: Option[Long] = None,
       schema: Option[String] = None, op: Option[String] = None,
-      constraints: Option[String] = None): Unit =
-    try writeManifestAt(dir, files, tag, baseVersion + 1, cdc, horizon, schema, op,
-      constraints)
+      constraints: Option[Seq[(String, String)]] = None): Unit =
+    try writeManifestAt(dir, files, tag, base, cdc, horizon, schema, op, constraints)
     catch {
       case ShardSinkConflict(_, v) =>
         throw new IllegalStateException(
           s"ShardSink concurrent-writer conflict at $dir: version $v was " +
-            s"committed while this operation (base version $baseVersion) was " +
+            s"committed while this operation (base version ${base.v}) was " +
             "in flight; the operation aborted loudly and the concurrent " +
             "commit is intact — re-run against the new table state")
     }
@@ -2026,29 +1871,30 @@ object ShardSink {
     * wins, the DML re-runs against the new state.
     */
   private[sources] def flipDmlRebase(
-      dir: String, baseV: Long, baseEntries: Seq[SinkEntry],
-      out: Seq[SinkEntry], tag: String, filters: Array[Filter],
+      dir: String, base: Base, out: Seq[SinkEntry], tag: String, filters: Array[Filter],
       cdc: Option[String] = None, op: Option[String] = None,
       schema: Option[String] = None): Unit = {
     Option(dmlBarrier.getAndSet(null)).foreach(_.apply())
+    val (baseV, baseEntries) = (base.v, base.entries)
     val ps = shardPruneSet(filters)
     val pd = docPruneRange(filters)
     val pp = docPointSet(filters)
     val baseFiles = baseEntries.map(_.file).toSet
-    var curBase = baseV
+    var curBase = base
     var carried: Seq[SinkEntry] = Nil
     var attempt = 0
     var committed = false
     while (!committed) {
       try {
         writeManifestAt(dir, out ++ carried,
-          if (attempt == 0) tag else s"$tag-r$attempt", curBase + 1,
+          if (attempt == 0) tag else s"$tag-r$attempt", curBase,
           cdc, schema = schema, op = op)
         committed = true
       } catch {
         case ShardSinkConflict(_, v) =>
           attempt += 1
-          val (nv, cur) = resolveBase(dir)
+          val next = resolveBase(dir)
+          val cur = next.entries
           val curByFile = cur.map(e => e.file -> e).toMap
           val inputsIntact =
             baseEntries.forall(e => curByFile.get(e.file).contains(e))
@@ -2059,9 +1905,9 @@ object ShardSink {
             ps.exists(ss => !e.mayContainShard(ss)) ||
               pd.exists { case (lo, hi) => !e.mayContainDocRange(lo, hi) } ||
               pp.exists(s => !e.mayContainDocPoints(s)))
-          val ckSame = constraintsAt(dir, nv) == constraintsAt(dir, baseV)
+          val ckSame = constraintsIn(next.m) == constraintsIn(base.m)
           val schemaSafe = schema.isEmpty ||
-            manifestSchemaAt(dir, nv) == manifestSchemaAt(dir, baseV)
+            next.m.flatMap(_.schema) == base.m.flatMap(_.schema)
           if (!inputsIntact || !disjoint || !ckSame || !schemaSafe || attempt > 20)
             throw new IllegalStateException(
               s"ShardSink concurrent-writer conflict at $dir: version $v was " +
@@ -2077,7 +1923,7 @@ object ShardSink {
                 "; the operation aborted loudly and the concurrent commit " +
                 "is intact — re-run against the new table state")
           carried = added
-          curBase = nv
+          curBase = next
       }
     }
   }
@@ -2093,43 +1939,22 @@ object ShardSink {
       pruneDocs: Option[(Long, Long)] = None,
       prunePoints: Option[Set[Long]] = None,
       pruneCols: Seq[SinkColStats.ColPred] = Nil): Seq[SinkEntry] =
-    if (version <= 0L) Seq.empty
-    else {
-      val p = new Path(dir, s"_manifest.v$version.json")
-      if (!SinkFs.exists(p)) Seq.empty
-      else parseManifestBlobPruned(dir, p.getName, SinkFs.readString(p), pruneShards, pruneDocs,
-        prunePoints, pruneCols)
-    }
+    manifestAt(dir, version)
+      .map(entriesIn(dir, _, pruneShards, pruneDocs, prunePoints, pruneCols))
+      .getOrElse(Nil)
 
-  private val ManifestTs = """^\{"ts":(\d+)""".r
-
-  /** The commit timestamp (epoch millis) a manifest version recorded, if
-    * any — pre-round-14 manifests carry none.
-    */
-  def manifestTsAt(dir: String, version: Long): Option[Long] = {
-    val p = new Path(dir, s"_manifest.v$version.json")
-    if (!SinkFs.exists(p)) None
-    else ManifestTs.findFirstMatchIn(SinkFs.readString(p)).map(_.group(1).toLong)
-  }
-
-  private val ManifestHz = """"hz":(\d+)""".r
-
-  /** The RETENTION HORIZON a manifest version records: the oldest
+  /** The RETENTION HORIZON a manifest records (`"hz"`): the oldest
     * version still readable (time travel, change feed, tail). Moved only
     * by a retaining [[compact]]; carried forward by every other commit;
     * absent (= 1, everything readable) until the first compaction.
     */
-  def manifestHzAt(dir: String, version: Long): Option[Long] = {
-    val p = new Path(dir, s"_manifest.v$version.json")
-    if (!SinkFs.exists(p)) None
-    else ManifestHz.findFirstMatchIn(SinkFs.readString(p)).map(_.group(1).toLong)
-  }
+  private[sources] def horizonIn(m: Option[Manifest]): Long = m.flatMap(_.hz).getOrElse(1L)
 
   /** The CURRENT retention horizon: reads older than this version must
     * fail loudly instead of hitting missing files mid-job.
     */
   def horizonOf(dir: String): Long =
-    manifestHzAt(dir, currentManifestVersion(dir)).getOrElse(1L)
+    horizonIn(manifestAt(dir, currentManifestVersion(dir)))
 
   /** SCHEMA EVOLUTION (round 14): the table schema is PER-VERSION state,
     * recorded in the manifest (`"schema":"name:type,…"`) and carried
@@ -2145,39 +1970,25 @@ object ShardSink {
     * same thing with field IDs; positions suffice here because columns
     * are never dropped or reordered.
     */
-  private val ManifestSchema = """"schema":"([^"]+)"""".r
   private[sources] val NullCell = "\\N"
 
   /** CHECK constraints (round 14 — Delta ADD CONSTRAINT semantics, see
-    * [[SinkConstraint]]): table state in the manifest, `"ck":"name=pred
-    * [;name=pred…]"`, carried forward by every commit like schema and
-    * the retention horizon. Names are identifiers; predicates are split
-    * at the FIRST `=` so comparison `=`s inside them are safe, and may
-    * not contain `;`, `"`, `\` or control characters (validated at ADD).
-    * An empty value (all constraints dropped) writes `"ck":""`, which
-    * parses as no constraints while still overriding the carry-forward.
+    * [[SinkConstraint]]): table state in the manifest, `"ck":[{"n":name,
+    * "p":pred},…]` in definition order, carried forward by every commit
+    * like schema and the retention horizon. Names are identifiers;
+    * predicates are JSON strings, so any character a SQL predicate can
+    * hold round-trips. An empty list (all constraints dropped) still
+    * overrides the carry-forward.
     */
-  private val ManifestCk = """"ck":"([^"]+)"""".r
-
-  def manifestCkAt(dir: String, version: Long): Option[String] = {
-    val p = new Path(dir, s"_manifest.v$version.json")
-    if (!SinkFs.exists(p)) None
-    else ManifestCk.findFirstMatchIn(SinkFs.readString(p)).map(_.group(1))
-  }
+  private[sources] def constraintsIn(m: Option[Manifest]): Seq[(String, String)] =
+    m.flatMap(_.ck).getOrElse(Nil)
 
   /** The named CHECK constraints in force AS OF a manifest version. */
   def constraintsAt(dir: String, version: Long): Seq[(String, String)] =
-    if (version <= 0L) Seq.empty
-    else manifestCkAt(dir, version).toSeq.flatMap(_.split(";").toSeq.map { c =>
-      val cut = c.indexOf('=')
-      (c.substring(0, cut), c.substring(cut + 1))
-    })
+    constraintsIn(manifestAt(dir, version))
 
   def currentConstraints(dir: String): Seq[(String, String)] =
     constraintsAt(dir, currentManifestVersion(dir))
-
-  private def ckString(cks: Seq[(String, String)]): String =
-    cks.map { case (n, p) => s"$n=$p" }.mkString(";")
 
   /** `ALTER TABLE … SET TBLPROPERTIES ('graft.constraint.<name>' =
     * '<pred>')`: admit the predicate (grammar + column/type resolution,
@@ -2191,12 +2002,11 @@ object ShardSink {
     */
   private[sources] def addConstraint(dir: String, name: String, pred: String): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid constraint name '$name'")
-    require(!pred.exists(c => c == ';' || c == '"' || c == '\\' || c.isControl),
-      s"""constraint predicates may not contain ';', '"', '\\' or control chars""")
-    val (baseV, entries) = resolveBase(dir)
-    val table = schemaAtVersion(dir, baseV)
-    SinkConstraint.compile(pred, table) // admit grammar + refs before any IO
-    val cur = constraintsAt(dir, baseV)
+    require(!pred.exists(_.isControl), "constraint predicates may not contain control chars")
+    val base = resolveBase(dir)
+    val (baseV, entries) = (base.v, base.entries)
+    SinkConstraint.compile(pred, schemaIn(base.m)) // admit grammar + refs before any IO
+    val cur = constraintsIn(base.m)
     require(!cur.exists(_._1 == name),
       s"CHECK constraint $name already exists on $dir (UNSET it first)")
     if (entries.nonEmpty) {
@@ -2208,16 +2018,16 @@ object ShardSink {
       require(violations == 0L,
         s"cannot add CHECK constraint $name: existing rows violate ($pred)")
     }
-    flipFromBase(dir, baseV, entries, s"ckadd${alterCounter.incrementAndGet()}",
-      constraints = Some(ckString(cur :+ ((name, pred)))), op = Some("addConstraint"))
+    flipFromBase(dir, base, entries, s"ckadd${alterCounter.incrementAndGet()}",
+      constraints = Some(cur :+ ((name, pred))), op = Some("addConstraint"))
   }
 
   private[sources] def dropConstraint(dir: String, name: String): Unit = {
-    val (baseV, entries) = resolveBase(dir)
-    val cur = constraintsAt(dir, baseV)
+    val base = resolveBase(dir)
+    val cur = constraintsIn(base.m)
     require(cur.exists(_._1 == name), s"no CHECK constraint $name on $dir")
-    flipFromBase(dir, baseV, entries, s"ckdrop${alterCounter.incrementAndGet()}",
-      constraints = Some(ckString(cur.filterNot(_._1 == name))), op = Some("dropConstraint"))
+    flipFromBase(dir, base, base.entries, s"ckdrop${alterCounter.incrementAndGet()}",
+      constraints = Some(cur.filterNot(_._1 == name)), op = Some("dropConstraint"))
   }
 
   private def typeNameOf(dt: org.apache.spark.sql.types.DataType): String = dt match {
@@ -2318,19 +2128,15 @@ object ShardSink {
       org.apache.spark.sql.types.StructField(n, typeOfName(t), nullable = i >= 3)
     })
 
-  def manifestSchemaAt(dir: String, version: Long): Option[String] = {
-    val p = new Path(dir, s"_manifest.v$version.json")
-    if (!SinkFs.exists(p)) None
-    else ManifestSchema.findFirstMatchIn(SinkFs.readString(p)).map(_.group(1))
-  }
+  private[sources] def schemaIn(m: Option[Manifest]): StructType =
+    m.flatMap(_.schema).map(parseSchemaString).getOrElse(DocGen.schema)
 
-  /** The table schema AS OF a manifest version (pre-commit/legacy = the
+  /** The table schema AS OF a manifest version (pre-commit = the
     * original 3-column layout) — time travel reads old snapshots under
     * their OLD schema, spec-pinned.
     */
   def schemaAtVersion(dir: String, version: Long): StructType =
-    if (version <= 0L) DocGen.schema
-    else manifestSchemaAt(dir, version).map(parseSchemaString).getOrElse(DocGen.schema)
+    schemaIn(manifestAt(dir, version))
 
   def tableSchema(dir: String): StructType =
     schemaAtVersion(dir, currentManifestVersion(dir))
@@ -2346,14 +2152,14 @@ object ShardSink {
       dir: String, name: String, dt: org.apache.spark.sql.types.DataType): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid column name '$name'")
     typeNameOf(dt) // reject unsupported types before touching anything
-    val (baseV, entries) = resolveBase(dir)
-    val cur = schemaAtVersion(dir, baseV)
+    val base = resolveBase(dir)
+    val cur = schemaIn(base.m)
     require(!cur.fieldNames.contains(name), s"column $name already exists")
     // a re-used name (rename-then-re-add) must not inherit the old
     // column's envelopes: the new column is all-null for existing rows
-    val scrubbed = entries.map(e =>
+    val scrubbed = base.entries.map(e =>
       if (e.cs.isEmpty) e else e.copy(cs = SinkColStats.dropIn(e.cs, name)))
-    flipFromBase(dir, baseV, scrubbed, s"alter${alterCounter.incrementAndGet()}",
+    flipFromBase(dir, base, scrubbed, s"alter${alterCounter.incrementAndGet()}",
       op = Some("alter"), schema = Some(schemaString(cur.add(name, dt, nullable = true))))
   }
 
@@ -2365,8 +2171,8 @@ object ShardSink {
   private[sources] def widenColumn(
       dir: String, name: String, to: org.apache.spark.sql.types.DataType): Unit = {
     import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
-    val (baseV, entries) = resolveBase(dir)
-    val cur = schemaAtVersion(dir, baseV)
+    val base = resolveBase(dir)
+    val cur = schemaIn(base.m)
     val idx = cur.fieldIndex(name)
     require(idx >= 3,
       s"column $name is part of the fixed (doc_id, shard, body) core and cannot be retyped")
@@ -2379,7 +2185,7 @@ object ShardSink {
       s"unsupported type change for $name: ${cur.fields(idx).dataType.simpleString} -> " +
         s"${to.simpleString} (only widenings int->bigint, int/bigint->double)")
     val widened = StructType(cur.fields.updated(idx, cur.fields(idx).copy(dataType = to)))
-    flipFromBase(dir, baseV, entries, s"alter${alterCounter.incrementAndGet()}",
+    flipFromBase(dir, base, base.entries, s"alter${alterCounter.incrementAndGet()}",
       op = Some("alter"), schema = Some(schemaString(widened)))
   }
 
@@ -2389,37 +2195,25 @@ object ShardSink {
     */
   private[sources] def renameColumn(dir: String, from: String, to: String): Unit = {
     require(to.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid column name '$to'")
-    val (baseV, entries) = resolveBase(dir)
-    val cur = schemaAtVersion(dir, baseV)
+    val base = resolveBase(dir)
+    val cur = schemaIn(base.m)
     val idx = cur.fieldIndex(from) // throws a clear error when absent
     require(idx >= 3,
       s"column $from is part of the fixed (doc_id, shard, body) core and cannot be renamed")
     require(!cur.fieldNames.contains(to), s"column $to already exists")
     // Delta blocks renaming a column a CHECK constraint references: the
     // stored predicate names it, so the rename would break enforcement
-    constraintsAt(dir, baseV).foreach { case (n, p) =>
+    constraintsIn(base.m).foreach { case (n, p) =>
       require(!SinkConstraint.references(p).contains(from),
         s"column $from is referenced by CHECK constraint $n; drop it first")
     }
     val renamed = StructType(cur.fields.updated(idx, cur.fields(idx).copy(name = to)))
     // the envelopes describe POSITIONS; carry them to the new name so a
     // renamed column keeps pruning and the old name carries nothing
-    val carried = entries.map(e =>
+    val carried = base.entries.map(e =>
       if (e.cs.isEmpty) e else e.copy(cs = SinkColStats.renameIn(e.cs, from, to)))
-    flipFromBase(dir, baseV, carried, s"alter${alterCounter.incrementAndGet()}",
+    flipFromBase(dir, base, carried, s"alter${alterCounter.incrementAndGet()}",
       op = Some("alter"), schema = Some(schemaString(renamed)))
-  }
-
-  private val ManifestOp = """"op":"([^"]+)"""".r
-
-  /** The per-commit operation marker a manifest version recorded
-    * ("restore" today), if any. Unlike hz/schema this is NOT table
-    * state and is never carried forward.
-    */
-  def manifestOpAt(dir: String, version: Long): Option[String] = {
-    val p = new Path(dir, s"_manifest.v$version.json")
-    if (!SinkFs.exists(p)) None
-    else ManifestOp.findFirstMatchIn(SinkFs.readString(p)).map(_.group(1))
   }
 
   private val restoreCounter = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -2439,29 +2233,29 @@ object ShardSink {
     * `ALTER TABLE t SET TBLPROPERTIES ('graft.restore' = '<version>')`.
     */
   private[sources] def restore(dir: String, toVersion: Long): Unit = {
-    val (baseV, _) = resolveBase(dir)
+    val base = resolveBase(dir)
+    val baseV = base.v
     require(toVersion >= 1L && toVersion <= baseV,
       s"cannot restore $dir to version $toVersion: the table is at version " +
         s"$baseV (restorable range is 1..$baseV)")
-    val hz = horizonOf(dir)
+    val hz = horizonIn(base.m)
     require(toVersion >= hz,
       s"cannot restore $dir to version $toVersion: the retention horizon is " +
         s"$hz (versions below it were released by compaction)")
-    val entries = entriesAtVersion(dir, toVersion)
-    val missing = entries
-      .flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil))
-      .filterNot(f => SinkFs.exists(new Path(dir, f)))
+    val target = manifestAt(dir, toVersion)
+    val entries = target.map(entriesIn(dir, _)).getOrElse(Nil)
+    val missing = entries.flatMap(fileRefs).filterNot(f => SinkFs.exists(new Path(dir, f)))
     require(missing.isEmpty,
       s"cannot restore $dir to version $toVersion: ${missing.sorted.mkString(", ")} " +
         "released by a later rewrite or compaction (compact with retainVersions " +
         "to keep snapshots restorable)")
-    flipFromBase(dir, baseV, entries, s"restore${restoreCounter.incrementAndGet()}",
-      schema = Some(schemaString(schemaAtVersion(dir, toVersion))),
+    flipFromBase(dir, base, entries, s"restore${restoreCounter.incrementAndGet()}",
+      schema = Some(schemaString(schemaIn(target))),
       op = Some("restore"),
       // Delta RESTORE reverts table METADATA with the data: the CHECK
       // constraint set becomes the target version's (an empty set writes
-      // the "" override, not a carry-forward of the pre-restore set)
-      constraints = Some(ckString(constraintsAt(dir, toVersion))))
+      // the empty-list override, not a carry-forward of the pre-restore set)
+      constraints = Some(constraintsIn(target)))
   }
 
   /** A manifest entry naming a file OUTSIDE this table's directory — the
@@ -2491,9 +2285,7 @@ object ShardSink {
     * mid-job. Driver-side, clones only, a stat per foreign file.
     */
   private[sources] def requireForeignLive(dir: String, entries: Seq[SinkEntry]): Unit = {
-    val missing = entries
-      .flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil))
-      .filter(isForeign)
+    val missing = entries.flatMap(fileRefs).filter(isForeign)
       .filterNot(f => SinkFs.exists(new Path(f)))
     require(missing.isEmpty,
       s"shallow clone at $dir references source files that no longer exist " +
@@ -2574,19 +2366,20 @@ object ShardSink {
     val srcV = version.getOrElse(srcCur)
     require(srcV >= 1L && srcV <= srcCur,
       s"cannot clone $src at version $srcV: the source is at version $srcCur")
-    require(srcV >= horizonOf(src),
+    val srcHz = horizonOf(src)
+    require(srcV >= srcHz,
       s"cannot clone $src at version $srcV: the source's retention horizon is " +
-        s"${horizonOf(src)} (versions below it were released by compaction)")
-    val entries = entriesAtVersion(src, srcV)
+        s"$srcHz (versions below it were released by compaction)")
+    val srcM = manifestAt(src, srcV)
+    val entries = srcM.map(entriesIn(src, _)).getOrElse(Nil)
     requireSnapshotLive(src, srcV, entries)
     val cloned = entries.map { e =>
       e.copy(
         file = new Path(src, e.file).toString,
         dv = if (e.hasDeletes) new Path(src, e.dv).toString else "")
     }
-    writeManifestAt(dst, cloned, s"clone${cloneCounter.incrementAndGet()}", 1L,
-      schema = Some(schemaString(schemaAtVersion(src, srcV))),
-      constraints = Some(ckString(constraintsAt(src, srcV))),
+    writeManifestAt(dst, cloned, s"clone${cloneCounter.incrementAndGet()}", NoBase,
+      schema = Some(schemaString(schemaIn(srcM))), constraints = Some(constraintsIn(srcM)),
       op = Some("clone"))
   }
 
@@ -2614,7 +2407,7 @@ object ShardSink {
         s"${horizonOf(dir)} (already released by compaction)")
     val tmp = new Path(dir, s"_tag.$name.tmp")
     val w = SinkFs.create(tmp)
-    try w.write(s"""{"v":$version}""") finally w.close()
+    try w.write(SinkMeta.encode(Tag(version))) finally w.close()
     try SinkFs.moveFresh(tmp, new Path(dir, s"_tag.$name"))
     catch {
       case _: IllegalArgumentException =>
@@ -2630,13 +2423,10 @@ object ShardSink {
     SinkFs.delete(p)
   }
 
-  private val TagV = """"v":(\d+)""".r
-
-  def tagVersion(dir: String, name: String): Option[Long] = {
-    val p = new Path(dir, s"_tag.$name")
-    if (!SinkFs.exists(p)) None
-    else TagV.findFirstMatchIn(SinkFs.readString(p)).map(_.group(1).toLong)
-  }
+  def tagVersion(dir: String, name: String): Option[Long] =
+    try Some(SinkMeta.decode[Tag](SinkFs.readString(new Path(dir, s"_tag.$name")),
+      s"$dir/_tag.$name").v)
+    catch { case _: java.io.FileNotFoundException => None }
 
   def listTags(dir: String): Seq[(String, Long)] = {
     val Tag = """_tag\.(.+)""".r
@@ -2649,29 +2439,18 @@ object ShardSink {
     tagVersion(dir, name).getOrElse(throw new IllegalArgumentException(
       s"no tag '$name' at $dir (tags: ${listTags(dir).map(_._1).mkString(", ")})"))
 
-  private val ManifestCdc = """"cdc":"([^"]+)"""".r
-
-  /** The CHANGE-RECORD sidecar a manifest version references, if any —
-    * Delta's `_change_data` analogue. Commits whose row-level changes
-    * cannot be derived from the manifest diff (copy-on-write DELETE and
+  /** The CHANGE-RECORD sidecar (the manifest's `"cdc"` key) — Delta's
+    * `_change_data` analogue. Commits whose row-level changes cannot be
+    * derived from the manifest diff (copy-on-write DELETE and
     * UPDATE/MERGE rewrites, delta commits carrying update pre/post
     * images) write their complete change record to a `cdc-*.tsv` sidecar
-    * (lines `change_type\tdoc\tshard\tbody`) and reference it here;
+    * (lines `change_type\tdoc\tshard\tbody`) and reference it there;
     * blind appends and pure merge-on-read deletes stay derivation-only —
     * zero write amplification on the commits a landing zone is made of.
     * Visibility rides the manifest flip: an unreferenced sidecar (crash
     * before the flip) is invisible, exactly like an unmanifested part.
-    */
-  def manifestCdcAt(dir: String, version: Long): Option[String] = {
-    val p = new Path(dir, s"_manifest.v$version.json")
-    if (!SinkFs.exists(p)) None
-    else ManifestCdc.findFirstMatchIn(SinkFs.readString(p)).map(_.group(1))
-  }
-
-  /** Write a commit's change record to a temp name and move it into
-    * place (the same two-step every data file uses — the sidecar only
-    * becomes meaningful when the manifest referencing it lands). Returns
-    * None for an empty record: the commit changed nothing row-level.
+    * The record goes to a temp name and moves into place (the same
+    * two-step every data file uses).
     */
   private[sources] def writeCdcSidecar(
       dir: String, tag: String, records: Seq[(String, String)]): Option[String] = {
@@ -2697,10 +2476,7 @@ object ShardSink {
   def versionAtTimestamp(dir: String, tsMillis: Long): Long = {
     val current = currentManifestVersion(dir)
     require(current > 0L, s"timestampAsOf on $dir: table has no commits")
-    val stamped = (1L to current).flatMap(v => manifestTsAt(dir, v).map(v -> _))
-    require(stamped.nonEmpty,
-      s"timestampAsOf on $dir: no commit timestamps recorded " +
-        "(table predates timestamped manifests — use versionAsOf)")
+    val stamped = (1L to current).flatMap(v => manifestAt(dir, v).map(v -> _.ts))
     require(tsMillis >= stamped.head._2,
       s"timestampAsOf=$tsMillis is before the first commit " +
         s"(version ${stamped.head._1} at ts ${stamped.head._2})")
@@ -2730,7 +2506,7 @@ object ShardSink {
   /** [[entriesAsOf]] with the scan's pushed shard/doc predicates applied
     * DURING manifest resolution: on a segmented manifest, whole segments
     * the ref envelopes rule out are skipped unread
-    * ([[parseManifestBlobPruned]]); surviving entries prune per-entry as
+    * ([[entriesIn]]); surviving entries prune per-entry as
     * always. Same validation, same result as filtering the full census —
     * just O(matching) metadata IO instead of O(files/segmentTarget).
     */
@@ -2767,9 +2543,7 @@ object ShardSink {
     * on validity, so both fail with the same loud error.
     */
   def requireSnapshotLive(dir: String, asOf: Long, kept: Seq[SinkEntry]): Unit = {
-    val missing = kept
-      .flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil))
-      .filterNot(f => SinkFs.exists(new Path(dir, f)))
+    val missing = kept.flatMap(fileRefs).filterNot(f => SinkFs.exists(new Path(dir, f)))
     require(missing.isEmpty,
       s"snapshot versionAsOf=$asOf expired: compaction removed ${missing.mkString(", ")}")
   }
@@ -2998,11 +2772,12 @@ object ShardSink {
     // base pinned at read: the flip goes to exactly base+1, so any
     // interleaved commit collides there and this rewrite aborts loudly
     // instead of silently dropping the interloper's files
-    val (baseV, base) = resolveBase(dir)
-    requireForeignLive(dir, base)
-    val (entries, obsolete, removed) = cowDrop(dir, base, filters, recordRemoved = cdf)
+    val base = resolveBase(dir)
+    requireForeignLive(dir, base.entries)
+    val (entries, obsolete, removed) =
+      cowDrop(dir, base.entries, filters, recordRemoved = cdf)
     val gen = deleteCounter.incrementAndGet()
-    flipDmlRebase(dir, baseV, base, entries, s"d$gen", filters,
+    flipDmlRebase(dir, base, entries, s"d$gen", filters,
       cdc = if (cdf) writeCdcSidecar(dir, s"d$gen", removed) else None,
       op = Some("delete"))
     // physical cleanup AFTER the flip, same as truncate; cloned-in files
@@ -3068,7 +2843,7 @@ object ShardSink {
     * versioned manifests + delete vectors + change-record sidecars make
     * exact): the row-level changes committed in versions (fromV, toV].
     *
-    * A version that references a CDC SIDECAR ([[manifestCdcAt]]) reads
+    * A version that references a CDC SIDECAR ([[writeCdcSidecar]]) reads
     * it verbatim as the commit's COMPLETE change record — that is how
     * copy-on-write DELETE (`part-d` swaps), copy-on-write UPDATE/MERGE
     * (`part-r` swaps) and delta commits carrying update
@@ -3119,12 +2894,13 @@ object ShardSink {
     def dvOf(e: SinkEntry): Set[Int] =
       if (e.hasDeletes) readDeleteVector(live(e.dv)) else Set.empty
     (fromV + 1 to toV).flatMap { v =>
-      manifestCdcAt(dir, v) match {
+      val m = manifestAt(dir, v)
+      m.flatMap(_.cdc) match {
         case Some(sidecar) =>
           Seq(ShardSinkChangeSidecar(live(sidecar).toString, v): InputPartition)
         case None =>
           val prev = entriesAtVersion(dir, v - 1).map(e => e.file -> e).toMap
-          val cur = entriesAtVersion(dir, v).map(e => e.file -> e).toMap
+          val cur = m.map(entriesIn(dir, _)).getOrElse(Nil).map(e => e.file -> e).toMap
           // a RESTORE commit performs no physical rewrites — every
           // file-set difference is genuine row change, so plain-diff
           // semantics apply: ANY re-added file's live rows are inserts
@@ -3134,7 +2910,7 @@ object ShardSink {
           // (foreign-named) files' live rows are all genuine inserts to
           // THIS table, read zero-copy from the source at feed time.
           val isRestore =
-            manifestOpAt(dir, v).exists(o => o == "restore" || o == "clone")
+            m.flatMap(_.op).exists(o => o == "restore" || o == "clone")
           val inserts = cur.valuesIterator
             .filter(e => (cdcScope(e.file) || isRestore) && !prev.contains(e.file))
             .map(e => ShardSinkChangeFile(
@@ -3277,10 +3053,10 @@ object ShardSink {
     val gen = morCounter.incrementAndGet()
     var k = 0
     // base pinned at read; lost race → loud abort (read-modify-write)
-    val (baseV, base) = resolveBase(dir)
+    val base = resolveBase(dir)
     // DML over a clone reads foreign files: same named error as reads
-    requireForeignLive(dir, base)
-    val entries = base.flatMap { e =>
+    requireForeignLive(dir, base.entries)
+    val entries = base.entries.flatMap { e =>
       if (prune.exists(ss => !e.mayContainShard(ss))) Some(e) // untouched, unread
       else {
         val all = SinkFs.readLines(new Path(dir, e.file))
@@ -3301,7 +3077,7 @@ object ShardSink {
         }
       }
     }
-    flipDmlRebase(dir, baseV, base, entries, s"m$gen", filters, op = Some("delete"))
+    flipDmlRebase(dir, base, entries, s"m$gen", filters, op = Some("delete"))
     // no physical cleanup: MOR leaves every data file (and superseded
     // vector) in place — prior snapshots keep reading their exact rows
   }
@@ -3369,8 +3145,8 @@ class ShardSinkWrite(
   // transaction conflict).
   private val pinnedCks = ShardSink.currentConstraints(path)
 
-  private def requireNoNewConstraints(baseV: Long): Unit = {
-    val added = ShardSink.constraintsAt(path, baseV).filterNot(pinnedCks.contains)
+  private def requireNoNewConstraints(base: ShardSink.Base): Unit = {
+    val added = ShardSink.constraintsIn(base.m).filterNot(pinnedCks.contains)
     if (added.nonEmpty)
       throw new IllegalStateException(
         s"ShardSink write at $path conflicts with a concurrent ADD CONSTRAINT " +
@@ -3389,9 +3165,9 @@ class ShardSinkWrite(
       // evolve
       Option(basisSchema).getOrElse(ShardSink.schemaString(ShardSink.tableSchema(path)))
     else null
-  private def requireSchemaUnchanged(baseV: Long): Unit =
+  private def requireSchemaUnchanged(base: ShardSink.Base): Unit =
     if (evolveTo.isDefined) {
-      val cur = ShardSink.schemaString(ShardSink.schemaAtVersion(path, baseV))
+      val cur = ShardSink.schemaString(ShardSink.schemaIn(base.m))
       if (cur != pinnedSchema)
         throw new IllegalStateException(
           s"ShardSink schema-evolving write at $path conflicts with a concurrent " +
@@ -3432,14 +3208,14 @@ class ShardSinkWrite(
     var attempt = 0
     var committed = false
     while (!committed) {
-      val (baseV, base) = ShardSink.resolveBase(path)
-      requireNoNewConstraints(baseV)
+      val base = ShardSink.resolveBase(path)
+      requireNoNewConstraints(base)
       val kept =
-        if (base.nonEmpty) base.filterNot(_.file.startsWith(s"part-e$epochId-"))
+        if (base.entries.nonEmpty) base.entries.filterNot(_.file.startsWith(s"part-e$epochId-"))
         else recoverPriorEpochs(epochId)
       try {
         ShardSink.writeManifestAt(
-          path, kept ++ epochFiles, s"$queryId-e$epochId-a$attempt", baseV + 1,
+          path, kept ++ epochFiles, s"$queryId-e$epochId-a$attempt", base,
           op = Some("streamingUpdate"))
         committed = true
       } catch {
@@ -3504,18 +3280,17 @@ class ShardSinkWrite(
     // Truncate is read-modify-write (it REPLACES the table): it pins its
     // base once and aborts loudly on a lost race.
     if (truncate) {
-      val (baseV, previous) = ShardSink.resolveBase(path)
-      requireNoNewConstraints(baseV)
-      requireSchemaUnchanged(baseV)
+      val base = ShardSink.resolveBase(path)
+      requireNoNewConstraints(base)
+      requireSchemaUnchanged(base)
       // a pending/merged schema flips IN this commit — the one atomic
       // publication a staged REPLACE (or mergeSchema overwrite) gets
-      ShardSink.flipFromBase(path, baseV, finals, queryId, op = Some("truncate"),
+      ShardSink.flipFromBase(path, base, finals, queryId, op = Some("truncate"),
         schema = evolveTo)
       // cleanup AFTER the flip: old files are already invisible;
       // deleting them can race nothing
       ShardSink.deleteOwned(path,
-        previous.flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil))
-          .filterNot(finals.map(_.file).contains))
+        base.entries.flatMap(ShardSink.fileRefs).filterNot(finals.map(_.file).contains))
     } else if (replaceFilters.isDefined) {
       // FILTERED OVERWRITE (replaceWhere): ONE commit that drops the
       // rows matching the predicate (DELETE WHERE's copy-on-write core —
@@ -3542,10 +3317,10 @@ class ShardSinkWrite(
           finals.foreach(e => SinkFs.delete(new Path(path, e.file)))
           throw t
       }
-      val (baseV, base) = ShardSink.resolveBase(path)
-      requireNoNewConstraints(baseV)
-      requireSchemaUnchanged(baseV)
-      val (kept, obsolete, removed) = ShardSink.cowDrop(path, base, filters,
+      val base = ShardSink.resolveBase(path)
+      requireNoNewConstraints(base)
+      requireSchemaUnchanged(base)
+      val (kept, obsolete, removed) = ShardSink.cowDrop(path, base.entries, filters,
         recordRemoved = cdf)
       // change record only when the table opted into CDF: the dropped
       // rows' evidence dies with the cleanup below, and once a sidecar
@@ -3557,7 +3332,7 @@ class ShardSinkWrite(
           SinkFs.readLines(new Path(path, e.file)).map(("insert", _)))
         ShardSink.writeCdcSidecar(path, s"o$queryId", removed ++ inserted)
       }
-      ShardSink.flipDmlRebase(path, baseV, base, kept ++ finals, s"o$queryId",
+      ShardSink.flipDmlRebase(path, base, kept ++ finals, s"o$queryId",
         filters, cdc = cdc, op = Some("replaceWhere"), schema = evolveTo)
       // physical cleanup AFTER the flip, same as DELETE
       ShardSink.deleteOwned(path, obsolete)
@@ -3565,12 +3340,12 @@ class ShardSinkWrite(
       var attempt = 0
       var committed = false
       while (!committed) {
-        val (baseV, base) = ShardSink.resolveBase(path)
-        requireNoNewConstraints(baseV)
-        requireSchemaUnchanged(baseV)
+        val base = ShardSink.resolveBase(path)
+        requireNoNewConstraints(base)
+        requireSchemaUnchanged(base)
         try {
-          ShardSink.writeManifestAt(path, base ++ finals, s"$queryId-a$attempt",
-            baseV + 1, op = Some("append"), schema = evolveTo)
+          ShardSink.writeManifestAt(path, base.entries ++ finals, s"$queryId-a$attempt",
+            base, op = Some("append"), schema = evolveTo)
           committed = true
         } catch {
           case ShardSink.ShardSinkConflict(_, _) if attempt < 20 => attempt += 1
@@ -4732,8 +4507,9 @@ class ShardSinkReplaceDataWrite(
     // that rewrote one of them between scan and commit invalidates the
     // replacement rows, so this commit aborts loudly instead of
     // resurrecting superseded data
-    val (baseV, base) = ShardSink.resolveBase(path)
-    val addedCks = ShardSink.constraintsAt(path, baseV).filterNot(pinnedCks.contains)
+    val pinned = ShardSink.resolveBase(path)
+    val base = pinned.entries
+    val addedCks = ShardSink.constraintsIn(pinned.m).filterNot(pinnedCks.contains)
     if (addedCks.nonEmpty)
       throw new IllegalStateException(
         s"ShardSink row-level operation at $path conflicts with a concurrent " +
@@ -4772,12 +4548,11 @@ class ShardSinkReplaceDataWrite(
         .flatMap { case (l, n) => Iterator.fill(n)(("delete", l)) }.toSeq
       ShardSink.writeCdcSidecar(path, s"r$queryId", removed ++ inserted.toSeq)
     }
-    ShardSink.flipFromBase(path, baseV, kept ++ finals, s"r$queryId", cdc = cdc,
+    ShardSink.flipFromBase(path, pinned, kept ++ finals, s"r$queryId", cdc = cdc,
       op = Some("rewrite"))
     // replaced data files AND their (now folded-in) delete vectors;
     // cloned-in files are manifest-only removals (the source keeps them)
-    ShardSink.deleteOwned(path,
-      swapped.flatMap(e => e.file +: (if (e.hasDeletes) Seq(e.dv) else Nil)))
+    ShardSink.deleteOwned(path, swapped.flatMap(ShardSink.fileRefs))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -4924,8 +4699,9 @@ class ShardSinkDeltaWrite(path: String, info: LogicalWriteInfo, cdf: Boolean = f
     // the base means a concurrent commit rewrote rows this operation's
     // positions were resolved against — positional deletes against the
     // rewritten layout would hit the WRONG rows, so abort loudly
-    val (baseV, base) = ShardSink.resolveBase(path)
-    val addedCks = ShardSink.constraintsAt(path, baseV).filterNot(pinnedCks.contains)
+    val pinned = ShardSink.resolveBase(path)
+    val base = pinned.entries
+    val addedCks = ShardSink.constraintsIn(pinned.m).filterNot(pinnedCks.contains)
     if (addedCks.nonEmpty)
       throw new IllegalStateException(
         s"ShardSink delta commit at $path conflicts with a concurrent " +
@@ -4986,7 +4762,7 @@ class ShardSinkDeltaWrite(path: String, info: LogicalWriteInfo, cdf: Boolean = f
       })
       ShardSink.writeCdcSidecar(path, s"u$gen", recs.toSeq)
     }
-    ShardSink.flipFromBase(path, baseV, updated ++ inserts, s"u$gen", cdc = cdc,
+    ShardSink.flipFromBase(path, pinned, updated ++ inserts, s"u$gen", cdc = cdc,
       op = Some("delta"))
   }
 

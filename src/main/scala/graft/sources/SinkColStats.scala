@@ -38,10 +38,10 @@ import SinkLifecycles.scratchDir
   * zero still proves — sound for may-contain pruning, same argument as
   * the shard range.
   *
-  * Encoding (one JSON-string-safe token per column, `|`-joined):
-  * `name:t:lo:hi:nc` with `t` ∈ `l`(integral) `d`(double) `s`(string);
-  * string bounds are base64(UTF-8) so the manifest's regex parse never
-  * meets a quote or brace; numeric bounds are their exact decimal forms;
+  * Encoding (one token per column, `|`-joined, stored as the entry's
+  * `"cs"` string): `name:t:lo:hi:nc` with `t` ∈ `l`(integral) `d`(double)
+  * `s`(string); string bounds are base64(UTF-8) so a value never meets
+  * the `:`/`|` separators; numeric bounds are their exact decimal forms;
   * `!` bounds mark an all-null file; `nc` is the null count. A token
   * that does not decode carries no stats and never prunes.
   */

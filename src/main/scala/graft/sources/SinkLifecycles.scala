@@ -1689,7 +1689,8 @@ object SinkLifecycles {
     val dir = new java.io.File(root, "docs_h").getPath
     compact(dir, retainVersions = 9) // v6 compact ±0
     import s.implicits._
-    history(dir).toDF("version", "op", "n_rows", "rows_added").orderBy("version")
+    history(dir).map(h => (h._1, h._2, h._3, h._4))
+      .toDF("version", "op", "n_rows", "rows_added").orderBy("version")
   }
 
   val historyReportSql: String =

@@ -135,20 +135,6 @@ object SinkMatView {
   private def unescape(s: String): String =
     s.replace("%09", "\t").replace("%0A", "\n").replace("%25", "%")
 
-  private def headerJson(st: MvState): String = {
-    val aggs = st.aggs
-      .map(a => s"""{"n":"${a.name}","k":"${a.kind}","e":"${a.e}"}""")
-      .mkString("[", ",", "]")
-    s"""{"src":"${st.src}","group":"${st.groups.mkString(",")}",""" +
-      s""""gtype":"${st.gtypes.mkString(",")}","pred":"${st.pred}",""" +
-      s""""srcV":${st.srcV},"aggs":$aggs}"""
-  }
-
-  private val HeaderRe =
-    ("""\{"src":"([^"]*)","group":"([^"]*)","gtype":"([^"]*)",""" +
-      """"pred":"([^"]*)","srcV":(\d+),"aggs":\[(.*)\]\}""").r
-  private val AggRe = """\{"n":"([^"]*)","k":"([^"]*)","e":"([^"]*)"\}""".r
-
   private[sources] def cell(v: Option[Long]): String = v.map(_.toString).getOrElse("")
   private[sources] def uncell(s: String): Option[Long] =
     if (s.isEmpty) None else Some(s.toLong)
@@ -159,20 +145,27 @@ object SinkMatView {
   private[sources] def gcell(v: String): String = if (v == null) "%N" else escape(v)
   private[sources] def ungcell(s: String): String = if (s == "%N") null else unescape(s)
 
-  private def writeState(mvDir: String, version: Long, st: MvState): Unit = {
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(mvDir, s"_mv.tmp-$nonce")
+  private def writeState(mvDir: String, version: Long, st: MvState): Unit =
+    flipState(mvDir, "_mv", version,
+      SinkMeta.encode(SinkMeta.MvHeader(st.src, st.groups, st.gtypes, st.pred, st.srcV, st.aggs)),
+      rowLines(st.rows))
+
+  final case class MvConflict(mvDir: String, version: Long, msg: String)
+    extends RuntimeException(
+      s"concurrent MV refresh lost the flip to _mv.v$version.json at $mvDir: $msg")
+
+  /** The state flip every MV ladder shares (`prefix` `_mv`, `_mvj` or
+    * `_mvd`): the header record line and the body lines go to a tmp name,
+    * then the SAME fresh-name election the table's manifest commit uses
+    * moves them to `<prefix>.v<version>.json` — a lost race surfaces as
+    * [[MvConflict]].
+    */
+  private[sources] def flipState(
+      mvDir: String, prefix: String, version: Long, header: String, body: Seq[String]): Unit = {
+    val tmp = new Path(mvDir, s"$prefix.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
     val w = SinkFs.create(tmp)
-    try {
-      w.write(headerJson(st)); w.write("\n")
-      // deterministic row order: the blob's bytes are a function of the
-      // state, not of HashMap iteration — diffable, digest-stable
-      st.rows.toSeq.sortBy(_._1.map(gcell).mkString("\t")).foreach { case (g, vs) =>
-        w.write((g.map(gcell) ++ vs.map(cell)).mkString("\t")); w.write("\n")
-      }
-    } finally w.close()
-    val dest = new Path(mvDir, s"_mv.v$version.json")
-    try SinkFs.moveFresh(tmp, dest)
+    try (header +: body).foreach { l => w.write(l); w.write("\n") } finally w.close()
+    try SinkFs.moveFresh(tmp, new Path(mvDir, s"$prefix.v$version.json"))
     catch {
       case e: IllegalArgumentException =>
         SinkFs.delete(tmp)
@@ -180,17 +173,40 @@ object SinkMatView {
     }
   }
 
-  final case class MvConflict(mvDir: String, version: Long, msg: String)
-    extends RuntimeException(
-      s"concurrent MV refresh lost the flip to _mv.v$version.json at $mvDir: $msg")
+  /** A state version's decoded header record and its body lines. */
+  private[sources] def readStateFile[H: SinkMeta.Codec](
+      mvDir: String, prefix: String, v: Long): (H, Seq[String]) = {
+    val name = s"$prefix.v$v.json"
+    val lines = SinkFs.readLines(new Path(mvDir, name))
+    (SinkMeta.decode[H](lines.head, s"$mvDir/$name"), lines.tail)
+  }
 
-  /** Highest committed state version, 0 when the MV does not exist. The
-    * MV directory is tiny (one blob per refresh) — a listing is fine.
+  /** Group rows as body lines, in a deterministic order: the blob's bytes
+    * are a function of the state, not of HashMap iteration — diffable,
+    * digest-stable.
     */
-  def currentVersion(mvDir: String): Long =
-    SinkFs.listFileNames(new Path(mvDir)).collect {
-      case StateV(n) => n.toLong
-    }.foldLeft(0L)(math.max)
+  private[sources] def rowLines(rows: Map[List[String], Array[Option[Long]]]): Seq[String] =
+    rows.toSeq.sortBy(_._1.map(gcell).mkString("\t")).map { case (g, vs) =>
+      (g.map(gcell) ++ vs.map(cell)).mkString("\t")
+    }
+
+  private[sources] def parseRows(
+      mvDir: String, body: Seq[String], g: Int, nAggs: Int): Map[List[String], Array[Option[Long]]] =
+    body.map { l =>
+      val cs = l.split("\t", -1)
+      require(cs.length == 2 * nAggs + g, s"torn MV state row at $mvDir: $l")
+      cs.take(g).map(ungcell).toList -> cs.drop(g).map(uncell)
+    }.toMap
+
+  /** Highest committed state version of a ladder (`stateV` matches its
+    * file names), 0 when the MV does not exist. The MV directory is tiny
+    * (one blob per refresh) — a listing is fine.
+    */
+  private[sources] def ladderVersion(mvDir: String, stateV: scala.util.matching.Regex): Long =
+    SinkFs.listFileNames(new Path(mvDir)).collect { case stateV(n) => n.toLong }
+      .foldLeft(0L)(math.max)
+
+  def currentVersion(mvDir: String): Long = ladderVersion(mvDir, StateV)
 
   private def readState(mvDir: String): MvState = {
     val v = currentVersion(mvDir)
@@ -199,21 +215,9 @@ object SinkMatView {
   }
 
   private def readStateAt(mvDir: String, v: Long): MvState = {
-    val lines = SinkFs.readLines(new Path(mvDir, s"_mv.v$v.json"))
-    val (src, groups, gtypes, pred, srcV, aggs) = lines.head match {
-      case HeaderRe(s, g, t, pr, sv, as) =>
-        val parsed = AggRe.findAllMatchIn(as)
-          .map(m => MvAgg(m.group(1), m.group(2), m.group(3))).toSeq
-        (s, g.split(",", -1).toSeq, t.split(",", -1).toSeq, pr, sv.toLong, parsed)
-      case other => sys.error(s"unparseable MV state header at $mvDir: $other")
-    }
-    val g = groups.length
-    val rows = lines.tail.map { l =>
-      val cs = l.split("\t", -1)
-      require(cs.length == 2 * aggs.length + g, s"torn MV state row at $mvDir: $l")
-      cs.take(g).map(ungcell).toList -> cs.drop(g).map(uncell)
-    }.toMap
-    MvState(src, groups, gtypes, pred, srcV, aggs, rows)
+    val (h, body) = readStateFile[SinkMeta.MvHeader](mvDir, "_mv", v)
+    MvState(h.src, h.group, h.gtype, h.pred, h.srcV, h.aggs,
+      parseRows(mvDir, body, h.group.length, h.aggs.length))
   }
 
   /** Source-version watermark of the MV's current state — what the MV
@@ -306,7 +310,7 @@ object SinkMatView {
   }
 
   private def badChars(e: String): Boolean =
-    e.exists(c => c == '"' || c == '\n' || c == '\r' || c == '\t')
+    e.exists(c => c == '\n' || c == '\r' || c == '\t')
 
   private[sources] def validate(groups: Seq[String], aggs: Seq[MvAgg], pred: String): Unit = {
     require(groups.nonEmpty, "an MV needs at least one group column")
@@ -319,15 +323,14 @@ object SinkMatView {
       "an MV must include a count aggregate (group liveness derives from it)")
     val names = aggs.map(_.name)
     require(names.distinct.length == names.length, s"duplicate agg names: $names")
-    // quotes break the header JSON; control characters break the
-    // line-oriented state blob — reject at definition time, not at the
-    // first unreadable refresh
-    require(!badChars(pred), "the MV predicate must not contain quotes/newlines/tabs")
+    // line breaks and tabs stay out of definitions (each is one line of
+    // SQL); quotes and backslashes are fine — the header codec escapes them
+    require(!badChars(pred), "the MV predicate must not contain newlines/tabs")
     aggs.foreach { a =>
       require(Kinds(a.kind), s"unknown MV agg kind '${a.kind}' (${Kinds.mkString("/")})")
       require(a.name.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid agg name '${a.name}'")
       require(a.kind == "count" || a.e.nonEmpty, s"agg ${a.name}: ${a.kind} needs an expression")
-      require(!badChars(a.e), s"agg ${a.name}: expression must not contain quotes/newlines/tabs")
+      require(!badChars(a.e), s"agg ${a.name}: expression must not contain newlines/tabs")
       require(!groups.contains(a.name), s"agg ${a.name} collides with a group column")
     }
   }

@@ -108,12 +108,9 @@ object ShardSinkMetaTable {
       e.hasDeletes, ShardSink.isForeign(e.file))
 
   def rowsOf(dir: String, kind: String): Seq[Array[Any]] = kind match {
-    case "files" =>
-      ShardSink.committedEntries(dir).map(fileRow)
     case "history" =>
-      ShardSink.history(dir).map { case (v, op, rows, added) =>
-        Array[Any](v, u(op), rows, added,
-          ShardSink.manifestTsAt(dir, v).map(Long.box).orNull)
+      ShardSink.history(dir).map { case (v, op, rows, added, ts) =>
+        Array[Any](v, u(op), rows, added, ts.map(Long.box).orNull)
       }
     case "tags" =>
       ShardSink.listTags(dir).map { case (n, v) => Array[Any](u(n), v) }
@@ -181,11 +178,12 @@ class ShardSinkMetaTable(dir: String, kind: String) extends Table with SupportsR
         */
       override def planInputPartitions(): Array[InputPartition] =
         if (kind == "files") {
-          val v = ShardSink.currentManifestVersion(dir)
-          val segs = ShardSink.segmentRefsAt(dir, v)
-          if (segs.nonEmpty)
-            segs.map(r => ShardSinkMetaSegment(dir, r.name): InputPartition).toArray
-          else Array(ShardSinkMetaRows(ShardSinkMetaTable.rowsOf(dir, kind)))
+          val m = ShardSink.manifestAt(dir, ShardSink.currentManifestVersion(dir))
+          m.flatMap(_.segs) match {
+            case Some(segs) => segs.map(r => ShardSinkMetaSegment(dir, r.name): InputPartition).toArray
+            case None => Array(ShardSinkMetaRows(
+              m.map(_.files).getOrElse(Nil).map(ShardSinkMetaTable.fileRow)))
+          }
         } else Array(ShardSinkMetaRows(ShardSinkMetaTable.rowsOf(dir, kind)))
       override def createReaderFactory(): PartitionReaderFactory =
         (partition: InputPartition) => {

@@ -33,19 +33,14 @@ import SinkLifecycles.scratch
   *       `.files`-style operator surface for the MV layer.
   *
   * The definition value reuses the persisted header's field spellings
-  * (`"group"`, `"pred"`, `"buckets"`, `"aggs":[{"n","k","e"}]`), so one
-  * regex grammar reads both; [[SinkMatView.validate]] then enforces the
-  * same rules as the Scala API (no quotes/control chars in expressions,
-  * a count slot present, …). `refresh` is a reserved name.
+  * (`"group"`, `"pred"`, `"buckets"`, `"aggs":[{"n","k","e"}]`) and is
+  * read by the same codec ([[SinkMeta.MvDef]]): any JSON layout of those
+  * keys parses, and a malformed one fails the DDL naming the property;
+  * [[SinkMatView.validate]] then enforces the same rules as the Scala API
+  * (no line breaks in expressions, a count slot present, …). `refresh`
+  * is a reserved name.
   */
 object SinkMvDdl {
-
-  private val AggRe = """\{"n":"([^"]*)","k":"([^"]*)","e":"([^"]*)"\}""".r
-
-  private def field(defn: String, k: String): Option[String] =
-    (s""""$k":"([^"]*)"""").r.findFirstMatchIn(defn).map(_.group(1))
-  private def fieldNum(defn: String, k: String): Option[Int] =
-    (s""""$k":(\\d+)""").r.findFirstMatchIn(defn).map(_.group(1).toInt)
 
   private def requireName(name: String): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid MV name '$name'")
@@ -60,41 +55,28 @@ object SinkMvDdl {
   def mvDirFor(tableDir: String, name: String): String =
     tableDir.stripSuffix("/") + ".mv-" + name
 
-  def create(spark: SparkSession, tableDir: String, name: String, defn: String): Unit = {
-    requireName(name)
-    val groups = field(defn, "group")
-      .map(_.split(",", -1).toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(sys.error(
-        s"graft.mv.$name: the definition needs \"group\":\"g1,g2\" — got: $defn"))
-    val aggs = AggRe.findAllMatchIn(defn)
-      .map(m => SinkMatView.MvAgg(m.group(1), m.group(2), m.group(3))).toSeq
-    require(aggs.nonEmpty,
-      s"graft.mv.$name: the definition needs an \"aggs\":[{...}] list — got: $defn")
-    // every object inside the aggs array must parse: a reordered-key or
-    // whitespace-bearing entry would otherwise be silently SKIPPED and the
-    // MV created with fewer slots than its definition (round-19 ADVICE) —
-    // fail the DDL instead
-    val aggsBody = """"aggs":\[(.*)\]""".r.findFirstMatchIn(defn).map(_.group(1)).getOrElse("")
-    val objCount = aggsBody.count(_ == '{')
-    require(objCount == aggs.length,
-      s"graft.mv.$name: ${objCount - aggs.length} agg entr(y/ies) did not parse — " +
-        """each must be exactly {"n":"<name>","k":"<kind>","e":"<expr>"} """ +
-        s"(no whitespace, keys in that order) — got: $aggsBody")
-    val pred = field(defn, "pred").getOrElse("")
-    val buckets = fieldNum(defn, "buckets").getOrElse(16)
-    val mvDir = mvDirFor(tableDir, name)
-    SinkMvDist.create(spark, tableDir, mvDir, groups, aggs, pred, buckets)
-    SinkMvRewrite.register(tableDir, mvDir)
-  }
-
-  def refresh(spark: SparkSession, tableDir: String, name: String)
-      : SinkMatView.RefreshStats = {
+  /** The state directory of an existing view named `name`. */
+  private def existing(tableDir: String, name: String): String = {
     requireName(name)
     val mvDir = mvDirFor(tableDir, name)
     require(SinkMvDist.currentVersion(mvDir) > 0L,
       s"no materialized view named '$name' on $tableDir")
-    SinkMvDist.refresh(spark, tableDir, mvDir)
+    mvDir
   }
+
+  def create(spark: SparkSession, tableDir: String, name: String, defn: String): Unit = {
+    requireName(name)
+    val d = SinkMeta.decode[SinkMeta.MvDef](defn, s"graft.mv.$name")
+    require(d.aggs.nonEmpty,
+      s"graft.mv.$name: the definition needs a non-empty \"aggs\":[{...}] list — got: $defn")
+    val mvDir = mvDirFor(tableDir, name)
+    SinkMvDist.create(spark, tableDir, mvDir, d.group, d.aggs, d.pred, d.buckets)
+    SinkMvRewrite.register(tableDir, mvDir)
+  }
+
+  def refresh(spark: SparkSession, tableDir: String, name: String)
+      : SinkMatView.RefreshStats =
+    SinkMvDist.refresh(spark, tableDir, existing(tableDir, name))
 
   /** Re-wire a PERSISTED MV into the rewrite — registration is
     * in-memory, so after a JVM restart the state directory survives but
@@ -103,19 +85,11 @@ object SinkMvDdl {
     * '<name>')` re-attaches without rebuilding state (review fix: the
     * only previous SQL remedy was UNSET + a full re-create).
     */
-  def attach(tableDir: String, name: String): Unit = {
-    requireName(name)
-    val mvDir = mvDirFor(tableDir, name)
-    require(SinkMvDist.currentVersion(mvDir) > 0L,
-      s"no materialized view named '$name' on $tableDir")
-    SinkMvRewrite.register(tableDir, mvDir)
-  }
+  def attach(tableDir: String, name: String): Unit =
+    SinkMvRewrite.register(tableDir, existing(tableDir, name))
 
   def drop(tableDir: String, name: String): Unit = {
-    requireName(name)
-    val mvDir = mvDirFor(tableDir, name)
-    require(SinkMvDist.currentVersion(mvDir) > 0L,
-      s"no materialized view named '$name' on $tableDir")
+    val mvDir = existing(tableDir, name)
     SinkMvRewrite.unregister(tableDir, mvDir)
     SinkFs.deleteRecursively(new java.io.File(mvDir))
   }

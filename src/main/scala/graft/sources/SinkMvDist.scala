@@ -37,24 +37,9 @@ import SinkLifecycles.{MorCdf, scratch}
   */
 object SinkMvDist {
   import SinkMatView.{MvAgg, MvConflict, RefreshStats}
+  import SinkMeta.MvdJoin
 
   private val StateV = """_mvd\.v(\d+)\.json""".r
-  // "hashv":2 names the group→bucket hash INPUT (key cells joined with a
-  // TAB, see [[bucketCol]]); a header without it does not parse.
-  private val HeaderRe =
-    ("""\{"src":"([^"]*)","group":"([^"]*)","gtype":"([^"]*)",""" +
-      """"pred":"([^"]*)","srcV":(\d+),"buckets":(\d+),"hashv":2,"aggs":\[(.*)\]\}""").r
-  private val HeaderJoinRe =
-    ("""\{"src":"([^"]*)","group":"([^"]*)","gtype":"([^"]*)",""" +
-      """"pred":"([^"]*)","srcV":(\d+),"buckets":(\d+),"hashv":2,""" +
-      """"dim":"([^"]*)","fk":"([^"]*)","pk":"([^"]*)","dimV":(\d+),"aggs":\[(.*)\]\}""").r
-  private val HeaderDimsRe =
-    ("""\{"src":"([^"]*)","group":"([^"]*)","gtype":"([^"]*)",""" +
-      """"pred":"([^"]*)","srcV":(\d+),"buckets":(\d+),"hashv":2,""" +
-      """"dims":\[(.*)\],"aggs":\[(.*)\]\}""").r
-  private val DimRe =
-    """\{"dim":"([^"]*)","fk":"([^"]*)","pk":"([^"]*)","pfx":"([^"]*)","dimV":(\d+)\}""".r
-  private val AggRe = """\{"n":"([^"]*)","k":"([^"]*)","e":"([^"]*)"\}""".r
 
   /** One-shot interleave hook: runs after the fold is derived but before
     * the segment write + header flip — the window a competing refresh
@@ -76,15 +61,6 @@ object SinkMvDist {
     */
   val rebucketNoops = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** A JOIN definition (round 16): the MV materializes
-    * `fact ⋈ dim ON fk = pk` with dim columns under the `d_` prefix —
-    * [[SinkMvJoin]]'s delta-join decomposition over [[SinkMvDist]]'s
-    * distributed bucketed state, so a per-user-grain star-schema rollup
-    * needs neither a driver-resident view nor a full rescan.
-    */
-  private[sources] final case class MvdJoin(
-      dim: String, fk: String, pk: String, dimV: Long, pfx: String = "d_")
-
   private final case class MvdState(
       src: String, groups: Seq[String], gtypes: Seq[String], pred: String,
       srcV: Long, buckets: Int, aggs: Seq[MvAgg], refs: Seq[(Int, String)],
@@ -98,73 +74,18 @@ object SinkMvDist {
 
   // ---- header ------------------------------------------------------------
 
-  private def headerJson(st: MvdState): String = {
-    val aggs = st.aggs
-      .map(a => s"""{"n":"${a.name}","k":"${a.kind}","e":"${a.e}"}""")
-      .mkString("[", ",", "]")
-    // single classic-prefix dim keeps the round-16 inline shape (existing
-    // headers stay readable byte-for-byte); snowflakes write a dims array
-    val join = st.joins match {
-      case Nil => ""
-      case Seq(j) if j.pfx == "d_" =>
-        s""""dim":"${j.dim}","fk":"${j.fk}","pk":"${j.pk}","dimV":${j.dimV},"""
-      case many => many.map(j =>
-        s"""{"dim":"${j.dim}","fk":"${j.fk}","pk":"${j.pk}","pfx":"${j.pfx}","dimV":${j.dimV}}""")
-        .mkString("\"dims\":[", ",", "],")
-    }
-    s"""{"src":"${st.src}","group":"${st.groups.mkString(",")}",""" +
-      s""""gtype":"${st.gtypes.mkString(",")}","pred":"${st.pred}",""" +
-      s""""srcV":${st.srcV},"buckets":${st.buckets},"hashv":2,$join"aggs":$aggs}"""
-  }
+  private def writeHeader(mvDir: String, version: Long, st: MvdState): Unit =
+    SinkMatView.flipState(mvDir, "_mvd", version,
+      SinkMeta.encode(SinkMeta.MvdHeader(st.src, st.groups, st.gtypes, st.pred,
+        st.srcV, st.buckets, st.joins, st.aggs)),
+      st.refs.sortBy(r => (r._1, r._2)).map { case (b, f) => s"$b\t$f" })
 
-  private def writeHeader(mvDir: String, version: Long, st: MvdState): Unit = {
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(mvDir, s"_mvd.tmp-$nonce")
-    val w = SinkFs.create(tmp)
-    try {
-      w.write(headerJson(st)); w.write("\n")
-      st.refs.sortBy(r => (r._1, r._2)).foreach { case (b, f) =>
-        w.write(s"$b\t$f"); w.write("\n")
-      }
-    } finally w.close()
-    val dest = new Path(mvDir, s"_mvd.v$version.json")
-    try SinkFs.moveFresh(tmp, dest)
-    catch {
-      case e: IllegalArgumentException =>
-        SinkFs.delete(tmp)
-        throw MvConflict(mvDir, version, e.getMessage)
-    }
-  }
-
-  def currentVersion(mvDir: String): Long =
-    SinkFs.listFileNames(new Path(mvDir)).collect {
-      case StateV(n) => n.toLong
-    }.foldLeft(0L)(math.max)
+  def currentVersion(mvDir: String): Long = SinkMatView.ladderVersion(mvDir, StateV)
 
   private def readHeaderAt(mvDir: String, v: Long): MvdState = {
-    val lines = SinkFs.readLines(new Path(mvDir, s"_mvd.v$v.json"))
-    def refsOf: Seq[(Int, String)] = lines.tail.map { l =>
-      val i = l.indexOf('\t')
-      (l.substring(0, i).toInt, l.substring(i + 1))
-    }
-    def aggsOf(as: String): Seq[MvAgg] = AggRe.findAllMatchIn(as)
-      .map(m => MvAgg(m.group(1), m.group(2), m.group(3))).toSeq
-    def dimsOf(ds: String): Seq[MvdJoin] = DimRe.findAllMatchIn(ds)
-      .map(m => MvdJoin(m.group(1), m.group(2), m.group(3), m.group(5).toLong,
-        pfx = m.group(4))).toSeq
-    lines.head match {
-      case HeaderJoinRe(s, g, t, pr, sv, b, dim, fk, pk, dv, as) =>
-        MvdState(s, g.split(",", -1).toSeq, t.split(",", -1).toSeq, pr,
-          sv.toLong, b.toInt, aggsOf(as), refsOf,
-          Seq(MvdJoin(dim, fk, pk, dv.toLong)))
-      case HeaderDimsRe(s, g, t, pr, sv, b, ds, as) =>
-        MvdState(s, g.split(",", -1).toSeq, t.split(",", -1).toSeq, pr,
-          sv.toLong, b.toInt, aggsOf(as), refsOf, dimsOf(ds))
-      case HeaderRe(s, g, t, pr, sv, b, as) =>
-        MvdState(s, g.split(",", -1).toSeq, t.split(",", -1).toSeq, pr,
-          sv.toLong, b.toInt, aggsOf(as), refsOf)
-      case other => sys.error(s"unparseable distributed-MV header at $mvDir: $other")
-    }
+    val (h, body) = SinkMatView.readStateFile[SinkMeta.MvdHeader](mvDir, "_mvd", v)
+    val refs = body.map(_.split("\t", 2) match { case Array(b, f) => (b.toInt, f) })
+    MvdState(h.src, h.group, h.gtype, h.pred, h.srcV, h.buckets, h.aggs, refs, h.dims)
   }
 
   def lastSourceVersion(mvDir: String): Long = {

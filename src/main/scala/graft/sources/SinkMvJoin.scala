@@ -44,11 +44,6 @@ object SinkMvJoin {
   import SinkMatView.{MvAgg, MvConflict, RefreshStats}
 
   private val StateV = """_mvj\.v(\d+)\.json""".r
-  private val HeaderRe =
-    ("""\{"fact":"([^"]*)","dim":"([^"]*)","fk":"([^"]*)","pk":"([^"]*)",""" +
-      """"group":"([^"]*)","gtype":"([^"]*)","pred":"([^"]*)",""" +
-      """"factV":(\d+),"dimV":(\d+),"aggs":\[(.*)\]\}""").r
-  private val AggRe = """\{"n":"([^"]*)","k":"([^"]*)","e":"([^"]*)"\}""".r
 
   private final case class MvjState(
       fact: String, dim: String, fk: String, pk: String,
@@ -56,58 +51,18 @@ object SinkMvJoin {
       factV: Long, dimV: Long, aggs: Seq[MvAgg],
       rows: Map[List[String], Array[Option[Long]]])
 
-  private def headerJson(st: MvjState): String = {
-    val aggs = st.aggs
-      .map(a => s"""{"n":"${a.name}","k":"${a.kind}","e":"${a.e}"}""")
-      .mkString("[", ",", "]")
-    s"""{"fact":"${st.fact}","dim":"${st.dim}","fk":"${st.fk}","pk":"${st.pk}",""" +
-      s""""group":"${st.groups.mkString(",")}","gtype":"${st.gtypes.mkString(",")}",""" +
-      s""""pred":"${st.pred}","factV":${st.factV},"dimV":${st.dimV},"aggs":$aggs}"""
-  }
+  private def writeState(mvDir: String, version: Long, st: MvjState): Unit =
+    SinkMatView.flipState(mvDir, "_mvj", version,
+      SinkMeta.encode(SinkMeta.MvjHeader(st.fact, st.dim, st.fk, st.pk,
+        st.groups, st.gtypes, st.pred, st.factV, st.dimV, st.aggs)),
+      SinkMatView.rowLines(st.rows))
 
-  private def writeState(mvDir: String, version: Long, st: MvjState): Unit = {
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(mvDir, s"_mvj.tmp-$nonce")
-    val w = SinkFs.create(tmp)
-    try {
-      w.write(headerJson(st)); w.write("\n")
-      st.rows.toSeq.sortBy(_._1.map(SinkMatView.gcell).mkString("\t")).foreach {
-        case (g, vs) =>
-          w.write((g.map(SinkMatView.gcell) ++ vs.map(SinkMatView.cell)).mkString("\t"))
-          w.write("\n")
-      }
-    } finally w.close()
-    val dest = new Path(mvDir, s"_mvj.v$version.json")
-    try SinkFs.moveFresh(tmp, dest)
-    catch {
-      case e: IllegalArgumentException =>
-        SinkFs.delete(tmp)
-        throw MvConflict(mvDir, version, e.getMessage)
-    }
-  }
-
-  def currentVersion(mvDir: String): Long =
-    SinkFs.listFileNames(new Path(mvDir)).collect {
-      case StateV(n) => n.toLong
-    }.foldLeft(0L)(math.max)
+  def currentVersion(mvDir: String): Long = SinkMatView.ladderVersion(mvDir, StateV)
 
   private def readStateAt(mvDir: String, v: Long): MvjState = {
-    val lines = SinkFs.readLines(new Path(mvDir, s"_mvj.v$v.json"))
-    val st0 = lines.head match {
-      case HeaderRe(f, d, fk, pk, g, t, pr, fv, dv, as) =>
-        val parsed = AggRe.findAllMatchIn(as)
-          .map(m => MvAgg(m.group(1), m.group(2), m.group(3))).toSeq
-        MvjState(f, d, fk, pk, g.split(",", -1).toSeq, t.split(",", -1).toSeq,
-          pr, fv.toLong, dv.toLong, parsed, Map.empty)
-      case other => sys.error(s"unparseable join-MV state header at $mvDir: $other")
-    }
-    val g = st0.groups.length
-    val rows = lines.tail.map { l =>
-      val cs = l.split("\t", -1)
-      require(cs.length == 2 * st0.aggs.length + g, s"torn join-MV state row at $mvDir: $l")
-      cs.take(g).map(SinkMatView.ungcell).toList -> cs.drop(g).map(SinkMatView.uncell)
-    }.toMap
-    st0.copy(rows = rows)
+    val (h, body) = SinkMatView.readStateFile[SinkMeta.MvjHeader](mvDir, "_mvj", v)
+    MvjState(h.fact, h.dim, h.fk, h.pk, h.group, h.gtype, h.pred, h.factV, h.dimV, h.aggs,
+      SinkMatView.parseRows(mvDir, body, h.group.length, h.aggs.length))
   }
 
   private def readState(mvDir: String): MvjState = {

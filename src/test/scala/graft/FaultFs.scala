@@ -17,6 +17,7 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
   * cannot be predicted exactly) and `failCreateContaining` (crash
   * MID-segment-write, before any rename) — the two-level manifest
   * layout's crash points between "segments written" and "list flipped".
+  * Every `open` is counted per file name ([[FaultFs.opens]]).
   */
 class FaultFs extends RawLocalFileSystem {
   override def getScheme: String = "faultfs"
@@ -30,6 +31,11 @@ class FaultFs extends RawLocalFileSystem {
     if (sub != null && dst.getName.contains(sub))
       throw new java.io.IOException(s"FaultFs injected crash: rename $src -> $dst")
     super.rename(src, dst)
+  }
+
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    FaultFs.opens.merge(f.getName, 1L, (a: java.lang.Long, b: java.lang.Long) => a + b)
+    super.open(f, bufferSize)
   }
 
   // both concrete create overloads RawLocalFileSystem exposes — the
@@ -66,4 +72,9 @@ object FaultFs {
   /** Substring variants, for nonce-carrying segment names. */
   val failRenameToContaining = new java.util.concurrent.atomic.AtomicReference[String](null)
   val failCreateContaining = new java.util.concurrent.atomic.AtomicReference[String](null)
+
+  /** Opens per file name since the last `opens.clear()` — the read-count
+    * proof behind the parse-once specs.
+    */
+  val opens = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 }

@@ -292,6 +292,41 @@ class ShardSinkSpec extends SparkSpec {
       "version log must be retained for tailing")
   }
 
+  test("history, vacuum and an append commit read each manifest version at most once") {
+    val local = freshDir().getPath
+    val dir = "faultfs://" + local
+    (0 until 5).foreach { i =>
+      spark.read.format("graft.sources.DocGenSource")
+        .option("numDocs", "100").option("numPartitions", "1").load()
+        .where(col("doc_id") >= i * 20L && col("doc_id") < (i + 1) * 20L)
+        .write.format("graft.sources.ShardSinkSource")
+        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    }
+    assert(ShardSink.currentManifestVersion(dir) === 5L)
+    def manifestOpens(call: => Unit): Map[String, Long] = {
+      FaultFs.opens.clear()
+      call
+      import scala.jdk.CollectionConverters._
+      FaultFs.opens.asScala.collect {
+        case (n, c) if n.startsWith("_manifest.v") => n -> c.longValue
+      }.toMap
+    }
+    def atMostOnce(what: String, opens: Map[String, Long], expect: Set[String]): Unit = {
+      assert(opens.keySet === expect, s"$what opened $opens")
+      assert(opens.values.forall(_ <= 1L), s"$what re-read a manifest version: $opens")
+    }
+    val all = (1 to 5).map(v => s"_manifest.v$v.json").toSet
+    val hist = manifestOpens(assert(ShardSink.history(dir).map(_._3) === Seq(20L, 40L, 60L, 80L, 100L)))
+    atMostOnce("history", hist, all)
+    atMostOnce("vacuum", manifestOpens(assert(ShardSink.vacuum(dir).isEmpty)), all)
+    // the commit half of an append (the write was planned above the
+    // counter reset): one read of its base version, nothing else
+    val w = new graft.sources.ShardSinkWrite(dir, "parseonce")
+    atMostOnce("append commit", manifestOpens(w.commit(Array.empty)), Set("_manifest.v5.json"))
+    assert(ShardSink.currentManifestVersion(dir) === 6L)
+    assert(ShardSink.committedEntries(dir).map(_.rows).sum === 100L)
+  }
+
   test("streaming epoch crash at the flip: prior epochs stay visible; replay is idempotent") {
     // the streaming twin: epoch 1's commit dies at the version flip. With
     // versioned manifests epoch 0's manifest is UNTOUCHED (the checkpoint
@@ -726,7 +761,7 @@ class ShardSinkSpec extends SparkSpec {
     val dir = new java.io.File(root, "docs").getPath
     assert(s.read.format("graft.sources.ShardSinkSource")
       .option("path", dir).option("versionAsOf", "2").load().count() === 300L)
-    assert(ShardSink.manifestOpAt(dir, 3L) === Some("restore"))
+    assert(ShardSink.manifestAt(dir, 3L).flatMap(_.op) === Some("restore"))
     docs(400L, 500L).writeTo("rs.docs").append()              // v4: +100
     assert(s.read.table("rs.docs").count() === 500L)
     s.sql("ALTER TABLE rs.docs SET TBLPROPERTIES ('graft.restore' = '3')") // v5
@@ -828,7 +863,7 @@ class ShardSinkSpec extends SparkSpec {
       .writeTo("ow2.docs").overwrite(col("doc_id") >= 300L) // v2: 100 -> 50
     assert(s.read.table("ow2.docs").count() === 350L)
     val dir = new java.io.File(root, "docs").getPath
-    assert(ShardSink.manifestCdcAt(dir, 2L).isEmpty) // no sidecar cost paid
+    assert(ShardSink.manifestAt(dir, 2L).flatMap(_.cdc).isEmpty) // no sidecar cost paid
     val e = intercept[Exception](
       s.read.format("graft.sources.ShardSinkSource")
         .option("path", dir).option("readChangeFeed", "true")
@@ -1409,7 +1444,7 @@ class ShardSinkSpec extends SparkSpec {
     s.sql("DELETE FROM cdfd.docs WHERE doc_id >= 300") // v2: CoW rewrite, no record
     val dir = new java.io.File(root, "docs").getPath
     // no sidecar was written
-    assert(ShardSink.manifestCdcAt(dir, 2L).isEmpty)
+    assert(ShardSink.manifestAt(dir, 2L).flatMap(_.cdc).isEmpty)
     // the range that reads v2's diff hits the unrecorded rewrite: refuse
     // with guidance, never emit a feed missing the deleted rows
     val e = intercept[Exception](
@@ -2139,6 +2174,30 @@ class ShardSinkSpec extends SparkSpec {
     }.head
     assert(scan.inputPartitions.size <= 16, s"${scan.inputPartitions.size} partitions planned")
     assert(pruned.count() === 10L)
+  }
+
+  test("CHECK constraints: predicates holding ';', '=' and quotes round-trip through the manifest") {
+    val dir = freshDir().getPath
+    spark.read.format("graft.sources.DocGenSource")
+      .option("numDocs", "100").option("numPartitions", "1").load()
+      .write.format("graft.sources.ShardSinkSource")
+      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    val cks = Seq("nosemi" -> "body <> 'a;b'", "eq" -> "body <> 'x=\"y\"' OR doc_id >= 0")
+    cks.foreach { case (n, p) => graft.sources.SinkTestAccess.addConstraint(dir, n, p) }
+    assert(ShardSink.currentConstraints(dir) === cks)
+    // carried forward verbatim by a data commit, and enforced
+    spark.read.format("graft.sources.DocGenSource")
+      .option("numDocs", "200").option("numPartitions", "1").load()
+      .where(col("doc_id") >= 100L)
+      .write.format("graft.sources.ShardSinkSource")
+      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    assert(ShardSink.currentConstraints(dir) === cks)
+    import spark.implicits._
+    val e = intercept[Exception](Seq((900L, 1, "a;b")).toDF("doc_id", "shard", "body")
+      .write.format("graft.sources.ShardSinkSource")
+      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save())
+    assert(messageChain(e).contains("CHECK constraint nosemi"), messageChain(e))
+    assert(ShardSink.committedEntries(dir).map(_.rows).sum === 200L)
   }
 
   test("CHECK constraints: streaming epochs enforce like batch writes") {

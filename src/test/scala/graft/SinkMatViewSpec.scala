@@ -47,6 +47,26 @@ class SinkMatViewSpec extends SparkSpec {
 
   private def entryCount(dir: String): Int = SinkTestAccess.resolveBase(dir)._2.length
 
+  test("the blob MV keeps predicates and expressions with double quotes and backslashes") {
+    val dir = freshDir("mv_quotes")
+    val mvDir = SinkMatView.mvDirOf(dir)
+    append(dir, 0L, 800L)
+    val pred = """body <> "x\\y" AND doc_id < 1500"""
+    val e = """length(concat(body, "\\"))"""
+    SinkMatView.create(spark, dir, mvDir, Seq("shard"),
+      Seq(MvAgg("n", "count"), MvAgg("l", "sum", e)), where = pred)
+    append(dir, 800L, 1600L)
+    SinkMatView.refresh(spark, dir, mvDir) // re-reads the definition from the header
+    val want = spark.read.format("graft.sources.ShardSinkSource").option("path", dir).load()
+      .where(expr(pred)).groupBy("shard")
+      .agg(count(lit(1)), sum(expr(e).cast("long")))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    val got = SinkMatView.read(spark, mvDir).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got === want)
+    assert(want.nonEmpty)
+  }
+
   test("refresh IO is O(changed files): an insert-only refresh opens exactly the new commit") {
     val dir = freshDir("mv_inc")
     val mvDir = SinkMatView.mvDirOf(dir)

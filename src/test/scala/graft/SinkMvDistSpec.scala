@@ -724,6 +724,43 @@ class SinkMvDistSpec extends SparkSpec {
     assert(e.getMessage.contains("unparseable distributed-MV header"))
   }
 
+  test("a malformed aggregate in an MV header fails the read loudly, naming the header") {
+    val dir = freshDir("mvd_badagg")
+    val mvDir = mvDirOf(dir)
+    append(dir, 0L, 100L, n = 800)
+    SinkMvDist.create(spark, dir, mvDir, Seq("shard"),
+      Seq(MvAgg("n", "count"), MvAgg("sd", "sum", "doc_id")), buckets = 4)
+    val header = new java.io.File(mvDir, "_mvd.v1.json")
+    val body = new String(java.nio.file.Files.readAllBytes(header.toPath), "UTF-8")
+    // one agg object with a non-string kind: it must not be dropped from
+    // the slot list (the MV would then read with fewer slots)
+    val corrupt = body.replace("\"k\":\"sum\"", "\"k\":7")
+    assert(corrupt !== body)
+    java.nio.file.Files.write(header.toPath, corrupt.getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](SinkMvDist.read(spark, mvDir).count())
+    assert(e.getMessage.contains(s"$mvDir/_mvd.v1.json"), e.getMessage)
+  }
+
+  test("MV predicates and aggregate expressions may hold double quotes and backslashes") {
+    val dir = freshDir("mvd_quotes")
+    val mvDir = mvDirOf(dir)
+    append(dir, 0L, 800L)
+    val pred = """body <> "x\\y" AND doc_id < 1500"""
+    val e = """length(concat(body, "\\"))"""
+    SinkMvDist.create(spark, dir, mvDir, Seq("shard"),
+      Seq(MvAgg("n", "count"), MvAgg("l", "sum", e)), where = pred, buckets = 4)
+    append(dir, 800L, 1600L)
+    SinkMvDist.refresh(spark, dir, mvDir) // re-reads the definition from the header
+    val want = spark.read.format("graft.sources.ShardSinkSource").option("path", dir).load()
+      .where(expr(pred)).groupBy("shard")
+      .agg(count(lit(1)), sum(expr(e).cast("long")))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    val got = SinkMvDist.read(spark, mvDir).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got === want)
+    assert(want.nonEmpty)
+  }
+
   test("multi-column keys with embedded separator chars spread across buckets (v2 hash)") {
     val root = java.nio.file.Files.createTempDirectory("mvd_sep").toString
     val s = spark.newSession()

@@ -7,13 +7,20 @@ package graft.sources
   * catch, impossible to schedule reliably with threads alone.
   */
 object SinkTestAccess {
-  def resolveBase(dir: String): (Long, Seq[SinkEntry]) = ShardSink.resolveBase(dir)
+  def resolveBase(dir: String): (Long, Seq[SinkEntry]) = {
+    val b = ShardSink.resolveBase(dir)
+    (b.v, b.entries)
+  }
+
+  /** A flip onto `version`, built on whatever `version - 1` holds. */
+  private def baseAt(dir: String, version: Long): ShardSink.Base =
+    ShardSink.Base(version, ShardSink.manifestAt(dir, version), Nil)
 
   def writeManifestAt(dir: String, files: Seq[SinkEntry], tag: String, version: Long): Unit =
-    ShardSink.writeManifestAt(dir, files, tag, version)
+    ShardSink.writeManifestAt(dir, files, tag, baseAt(dir, version - 1))
 
   def flipFromBase(dir: String, baseVersion: Long, files: Seq[SinkEntry], tag: String): Unit =
-    ShardSink.flipFromBase(dir, baseVersion, files, tag)
+    ShardSink.flipFromBase(dir, baseAt(dir, baseVersion), files, tag)
 
   def isConflict(t: Throwable): Boolean = t.isInstanceOf[ShardSink.ShardSinkConflict]
 
