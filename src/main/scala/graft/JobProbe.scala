@@ -58,14 +58,7 @@ object JobProbe {
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = ()
     }
-    // warm-up identical to Bench
-    try {
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings")
-        .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
-      graft.model.Tables.events(spark, sfDir).count()
-      spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    } catch { case _: Throwable => () }
+    Bench.warmUp(spark, sfDir)
 
     // SPARK_GRAFT_SAMPLE=1: sample every thread's stacks at 20 ms while the
     // query runs; print the hottest (method, state) frames afterwards —

@@ -39,14 +39,7 @@ object QueryProbe {
     def jitMs: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
     def janino: Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    // same warm-up as Bench: table footers + one codegen'd agg
-    try {
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings")
-        .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
-      graft.model.Tables.events(spark, sfDir).count()
-      spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    } catch { case _: Throwable => () }
+    Bench.warmUp(spark, sfDir)
     // SPARK_GRAFT_PLAN_ONLY=1: time analysis+optimization+physical planning
     // without execution — separates Catalyst cost from run cost for
     // literal-heavy plans

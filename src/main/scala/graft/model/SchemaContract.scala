@@ -19,7 +19,8 @@ import org.apache.spark.sql.types._
   * TIMESTAMP) — [[Tables.adaptEventTs]] normalizes all three, so all
   * three are in-contract for `events.ts`; plain µs timestamps read as
   * either NTZ or LTZ depending on the writer's isAdjustedToUTC flag, so
-  * date-like columns accept both. Footer-only reads — no data scan.
+  * date-like columns accept both. Footer-only reads through
+  * [[Tables.schemaOf]], the resolver every table read uses — no data scan.
   */
 object SchemaContract {
   private val ts: Set[DataType] = Set(TimestampType, TimestampNTZType)
@@ -74,7 +75,7 @@ object SchemaContract {
     contract.toSeq.sortBy(_._1).flatMap { case (table, cols) =>
       val path = s"$sfDir/$table.parquet"
       val actual: Either[String, Map[String, DataType]] =
-        try Right(spark.read.parquet(path).schema
+        try Right(Tables.schemaOf(spark, path)
           .map(f => f.name -> normalize(f.dataType)).toMap)
         catch { case e: Throwable => Left(s"$table: unreadable ($path): ${e.getMessage}") }
       actual match {

@@ -1187,7 +1187,7 @@ object ShardSink {
       retainVersions: Int, opName: String = "compact"): Unit = {
     Option(compactBarrier.getAndSet(null)).foreach(_.apply())
     val (baseV, priorEntries) = (base.v, base.entries)
-    val oldHz = horizonOf(dir)
+    val oldHz = horizonIn(base.m)
     // tags HOLD the horizon (Iceberg refs pin snapshots against
     // expiration): the horizon never moves past the oldest tagged
     // version, so tagged snapshots stay readable until dropped
@@ -1232,8 +1232,13 @@ object ShardSink {
       }
     }
     // one manifest read per version: the kept range and the expired
-    // range are disjoint
-    val keep: Set[String] = (newHz to newV).flatMap(refsAt(dir, _)).toSet
+    // range are disjoint, and the base and the new version come from the
+    // records in hand
+    val newRefs = (newEntries ++ carried).flatMap(fileRefs)
+    val baseRefs = curBase.entries.flatMap(fileRefs) ++ curBase.m.toSeq.flatMap(_.cdc)
+    def refsOfVersion(v: Long): Seq[String] =
+      if (v == newV) newRefs else if (v == curBase.v) baseRefs else refsAt(dir, v)
+    val keep: Set[String] = (newHz to newV).flatMap(refsOfVersion).toSet
     // EVERYTHING the newly-expired versions referenced is releasable,
     // not just the rewritten census (review follow-up: a file superseded
     // in an EARLIER retained version — a MOR-dropped data file, a
@@ -1241,7 +1246,7 @@ object ShardSink {
     // forever once the horizon finally moved past it, because only
     // priorEntries were swept)
     val expiredRefs: Set[String] =
-      (math.max(1L, oldHz) until newHz).flatMap(refsAt(dir, _)).toSet
+      (math.max(1L, oldHz) until newHz).flatMap(refsOfVersion).toSet
     // foreign (cloned-in) files are the SOURCE's property: dropping the
     // entry is the whole removal — compacting a clone MATERIALIZES it
     deleteOwned(dir,

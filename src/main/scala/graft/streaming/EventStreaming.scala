@@ -166,8 +166,8 @@ object EventStreaming {
   /** File-based streaming source over a directory of event parquet files —
     * the production shape for micro-batch ingestion of an append-only
     * landing zone (the reference's repeated-run accumulation, main.py:176,
-    * done properly). Explicit schema (streams can't infer) taken from a
-    * one-footer batch read of the same directory when files already exist,
+    * done properly). Explicit schema (streams can't infer) taken from
+    * [[graft.model.Tables.schemaOf]] over the directory when files already exist,
     * then the same adaptive `ts` normalization as the batch path in
     * [[graft.model.Tables.events]] (nanos-long / TIMESTAMP_NTZ / TIMESTAMP
     * all accepted), so batch and stream plans agree regardless of how the
@@ -184,7 +184,7 @@ object EventStreaming {
       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     graft.model.Tables.readEventsAsNanoLongs(spark)
     val resolved = schema.getOrElse {
-      try spark.read.parquet(dir).schema
+      try graft.model.Tables.schemaOf(spark, dir)
       catch {
         case _: org.apache.spark.sql.AnalysisException =>
           org.apache.spark.sql.types.StructType.fromDDL(graft.model.Tables.eventStreamDdl)

@@ -428,6 +428,50 @@ class ScaleGuardSpec extends SparkSpec {
     }
   }
 
+  test("job budget: the warm analytics pool starts no more Spark jobs than audited") {
+    // perfbench's analytics_warm pool (perfbench/run.py ANALYTICS_POOL):
+    // tiny queries whose wall time is set by the number of Spark jobs they
+    // start. Each entry is (jobs while building the DataFrame, jobs while
+    // collecting it) on a warm second pass at sf0.001, AQE on as in the
+    // bench session. Building starts no job: `Tables` resolves each
+    // table's schema once per file stamp. A broadcast-sized ORDER BY
+    // starts no range-sampling job (graft.plans.OnePartitionSort).
+    val budget = Map(
+      "q_flagship_top10" -> (0, 3), "q_getorcreate_dims" -> (0, 4), "q_point_lookup" -> (0, 2),
+      "q_rollup" -> (0, 3), "q_window_frames" -> (0, 3), "q_session_counts" -> (0, 3),
+      "q_json_extract" -> (0, 3), "q_ptbr_normalize" -> (0, 2), "t_lang_id" -> (0, 2),
+      "t_quality_score" -> (0, 2), "x2_minhash_pairs" -> (0, 1), "x5_word_freq" -> (0, 2),
+      "x3_knn_ivf" -> (0, 1), "x6_centroids" -> (0, 3), "x4_cluster_sizes" -> (0, 4),
+      "m_media_features" -> (0, 3))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def counted[T](body: => T): (T, Int) = {
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      jobs.set(0)
+      val out = body
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      (out, jobs.get())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val counts = budget.keys.toSeq.sorted.map { name =>
+        SparkEntry.queries(name)(spark, sf001).collect() // warm: Memo indexes, schemas
+        val (df, construct) = counted(SparkEntry.queries(name)(spark, sf001))
+        val (_, collect) = counted(df.collect())
+        name -> (construct, collect)
+      }
+      info(counts.map { case (n, (b, c)) => s"$n=$b+$c" }.mkString(" "))
+      val over = counts.collect {
+        case (name, (b, c)) if b > budget(name)._1 || c > budget(name)._2 =>
+          s"$name: $b+$c jobs (budget ${budget(name)._1}+${budget(name)._2})"
+      }
+      assert(over.isEmpty, s"job budget exceeded:\n  ${over.mkString("\n  ")}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("t_shuffle_epochs: reshuffle is seed-independent (no diagonal, no empty cells)") {
     val rows = TextOps.shuffleEpochs(spark, sf001).collect()
       .map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap

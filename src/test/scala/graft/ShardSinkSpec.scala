@@ -327,6 +327,31 @@ class ShardSinkSpec extends SparkSpec {
     assert(ShardSink.committedEntries(dir).map(_.rows).sum === 100L)
   }
 
+  test("compact reads its base version once and every other version at most once") {
+    val local = freshDir().getPath
+    val dir = "faultfs://" + local
+    (0 until 6).foreach { i =>
+      spark.read.format("graft.sources.DocGenSource")
+        .option("numDocs", "120").option("numPartitions", "1").load()
+        .where(col("doc_id") >= i * 20L && col("doc_id") < (i + 1) * 20L)
+        .write.format("graft.sources.ShardSinkSource")
+        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    }
+    assert(ShardSink.currentManifestVersion(dir) === 6L)
+    FaultFs.opens.clear()
+    ShardSink.compact(dir, retainVersions = 2)
+    import scala.jdk.CollectionConverters._
+    val opens = FaultFs.opens.asScala.collect {
+      case (n, c) if n.startsWith("_manifest.v") => n -> c.longValue
+    }.toMap
+    assert(opens.get("_manifest.v6.json").contains(1L), s"compact opened $opens")
+    assert(opens.values.forall(_ <= 1L), s"compact re-read a manifest version: $opens")
+    assert(!opens.contains("_manifest.v7.json"), s"compact re-read its own commit: $opens")
+    // horizon 5 = 7 - 2: versions 5..7 stay readable, the rows are intact
+    assert(ShardSink.horizonOf(dir) === 5L)
+    assert(ShardSink.committedEntries(dir).map(_.rows).sum === 120L)
+  }
+
   test("streaming epoch crash at the flip: prior epochs stay visible; replay is idempotent") {
     // the streaming twin: epoch 1's commit dies at the version flip. With
     // versioned manifests epoch 0's manifest is UNTOUCHED (the checkpoint
