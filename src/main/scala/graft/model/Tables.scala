@@ -26,10 +26,10 @@ import org.apache.spark.sql.types.StructType
   * session confs (timestamp inference, binary-as-string) shape the schema.
   *
   * Planner strategy. The first read in a session also installs
-  * [[graft.plans.OnePartitionSort]] on the session's extra strategies
+  * [[graft.plans.OnePartition]] on the session's extra strategies
   * (idempotent, the install-on-use pattern of `AsOfJoinPlan`), so the
-  * queries built over these tables sort broadcast-sized inputs in one
-  * partition instead of sampling range bounds.
+  * queries built over these tables sort and aggregate broadcast-sized
+  * reads in one task instead of shuffling them.
   */
 object Tables {
   private final case class SchemaKey(
@@ -82,7 +82,7 @@ object Tables {
     * planner strategy on first use.
     */
   def readParquet(spark: SparkSession, path: String): DataFrame = {
-    graft.plans.OnePartitionSort.install(spark)
+    graft.plans.OnePartition.install(spark)
     spark.read.schema(schemaOf(spark, path)).parquet(path)
   }
 

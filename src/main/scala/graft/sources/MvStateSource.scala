@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{
-  Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+  Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics,
+  SupportsReportStatistics}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -60,10 +61,23 @@ class MvStateTable(mvDir: String, files: Seq[String]) extends Table with Support
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan with Batch {
+    () => new Scan with Batch with SupportsReportStatistics {
       override def readSchema(): StructType = MvStateSource.schema
       override def description(): String = s"MvStateScan[$mvDir, n=${files.length}]"
       override def toBatch: Batch = this
+      // the segments' bytes from one listing, so a small MV is sized as
+      // one (a broadcast side, a one-task read under
+      // graft.plans.OnePartition) instead of spark.sql.defaultSizeInBytes;
+      // a segment already swept counts 0 and fails by name at execution
+      private lazy val bytes = {
+        val sizes = SinkFs.fileSizes(new Path(mvDir))
+        files.map(f => sizes.getOrElse(f, 0L)).sum
+      }
+      override def estimateStatistics(): Statistics =
+        new Statistics {
+          override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
+          override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+        }
       override def planInputPartitions(): Array[InputPartition] =
         files.map(f => MvStateFilePartition(mvDir, f): InputPartition).toArray
       override def createReaderFactory(): PartitionReaderFactory =

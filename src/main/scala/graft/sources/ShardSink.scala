@@ -68,10 +68,19 @@ import org.apache.spark.unsafe.types.UTF8String
 class ShardSinkSource extends TableProvider {
   // a time-travel read option pins the TABLE to that version, so the
   // reported schema is the per-version one (evolution-aware travel, same
-  // contract as the catalog's VERSION AS OF path)
-  private def asOfOf(path: String, get: String => String): Option[Long] =
-    ShardSink.resolveAsOfOpts(path, Option(get("versionAsOf")),
-      Option(get("timestampAsOf")), Option(get("tag")))
+  // contract as the catalog's VERSION AS OF path). Spark looks a provider
+  // up per read and calls inferSchema, then getTable, with the same
+  // options: the first call resolves and getTable takes that resolution.
+  private var resolved: Option[(Seq[Option[String]], Option[Long])] = None
+  private def asOfOf(path: String, get: String => String): Option[Long] = {
+    val key = Seq(Some(path), Option(get("versionAsOf")), Option(get("timestampAsOf")),
+      Option(get("tag")))
+    resolved.collect { case (k, v) if k == key => v }.getOrElse {
+      val v = ShardSink.resolveAsOfOpts(path, key(1), key(2), key(3))
+      resolved = Some(key -> v)
+      v
+    }
+  }
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("shard sink requires a 'path' option"))
@@ -85,12 +94,13 @@ class ShardSinkSource extends TableProvider {
       properties: util.Map[String, String]): Table = {
     val path = properties.get("path")
     require(path != null && path.nonEmpty, "shard sink requires a 'path' option")
+    ShardSink.installPlanner()
     // Delta's readChangeFeed spelling: the CDF is a DIFFERENT table shape
     // (change metadata columns), so it gets its own Table incarnation
     if ("true".equalsIgnoreCase(properties.get("readChangeFeed")))
       new ShardSinkChangeTable(path)
     else new ShardSinkTable(path,
-      asOf = asOfOf(path, properties.get),
+      asOf = try asOfOf(path, properties.get) finally resolved = None,
       deleteMode = Option(properties.get("delete.mode")).getOrElse("copy-on-write"),
       rloMode = Option(properties.get("rlo.mode")).getOrElse("copy-on-write"),
       cdfEnabled = "true".equalsIgnoreCase(properties.get("cdf.enabled")),
@@ -354,8 +364,7 @@ class ShardSinkTable(
     // here. Timestamps resolve to the newest version committed
     // at-or-before the instant; tags resolve through their ref file.
     val v = ShardSink.resolveAsOfOpts(path, Option(options.get("versionAsOf")),
-      Option(options.get("timestampAsOf")), Option(options.get("tag")))
-      .orElse(asOf)
+      Option(options.get("timestampAsOf")), Option(options.get("tag")), pinned = asOf)
     // STATS-BASED FILE SKIPPING (round 13): shard-constraining conjuncts
     // prune whole files against the manifest's per-file shard range before
     // any data IO — file-granular only, so every filter is also returned
@@ -808,6 +817,16 @@ private[sources] object SinkFs {
     case None => fsOf(p).exists(p)
   }
 
+  /** Name → length of the files directly under `dir`, from one listing
+    * (empty when `dir` does not exist): the size source of the
+    * metadata-only cost and statistics estimates.
+    */
+  def fileSizes(dir: Path): Map[String, Long] = {
+    val fs = fsOf(dir)
+    if (!fs.exists(dir)) Map.empty
+    else fs.listStatus(dir).filter(_.isFile).map(f => f.getPath.getName -> f.getLen).toMap
+  }
+
   def delete(p: Path): Unit = localOf(p) match {
     case Some(f) => f.delete(); ()
     case None => fsOf(p).delete(p, false); ()
@@ -936,6 +955,14 @@ object ShardSink {
     */
   private val ManifestV = """_manifest\.v(\d+)\.json""".r
 
+  /** Installs [[graft.plans.OnePartition]] on the active session, so the
+    * small reads of a lakehouse table (time travel, point and range
+    * lookups, shard group-bys) aggregate and sort in one task. Called by
+    * the path-based source and the catalog; idempotent.
+    */
+  private[sources] def installPlanner(): Unit =
+    org.apache.spark.sql.SparkSession.getActiveSession.foreach(graft.plans.OnePartition.install)
+
   /** Commit clock: every manifest version records its commit timestamp
     * (epoch millis, `"ts"` key) for `TIMESTAMP AS OF` resolution.
     * Injectable for deterministic tests and oracle-checked queries — the
@@ -967,14 +994,17 @@ object ShardSink {
   /** The ONE resolution of the three time-travel read options —
     * `versionAsOf` / `timestampAsOf` / `tag`, at most one — shared by the
     * path-based source (schema + table pinning) and the scan builder, so
-    * the spellings and errors can never diverge between the surfaces.
+    * the spellings and errors can never diverge between the surfaces. A
+    * table already `pinned` (by the same options at `getTable`, or by SQL
+    * time travel) keeps its version: the options are checked, not resolved
+    * again.
     */
   private[sources] def resolveAsOfOpts(
       path: String, vOpt: Option[String], tsOpt: Option[String],
-      tagOpt: Option[String]): Option[Long] = {
+      tagOpt: Option[String], pinned: Option[Long] = None): Option[Long] = {
     require(Seq(vOpt, tsOpt, tagOpt).count(_.isDefined) <= 1,
       "specify at most one of versionAsOf, timestampAsOf, tag")
-    vOpt.map(_.toLong)
+    pinned.orElse(vOpt.map(_.toLong))
       .orElse(tsOpt.map(s => versionAtTimestamp(path, parseTsMillis(s))))
       .orElse(tagOpt.map(t => resolveTag(path, t)))
   }
@@ -2475,17 +2505,28 @@ object ShardSink {
     * timestamp is ≤ the requested instant (Delta/Iceberg semantics). A
     * timestamp before the first commit fails loudly — same stance as an
     * out-of-range `versionAsOf`; a timestamp past the last commit reads
-    * the latest version. Versions scan driver-side — one tiny JSON head
-    * per commit; a production catalog binary-searches its metadata.
+    * the latest version. Versions scan driver-side — one open per version,
+    * parsed only up to its `ts` ([[SinkMeta.manifestTs]]); a production
+    * catalog binary-searches its metadata.
     */
   def versionAtTimestamp(dir: String, tsMillis: Long): Long = {
     val current = currentManifestVersion(dir)
     require(current > 0L, s"timestampAsOf on $dir: table has no commits")
-    val stamped = (1L to current).flatMap(v => manifestAt(dir, v).map(v -> _.ts))
+    val stamped = (1L to current).flatMap(v => commitTsAt(dir, v).map(v -> _))
     require(tsMillis >= stamped.head._2,
       s"timestampAsOf=$tsMillis is before the first commit " +
         s"(version ${stamped.head._1} at ts ${stamped.head._2})")
     stamped.filter(_._2 <= tsMillis).map(_._1).max
+  }
+
+  /** The commit timestamp of `version`, or None when it does not exist. */
+  private def commitTsAt(dir: String, version: Long): Option[Long] = {
+    val name = s"_manifest.v$version.json"
+    val in =
+      try SinkFs.open(new Path(dir, name))
+      catch { case _: java.io.FileNotFoundException => return None }
+    try Some(SinkMeta.manifestTs(in, s"$dir/$name"))
+    finally in.close()
   }
 
   /** A `timestampAsOf` read-option value: epoch-millis digits (the
@@ -2843,6 +2884,18 @@ object ShardSink {
     }
     (entries, obsolete.toSeq, removed.toSeq)
   }
+
+  /** Bytes a change-feed read of `parts` opens — each partition's file
+    * (append feeds read the commit's data files zero-copy; DML feeds read
+    * their cdc sidecars or vector-diffed files), looked up by name in
+    * `sizes`, a listing of the table directory.
+    */
+  private[sources] def changeBytes(parts: Seq[InputPartition], sizes: Map[String, Long]): Long =
+    parts.map {
+      case f: ShardSinkChangeFile => sizes.getOrElse(new Path(f.file).getName, 0L)
+      case s: ShardSinkChangeSidecar => sizes.getOrElse(new Path(s.file).getName, 0L)
+      case _ => 0L
+    }.sum
 
   /** CHANGE DATA FEED (rounds 13/14 — the Delta-CDF analogue the
     * versioned manifests + delete vectors + change-record sidecars make
@@ -3959,23 +4012,47 @@ case class ShardSinkChangeReaderFactory(
   * the same durable version offsets as the plain tail.
   */
 class ShardSinkChangeScan(path: String, fromV: Long, toV: Option[Long])
-  extends Scan with Batch {
+  extends Scan with Batch with org.apache.spark.sql.connector.read.SupportsReportStatistics {
   override def readSchema(): StructType = ShardSink.changeSchemaOf(path)
   override def description(): String =
     s"ShardSinkChangeScan[$path, versions ($fromV, ${toV.getOrElse("current")}]]"
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
+  // resolved once per scan: the statistics and the partitions describe
+  // the same version window
+  private lazy val parts: Seq[InputPartition] = {
     val to = toV.getOrElse(ShardSink.currentManifestVersion(path))
     val current = ShardSink.currentManifestVersion(path)
     require(fromV >= 0 && to <= current,
       s"change feed ($fromV, $to] out of range: table at $path has versions 1..$current")
-    ShardSink.changePartitions(path, fromV, to).toArray
+    ShardSink.changePartitions(path, fromV, to)
   }
+  override def planInputPartitions(): Array[InputPartition] = parts.toArray
+
+  // set when Spark tails this scan as a stream, which it does before it
+  // asks any micro-batch plan for statistics: a stream's batches come
+  // from its offsets, not from this scan's (fromV, toV] window
+  @volatile private var streaming = false
+
+  /** A batch read reports the bytes of the files the feed reads, so a
+    * small window is sized as one (a broadcast side, a one-task read under
+    * [[graft.plans.OnePartition]]) instead of `spark.sql.defaultSizeInBytes`;
+    * a stream reports no size.
+    */
+  private lazy val bytes =
+    ShardSink.changeBytes(parts, SinkFs.fileSizes(new org.apache.hadoop.fs.Path(path)))
+  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
+    new org.apache.spark.sql.connector.read.Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        if (streaming) java.util.OptionalLong.empty() else java.util.OptionalLong.of(bytes)
+      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+    }
   override def createReaderFactory(): PartitionReaderFactory =
     ShardSinkChangeReaderFactory(path, ShardSink.tableSchema(path))
   override def toMicroBatchStream(checkpointLocation: String):
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+      org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    streaming = true
     new ShardSinkTailStream(path, cdc = true)
+  }
 }
 
 /** Offset for the sink's version-tail stream: a manifest version number. */
@@ -4105,6 +4182,7 @@ class ShardSinkCatalog extends org.apache.spark.sql.connector.catalog.TableCatal
     deleteMode = Option(options.get("delete.mode")).getOrElse("copy-on-write")
     rloMode = Option(options.get("rlo.mode")).getOrElse("copy-on-write")
     cdfEnabled = options.getBoolean("cdf.enabled", false)
+    ShardSink.installPlanner()
   }
   override def name(): String = catalogName
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator, JsonToken}
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 
 import SinkMatView.MvAgg
@@ -179,6 +179,24 @@ object SinkMeta {
       case e: Exception =>
         throw new IllegalStateException(s"unparseable ${c.what} in $where: ${e.getMessage}", e)
     }
+
+  /** A manifest's commit timestamp, read from the head of `in`: the codec
+    * writes `ts` first, so the parse stops after one field instead of
+    * decoding every entry. Anything else at the head throws, naming `where`.
+    */
+  def manifestTs(in: java.io.InputStream, where: String): Long = {
+    val p = factory.createParser(in)
+    try {
+      require(p.nextToken() == JsonToken.START_OBJECT, "not a JSON object")
+      require(p.nextToken() == JsonToken.FIELD_NAME && p.currentName == "ts",
+        "the first field is not \"ts\"")
+      require(p.nextToken() == JsonToken.VALUE_NUMBER_INT, "\"ts\" is not an integer")
+      p.getLongValue
+    } catch {
+      case e: Exception =>
+        throw new IllegalStateException(s"unparseable manifest in $where: ${e.getMessage}", e)
+    } finally p.close()
+  }
 
   // reader helpers: a missing key, a null or a wrong type throws
   private def get(n: JsonNode, k: String): JsonNode = {

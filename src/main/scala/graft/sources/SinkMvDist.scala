@@ -1305,8 +1305,12 @@ object SinkMvDist {
     * folding a change-feed tail on top.
     */
   private[sources] final case class MvSlots(
-      state: DataFrame, src: String, groups: Seq[String], gtypes: Seq[String],
+      stateOf: () => DataFrame, src: String, groups: Seq[String], gtypes: Seq[String],
       aggs: Seq[MvAgg], pred: String, srcV: Long, joins: Seq[MvdJoin]) {
+    /** Built on first use: the rewrite rule screens every registered MV
+      * and only the candidate it answers from reads the state.
+      */
+    lazy val state: DataFrame = stateOf()
     def isJoin: Boolean = joins.nonEmpty
     def slotValue(i: Int): String = slotV(i)
     def slotCounter(i: Int): String = slotC(i)
@@ -1316,7 +1320,7 @@ object SinkMvDist {
     val v = currentVersion(mvDir)
     require(v > 0L, s"no distributed materialized view at $mvDir")
     val st = readHeaderAt(mvDir, v)
-    MvSlots(stateDf(spark, mvDir, st, None), st.src, st.groups, st.gtypes,
+    MvSlots(() => stateDf(spark, mvDir, st, None), st.src, st.groups, st.gtypes,
       st.aggs, st.pred, st.srcV, st.joins)
   }
 
@@ -1451,9 +1455,7 @@ object SinkMvDist {
     // object store per-file round trips would dominate the "metadata
     // only" promise (review fix). A referenced-but-missing segment is
     // corruption and fails loudly.
-    val fs = SinkFs.fsOf(new Path(mvDir))
-    val sizes: Map[String, Long] = fs.listStatus(new Path(mvDir))
-      .filter(_.isFile).map(f => f.getPath.getName -> f.getLen).toMap
+    val sizes = SinkFs.fileSizes(new Path(mvDir))
     st.refs.groupBy(_._1).toSeq.map { case (b, files) =>
       (b, files.size, files.map(f => sizes.getOrElse(f._2,
         sys.error(s"state segment ${f._2} referenced by v$v is missing at $mvDir"))).sum)

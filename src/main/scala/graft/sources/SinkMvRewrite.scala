@@ -731,13 +731,6 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
 
   // ---- cost model (metadata only) ------------------------------------------------
 
-  private def sizesOf(dir: String): Map[String, Long] = {
-    val p = new Path(dir)
-    val fs = SinkFs.fsOf(p)
-    if (!fs.exists(p)) Map.empty
-    else fs.listStatus(p).filter(_.isFile).map(f => f.getPath.getName -> f.getLen).toMap
-  }
-
   private def entriesBytes(es: Seq[SinkEntry], sizes: Map[String, Long]): Long =
     es.map { e =>
       sizes.getOrElse(e.file, 0L) +
@@ -746,20 +739,6 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
 
   private def tableBytes(dir: String, v: Long, sizes: Map[String, Long]): Long =
     entriesBytes(ShardSink.entriesAtVersion(dir, v), sizes)
-
-  /** Bytes the tail window's change-feed read will open — the feed
-    * partitions' file sizes (append feeds read the commit's data files
-    * zero-copy; DML feeds read their cdc sidecars or vector-diffed
-    * files), resolved against one directory listing.
-    */
-  private def partsBytes(
-      parts: Seq[org.apache.spark.sql.connector.read.InputPartition],
-      sizes: Map[String, Long]): Long =
-    parts.map {
-      case f: ShardSinkChangeFile => sizes.getOrElse(new Path(f.file).getName, 0L)
-      case s: ShardSinkChangeSidecar => sizes.getOrElse(new Path(s.file).getName, 0L)
-      case _ => 0L
-    }.sum
 
   /** Can this tail window carry retractions at all? Decided from feed
     * METADATA alone: plain insert partitions cannot retract, anything
@@ -996,7 +975,7 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     if (extremeIdx.nonEmpty && hasTail && joins.nonEmpty) return NoMatch
 
     // ---- cost guard + selection metric (metadata only) ----
-    val factSizes = sizesOf(tableDir)
+    val factSizes = SinkFs.fileSizes(new Path(tableDir))
     val stateBytes = SinkMvDist.bucketStats(mvDir).map(_._3).sum
     // the base a rewrite must beat is what the BASE PLAN would read: a
     // scan the consumed/residual filter already file-pruned is priced at
@@ -1013,12 +992,12 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     val factParts =
       if (factTail) ShardSink.changePartitions(tableDir, mv.srcV, toV)
       else Seq.empty
-    val factFeed = partsBytes(factParts, factSizes)
+    val factFeed = ShardSink.changeBytes(factParts, factSizes)
     val dimStats = joins.zip(dimTos).zip(dimTails).map { case ((j, dv), moved) =>
-      val ds = sizesOf(j.dim)
+      val ds = SinkFs.fileSizes(new Path(j.dim))
       val dParts =
         if (moved) ShardSink.changePartitions(j.dim, j.dimV, dv) else Seq.empty
-      (tableBytes(j.dim, dv, ds), partsBytes(dParts, ds))
+      (tableBytes(j.dim, dv, ds), ShardSink.changeBytes(dParts, ds))
     }
     val dimBytesAll = dimStats.map(_._1)
     val dimBytes = dimBytesAll.sum

@@ -435,41 +435,111 @@ class ScaleGuardSpec extends SparkSpec {
     // collecting it) on a warm second pass at sf0.001, AQE on as in the
     // bench session. Building starts no job: `Tables` resolves each
     // table's schema once per file stamp. A broadcast-sized ORDER BY
-    // starts no range-sampling job (graft.plans.OnePartitionSort).
+    // starts no range-sampling job (graft.plans.OnePartition).
     val budget = Map(
-      "q_flagship_top10" -> (0, 3), "q_getorcreate_dims" -> (0, 4), "q_point_lookup" -> (0, 2),
-      "q_rollup" -> (0, 3), "q_window_frames" -> (0, 3), "q_session_counts" -> (0, 3),
-      "q_json_extract" -> (0, 3), "q_ptbr_normalize" -> (0, 2), "t_lang_id" -> (0, 2),
-      "t_quality_score" -> (0, 2), "x2_minhash_pairs" -> (0, 1), "x5_word_freq" -> (0, 2),
-      "x3_knn_ivf" -> (0, 1), "x6_centroids" -> (0, 3), "x4_cluster_sizes" -> (0, 4),
-      "m_media_features" -> (0, 3))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+      "q_flagship_top10" -> (0, 3), "q_getorcreate_dims" -> (0, 4), "q_point_lookup" -> (0, 1),
+      "q_rollup" -> (0, 2), "q_window_frames" -> (0, 3), "q_session_counts" -> (0, 3),
+      "q_json_extract" -> (0, 1), "q_ptbr_normalize" -> (0, 1), "t_lang_id" -> (0, 1),
+      "t_quality_score" -> (0, 1), "x2_minhash_pairs" -> (0, 1), "x5_word_freq" -> (0, 2),
+      "x3_knn_ivf" -> (0, 1), "x6_centroids" -> (0, 2), "x4_cluster_sizes" -> (0, 2),
+      "m_media_features" -> (0, 2))
+    val counts = withJobCounter { counted =>
+      budget.keys.toSeq.sorted.map { name =>
+        SparkEntry.queries(name)(spark, sf001).collect() // warm: Memo indexes, schemas
+        val (df, construct) = counted(SparkEntry.queries(name)(spark, sf001))
+        val (_, collect) = counted(df.collect())
+        name -> (construct, collect)
+      }
     }
-    def counted[T](body: => T): (T, Int) = {
+    assertJobBudget(budget, counts)
+  }
+
+  test("job budget: small lakehouse reads start no more Spark jobs than audited") {
+    // perfbench's lake_churn reads over a small merge-on-read ShardSink
+    // table with a registered MV and one commit of tail, AQE on as in the
+    // bench session; (construct, collect) jobs on a warm second pass.
+    // Before graft.plans.OnePartition planned these reads in one task
+    // they collected with 2, 3, 2, 2 and 4 jobs (version, point, range,
+    // meta, mv_groupby); the MV state and change-feed scans report their
+    // bytes, so the rewritten group-by is one task too.
+    val budget = Map("version" -> (0, 1), "point" -> (0, 1), "range" -> (0, 1),
+      "meta" -> (0, 2), "mv_groupby" -> (0, 1))
+    val s = spark.newSession()
+    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    val root = java.nio.file.Files.createTempDirectory("jobbudget").toFile.getPath
+    Seq("" -> classOf[graft.sources.ShardSinkCatalog].getName, ".root" -> root,
+      ".delete.mode" -> "merge-on-read", ".rlo.mode" -> "merge-on-read",
+      ".cdf.enabled" -> "true").foreach { case (k, v) => s.conf.set(s"spark.sql.catalog.jb$k", v) }
+    def rows(lo: Long, hi: Long) = s.range(lo, hi).select(col("id").as("doc_id"),
+      (col("id") % 16).cast("int").as("shard"), md5(col("id").cast("string")).as("body"))
+    val dir = new java.io.File(root, "docs").getPath
+    val mvDir = dir + ".mvd"
+    rows(0L, 4000L).writeTo("jb.docs").append()
+    graft.sources.SinkMvDist.create(s, dir, mvDir, Seq("shard"), Seq(
+      graft.sources.SinkMatView.MvAgg("n_docs", "count"),
+      graft.sources.SinkMatView.MvAgg("sum_ids", "sum", "doc_id"),
+      graft.sources.SinkMatView.MvAgg("xor_ids", "xor", "doc_id"),
+      graft.sources.SinkMatView.MvAgg("sum_len", "sum", "length(body)")), buckets = 8)
+    graft.sources.SinkMvRewrite.register(dir, mvDir)
+    try {
+      rows(4000L, 4400L).writeTo("jb.docs").append()
+      s.experimental.extraOptimizations = Seq(graft.sources.SinkMvRewrite)
+      val aggs = "count(*), sum(doc_id), bit_xor(doc_id), sum(length(body))"
+      val queries = Map(
+        "version" -> s"SELECT $aggs FROM jb.docs VERSION AS OF 1",
+        "point" -> "SELECT doc_id, body FROM jb.docs WHERE doc_id IN (5, 1234, 4100) ORDER BY doc_id",
+        "range" -> s"SELECT $aggs FROM jb.docs WHERE doc_id >= 1000 AND doc_id < 2000",
+        "meta" -> "SELECT count(*), coalesce(sum(n_rows), 0) FROM jb.docs.files",
+        "mv_groupby" -> s"SELECT shard, $aggs FROM jb.docs GROUP BY shard ORDER BY shard")
+      val rewrites = graft.sources.SinkMvRewrite.rewrites.get()
+      val counts = withJobCounter { counted =>
+        budget.keys.toSeq.sorted.map { name =>
+          s.sql(queries(name)).collect()
+          val (df, construct) = counted(s.sql(queries(name)))
+          val (_, collect) = counted(df.collect())
+          name -> (construct, collect)
+        }
+      }
+      assert(graft.sources.SinkMvRewrite.rewrites.get() === rewrites + 2L,
+        "the group-by must answer from the MV")
+      assertJobBudget(budget, counts)
+    } finally graft.sources.SinkMvRewrite.unregister(dir)
+  }
+
+  /** Counts the Spark jobs a block starts on the shared context, with the
+    * listener bus drained on both sides.
+    */
+  private final class JobCounter {
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener: org.apache.spark.scheduler.SparkListener =
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+    def apply[T](body: => T): (T, Int) = {
       org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
       jobs.set(0)
       val out = body
       org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
       (out, jobs.get())
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val counts = budget.keys.toSeq.sorted.map { name =>
-        SparkEntry.queries(name)(spark, sf001).collect() // warm: Memo indexes, schemas
-        val (df, construct) = counted(SparkEntry.queries(name)(spark, sf001))
-        val (_, collect) = counted(df.collect())
-        name -> (construct, collect)
-      }
-      info(counts.map { case (n, (b, c)) => s"$n=$b+$c" }.mkString(" "))
-      val over = counts.collect {
-        case (name, (b, c)) if b > budget(name)._1 || c > budget(name)._2 =>
-          s"$name: $b+$c jobs (budget ${budget(name)._1}+${budget(name)._2})"
-      }
-      assert(over.isEmpty, s"job budget exceeded:\n  ${over.mkString("\n  ")}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def withJobCounter[T](body: JobCounter => T): T = {
+    val counted = new JobCounter
+    spark.sparkContext.addSparkListener(counted.listener)
+    try body(counted)
+    finally spark.sparkContext.removeSparkListener(counted.listener)
+  }
+
+  private def assertJobBudget(
+      budget: Map[String, (Int, Int)], counts: Seq[(String, (Int, Int))]): Unit = {
+    info(counts.map { case (n, (b, c)) => s"$n=$b+$c" }.mkString(" "))
+    val over = counts.collect {
+      case (name, (b, c)) if b > budget(name)._1 || c > budget(name)._2 =>
+        s"$name: $b+$c jobs (budget ${budget(name)._1}+${budget(name)._2})"
+    }
+    assert(over.isEmpty, s"job budget exceeded:\n  ${over.mkString("\n  ")}")
   }
 
   test("t_shuffle_epochs: reshuffle is seed-independent (no diagonal, no empty cells)") {

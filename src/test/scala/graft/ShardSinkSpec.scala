@@ -352,6 +352,33 @@ class ShardSinkSpec extends SparkSpec {
     assert(ShardSink.committedEntries(dir).map(_.rows).sum === 120L)
   }
 
+  test("a timestampAsOf read opens each version below the one it resolves once") {
+    val local = freshDir().getPath
+    val dir = "faultfs://" + local
+    val clock = new java.util.concurrent.atomic.AtomicLong(0L)
+    ShardSink.setCommitClock(Some(() => clock.addAndGet(1000L)))
+    try (0 until 6).foreach { i =>
+      spark.read.format("graft.sources.DocGenSource")
+        .option("numDocs", "120").option("numPartitions", "1").load()
+        .where(col("doc_id") >= i * 20L && col("doc_id") < (i + 1) * 20L)
+        .write.format("graft.sources.ShardSinkSource")
+        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    } finally ShardSink.setCommitClock(None)
+    assert(ShardSink.currentManifestVersion(dir) === 6L)
+    // an instant between the commits of v4 and v5 resolves to v4
+    val ts = ShardSink.history(dir).map(_._5.get)
+    FaultFs.opens.clear()
+    val rows = spark.read.format("graft.sources.ShardSinkSource").option("path", dir)
+      .option("timestampAsOf", (ts(3) + ts(4)) / 2).load().collect().length
+    import scala.jdk.CollectionConverters._
+    val opens = FaultFs.opens.asScala.collect {
+      case (n, c) if n.startsWith("_manifest.v") => n -> c.longValue
+    }.toMap
+    assert(rows === 80)
+    for (v <- 1 to 3)
+      assert(opens.get(s"_manifest.v$v.json").contains(1L), s"timestampAsOf opened $opens")
+  }
+
   test("streaming epoch crash at the flip: prior epochs stay visible; replay is idempotent") {
     // the streaming twin: epoch 1's commit dies at the version flip. With
     // versioned manifests epoch 0's manifest is UNTOUCHED (the checkpoint
@@ -2127,10 +2154,13 @@ class ShardSinkSpec extends SparkSpec {
     // single-table rollup, step by step: BEFORE compaction one task file
     // carries several shards (clustered write, 4 shuffle partitions), so
     // the scan reports unknown partitioning and the rollup shuffles —
-    // correct, just not exchange-free
+    // correct, just not exchange-free. The threshold at -1 shows Spark's
+    // own distribution planning: a broadcast-sized input would otherwise
+    // roll up in one task with no exchange either way (graft.plans.OnePartition)
     val dir = freshDir().getPath
     val s = spark.newSession()
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.read.format("graft.sources.DocGenSource")
       .option("numDocs", "800").option("numPartitions", "2").load()
       .write.format("graft.sources.ShardSinkSource")

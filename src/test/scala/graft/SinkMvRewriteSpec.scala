@@ -27,6 +27,39 @@ class SinkMvRewriteSpec extends SparkSpec {
       .write.format("graft.sources.ShardSinkSource")
       .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
 
+  test("a refused candidate never builds the MV's state frame") {
+    // a doc_id range over a shard-grain MV: the rule screens the MV and
+    // refuses it, so planning must cost the analyzer about what the query
+    // without the rule costs — the rule's own runs, not the state frame's
+    // analysis on top
+    val dir = freshDir("mvrefuse")
+    val mvDir = dir + ".mvd"
+    val s = spark.newSession()
+    append(s, dir, 0L, 800L)
+    SinkMvDist.create(s, dir, mvDir, Seq("shard"), Seq(
+      MvAgg("n", "count"), MvAgg("sd", "sum", "doc_id")), buckets = 4)
+    SinkMvRewrite.register(dir, mvDir)
+    try {
+      import org.apache.spark.sql.catalyst.rules.RuleExecutor
+      def ruleRuns(body: => Any): Long = {
+        val before = RuleExecutor.getCurrentMetrics()
+        body
+        (RuleExecutor.getCurrentMetrics() - before).numRuns
+      }
+      def planned() = s.read.format("graft.sources.ShardSinkSource").option("path", dir).load()
+        .where(col("doc_id") >= 100L && col("doc_id") < 300L)
+        .agg(count(lit(1)), sum("doc_id")).queryExecution.optimizedPlan
+      val stateRuns = ruleRuns(graft.sources.SinkTestAccess.mvState(s, mvDir))
+      val withoutRule = ruleRuns(planned())
+      s.experimental.extraOptimizations = Seq(SinkMvRewrite)
+      val r0 = SinkMvRewrite.rewrites.get()
+      val withRule = ruleRuns(planned())
+      assert(SinkMvRewrite.rewrites.get() === r0, "the doc_id range was rewritten")
+      assert(withRule - withoutRule < stateRuns / 2,
+        s"screening cost $withRule - $withoutRule rule runs; the state frame costs $stateRuns")
+    } finally SinkMvRewrite.unregister(dir)
+  }
+
   test("registered MV answers matching aggregates; base data files stay closed") {
     val dir = freshDir("mvrw")
     val mvDir = dir + ".mvd"

@@ -3,17 +3,17 @@ package graft
 import java.nio.file.{Files, StandardCopyOption}
 
 import graft.model.Tables
-import graft.plans.OnePartitionSort
+import graft.plans.OnePartition
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions.col
 
 /** The table loaders' schema resolver and the planner strategy they
   * install: a given-schema read is the inferred read, a new file stamp or
-  * a flipped nanos conf resolves again, and broadcast-sized global sorts
-  * plan one single-partition exchange instead of a sampled range shuffle.
+  * a flipped nanos conf resolves again, and the strategy
+  * ([[graft.plans.OnePartition]], whose plan shapes `OnePartitionSpec`
+  * pins) leaves large sorts and the reference's top-10 alone.
   */
 class TablesSpec extends SparkSpec {
   private val sfDirs = Seq("sf0.001", "sf0.01", "sf0.1").map(sf => s"/root/testdata/$sf")
@@ -104,26 +104,6 @@ class TablesSpec extends SparkSpec {
 
   private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
 
-  test("a broadcast-sized global sort plans one single-partition exchange, not a range shuffle") {
-    withConfs("spark.sql.adaptive.enabled" -> "false") {
-      val sorted = Tables.orders(spark, sf001).groupBy("o_custkey").count()
-        .orderBy(col("count").desc, col("o_custkey"))
-      val ex = exchanges(sorted)
-      assert(ranged(ex) === 0, sorted.queryExecution.executedPlan.toString)
-      assert(ex.count(_.outputPartitioning == SinglePartition) === 1)
-      assert(sorted.queryExecution.executedPlan.collect { case g: OnePartitionSort.Gather => g }
-        .size === 1)
-      val onePartition = sorted.collect().toSeq
-      // the range path (strategy off) returns the same rows in the same order
-      withConfs(Threshold -> "-1") {
-        val viaRange = Tables.orders(spark, sf001).groupBy("o_custkey").count()
-          .orderBy(col("count").desc, col("o_custkey"))
-        assert(ranged(exchanges(viaRange)) === 1)
-        assert(viaRange.collect().toSeq === onePartition)
-      }
-    }
-  }
-
   test("over the threshold, or with the threshold at -1, the sort keeps its range exchange") {
     withConfs("spark.sql.adaptive.enabled" -> "false") {
       for (t <- Seq("1", "-1")) withConfs(Threshold -> t) {
@@ -143,7 +123,7 @@ class TablesSpec extends SparkSpec {
       val extra = spark.experimental.extraStrategies
       val sparkPlan =
         try {
-          spark.experimental.extraStrategies = extra.filterNot(_ == OnePartitionSort.Strategy)
+          spark.experimental.extraStrategies = extra.filterNot(_ == OnePartition.Strategy)
           exchanges(unplanned)
         } finally spark.experimental.extraStrategies = extra
       assert(withStrategy.size === sparkPlan.size, "the window's single partition is reused")
@@ -151,19 +131,19 @@ class TablesSpec extends SparkSpec {
       val top: SparkPlan =
         SparkEntry.queries("q_flagship_top10")(spark, sf001).queryExecution.executedPlan
       assert(top.collect { case t: TakeOrderedAndProjectExec => t }.size === 1, top.toString)
-      assert(top.collect { case g: OnePartitionSort.Gather => g }.isEmpty)
+      assert(top.collect { case g: OnePartition.Gather => g }.isEmpty)
     }
   }
 
   test("the strategy installs once per session and survives an extraOptimizations overwrite") {
     Tables.region(spark, sf001)
     Tables.nation(spark, sf001)
-    assert(spark.experimental.extraStrategies.count(_ == OnePartitionSort.Strategy) === 1)
+    assert(spark.experimental.extraStrategies.count(_ == OnePartition.Strategy) === 1)
     val oldOpt = spark.experimental.extraOptimizations
     try {
       spark.experimental.extraOptimizations = Nil
       Tables.region(spark, sf001)
-      assert(spark.experimental.extraStrategies.count(_ == OnePartitionSort.Strategy) === 1)
+      assert(spark.experimental.extraStrategies.count(_ == OnePartition.Strategy) === 1)
     } finally spark.experimental.extraOptimizations = oldOpt
   }
 }

@@ -36,6 +36,10 @@ object SinkTestAccess {
   def addConstraint(dir: String, name: String, pred: String): Unit =
     ShardSink.addConstraint(dir, name, pred)
 
+  /** The state frame the MV rewrite answers from. */
+  def mvState(spark: org.apache.spark.sql.SparkSession, mvDir: String): org.apache.spark.sql.DataFrame =
+    SinkMvDist.slotState(spark, mvDir).state
+
   def segmentRefs(dir: String, version: Long): Seq[String] =
     ShardSink.segmentRefsAt(dir, version).map(_.name)
 
