@@ -29,11 +29,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Bit-stable single-thread CPU burn (~0.5 s on a quiet core): a fixed
-    * xorshift64 loop. Deterministic instruction stream → its wall time
-    * varies ONLY with how much CPU the container actually grants, which
-    * is precisely the signal needed to see a throttling burst in-band.
-    */
   /** Untimed warm-up: JIT/codegen compilation and the tables' schema
     * resolution otherwise land entirely on whichever query happens to run
     * first, inflating it ~10x. One cheap pass per table through `Tables`
@@ -45,6 +40,11 @@ object Bench {
       spark.range(1000000).selectExpr("sum(id * 2)").collect()
     } catch { case _: Throwable => () }
 
+  /** Bit-stable single-thread CPU burn (~0.5 s on a quiet core): a fixed
+    * xorshift64 loop. Deterministic instruction stream → its wall time
+    * varies ONLY with how much CPU the container actually grants, which
+    * is precisely the signal needed to see a throttling burst in-band.
+    */
   def calibBurn(): Double = {
     val t0 = System.nanoTime()
     var x = 0x9E3779B97F4A7C15L
@@ -105,53 +105,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same pinned session TZ as Verify/QueryProbe/SparkSpec: an
-      // NTZ-encoded events.parquet must bench the same instants Verify
-      // hashes, regardless of host zone
-      .config("spark.sql.session.timeZone", "UTC")
-      // session-wide so q_dsv2_shard_rollup's no-exchange shape holds
-      // without any query function mutating shared conf mid-suite
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // static conf, default 100: the suite generates thousands of codegen
-      // classes (each multi-commit lifecycle alone compiles ~200), so the
-      // default LRU evicts everything before reuse and EVERY rep re-runs
-      // janino on identical sources (measured: ~200 recompiles per
-      // q_dsv2_mv_* rep, 10–30 ms each). Scale-neutral engine tuning —
-      // any long-running Spark app with a diverse query mix raises it;
-      // memory cost is bounded (generated source + bytecode per entry).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // never take the bypass-merge shuffle writer: it opens one file PER
-      // REDUCE PARTITION per map task (32× the files at this shape, on a
-      // slow ext4 /tmp — profiled as the single hottest syscall site),
-      // where the sort writer opens one. Production reducer counts sit
-      // far above the 200-partition bypass threshold anyway, so this also
-      // makes local plans exercise the same shuffle machinery a cluster
-      // runs.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // local `file:` IO inside SPARK itself (streaming offset/commit logs,
-      // state-store deltas, parquet writes, warehouse tables) stops writing
-      // Hadoop's `.crc` SIDECAR FILE per file — doubling the file count on
-      // a slow ext4 /tmp where FILE COUNT is the profiled binding resource
-      // (JobProbe round 20/21) to duplicate an integrity check the local
-      // disk already provides. graft.util.NoCrcLocalFileSystem IS a
-      // LocalFileSystem (FileSystem.getLocal's cast — hit by the RocksDB
-      // state store — still holds; the raw class breaks it) with the two
-      // checksum switches off; RawLocalFs covers the FileContext API that
-      // streaming's checkpoint manager resolves. Our own sink IO (SinkFs)
-      // bypassed Hadoop for local paths in round 20; this extends the same
-      // posture to the engine's file manager. At 100 TB these paths live on
-      // hdfs://s3a:// where `fs.file.impl` is never consulted — the
-      // checksummed path remains for any real scheme.
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoCrcLocalFileSystem")
-      .config(
-        "spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val wall0 = System.nanoTime()
     warmUp(spark, sfDir)
@@ -230,8 +184,8 @@ object Bench {
     val retryLog = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
     val retried = results.map {
       // s_* lifecycles are exempt: their cost is STRUCTURAL (stream start
-      // + per-micro-batch offset/commit/state-store writes — decomposed by
-      // graft.StreamCostProbe, recorded in BASELINE.md), so a >2 s reading
+      // + per-micro-batch offset/commit/state-store writes — decomposed in
+      // BASELINE.md's streaming-lifecycle record), so a >2 s reading
       // is not burst evidence and retries just burn minutes of wall clock
       // re-running full lifecycles whose minima they almost never improve
       // (BENCH_r11 "retried": 6 lifecycles, 0 improved >30%)
@@ -284,7 +238,7 @@ object Bench {
       s"""{"value":${f(r1Hit.map(_._2).sum)},"n":${r1Hit.size},"baseline_sec":$R1BaselineSec,"baseline_n":${R1Surface.size}}"""
     // the streaming-lifecycle subtotal (s_* full lifecycles): their cost
     // is STRUCTURAL fixed overhead (stream start + per-micro-batch
-    // commit-log/state-store IO — StreamCostProbe decomposition in
+    // commit-log/state-store IO — the streaming-lifecycle decomposition in
     // BASELINE.md), ≈30 s of every run that amortizes to zero on a real
     // continuous stream. Emitted as its own field so lifecycle fixed cost
     // stays separately visible from the batch engine's trend.

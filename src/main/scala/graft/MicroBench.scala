@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark: higher-order-function dot product vs the native
@@ -15,12 +14,8 @@ object MicroBench {
     // declarative wiring on purpose: this main doubles as the end-to-end
     // check that spark.sql.extensions loads GraftExtensions (no imperative
     // register() call anywhere in this file)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.builder()
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println("sql graft_dot via extensions: " +

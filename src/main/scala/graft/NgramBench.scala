@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.GraftNgrams
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark: interpreted HOF n-gram composition
@@ -16,12 +16,7 @@ object NgramBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 2000000L
     val toks = if (args.length > 1) args(1).toInt else 40
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // ~`toks` pseudo-word tokens per row, distinct enough to defeat
@@ -188,8 +183,8 @@ object NgramBench {
 
     // NGRAM_PLANS=1: print both projection plans — the committed evidence
     // for plans/r20 (the streaming parity queries' micro-batch plans are
-    // not reachable through PlanDump; this is the same projection their
-    // batches run)
+    // not reachable through graft.Probe --explain; this is the same
+    // projection their batches run)
     if (sys.env.get("NGRAM_PLANS").contains("1")) {
       println("===== rowminhash projection (HOF composition, pre-round-20) =====")
       docs.select(hofMinhash(col("t")).as("sig")).explain("formatted")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (round-21 VERDICT item 6): materialize a K×-scaled documents
@@ -24,12 +23,7 @@ object ScaleCorpus {
   def main(args: Array[String]): Unit = {
     val (src, dst, k) = (args(0), args(1), args(2).toInt)
     require(k >= 1 && k <= 64, s"k out of range: $k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dstDir = new java.io.File(dst)
     dstDir.mkdirs()
@@ -49,7 +43,7 @@ object ScaleCorpus {
     val scaled = (0 until k)
       .map(i => docs.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
       .reduce(_ unionByName _)
-    scaled.repartition(cpus.toInt)
+    scaled.repartition(GraftSession.cpus.toInt)
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")
     println(s"[scalecorpus] wrote ${spark.read.parquet(s"$dst/documents.parquet").count()} docs to $dst")
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,25 +9,8 @@ object Verify {
     // the driver always runs the full set)
     val subset: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same as Bench: q_dsv2_shard_rollup's partitioning contract
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // same as Bench: codegen-class reuse across the 239-query dump
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // same as Bench: sort shuffle writer, never bypass-merge (file count)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // same as Bench: raw local FS for file: IO (no .crc sidecars) — the
-      // correctness gate must run the exact engine the bench times
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoCrcLocalFileSystem")
-      .config(
-        "spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the correctness gate runs the exact engine the bench times
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Named schema gate (round-8 postmortem: a testdata regeneration broke
     // 17 queries with the same opaque AnalysisException). Diagnostic only —

@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.sources.Sinks
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 /** Runnable example of the idempotent star-schema load:
@@ -22,12 +21,7 @@ object PipelineDemo {
     val rawDir = args(0)
     val starDir = args(1)
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val raw = Sinks.readCsv(spark, rawDir, RawSchema)
     val paths = Pipeline.StarPaths(s"$starDir/pais", s"$starDir/setor", s"$starDir/fato")

@@ -186,8 +186,8 @@ object JoinQueries {
     * `max_by(struct(payload), struct(time, is_click))`-style window via
     * `last(col, ignoreNulls)` per carried column. Payload width buys one
     * extra window function per column over the same sort, which is the
-    * cost curve the native merge avoids; QueryProbe numbers for both live
-    * in BASELINE.md.
+    * cost curve the native merge avoids; timings of both live in
+    * BASELINE.md's round-11 as-of probe.
     */
   def asofPayloadComposed(spark: SparkSession, sfDir: String): DataFrame = {
     val purchases = Tables.events(spark, sfDir)

@@ -197,8 +197,8 @@ object DocGen {
       spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     // The no-exchange shape needs spark.sql.sources.v2.bucketing.enabled,
-    // which the drivers (Bench/Verify/QueryProbe) set at session
-    // construction — NOT here: a query function mutating shared-session
+    // which graft.GraftSession sets at session construction for Bench,
+    // Verify and Probe — NOT here: a query function mutating shared-session
     // conf would leak plan-shape changes into whatever runs after it
     // (round-12 ADVICE). Without the conf the query is still correct,
     // just with a shuffle.

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{
-  Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+  Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics,
+  SupportsReportStatistics}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -165,26 +166,46 @@ class ShardSinkMetaTable(dir: String, kind: String) extends Table with SupportsR
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan with Batch {
+    () => new Scan with Batch with SupportsReportStatistics {
       override def readSchema(): StructType = ShardSinkMetaTable.schemaOf(kind)
       override def description(): String = s"ShardSinkMetaScan[$dir, $kind]"
       override def toBatch: Batch = this
       /** `files` over a SEGMENTED manifest: one partition per segment,
         * entries parsed executor-side. Everything else (single-blob
         * `files`, history/tags/constraints — control-plane cardinality
-        * by construction) materializes at PLAN time as before; either
-        * way the snapshot is pinned here, consistent under concurrent
-        * commits.
+        * by construction) materializes at PLAN time. Resolved once per
+        * scan, so the partitions and the statistics describe one
+        * snapshot, consistent under concurrent commits.
         */
-      override def planInputPartitions(): Array[InputPartition] =
+      private lazy val (parts: Array[InputPartition], rows: Long) =
         if (kind == "files") {
           val m = ShardSink.manifestAt(dir, ShardSink.currentManifestVersion(dir))
           m.flatMap(_.segs) match {
-            case Some(segs) => segs.map(r => ShardSinkMetaSegment(dir, r.name): InputPartition).toArray
-            case None => Array(ShardSinkMetaRows(
-              m.map(_.files).getOrElse(Nil).map(ShardSinkMetaTable.fileRow)))
+            case Some(segs) =>
+              (segs.map(r => ShardSinkMetaSegment(dir, r.name): InputPartition).toArray,
+                segs.map(_.n.toLong).sum)
+            case None =>
+              val fs = m.map(_.files).getOrElse(Nil)
+              (Array[InputPartition](ShardSinkMetaRows(fs.map(ShardSinkMetaTable.fileRow))),
+                fs.size.toLong)
           }
-        } else Array(ShardSinkMetaRows(ShardSinkMetaTable.rowsOf(dir, kind)))
+        } else {
+          val rs = ShardSinkMetaTable.rowsOf(dir, kind)
+          (Array[InputPartition](ShardSinkMetaRows(rs)), rs.size.toLong)
+        }
+      override def planInputPartitions(): Array[InputPartition] = parts
+
+      /** The row count (a segment's from its manifest ref) times the
+        * schema's default row size, so a small metadata table is sized as
+        * one (a broadcast side, a one-task read under
+        * [[graft.plans.OnePartition]]) instead of
+        * `spark.sql.defaultSizeInBytes`.
+        */
+      override def estimateStatistics(): Statistics = new Statistics {
+        override def sizeInBytes(): java.util.OptionalLong =
+          java.util.OptionalLong.of(rows * readSchema().defaultSize)
+        override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+      }
       override def createReaderFactory(): PartitionReaderFactory =
         (partition: InputPartition) => {
           val rs: Seq[Array[Any]] = partition match {

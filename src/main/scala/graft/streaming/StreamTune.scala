@@ -5,9 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Session tuning for the streaming parity lifecycles (round-12 VERDICT
   * #5). A streaming micro-batch commits one state-store delta file per
   * shuffle partition per stateful operator, and the offset/commit logs
-  * fsync per batch — measured by `graft.StreamCostProbe`: a no-op 4-batch
-  * lifecycle costs 2.86 s at 32 shuffle partitions vs 1.31 s at 8 (the
-  * state-store file count IS the cost at parity-harness data sizes). The
+  * fsync per batch — BASELINE.md's streaming-lifecycle decomposition: a
+  * no-op 4-batch lifecycle costs 2.86 s at 32 shuffle partitions vs
+  * 1.31 s at 8 (the state-store file count IS the cost at parity-harness
+  * data sizes). The
   * MemoryStream lifecycles already pin 4 partitions inside
   * `runBoundedStream`; the DSv2-source lifecycles get the same treatment
   * here via a session-local override — a `newSession` so the shared bench

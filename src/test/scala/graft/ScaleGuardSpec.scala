@@ -355,8 +355,9 @@ class ScaleGuardSpec extends SparkSpec {
 
   test("shuffle budget: no query may silently gain an exchange") {
     // Every ShuffleExchangeExec is cluster-wide data movement; the counts
-    // below are the AUDITED plan shapes (graft.ShuffleCensus, sf0.001,
-    // AQE off so EnsureRequirements' insertions are visible statically).
+    // below are the AUDITED plan shapes (`graft.Probe <sf0.001> all
+    // --census`, AQE off so EnsureRequirements' insertions are visible
+    // statically).
     // A future edit that adds a shuffle to any of these trips this gate
     // and must either restore the plan or consciously re-audit the
     // budget. Subset = queries whose DataFrame CONSTRUCTION is cheap
@@ -380,7 +381,7 @@ class ScaleGuardSpec extends SparkSpec {
       "t_quality_score" -> 1, "t_lang_id" -> 1, "t_fingerprints" -> 1,
       // round-12 widening (VERDICT r11 #6): DSv2 write path, curate-funnel
       // heads, the full model family, and the round's new queries. Counts
-      // audited via graft.ShuffleCensus at sf0.001, AQE off. Model-family
+      // audited via graft.Probe --census at sf0.001, AQE off. Model-family
       // budgets are the MAX over memo states: on a freshly-checkpointed
       // qmodel chain the plans are exchange-free (training is a
       // driver-sequenced control loop over 1-row aggregates), but when the
@@ -412,10 +413,7 @@ class ScaleGuardSpec extends SparkSpec {
       // KeyGroupedPartitioning is honored
       spark.conf.set(bucketKey, "true")
       val over = budget.toSeq.sorted.flatMap { case (name, max) =>
-        val n = SparkEntry.queries(name)(spark, sf001)
-          .queryExecution.executedPlan.collect {
-            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-          }.size
+        val n = Probe.exchanges(SparkEntry.queries(name)(spark, sf001))
         if (n > max) Some(s"$name: $n exchanges (budget $max)") else None
       }
       assert(over.isEmpty, s"shuffle budget exceeded:\n  ${over.mkString("\n  ")}")
@@ -443,12 +441,12 @@ class ScaleGuardSpec extends SparkSpec {
       "t_quality_score" -> (0, 1), "x2_minhash_pairs" -> (0, 1), "x5_word_freq" -> (0, 2),
       "x3_knn_ivf" -> (0, 1), "x6_centroids" -> (0, 2), "x4_cluster_sizes" -> (0, 2),
       "m_media_features" -> (0, 2))
-    val counts = withJobCounter { counted =>
+    val counts = Probe.withJobLog(spark.sparkContext) { log =>
       budget.keys.toSeq.sorted.map { name =>
         SparkEntry.queries(name)(spark, sf001).collect() // warm: Memo indexes, schemas
-        val (df, construct) = counted(SparkEntry.queries(name)(spark, sf001))
-        val (_, collect) = counted(df.collect())
-        name -> (construct, collect)
+        val (df, construct) = log(SparkEntry.queries(name)(spark, sf001))
+        val (_, collect) = log(df.collect())
+        name -> (construct.size, collect.size)
       }
     }
     assertJobBudget(budget, counts)
@@ -460,10 +458,11 @@ class ScaleGuardSpec extends SparkSpec {
     // bench session; (construct, collect) jobs on a warm second pass.
     // Before graft.plans.OnePartition planned these reads in one task
     // they collected with 2, 3, 2, 2 and 4 jobs (version, point, range,
-    // meta, mv_groupby); the MV state and change-feed scans report their
-    // bytes, so the rewritten group-by is one task too.
+    // meta, mv_groupby); the MV state, change-feed and metadata-table scans
+    // report their bytes, so the rewritten group-by and the `.files` count
+    // are one task too.
     val budget = Map("version" -> (0, 1), "point" -> (0, 1), "range" -> (0, 1),
-      "meta" -> (0, 2), "mv_groupby" -> (0, 1))
+      "meta" -> (0, 1), "mv_groupby" -> (0, 1))
     val s = spark.newSession()
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val root = java.nio.file.Files.createTempDirectory("jobbudget").toFile.getPath
@@ -492,44 +491,18 @@ class ScaleGuardSpec extends SparkSpec {
         "meta" -> "SELECT count(*), coalesce(sum(n_rows), 0) FROM jb.docs.files",
         "mv_groupby" -> s"SELECT shard, $aggs FROM jb.docs GROUP BY shard ORDER BY shard")
       val rewrites = graft.sources.SinkMvRewrite.rewrites.get()
-      val counts = withJobCounter { counted =>
+      val counts = Probe.withJobLog(spark.sparkContext) { log =>
         budget.keys.toSeq.sorted.map { name =>
           s.sql(queries(name)).collect()
-          val (df, construct) = counted(s.sql(queries(name)))
-          val (_, collect) = counted(df.collect())
-          name -> (construct, collect)
+          val (df, construct) = log(s.sql(queries(name)))
+          val (_, collect) = log(df.collect())
+          name -> (construct.size, collect.size)
         }
       }
       assert(graft.sources.SinkMvRewrite.rewrites.get() === rewrites + 2L,
         "the group-by must answer from the MV")
       assertJobBudget(budget, counts)
     } finally graft.sources.SinkMvRewrite.unregister(dir)
-  }
-
-  /** Counts the Spark jobs a block starts on the shared context, with the
-    * listener bus drained on both sides.
-    */
-  private final class JobCounter {
-    private val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener: org.apache.spark.scheduler.SparkListener =
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-    def apply[T](body: => T): (T, Int) = {
-      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-      jobs.set(0)
-      val out = body
-      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-      (out, jobs.get())
-    }
-  }
-
-  private def withJobCounter[T](body: JobCounter => T): T = {
-    val counted = new JobCounter
-    spark.sparkContext.addSparkListener(counted.listener)
-    try body(counted)
-    finally spark.sparkContext.removeSparkListener(counted.listener)
   }
 
   private def assertJobBudget(

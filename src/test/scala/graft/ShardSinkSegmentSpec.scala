@@ -265,6 +265,43 @@ class ShardSinkSegmentSpec extends SparkSpec {
     } finally ShardSink.setSegmentTarget(512)
   }
 
+  test("a metadata-table scan opens its manifest once and reports its size") {
+    import scala.jdk.CollectionConverters._
+    for (segTarget <- Seq(512, 1)) {
+      val local = freshDir().getPath
+      ShardSink.setSegmentTarget(segTarget)
+      try {
+        val ms = s.newSession()
+        ms.conf.set("spark.sql.catalog.ffmeta", classOf[graft.sources.ShardSinkCatalog].getName)
+        ms.conf.set("spark.sql.catalog.ffmeta.root", "faultfs://" + local)
+        (0L until 300L by 100L).foreach { lo =>
+          ms.read.format("graft.sources.DocGenSource")
+            .option("numDocs", "300").option("numPartitions", "2").load()
+            .where(col("doc_id") >= lo && col("doc_id") < lo + 100L)
+            .writeTo("ffmeta.docs").append()
+        }
+        FaultFs.opens.clear()
+        val df = ms.sql("SELECT count(*), sum(n_rows) FROM ffmeta.docs.files")
+        val row = df.collect().head
+        val opens = FaultFs.opens.asScala.collect {
+          case (n, c) if n.startsWith("_manifest.") => n -> c.longValue
+        }.toMap
+        assert(row.getLong(1) === 300L)
+        // the current version once (the partitions and the statistics share
+        // it), each segment of a segmented manifest once, and the version
+        // hint once for the table load and once for the scan
+        assert(opens.keySet.filter(_.startsWith("_manifest.v")) === Set("_manifest.v3.json"))
+        assert(opens.get("_manifest.v3.json").contains(1L), s"segTarget $segTarget opened $opens")
+        assert(opens.collect { case (n, c) if n.startsWith("_manifest.seg") => c }.forall(_ == 1L),
+          s"segTarget $segTarget re-read a segment: $opens")
+        assert(opens.getOrElse("_manifest.hint", 0L) <= 2L, s"segTarget $segTarget opened $opens")
+        // a few hundred bytes, not spark.sql.defaultSizeInBytes
+        val size = df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
+        assert(size > 0 && size < 100000, s"segTarget $segTarget sized $size")
+      } finally ShardSink.setSegmentTarget(512)
+    }
+  }
+
   test("a malformed manifest entry fails the read loudly, inline or in a segment") {
     // a non-numeric row count: the entry regex misses the entry, which
     // must throw instead of silently dropping the file from the read set
