@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver benchmark — one JSON line with per-query steady-state seconds.
@@ -33,12 +36,19 @@ object Bench {
     * resolution otherwise land entirely on whichever query happens to run
     * first, inflating it ~10x. One cheap pass per table through `Tables`
     * (which also installs its planner strategy) + one codegen'd agg.
+    * The events reader's nanos setting is set first: `Tables` keys each
+    * resolved schema on it, so a table warmed before it flips would be
+    * inferred again by the first query. A table that fails to load is
+    * reported on stderr and the rest still warm.
     */
-  def warmUp(spark: SparkSession, sfDir: String): Unit =
-    try {
-      graft.model.Tables.AllTables.foreach(t => graft.model.Tables.load(spark, sfDir, t).count())
-      spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    } catch { case _: Throwable => () }
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    graft.model.Tables.readEventsAsNanoLongs(spark)
+    graft.model.Tables.AllTables.foreach { t =>
+      try graft.model.Tables.load(spark, sfDir, t).count()
+      catch { case NonFatal(e) => System.err.println(s"[bench] warm-up of $t failed: $e") }
+    }
+    spark.range(1000000).selectExpr("sum(id * 2)").collect()
+  }
 
   /** Bit-stable single-thread CPU burn (~0.5 s on a quiet core): a fixed
     * xorshift64 loop. Deterministic instruction stream → its wall time

@@ -31,29 +31,19 @@ object MicroBench {
     val hof = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
     val native = GraftFunctions.dot(col("a"), col("b"))
 
-    def time(name: String, c: org.apache.spark.sql.Column, excludeFusion: Boolean): Double = {
-      // the HOF baseline must MEASURE the HOF path: with GraftExtensions
-      // loaded, DotProductFusion would silently rewrite it into graft_dot
-      // and the comparison would measure fused vs fused. excludedRules
-      // takes rule names at runtime — flip it around each measurement.
-      val conf = "spark.sql.optimizer.excludedRules"
-      if (excludeFusion) spark.conf.set(conf, graft.plans.DotProductFusion.ruleName)
-      else spark.conf.unset(conf)
+    def time(name: String, c: org.apache.spark.sql.Column): Double = {
       val df = vecs.select(sum(c).as("s"))
-      val fused = df.queryExecution.optimizedPlan.toString.contains("graft_dot")
       df.collect() // warm
       val t0 = System.nanoTime()
       val r = df.collect()(0).getDouble(0)
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-8s $sec%8.3f s   (checksum $r%.6e, plan ${if (fused) "fused" else "HOF"})")
+      println(f"$name%-8s $sec%8.3f s   (checksum $r%.6e)")
       sec
     }
 
-    val h = time("hof", hof, excludeFusion = true)
-    val nat = time("native", native, excludeFusion = true)
-    val auto = time("autofuse", hof, excludeFusion = false)
-    println(f"native is ${h / nat}%.2fx the HOF path on $n rows x 64 dims " +
-      f"(DotProductFusion auto-rewrite: ${h / auto}%.2fx)")
+    val h = time("hof", hof)
+    val nat = time("native", native)
+    println(f"native is ${h / nat}%.2fx the HOF path on $n rows x 64 dims")
     // typed-Aggregator surface check: one-pass centroid over the synthetic
     // vectors (the shuffle-light alternative to posexplode+groupBy)
     val cent = vecs.select(col("a"))

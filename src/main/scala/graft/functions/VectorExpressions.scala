@@ -26,13 +26,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * dropping them. A null ELEMENT also nulls the whole sum (the HOF's
   * null-propagating fold); the per-element check is emitted only when the
   * static schema says elements CAN be null (`containsNull`), so clean
-  * embedding columns pay nothing — and the [[graft.plans.DotProductFusion]]
-  * rewrite stays semantics-preserving on every double-array input.
+  * embedding columns pay nothing — and the expression stays bit-identical
+  * to the HOF twin on every double-array input.
   */
 /** Shared null-element contract for the fused array expressions: both
-  * classes must emit the identical check (or none) so the
-  * [[graft.plans.DotProductFusion]] bit-identity argument holds — one
-  * definition, changed in lockstep by construction.
+  * classes must emit the identical check (or none) so each stays
+  * bit-identical to its HOF twin — one definition, changed in lockstep by
+  * construction.
   */
 private[functions] object ArrayPairNulls {
   def elementsNullable(l: Expression, r: Expression): Boolean =
@@ -499,9 +499,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("graft_vec_sum"), GraftFunctions.vecSumInfo, GraftFunctions.vecSumBuilder))
     ext.injectFunction((FunctionIdentifier("graft_top_k"), GraftFunctions.topKInfo, GraftFunctions.topKBuilder))
     ext.injectFunction((FunctionIdentifier("graft_ngrams"), GraftFunctions.ngramsInfo, GraftFunctions.ngramsBuilder))
-    // HOF dot-product composition → fused native expression (see the rule's
-    // scaladoc for the semantics-preservation argument)
-    ext.injectOptimizerRule(_ => graft.plans.DotProductFusion)
     // whole-operator extension: the native merge as-of join's planner
     // strategy (graft.plans.AsOfJoinPlan — LogicalPlan + SparkPlan pair)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinPlan.AsOfJoinStrategy)

@@ -24,7 +24,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector — the remaining Spark extension surface after
-  * expressions (`graft.functions`), optimizer rules (`DotProductFusion`)
+  * expressions (`graft.functions`), optimizer rules (`SinkMvRewrite`)
   * and whole-plan operators (`AsOfJoinPlan`): a custom table that
   * PARTICIPATES in planning instead of being a dumb row pump. The table is
   * a deterministic synthetic document corpus (doc_id → md5-derived body —

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructType}
-import SinkLifecycles.scratchDir
 
 /** PER-COLUMN DATA-SKIPPING STATISTICS (round 15) — the Delta-style
   * min/max envelope for ARBITRARY data columns, beyond the dedicated
@@ -431,224 +430,4 @@ object SinkColStats {
     val stats = decode(cs)
     preds.forall(p => stats.get(p.col).forall(p.mayMatch))
   }
-
-  // ---- driver-checked query ------------------------------------------------
-
-  /** Driver-checked PER-COLUMN DATA SKIPPING (rounds 15–16): a landing
-    * zone evolves `lang` (string) and `score` (bigint) columns via
-    * mergeSchema appends whose batches are lang-homogeneous — the ingest
-    * pattern the envelopes exist for — plus an ALL-NULL lang batch.
-    * Equality, range, prefix, IS NULL and IS NOT NULL predicates then
-    * read back: the row aggregates sit under DuckDB's hash gate, and the
-    * `pruned_*` cells pin — via the physical read counter — that every
-    * scan opened FEWER files than the census: values prune by envelope,
-    * IS NULL by the round-16 null counts (zero-null files skip), IS NOT
-    * NULL by the boundless all-null envelopes. After an OPTIMIZE gives
-    * every file a null count, `COUNT(lang)` answers from the manifest
-    * with zero data IO (`meta_count` pins plan shape + the unmoved read
-    * counter).
-    */
-  def colSkippingReport(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = scratchDir(sfDir, "sinkcs")
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(spark, 2200, 2, lo, hi)
-    // v1: 3-column, no statsable payload predicate
-    SinkLifecycles.appendTo(docs(0L, 600L), dir.getPath)
-    def ingest(lo: Long, hi: Long, lang: Option[String]): Unit =
-      docs(lo, hi)
-        .withColumn("lang", lang.map(lit).getOrElse(lit(null).cast("string")))
-        .withColumn("score", (col("doc_id") * 2L).cast("long"))
-        .write.format("graft.sources.ShardSinkSource")
-        .option("path", dir.getPath).option("mergeSchema", "true")
-        .mode(org.apache.spark.sql.SaveMode.Append).save()
-    ingest(600L, 1000L, Some("pt")) // v2
-    ingest(1000L, 1400L, Some("en")) // v3
-    ingest(1400L, 1800L, Some("de")) // v4
-    ingest(1800L, 2200L, None) // v5: all-null lang — boundless envelopes
-    val census = ShardSink.committedFiles(dir.getPath).count(_.endsWith(".tsv")).toLong
-    def read() = SinkLifecycles.readPath(spark, dir.getPath)
-    def counted(df: => org.apache.spark.sql.DataFrame): (Array[org.apache.spark.sql.Row], Long) = {
-      val before = ShardSink.dataFileReadCount.get()
-      val rows = df.collect()
-      (rows, ShardSink.dataFileReadCount.get() - before)
-    }
-    val (pt, openedPt) = counted(read().where(col("lang") === "pt")
-      .agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("x")))
-    val (hi, openedHi) = counted(read().where(col("score") >= 3200L)
-      .agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("x")))
-    val (de, _) = counted(read().where(col("lang").startsWith("d"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("x")))
-    val (nu, openedNull) = counted(read().where(col("lang").isNull)
-      .agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("x")))
-    val (nn, openedNotNull) = counted(read().where(col("lang").isNotNull)
-      .agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("x")))
-    // OPTIMIZE rewrites every row under the evolved schema: all files now
-    // carry lang null counts, no delete vectors → COUNT(lang) from the
-    // manifest alone
-    ShardSink.compact(dir.getPath)
-    val metaDf = read().agg(count(col("lang")).as("n"))
-    val metaPlanned = metaDf.queryExecution.executedPlan.toString
-    val beforeMeta = ShardSink.dataFileReadCount.get()
-    val nLang = metaDf.collect().head.getLong(0)
-    val metaOpened = ShardSink.dataFileReadCount.get() - beforeMeta
-    import spark.implicits._
-    Seq((
-      pt.head.getLong(0), pt.head.getLong(1),
-      hi.head.getLong(0), hi.head.getLong(1),
-      de.head.getLong(0), de.head.getLong(1),
-      nu.head.getLong(0), nu.head.getLong(1),
-      nn.head.getLong(0), nn.head.getLong(1),
-      nLang,
-      if (openedPt < census) 1L else 0L,
-      if (openedHi < census) 1L else 0L,
-      // round 16: the zero-null ingests' files skip the IS NULL read...
-      if (openedNull < census) 1L else 0L,
-      // ...and the all-null ingest's files skip the IS NOT NULL read
-      if (openedNotNull < census) 1L else 0L,
-      if (metaPlanned.contains("ShardSinkCountScan") && metaOpened == 0L) 1L else 0L)).toDF(
-      "n_pt", "xor_pt", "n_hi", "xor_hi", "n_de", "xor_de",
-      "n_null", "xor_null", "n_notnull", "xor_notnull", "n_lang_meta",
-      "pruned_lang", "pruned_score", "pruned_null", "pruned_notnull", "meta_count")
-  }
-
-  /** Driver-checked GENERALIZED Z-ORDER (round 15,
-    * [[ShardSink.compactZOrderBy]]): ONE interleaved ingest (every file
-    * spans every lang and score — the per-column envelopes prune
-    * nothing, pinned by `unclustered_full`), then `ZORDER BY (lang)`
-    * makes the lang envelopes tight — the `lang = 'l3'` read opens
-    * EXACTLY the 4 chunks the 400 matching rows occupy (pinned as a
-    * value: the rank-quantile layout is deterministic) — then a second
-    * rewrite `ZORDER BY (lang, score)` clusters both dimensions and the
-    * box predicate `lang = 'l3' AND score ∈ [600, 680)` opens a strict
-    * subset (`pruned_box`). Row aggregates for every read sit under the
-    * DuckDB hash gate; the flags pin the physical IO story.
-    */
-  def zorderColsReport(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = scratchDir(sfDir, "sinkzc")
-    SinkLifecycles.docs(spark, 2000, 2)
-      .withColumn("lang", concat(lit("l"), (col("doc_id") % 5).cast("string")))
-      .withColumn("score", ((col("doc_id") * 7L) % 1000L).cast("long"))
-      .write.format("graft.sources.ShardSinkSource")
-      .option("path", dir.getPath).option("mergeSchema", "true")
-      .mode(org.apache.spark.sql.SaveMode.Append).save() // v1: interleaved
-    def read() = SinkLifecycles.readPath(spark, dir.getPath)
-    def counted(df: => org.apache.spark.sql.DataFrame): (org.apache.spark.sql.Row, Long) = {
-      val before = ShardSink.dataFileReadCount.get()
-      val r = df.agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("x")).collect().head
-      (r, ShardSink.dataFileReadCount.get() - before)
-    }
-    def census = ShardSink.committedFiles(dir.getPath).count(_.endsWith(".tsv")).toLong
-    val (l3Before, openedBefore) = counted(read().where(col("lang") === "l3"))
-    val fullCensus = census
-    ShardSink.compactZOrderBy(dir.getPath, rowsPerFile = 125, cols = Seq("lang")) // v2
-    val (l3After, openedLang) = counted(read().where(col("lang") === "l3"))
-    ShardSink.compactZOrderBy(dir.getPath, rowsPerFile = 125,
-      cols = Seq("lang", "score")) // v3
-    val (box, openedBox) = counted(read()
-      .where(col("lang") === "l3" && col("score") >= 600L && col("score") < 680L))
-    val boxCensus = census
-    import spark.implicits._
-    Seq((
-      l3Before.getLong(0), l3Before.getLong(1),
-      l3After.getLong(0), l3After.getLong(1),
-      box.getLong(0), box.getLong(1),
-      if (openedBefore == fullCensus) 1L else 0L, // interleaved: nothing prunable
-      openedLang, // deterministic: rows 1200..1599 of the 16×125 layout
-      if (openedBox < boxCensus) 1L else 0L)).toDF(
-      "n_l3_pre", "xor_l3_pre", "n_l3", "xor_l3", "n_box", "xor_box",
-      "unclustered_full", "opened_lang", "pruned_box")
-  }
-
-  /** Driver-checked MANIFEST-ONLY PAYLOAD MIN/MAX (round 15): with the
-    * per-column envelopes in every entry, `SELECT min(score), max(score),
-    * min(lang), max(lang), count(*)` answers COMPLETELY from the
-    * manifest — zero data IO, the same push the doc_id/shard aggregates
-    * earned in rounds 13–15, now for columns the layout knows nothing
-    * about. `meta_answered` pins the plan shape (the count-scan surface
-    * planned, no aggregate node re-reading data) AND that the read
-    * counter did not move; the values sit under the DuckDB hash gate.
-    */
-  def metaColMinMaxReport(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = scratchDir(sfDir, "sinkmcm")
-    def ingest(lo: Long, hi: Long, lang: String): Unit =
-      SinkLifecycles.docs(spark, 1800, 2, lo, hi)
-        .withColumn("lang", lit(lang))
-        .withColumn("score", (col("doc_id") * 2L).cast("long"))
-        .write.format("graft.sources.ShardSinkSource")
-        .option("path", dir.getPath).option("mergeSchema", "true")
-        .mode(org.apache.spark.sql.SaveMode.Append).save()
-    ingest(0L, 600L, "pt"); ingest(600L, 1200L, "en"); ingest(1200L, 1800L, "de")
-    val df = SinkLifecycles.readPath(spark, dir.getPath)
-      .agg(
-        min(col("score")).as("min_score"), max(col("score")).as("max_score"),
-        min(col("lang")).as("min_lang"), max(col("lang")).as("max_lang"),
-        count(lit(1)).as("n_docs"))
-    val planned = df.queryExecution.executedPlan.toString
-    val before = ShardSink.dataFileReadCount.get()
-    val row = df.collect().head
-    val opened = ShardSink.dataFileReadCount.get() - before
-    import spark.implicits._
-    Seq((
-      row.getLong(0), row.getLong(1), row.getString(2), row.getString(3),
-      row.getLong(4),
-      if (planned.contains("ShardSinkCountScan") && opened == 0L) 1L else 0L)).toDF(
-      "min_score", "max_score", "min_lang", "max_lang", "n_docs", "meta_answered")
-  }
-
-  val metaColMinMaxReportSql: String =
-    """SELECT CAST(0 AS BIGINT) AS min_score, CAST(3598 AS BIGINT) AS max_score,
-      |       'de' AS min_lang, 'pt' AS max_lang,
-      |       CAST(1800 AS BIGINT) AS n_docs, CAST(1 AS BIGINT) AS meta_answered""".stripMargin
-
-  val zorderColsReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, 'l' || CAST(doc_id % 5 AS VARCHAR) AS lang,
-      |         (doc_id * 7) % 1000 AS score
-      |  FROM range(0, 2000) t(doc_id))
-      |SELECT
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE lang = 'l3') AS n_l3_pre,
-      |  (SELECT bit_xor(doc_id) FROM g WHERE lang = 'l3') AS xor_l3_pre,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE lang = 'l3') AS n_l3,
-      |  (SELECT bit_xor(doc_id) FROM g WHERE lang = 'l3') AS xor_l3,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g
-      |     WHERE lang = 'l3' AND score >= 600 AND score < 680) AS n_box,
-      |  (SELECT bit_xor(doc_id) FROM g
-      |     WHERE lang = 'l3' AND score >= 600 AND score < 680) AS xor_box,
-      |  CAST(1 AS BIGINT) AS unclustered_full,
-      |  CAST(4 AS BIGINT) AS opened_lang,
-      |  CAST(1 AS BIGINT) AS pruned_box""".stripMargin
-
-  val colSkippingReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id,
-      |         CASE WHEN doc_id < 600 THEN NULL
-      |              WHEN doc_id < 1000 THEN 'pt'
-      |              WHEN doc_id < 1400 THEN 'en'
-      |              WHEN doc_id < 1800 THEN 'de'
-      |              ELSE NULL END AS lang,
-      |         CASE WHEN doc_id < 600 THEN NULL
-      |              ELSE doc_id * 2 END AS score
-      |  FROM range(0, 2200) t(doc_id))
-      |SELECT
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE lang = 'pt') AS n_pt,
-      |  (SELECT bit_xor(doc_id) FROM g WHERE lang = 'pt') AS xor_pt,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE score >= 3200) AS n_hi,
-      |  (SELECT bit_xor(doc_id) FROM g WHERE score >= 3200) AS xor_hi,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE lang LIKE 'd%') AS n_de,
-      |  (SELECT bit_xor(doc_id) FROM g WHERE lang LIKE 'd%') AS xor_de,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE lang IS NULL) AS n_null,
-      |  (SELECT bit_xor(doc_id) FROM g WHERE lang IS NULL) AS xor_null,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE lang IS NOT NULL) AS n_notnull,
-      |  (SELECT bit_xor(doc_id) FROM g WHERE lang IS NOT NULL) AS xor_notnull,
-      |  (SELECT CAST(COUNT(lang) AS BIGINT) FROM g) AS n_lang_meta,
-      |  CAST(1 AS BIGINT) AS pruned_lang,
-      |  CAST(1 AS BIGINT) AS pruned_score,
-      |  CAST(1 AS BIGINT) AS pruned_null,
-      |  CAST(1 AS BIGINT) AS pruned_notnull,
-      |  CAST(1 AS BIGINT) AS meta_count""".stripMargin
 }

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
 
 import ShardSink._
 
@@ -12,13 +11,15 @@ import ShardSink._
   * lifecycle through the public surface, and reports a rollup whose
   * DuckDB twin (`*Sql`) re-derives the same answer from `range()`. They
   * are registered in [[Sinks.queries]]; the storage engine
-  * ([[ShardSink]]) carries none of them.
+  * ([[ShardSink]]) carries none of them, and the MV and column-stat
+  * fixtures live in [[SinkMvLifecycles]].
   *
   * Every fixture across `graft.sources` gets its scratch state from the
   * helpers at the top of this object: [[scratch]] (a wiped per-sfDir
   * directory plus a private session with its catalogs wired) and [[docs]]
   * (a doc_id window of the generated corpus). How a fixture gets a
-  * private catalog is decided here and nowhere else.
+  * private catalog is decided here and nowhere else, and [[probe]] is the
+  * one place a fixture reads the engine's global counters.
   */
 object SinkLifecycles {
 
@@ -100,9 +101,34 @@ object SinkLifecycles {
     df.write.format("graft.sources.ShardSinkSource")
       .option("path", dir).mode(SaveMode.Append).save()
 
+  /** [[appendTo]] with `mergeSchema`: the append may add columns. */
+  private[sources] def appendMerging(df: DataFrame, dir: String): Unit =
+    df.write.format("graft.sources.ShardSinkSource")
+      .option("path", dir).option("mergeSchema", "true").mode(SaveMode.Append).save()
+
   /** The path-addressed sink table at `dir`, read through `s`. */
   private[sources] def readPath(s: SparkSession, dir: String): DataFrame =
     s.read.format("graft.sources.ShardSinkSource").option("path", dir).load()
+
+  /** A body's result with the deltas it caused on the engine's three
+    * global counters: data files opened ([[ShardSink.dataFileReadCount]]),
+    * MV rewrites fired and rewrites the cost guard refused
+    * ([[SinkMvRewrite.rewrites]], [[SinkMvRewrite.costFallbacks]]).
+    */
+  private[sources] final case class Probed[T](
+      value: T, files: Long, rewrites: Long, fallbacks: Long)
+
+  /** Runs `body` and reports its counter deltas. The only place a fixture
+    * reads those counters.
+    */
+  private[sources] def probe[T](body: => T): Probed[T] = {
+    def now = (dataFileReadCount.get(), SinkMvRewrite.rewrites.get(),
+      SinkMvRewrite.costFallbacks.get())
+    val (f0, r0, c0) = now
+    val value = body
+    val (f1, r1, c1) = now
+    Probed(value, f1 - f0, r1 - r0, c1 - c0)
+  }
 
   /** The per-shard report most lifecycles end with: row count and
     * doc_id xor per shard, then `extra` aggregates, ordered by shard.
@@ -112,104 +138,6 @@ object SinkLifecycles {
     df.groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"), expr("bit_xor(doc_id)").as("xor_ids") +: extra: _*)
       .orderBy("shard")
-
-  /* SHARED LIFECYCLE BASES: the star/snowflake checked queries each used
-   * to spend ~6–10 Spark commits rebuilding BYTE-EQUIVALENT base tables
-   * (bootstrap + ALTERs + the 1200-doc ingest) before their actual
-   * lifecycle began. The base build runs ONCE per JVM under the
-   * [[graft.util.Memo]] discipline and every consumer receives a
-   * file-level COPY of the table directories — the manifest protocol
-   * stores only dir-relative names, so a copied table is a fully
-   * independent clone (each query's own commits land on its copy;
-   * versions, schemas and change feeds match the inline build exactly).
-   * Only the per-query TAIL commits remain inline — they ARE the
-   * lifecycles under test.
-   */
-
-  /** The STAR base: `dim` (16 keys, region r(k%3); bootstrap + ALTER +
-    * map = v3) and `fact` (docs 0..1199, uid = doc % 300; bootstrap +
-    * ALTER + ingest = v3) — the opening commits of every fact⋈dim
-    * lifecycle query.
-    */
-  private def starBase(spark: SparkSession): String =
-    graft.util.Memo.cached("mvStarBase", spark,
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_fixture_anchor").getPath) {
-      val root = java.nio.file.Files.createTempDirectory("graft_starbase").toFile
-      val dim = new java.io.File(root, "dim").getPath
-      appendTo(docs(spark, 2400, 2, 0L, 0L), dim) // d1: bootstrap
-      ShardSink.addColumn(dim, "region", StringType) // d2
-      appendTo(docs(spark, 2400, 2, 0L, 16L)
-        .withColumn("region", concat(lit("r"), (col("doc_id") % 3).cast("string"))), dim) // d3
-      val fact = new java.io.File(root, "fact").getPath
-      appendTo(docs(spark, 2400, 2, 0L, 0L), fact) // f1
-      ShardSink.addColumn(fact, "uid", LongType) // f2
-      appendTo(docs(spark, 2400, 2, 0L, 1200L)
-        .withColumn("uid", (col("doc_id") % 300L).cast("long")), fact) // f3
-      root.getPath
-    }
-
-  /** The SNOWFLAKE base: `dim2` (4 keys, zone z(k%2)), `dim1` (16 keys,
-    * region r(k%3), catk = k % 4 → dim2) and `fact` (docs 0..1199,
-    * uid = doc % 150) — the opening commits of every chain lifecycle.
-    */
-  private def snowBase(spark: SparkSession): String =
-    graft.util.Memo.cached("mvSnowBase", spark,
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_fixture_anchor").getPath) {
-      val root = java.nio.file.Files.createTempDirectory("graft_snowbase").toFile
-      val d2 = new java.io.File(root, "dim2").getPath
-      appendTo(docs(spark, 2400, 2, 0L, 0L), d2) // e1
-      ShardSink.addColumn(d2, "zone", StringType) // e2
-      appendTo(docs(spark, 2400, 2, 0L, 4L)
-        .withColumn("zone", concat(lit("z"), (col("doc_id") % 2).cast("string"))), d2) // e3
-      val d1 = new java.io.File(root, "dim1").getPath
-      appendTo(docs(spark, 2400, 2, 0L, 0L), d1) // d1
-      ShardSink.addColumn(d1, "region", StringType) // d2
-      ShardSink.addColumn(d1, "catk", LongType) // d3
-      appendTo(docs(spark, 2400, 2, 0L, 16L)
-        .withColumn("region", concat(lit("r"), (col("doc_id") % 3).cast("string")))
-        .withColumn("catk", (col("doc_id") % 4).cast("long")), d1) // d4
-      val fact = new java.io.File(root, "fact").getPath
-      appendTo(docs(spark, 2400, 2, 0L, 0L), fact) // f1
-      ShardSink.addColumn(fact, "uid", LongType) // f2
-      appendTo(docs(spark, 2400, 2, 0L, 1200L)
-        .withColumn("uid", (col("doc_id") % 150L).cast("long")), fact) // f3
-      root.getPath
-    }
-
-  /** Recursive file copy of one table directory into a consumer's
-    * catalog root under its per-query name.
-    */
-  private def copyTable(baseDir: String, destDir: String): Unit = {
-    val src = java.nio.file.Paths.get(baseDir)
-    val dst = java.nio.file.Paths.get(destDir)
-    java.nio.file.Files.createDirectories(dst)
-    java.nio.file.Files.walk(src).forEach { p =>
-      val rel = src.relativize(p)
-      val t = dst.resolve(rel)
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    }
-  }
-
-  /** Copy the star base's tables into `root` as (dimName, factName). */
-  private[sources] def starInto(
-      spark: SparkSession, root: String, dimName: String, factName: String): Unit = {
-    val base = starBase(spark)
-    copyTable(s"$base/dim", s"$root/$dimName")
-    copyTable(s"$base/fact", s"$root/$factName")
-  }
-
-  /** Copy the snowflake base's tables into `root`. */
-  private[sources] def snowInto(
-      spark: SparkSession, root: String,
-      dim2Name: String, dim1Name: String, factName: String): Unit = {
-    val base = snowBase(spark)
-    copyTable(s"$base/dim2", s"$root/$dim2Name")
-    copyTable(s"$base/dim1", s"$root/$dim1Name")
-    copyTable(s"$base/fact", s"$root/$factName")
-  }
 
   /** Driver-checked write→commit→read round trip: the generated corpus
     * [0, 20000) flows through the V2 writer (4 task files + manifest
@@ -1272,15 +1200,11 @@ object SinkLifecycles {
     val dir = scratchDir(sfDir, "sinkaev")
     def docs(lo: Long, hi: Long) = SinkLifecycles.docs(spark, 1500, 2, lo, hi)
     appendTo(docs(0L, 600L), dir.getPath) // v1: 3-column
-    docs(600L, 1200L)
-      .withColumn("lang", concat(lit("l"), (col("doc_id") % 3).cast("string")))
-      .write.format("graft.sources.ShardSinkSource")
-      .option("path", dir.getPath).option("mergeSchema", "true")
-      .mode(SaveMode.Append).save() // v2: evolves lang
-    docs(1200L, 1500L).select("body", "shard", "doc_id") // reordered, no lang
-      .write.format("graft.sources.ShardSinkSource")
-      .option("path", dir.getPath).option("mergeSchema", "true")
-      .mode(SaveMode.Append).save() // v3: null-fills
+    appendMerging(docs(600L, 1200L)
+      .withColumn("lang", concat(lit("l"), (col("doc_id") % 3).cast("string"))),
+      dir.getPath) // v2: evolves lang
+    appendMerging(docs(1200L, 1500L).select("body", "shard", "doc_id"), // reordered, no lang
+      dir.getPath) // v3: null-fills
     val oneCommitPerAppend = currentManifestVersion(dir.getPath) == 3L &&
       tableSchema(dir.getPath).fieldNames.sameElements(
         Array("doc_id", "shard", "body", "lang"))
@@ -1404,12 +1328,8 @@ object SinkLifecycles {
     }
     val census = committedEntries(dir.getPath).size
     def table = readPath(spark, dir.getPath)
-    val before = dataFileReadCount.get()
-    val hit = table.where(col("doc_id") === 1337L).collect()
-    val openedEq = dataFileReadCount.get() - before
-    val b4in = dataFileReadCount.get()
-    val nIn = table.where(col("doc_id").isin(3L, 777L, 1999L)).count()
-    val openedIn = dataFileReadCount.get() - b4in
+    val Probed(hit, openedEq, _, _) = probe(table.where(col("doc_id") === 1337L).collect())
+    val Probed(nIn, openedIn, _, _) = probe(table.where(col("doc_id").isin(3L, 777L, 1999L)).count())
     val pruned = census >= 8 &&
       openedEq >= 1L && openedEq < census.toLong &&
       openedIn >= 1L && openedIn < census.toLong
@@ -1540,9 +1460,7 @@ object SinkLifecycles {
       .groupBy(col("shard"), col("r_name"))
       .agg(count(lit(1)).as("n_docs"), expr("bit_xor(doc_id)").as("xor_ids"))
     lastRuntimeFilter.set(null)
-    val before = dataFileReadCount.get()
-    val rows = joined.collect()
-    val opened = dataFileReadCount.get() - before
+    val Probed(rows, opened, _, _) = probe(joined.collect())
     val pruned = lastRuntimeFilter.get() == Set(0, 1, 2, 3) &&
       opened >= 4L && opened < census.toLong
     import spark.implicits._

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import SinkLifecycles.{MorCdf, scratch}
 
 /** INCREMENTALLY-MAINTAINED MATERIALIZED VIEWS over a ShardSink table,
   * driven by the table's exact change feed — the Delta/Snowflake
@@ -746,306 +745,4 @@ object SinkMatView {
     }
     spark.createDataFrame(rows, schema)
   }
-
-  // ---- driver-checked query ----------------------------------------------
-
-  /** Driver-checked INCREMENTAL MV REFRESH (round 15): create a per-shard
-    * rollup MV (count / sum / xor / min / max of doc_id, sum of body
-    * length) after two ingest commits, then drive the source through an
-    * in-place UPDATE (pre/post images; min/max must NOT dirty — the
-    * fast-path), a tail DELETE (every shard's recorded max removed → the
-    * pruned dirty-recompute path), a whole-shard DELETE (group-drop), and
-    * a late APPEND (direct extreme extension + group resurrection) — one
-    * incremental refresh after each. The final result is the MV state
-    * crossed with the refresh bookkeeping (refresh count, change rows
-    * consumed, dirty recomputes, MV/source versions), every cell
-    * re-derived by DuckDB from the same windows — so the INCREMENTAL fold
-    * equals the full recompute under the hash gate, not just row counts.
-    */
-  def mvRefreshReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmv", Seq("graft_mv"), MorCdf)
-    def append(lo: Long, hi: Long): Unit =
-      SinkLifecycles.docs(s, 2400, 2, lo, hi)
-        .writeTo("graft_mv.docs_mv").append()
-    val dir = new java.io.File(root, "docs_mv").getPath
-    val mvDir = mvDirOf(dir)
-    append(0L, 800L) // v1
-    append(800L, 2000L) // v2
-    create(s, dir, mvDir, "shard", Seq(
-      MvAgg("n_docs", "count"),
-      MvAgg("sum_ids", "sum", "doc_id"),
-      MvAgg("xor_ids", "xor", "doc_id"),
-      MvAgg("min_doc", "min", "doc_id"),
-      MvAgg("max_doc", "max", "doc_id"),
-      MvAgg("sum_len", "sum", "length(body)")))
-    // v3: in-place update (600 change rows, 0 dirty — doc_id unchanged)
-    s.sql("UPDATE graft_mv.docs_mv SET body = concat(body, '!') WHERE doc_id < 300")
-    val r1 = refresh(s, dir, mvDir)
-    // v4: tail delete (500 rows) — every shard's max is in [1500,2000) → 16 dirty
-    s.sql("DELETE FROM graft_mv.docs_mv WHERE doc_id >= 1500")
-    val r2 = refresh(s, dir, mvDir)
-    // v5: whole-shard delete — shard 3 empties and leaves the view
-    s.sql("DELETE FROM graft_mv.docs_mv WHERE shard = 3")
-    val r3 = refresh(s, dir, mvDir)
-    // v6: late append — maxes extend in-place, shard 3 resurrects
-    append(2000L, 2400L)
-    val r4 = refresh(s, dir, mvDir)
-    val stats = Seq(r1, r2, r3, r4)
-    read(s, mvDir)
-      .withColumn("n_refreshes", lit(stats.count(_.applied).toLong))
-      .withColumn("change_rows", lit(stats.map(_.changeRows).sum))
-      .withColumn("dirty_groups", lit(stats.map(_.dirtyGroups).sum))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("src_version", lit(lastSourceVersion(mvDir)))
-      .orderBy("shard")
-  }
-
-  /** Driver-checked MV ACROSS RESTORE + replaceWhere (round 16): the two
-    * history-bending commit kinds a reporting MV must survive. A tail
-    * MOR DELETE dirties every shard's max (pruned recompute); RESTORE to
-    * v1 surfaces the resurrected rows as plain inserts in the feed (the
-    * r14 exact-through-restore contract) and the fold re-extends the
-    * extremes on the fast path; a `replaceWhere` on shard 3 drops the
-    * shard and re-lands a third of it in ONE commit — net retractions
-    * including the recorded max, one dirty group. Final per-shard view +
-    * bookkeeping under the DuckDB hash gate.
-    */
-  def mvRestoreReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvr", Seq("graft_mvr"), MorCdf)
-    def src = SinkLifecycles.docs(s, 1200, 2)
-    src.writeTo("graft_mvr.docs_mvr").append() // v1
-    val dir = new java.io.File(root, "docs_mvr").getPath
-    val mvDir = mvDirOf(dir)
-    create(s, dir, mvDir, "shard", Seq(
-      MvAgg("n_docs", "count"),
-      MvAgg("sum_ids", "sum", "doc_id"),
-      MvAgg("xor_ids", "xor", "doc_id"),
-      MvAgg("min_doc", "min", "doc_id"),
-      MvAgg("max_doc", "max", "doc_id")))
-    s.sql("DELETE FROM graft_mvr.docs_mvr WHERE doc_id >= 900") // v2
-    val r1 = refresh(s, dir, mvDir)
-    s.sql("ALTER TABLE graft_mvr.docs_mvr SET TBLPROPERTIES ('graft.restore' = '1')") // v3
-    val r2 = refresh(s, dir, mvDir)
-    src.where(col("shard") === 3 && ((col("doc_id") - 3L) / 16L) % 3L === 0L)
-      .writeTo("graft_mvr.docs_mvr").overwrite(col("shard") === 3) // v4
-    val r3 = refresh(s, dir, mvDir)
-    val stats = Seq(r1, r2, r3)
-    read(s, mvDir)
-      .withColumn("n_refreshes", lit(stats.count(_.applied).toLong))
-      .withColumn("change_rows", lit(stats.map(_.changeRows).sum))
-      .withColumn("dirty_groups", lit(stats.map(_.dirtyGroups).sum))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("src_version", lit(lastSourceVersion(mvDir)))
-      .orderBy("shard")
-  }
-
-  /** DuckDB re-derivation: after restore the table is v1's 0..1199; the
-    * replaceWhere keeps only every third shard-3 row (k ≡ 0 mod 3 of
-    * doc = 3 + 16k). Constants: 3 refreshes; 300 (tail delete) + 300
-    * (restore resurrections) + 100 (75 drops + 25 re-inserts) = 700
-    * change rows; 16 + 0 + 1 dirty; MV v4 = create + 3; source v4.
-    */
-  val mvRestoreReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, CAST(doc_id % 16 AS INT) AS shard
-      |  FROM range(0, 1200) t(doc_id)
-      |  WHERE doc_id % 16 <> 3 OR ((doc_id - 3) / 16) % 3 = 0)
-      |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(doc_id) AS xor_ids,
-      |       CAST(MIN(doc_id) AS BIGINT) AS min_doc,
-      |       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-      |       CAST(3 AS BIGINT) AS n_refreshes,
-      |       CAST(700 AS BIGINT) AS change_rows,
-      |       CAST(17 AS BIGINT) AS dirty_groups,
-      |       CAST(4 AS BIGINT) AS mv_version,
-      |       CAST(4 AS BIGINT) AS src_version
-      |FROM g GROUP BY shard ORDER BY shard""".stripMargin
-
-  /** Driver-checked MULTI-COLUMN + PREDICATE MV (round 15): the
-    * generalized definition — `GROUP BY (lang, shard)` (48 groups, an
-    * evolved string column composed with the layout column) under a
-    * WHERE clause (`length(body) = 32`). The UPDATE commit is the
-    * predicate-CROSSING case filtered MVs exist for: its pre-images
-    * match the predicate and its post-images (33-char bodies) do not, so
-    * the signed fold nets to a pure retraction and the updated rows
-    * LEAVE the view while staying in the table. The MOR delete then
-    * dirties every group's max (the pruned recompute also runs under the
-    * predicate). Final view + lifecycle constants under the hash gate;
-    * the watermark/currency cells are derived, not wall-clock.
-    */
-  def mvGroupsReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvg", Seq("graft_mvg"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2000, 2, lo, hi)
-    docs(0L, 0L).writeTo("graft_mvg.docs_mvg").append() // bootstrap the table
-    s.sql("ALTER TABLE graft_mvg.docs_mvg ADD COLUMN lang STRING")
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi)
-        .withColumn("lang", concat(lit("l"), (col("doc_id") % 3).cast("string")))
-        .writeTo("graft_mvg.docs_mvg").append()
-    ingest(0L, 800L)
-    ingest(800L, 2000L)
-    val dir = new java.io.File(root, "docs_mvg").getPath
-    val mvDir = mvDirOf(dir)
-    create(s, dir, mvDir, Seq("lang", "shard"), Seq(
-      MvAgg("n_docs", "count"),
-      MvAgg("sum_ids", "sum", "doc_id"),
-      MvAgg("xor_ids", "xor", "doc_id"),
-      MvAgg("max_doc", "max", "doc_id")),
-      where = "length(body) = 32")
-    // predicate-crossing update: rows stay in the TABLE, leave the VIEW
-    s.sql("UPDATE graft_mvg.docs_mvg SET body = concat(body, '!') WHERE doc_id < 300")
-    val r1 = refresh(s, dir, mvDir)
-    s.sql("DELETE FROM graft_mvg.docs_mvg WHERE doc_id >= 1500")
-    val r2 = refresh(s, dir, mvDir)
-    val stats = Seq(r1, r2)
-    read(s, mvDir)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_groups"), sum(col("n_docs")).as("n_docs"),
-        sum(col("sum_ids")).as("sum_ids"), expr("bit_xor(xor_ids)").as("xor_ids"),
-        max(col("max_doc")).as("max_doc"))
-      .withColumn("n_refreshes", lit(stats.count(_.applied).toLong))
-      .withColumn("change_rows", lit(stats.map(_.changeRows).sum))
-      .withColumn("dirty_groups", lit(stats.map(_.dirtyGroups).sum))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("watermark_current",
-        lit(if (lastSourceVersion(mvDir) ==
-          ShardSink.currentManifestVersion(dir)) 1L else 0L))
-      .orderBy("lang")
-  }
-
-  /** DuckDB re-derivation: the view's final rows are docs in [300, 1500)
-    * (0..299 crossed out of the predicate via the body update; ≥1500
-    * deleted), grouped by (lang, shard) — rolled up per lang for a
-    * compact 3-row gate. Constants: 2 refreshes; 300 pre-image rows (the
-    * post-images are predicate-filtered) + 500 deletes = 800 change
-    * rows; all 48 groups' maxes sat in the deleted tail → 48 dirty; MV
-    * v3 = create + 2 refreshes; watermark current.
-    */
-  val mvGroupsReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, CAST(doc_id % 16 AS INT) AS shard,
-      |         'l' || CAST(doc_id % 3 AS VARCHAR) AS lang
-      |  FROM range(300, 1500) t(doc_id)),
-      |pg AS (
-      |  SELECT lang, shard, CAST(COUNT(*) AS BIGINT) AS n,
-      |         CAST(SUM(doc_id) AS BIGINT) AS s, bit_xor(doc_id) AS x,
-      |         CAST(MAX(doc_id) AS BIGINT) AS m
-      |  FROM g GROUP BY lang, shard)
-      |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_groups,
-      |       CAST(SUM(n) AS BIGINT) AS n_docs, CAST(SUM(s) AS BIGINT) AS sum_ids,
-      |       bit_xor(x) AS xor_ids, CAST(MAX(m) AS BIGINT) AS max_doc,
-      |       CAST(2 AS BIGINT) AS n_refreshes,
-      |       CAST(800 AS BIGINT) AS change_rows,
-      |       CAST(48 AS BIGINT) AS dirty_groups,
-      |       CAST(3 AS BIGINT) AS mv_version,
-      |       CAST(1 AS BIGINT) AS watermark_current
-      |FROM pg GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** Driver-checked STREAMING MV MAINTENANCE (round 15): the same
-    * 6-commit lifecycle, maintained CONTINUOUSLY — the change feed is
-    * tailed one commit per trigger and every micro-batch lands through
-    * [[refreshFromChanges]] in a `foreachBatch` loop, the recipe Delta
-    * documents for streaming aggregate maintenance. The create-time
-    * watermark (source v2) makes the first two streamed commits recorded
-    * NO-OPS (already covered by the full build) — the exactly-once
-    * dedup a replayed batch takes too — and the last four fold
-    * incrementally, dirty recomputes included. The final view, the
-    * applied/skipped split, the version ladder AND a zero row-diff
-    * against a from-scratch aggregate of the source all sit under the
-    * hash gate.
-    */
-  def mvStreamParity(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvs", Seq("graft_mvs"), MorCdf, streaming = true)
-    def append(lo: Long, hi: Long): Unit =
-      SinkLifecycles.docs(s, 2400, 2, lo, hi)
-        .writeTo("graft_mvs.docs_mvs").append()
-    val dir = new java.io.File(root, "docs_mvs").getPath
-    val mvDir = mvDirOf(dir)
-    append(0L, 800L) // v1
-    append(800L, 2000L) // v2
-    create(s, dir, mvDir, "shard", Seq(
-      MvAgg("n_docs", "count"),
-      MvAgg("sum_ids", "sum", "doc_id"),
-      MvAgg("xor_ids", "xor", "doc_id"),
-      MvAgg("min_doc", "min", "doc_id"),
-      MvAgg("max_doc", "max", "doc_id")))
-    s.sql("UPDATE graft_mvs.docs_mvs SET body = concat(body, '!') WHERE doc_id < 300") // v3
-    s.sql("DELETE FROM graft_mvs.docs_mvs WHERE doc_id >= 1500") // v4
-    s.sql("DELETE FROM graft_mvs.docs_mvs WHERE shard = 3") // v5
-    append(2000L, 2400L) // v6
-    val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val skipped = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = s.readStream.format("graft.sources.ShardSinkSource")
-      .option("path", dir).option("readChangeFeed", "true").load()
-      .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-        val vs = batch.agg(
-          min(col("_commit_version")), max(col("_commit_version"))).collect().head
-        if (!vs.isNullAt(0)) {
-          require(vs.getLong(0) == vs.getLong(1),
-            "the CDF stream delivers one commit per trigger")
-          val st = refreshFromChanges(s, dir, mvDir, batch, vs.getLong(0))
-          (if (st.applied) applied else skipped).incrementAndGet()
-          ()
-        }
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-    val full = SinkLifecycles.readPath(s, dir)
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
-        expr("bit_xor(doc_id)").as("xor_ids"),
-        min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
-    val mv = read(s, mvDir)
-    val nDiff = mv.exceptAll(full).union(full.exceptAll(mv)).count()
-    mv.withColumn("n_applied", lit(applied.get()))
-      .withColumn("n_skipped", lit(skipped.get()))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("src_version", lit(lastSourceVersion(mvDir)))
-      .withColumn("n_diff", lit(nDiff))
-      .orderBy("shard")
-  }
-
-  val mvStreamParitySql: String =
-    """WITH g AS (
-      |  SELECT doc_id, CAST(doc_id % 16 AS INT) AS shard
-      |  FROM range(0, 2400) t(doc_id)
-      |  WHERE (doc_id < 1500 AND doc_id % 16 <> 3) OR doc_id >= 2000)
-      |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(doc_id) AS xor_ids,
-      |       CAST(MIN(doc_id) AS BIGINT) AS min_doc,
-      |       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-      |       CAST(4 AS BIGINT) AS n_applied,
-      |       CAST(2 AS BIGINT) AS n_skipped,
-      |       CAST(5 AS BIGINT) AS mv_version,
-      |       CAST(6 AS BIGINT) AS src_version,
-      |       CAST(0 AS BIGINT) AS n_diff
-      |FROM g GROUP BY shard ORDER BY shard""".stripMargin
-
-  /** DuckDB re-derivation: the final live set is
-    * `(doc_id < 1500 AND shard <> 3) OR doc_id >= 2000` with bodies
-    * `md5(id) || '!'` below 300 — the MV per-shard rollup over exactly
-    * that, plus the lifecycle constants (4 refreshes; 600+500+94+400
-    * change rows — 94 = |{id < 1500 : id ≡ 3 (mod 16)}|; 16 dirty
-    * max-recomputes from the tail delete; MV v5 = create + 4 refreshes;
-    * source v6).
-    */
-  val mvRefreshReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, CAST(doc_id % 16 AS INT) AS shard,
-      |         CAST(CASE WHEN doc_id < 300 THEN 33 ELSE 32 END AS BIGINT) AS blen
-      |  FROM range(0, 2400) t(doc_id)
-      |  WHERE (doc_id < 1500 AND doc_id % 16 <> 3) OR doc_id >= 2000)
-      |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(doc_id) AS xor_ids,
-      |       CAST(MIN(doc_id) AS BIGINT) AS min_doc,
-      |       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-      |       CAST(SUM(blen) AS BIGINT) AS sum_len,
-      |       CAST(4 AS BIGINT) AS n_refreshes,
-      |       CAST(1594 AS BIGINT) AS change_rows,
-      |       CAST(16 AS BIGINT) AS dirty_groups,
-      |       CAST(5 AS BIGINT) AS mv_version,
-      |       CAST(6 AS BIGINT) AS src_version
-      |FROM g GROUP BY shard ORDER BY shard""".stripMargin
 }

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import SinkLifecycles.{MorCdf, scratch}
 
 /** DISTRIBUTED materialized-view state (round 16) — the scale rung above
   * [[SinkMatView]]'s driver-resident blob. Same definition surface
@@ -811,492 +810,6 @@ object SinkMvDist {
     stateDf(spark, mvDir, st, None).select(outputProjection(st): _*)
   }
 
-  // ---- driver-checked query ------------------------------------------------
-
-  /** Driver-checked DISTRIBUTED MV STATE (round 16): a per-`uid` grain
-    * rollup (1200 groups — the cardinality class the blob MV keeps on
-    * the driver; here every group lives in bucketed state segments and
-    * the driver only ever collects bucket ids). Lifecycle: two ingests,
-    * create, an in-place UPDATE whose net extremes dirty every updated
-    * group's `min_len` (300-group distributed recompute), a tail DELETE
-    * that removes 500 groups' recorded `max_doc` (500 more), and a late
-    * append that extends extremes on the clean fast-path. The final
-    * 1200-row view plus the refresh bookkeeping sits under the DuckDB
-    * hash gate — the incremental distributed fold equals a full
-    * recompute, value for value.
-    */
-  def mvDistReport(
-      spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvd", Seq("graft_mvd"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
-    docs(0L, 0L).writeTo("graft_mvd.docs_mvd").append() // v1: bootstrap
-    s.sql("ALTER TABLE graft_mvd.docs_mvd ADD COLUMN uid BIGINT") // v2
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi)
-        .withColumn("uid", (col("doc_id") % 1200L).cast("long"))
-        .writeTo("graft_mvd.docs_mvd").append()
-    ingest(0L, 800L) // v3
-    ingest(800L, 2000L) // v4
-    val dir = new java.io.File(root, "docs_mvd").getPath
-    val mvDir = dir + ".mvd"
-    create(s, dir, mvDir, Seq("uid"), Seq(
-      MvAgg("n_docs", "count"),
-      MvAgg("sum_ids", "sum", "doc_id"),
-      MvAgg("xor_ids", "xor", "doc_id"),
-      MvAgg("max_doc", "max", "doc_id"),
-      MvAgg("sum_len", "sum", "length(body)"),
-      MvAgg("min_len", "min", "length(body)")), buckets = 8)
-    // v5: min_len's 32 is net-removed, 33 does not re-cover → 300 dirty
-    s.sql("UPDATE graft_mvd.docs_mvd SET body = concat(body, '!') WHERE doc_id < 300")
-    // v6: uids 300..799 lose doc uid+1200 — their recorded max → 500 dirty
-    s.sql("DELETE FROM graft_mvd.docs_mvd WHERE doc_id >= 1500")
-    // ONE refresh covers BOTH commits: the multi-commit window folds the
-    // two dirty classes (min via update, max via delete) in one pass
-    val r1 = refresh(s, dir, mvDir)
-    // v7: uids 800..1199 regain a row; extremes extend on the fast path
-    ingest(2000L, 2400L)
-    val r2 = refresh(s, dir, mvDir)
-    val stats = Seq(r1, r2)
-    read(s, mvDir)
-      .withColumn("n_refreshes", lit(stats.count(_.applied).toLong))
-      .withColumn("change_rows", lit(stats.map(_.changeRows).sum))
-      .withColumn("dirty_groups", lit(stats.map(_.dirtyGroups).sum))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("src_version", lit(lastSourceVersion(mvDir)))
-      .orderBy("uid")
-  }
-
-  /** DuckDB re-derivation: the live set is `doc_id < 1500 OR doc_id >=
-    * 2000` with 33-char bodies below 300, grouped per uid = doc_id %
-    * 1200 — plus the lifecycle constants (2 refreshes — the first covers
-    * the UPDATE + DELETE window in one fold; 1100 + 400 change rows;
-    * 300 + 500 dirty recomputes in that one pass; MV v3 = create + 2;
-    * source v7 = bootstrap + ALTER + 2 ingests + UPDATE + DELETE +
-    * append).
-    */
-  val mvDistReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, doc_id % 1200 AS uid,
-      |         CAST(CASE WHEN doc_id < 300 THEN 33 ELSE 32 END AS BIGINT) AS blen
-      |  FROM range(0, 2400) t(doc_id)
-      |  WHERE doc_id < 1500 OR doc_id >= 2000)
-      |SELECT uid, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(doc_id) AS xor_ids,
-      |       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-      |       CAST(SUM(blen) AS BIGINT) AS sum_len,
-      |       CAST(MIN(blen) AS BIGINT) AS min_len,
-      |       CAST(2 AS BIGINT) AS n_refreshes,
-      |       CAST(1500 AS BIGINT) AS change_rows,
-      |       CAST(800 AS BIGINT) AS dirty_groups,
-      |       CAST(3 AS BIGINT) AS mv_version,
-      |       CAST(7 AS BIGINT) AS src_version
-      |FROM g GROUP BY uid ORDER BY uid""".stripMargin
-
-  /** Driver-checked DISTRIBUTED JOIN MV (round 16): the round's two MV
-    * features composed — `fact ⋈ dim GROUP BY (d_region, uid)` at
-    * per-uid grain (hundreds of groups across region splits) with state
-    * in bucketed segments and BOTH change feeds folding distributed: a
-    * fact tail-DELETE (dirty extremes recomputed through a pruned
-    * fact⋈dim join), a dim UPDATE that moves every shard-5 row between
-    * region groups with no rescan, and a late fact append against the
-    * updated dim. The full group table plus lifecycle bookkeeping sits
-    * under the DuckDB hash gate.
-    */
-  def mvJoinDistReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvjd", Seq("graft_mvjd"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
-    // base tables (d1–d3: the 16-key region dim; f1–f3: the 1200-doc
-    // uid-grain fact) copied from the JVM-shared star fixture — same
-    // commits, versions and content as the inline build (round 19)
-    SinkLifecycles.starInto(s, root.getPath, "dim_mvjd", "fact_mvjd")
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi).withColumn("uid", (col("doc_id") % 300L).cast("long"))
-        .writeTo("graft_mvjd.fact_mvjd").append()
-    val factDir = new java.io.File(root, "fact_mvjd").getPath
-    val dimDir = new java.io.File(root, "dim_mvjd").getPath
-    val mvDir = factDir + ".mvjd"
-    createJoin(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
-      groups = Seq("d_region", "uid"), aggs = Seq(
-        MvAgg("n_docs", "count"),
-        MvAgg("sum_ids", "sum", "doc_id"),
-        MvAgg("xor_ids", "xor", "doc_id"),
-        MvAgg("max_doc", "max", "doc_id")), buckets = 8)
-    s.sql("DELETE FROM graft_mvjd.fact_mvjd WHERE doc_id >= 900") // f4
-    val r1 = refresh(s, factDir, mvDir)
-    s.sql("UPDATE graft_mvjd.dim_mvjd SET region = 'rX' WHERE doc_id = 5") // d4
-    val r2 = refresh(s, factDir, mvDir)
-    ingest(1200L, 1500L) // f5
-    val r3 = refresh(s, factDir, mvDir)
-    val stats = Seq(r1, r2, r3)
-    val (fv, dv) = lastSourceVersions(mvDir)
-    read(s, mvDir)
-      .withColumn("n_refreshes", lit(stats.count(_.applied).toLong))
-      .withColumn("change_rows", lit(stats.map(_.changeRows).sum))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("fact_version", lit(fv))
-      .withColumn("dim_version", lit(dv))
-      .orderBy("d_region", "uid")
-  }
-
-  /** DuckDB re-derivation: live fact rows are `doc_id < 900 OR 1200 <=
-    * doc_id < 1500`; uid = doc % 300; the region of shard s is rX for 5
-    * (the dim update — applied to pre-existing AND late-appended rows
-    * alike), else r(s % 3). Constants: 3 refreshes; 300 (tail delete,
-    * all shards dim-mapped) + 112 (dim update: 56 live shard-5 rows × ±)
-    * + 300 (append) = 712 change rows; MV v4 = create + 3; fact v5, dim
-    * v4.
-    */
-  val mvJoinDistReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, doc_id % 300 AS uid,
-      |         CASE WHEN doc_id % 16 = 5 THEN 'rX'
-      |              ELSE 'r' || CAST((doc_id % 16) % 3 AS VARCHAR) END AS d_region
-      |  FROM range(0, 1500) t(doc_id)
-      |  WHERE doc_id < 900 OR doc_id >= 1200)
-      |SELECT d_region, uid, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(doc_id) AS xor_ids,
-      |       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-      |       CAST(3 AS BIGINT) AS n_refreshes,
-      |       CAST(712 AS BIGINT) AS change_rows,
-      |       CAST(4 AS BIGINT) AS mv_version,
-      |       CAST(5 AS BIGINT) AS fact_version,
-      |       CAST(4 AS BIGINT) AS dim_version
-      |FROM g GROUP BY d_region, uid ORDER BY d_region, uid""".stripMargin
-
-  /** Driver-checked STREAMING JOIN-MV MAINTENANCE (round 17): the
-    * distributed fact⋈dim MV maintained CONTINUOUSLY from BOTH change
-    * feeds — each table's CDF stream lands its commits through
-    * [[refreshFromChanges]] in its own `foreachBatch` loop, one
-    * single-source window per batch ([Δf ⋈ d@dimV] / [Δd ⋈ f@factV]),
-    * with per-source watermarks in the header. Exercised: a create-time
-    * coverage no-op on the dim stream, an empty-commit (OPTIMIZE)
-    * fast-forward gap on the fact feed (the compaction is also the CDF
-    * retention horizon — the fact stream delivers from it onward), a
-    * fact tail-DELETE (dirty extremes through the pruned join
-    * recompute), a fact append, and a dim UPDATE that moves every
-    * shard-5 row between region groups with no rescan. The
-    * final per-(region, uid) view, the applied/skipped split, both
-    * watermarks AND a zero row-diff against a from-scratch join all sit
-    * under the DuckDB hash gate.
-    */
-  def mvJoinStreamParity(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvjs", Seq("graft_mvjs"), MorCdf, streaming = true)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
-    // base tables (d1–d3, f1–f3) from the JVM-shared star fixture —
-    // identical commits/versions to the inline build (round 19)
-    SinkLifecycles.starInto(s, root.getPath, "dim_mvjs", "fact_mvjs")
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi).withColumn("uid", (col("doc_id") % 300L).cast("long"))
-        .writeTo("graft_mvjs.fact_mvjs").append()
-    val factDir = new java.io.File(root, "fact_mvjs").getPath
-    val dimDir = new java.io.File(root, "dim_mvjs").getPath
-    val mvDir = factDir + ".mvjs"
-    createJoin(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
-      groups = Seq("d_region", "uid"), aggs = Seq(
-        MvAgg("n_docs", "count"),
-        MvAgg("sum_ids", "sum", "doc_id"),
-        MvAgg("xor_ids", "xor", "doc_id"),
-        MvAgg("max_doc", "max", "doc_id")), buckets = 8)
-    // the compact lands FIRST: it is both the no-data gap the stream must
-    // fast-forward across AND the CDF retention horizon (feeds below a
-    // compaction are released, so the stream delivers from it onward —
-    // data commits the stream must replay have to come after)
-    ShardSink.compact(factDir) // f4: no-data commit — never a batch
-    s.sql("DELETE FROM graft_mvjs.fact_mvjs WHERE doc_id >= 900") // f5
-    ingest(1200L, 1500L) // f6
-    s.sql("UPDATE graft_mvjs.dim_mvjs SET region = 'rX' WHERE doc_id = 5") // d4
-    val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val skipped = new java.util.concurrent.atomic.AtomicLong(0L)
-    // one stream per SOURCE, drained sequentially (fact first) so the
-    // lifecycle constants are deterministic; each batch carries ONE
-    // commit of its own feed and folds under that source's watermark
-    def drain(dir: String): Unit = {
-      val q = s.readStream.format("graft.sources.ShardSinkSource")
-        .option("path", dir).option("readChangeFeed", "true").load()
-        .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-          val vs = batch.agg(
-            min(col("_commit_version")), max(col("_commit_version"))).collect().head
-          if (!vs.isNullAt(0)) {
-            require(vs.getLong(0) == vs.getLong(1),
-              "the CDF stream delivers one commit per trigger")
-            val st = refreshFromChanges(s, dir, mvDir, batch, vs.getLong(0))
-            (if (st.applied) applied else skipped).incrementAndGet()
-            ()
-          }
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    drain(factDir)
-    drain(dimDir)
-    val (fv, dv) = lastSourceVersions(mvDir)
-    val d = SinkMatView.srcAt(s, dimDir, dv)
-      .select(col("doc_id").as("_pk"), col("region").as("d_region"))
-    val full = SinkMatView.srcAt(s, factDir, fv)
-      .join(d, col("shard") === col("_pk"))
-      .groupBy(col("d_region"), col("uid"))
-      .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
-        expr("bit_xor(doc_id)").as("xor_ids"), max("doc_id").as("max_doc"))
-    val mv = read(s, mvDir)
-    val nDiff = mv.exceptAll(full).union(full.exceptAll(mv)).count()
-    mv.withColumn("n_applied", lit(applied.get()))
-      .withColumn("n_skipped", lit(skipped.get()))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("fact_version", lit(fv))
-      .withColumn("dim_version", lit(dv))
-      .withColumn("n_diff", lit(nDiff))
-      .orderBy("d_region", "uid")
-  }
-
-  /** DuckDB re-derivation: live fact rows are `doc_id < 900 OR 1200 <=
-    * doc_id < 1500`; uid = doc % 300; region of shard s is rX for 5 (the
-    * streamed dim update, folded last against the final fact), else
-    * r(s % 3). Constants: 3 applied (the fact DELETE — arriving over the
-    * compact's provably-empty (3,4] gap — the fact append, and the dim
-    * update) + 1 skipped (d3, covered by the create; the fact stream
-    * starts at the compaction horizon, so f3 is never delivered); MV v4
-    * = create + 3; fact v6 = bootstrap + ALTER + ingest + OPTIMIZE +
-    * DELETE + append; dim v4 = bootstrap + ALTER + map + update; diff 0.
-    * Change rows: 300 (delete) + 300 (append) + 2 × 75 live shard-5 rows
-    * (dim update: 56 in [0,900) + 19 in [1200,1500)) = 750 — not output
-    * (the per-batch splits are already pinned by n_applied + the hash
-    * over every group row).
-    */
-  val mvJoinStreamParitySql: String =
-    """WITH g AS (
-      |  SELECT doc_id, doc_id % 300 AS uid,
-      |         CASE WHEN doc_id % 16 = 5 THEN 'rX'
-      |              ELSE 'r' || CAST((doc_id % 16) % 3 AS VARCHAR) END AS d_region
-      |  FROM range(0, 1500) t(doc_id)
-      |  WHERE doc_id < 900 OR doc_id >= 1200)
-      |SELECT d_region, uid, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(doc_id) AS xor_ids,
-      |       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-      |       CAST(3 AS BIGINT) AS n_applied,
-      |       CAST(1 AS BIGINT) AS n_skipped,
-      |       CAST(4 AS BIGINT) AS mv_version,
-      |       CAST(6 AS BIGINT) AS fact_version,
-      |       CAST(4 AS BIGINT) AS dim_version,
-      |       CAST(0 AS BIGINT) AS n_diff
-      |FROM g GROUP BY d_region, uid ORDER BY d_region, uid""".stripMargin
-
-  /** Driver-checked STREAMING SNOWFLAKE-MV MAINTENANCE (round 18): the
-    * three-source chain MV of [[mvSnowflakeReport]] maintained
-    * CONTINUOUSLY from THREE change feeds — fact, dim1 and dim2 each run
-    * their own CDF stream landing commits through [[refreshFromChanges]],
-    * one single-source window per batch, per-source watermarks in the
-    * header. The both-dims-in-one-interleave window of the batch gate
-    * appears here as consecutive single-source batches (d1's update folds
-    * pinned at the header's d2 version, then d2's update folds against
-    * the ALREADY-ADVANCED d1 — the same telescoping, one commit at a
-    * time), and the fact feed crosses a compaction-horizon commit (the
-    * compact is both the no-data gap the stream fast-forwards over and
-    * the CDF retention floor the stream starts from). The final
-    * per-(zone, region, uid) view, the applied/skipped split, all THREE
-    * watermarks and a zero row-diff against a from-scratch chain join
-    * sit under the DuckDB hash gate.
-    */
-  def mvSnowflakeStreamParity(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvss", Seq("graft_mvss"), MorCdf, streaming = true)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
-    // base tables (e1–e3: zone dim2; d1–d4: region/catk dim1; f1–f3: the
-    // 1200-doc uid-grain fact) from the JVM-shared snowflake fixture —
-    // identical commits/versions to the inline build (round 19)
-    SinkLifecycles.snowInto(s, root.getPath, "dim2_mvss", "dim1_mvss", "fact_mvss")
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi).withColumn("uid", (col("doc_id") % 150L).cast("long"))
-        .writeTo("graft_mvss.fact_mvss").append()
-    val factDir = new java.io.File(root, "fact_mvss").getPath
-    val d1Dir = new java.io.File(root, "dim1_mvss").getPath
-    val d2Dir = new java.io.File(root, "dim2_mvss").getPath
-    val mvDir = factDir + ".mvss"
-    createSnowflake(s, factDir, mvDir,
-      Seq(
-        SnowDim(d1Dir, fk = "shard", pk = "doc_id", pfx = "d1_"),
-        SnowDim(d2Dir, fk = "d1_catk", pk = "doc_id", pfx = "d2_")),
-      groups = Seq("d2_zone", "d1_region", "uid"), aggs = Seq(
-        MvAgg("n_docs", "count"),
-        MvAgg("sum_ids", "sum", "doc_id"),
-        MvAgg("xor_ids", "xor", "doc_id"),
-        MvAgg("max_doc", "max", "doc_id")), buckets = 8)
-    // the compact lands FIRST: the no-data gap the fact stream
-    // fast-forwards across AND its CDF retention horizon
-    ShardSink.compact(factDir) // f4: no-data commit — never a batch
-    s.sql("DELETE FROM graft_mvss.fact_mvss WHERE doc_id >= 900") // f5
-    ingest(1200L, 1400L) // f6
-    s.sql("UPDATE graft_mvss.dim1_mvss SET region = 'rX' WHERE doc_id = 7") // d5
-    s.sql("UPDATE graft_mvss.dim2_mvss SET zone = 'zX' WHERE doc_id = 1") // e4
-    val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val skipped = new java.util.concurrent.atomic.AtomicLong(0L)
-    // one stream per SOURCE, drained sequentially (fact, then the dims in
-    // chain order) so the lifecycle constants are deterministic; each
-    // batch carries ONE commit of its own feed and folds with every
-    // OTHER source pinned at its header watermark
-    def drain(dir: String): Unit = {
-      val q = s.readStream.format("graft.sources.ShardSinkSource")
-        .option("path", dir).option("readChangeFeed", "true").load()
-        .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-          val vs = batch.agg(
-            min(col("_commit_version")), max(col("_commit_version"))).collect().head
-          if (!vs.isNullAt(0)) {
-            require(vs.getLong(0) == vs.getLong(1),
-              "the CDF stream delivers one commit per trigger")
-            val st = refreshFromChanges(s, dir, mvDir, batch, vs.getLong(0))
-            (if (st.applied) applied else skipped).incrementAndGet()
-            ()
-          }
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    drain(factDir)
-    drain(d1Dir)
-    drain(d2Dir)
-    val (fv, dvs) = lastSourceVersionsAll(mvDir)
-    val full = SinkMatView.filtered(
-      SinkMvJoin.joinedAt(s, factDir, fv, Seq(
-        SinkMvJoin.DimWindow(d1Dir, "shard", "doc_id", "d1_", dvs.head, dvs.head),
-        SinkMvJoin.DimWindow(d2Dir, "d1_catk", "doc_id", "d2_", dvs(1), dvs(1)))), "")
-      .groupBy(col("d2_zone"), col("d1_region"), col("uid"))
-      .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
-        expr("bit_xor(doc_id)").as("xor_ids"), max("doc_id").as("max_doc"))
-    val mv = read(s, mvDir)
-    val nDiff = mv.exceptAll(full).union(full.exceptAll(mv)).count()
-    mv.withColumn("n_applied", lit(applied.get()))
-      .withColumn("n_skipped", lit(skipped.get()))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("fact_version", lit(fv))
-      .withColumn("dim1_version", lit(dvs.head))
-      .withColumn("dim2_version", lit(dvs(1)))
-      .withColumn("n_diff", lit(nDiff))
-      .orderBy("d2_zone", "d1_region", "uid")
-  }
-
-  /** DuckDB re-derivation: live fact rows are `doc_id < 900 OR 1200 <=
-    * doc_id < 1400`; uid = doc % 150; shard s = doc % 16 maps region rX
-    * for 7 (the streamed d1 update) else r(s % 3), and zone zX for catk
-    * s % 4 = 1 (the streamed d2 update) else z((s % 4) % 2). Constants:
-    * 4 applied (the fact DELETE — arriving over the compact's
-    * provably-empty gap — the fact append, and one update per dim) + 2
-    * skipped (d4 and e3, both covered by the create; the fact stream
-    * starts at the compaction horizon, so f3 is never delivered); MV v5
-    * = create + 4; fact v6 = bootstrap + ALTER + ingest + OPTIMIZE +
-    * DELETE + append; dim1 v5 = bootstrap + 2 ALTERs + map + update;
-    * dim2 v4 = bootstrap + ALTER + map + update; diff 0.
-    */
-  val mvSnowflakeStreamParitySql: String =
-    """WITH g AS (
-      |  SELECT doc_id, doc_id % 150 AS uid, doc_id % 16 AS s
-      |  FROM range(0, 1400) t(doc_id)
-      |  WHERE doc_id < 900 OR doc_id >= 1200),
-      |m AS (
-      |  SELECT doc_id, uid,
-      |         CASE WHEN s = 7 THEN 'rX' ELSE 'r' || CAST(s % 3 AS VARCHAR) END AS d1_region,
-      |         CASE WHEN s % 4 = 1 THEN 'zX' ELSE 'z' || CAST((s % 4) % 2 AS VARCHAR) END AS d2_zone
-      |  FROM g)
-      |SELECT d2_zone, d1_region, uid, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(doc_id) AS xor_ids,
-      |       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-      |       CAST(4 AS BIGINT) AS n_applied,
-      |       CAST(2 AS BIGINT) AS n_skipped,
-      |       CAST(5 AS BIGINT) AS mv_version,
-      |       CAST(6 AS BIGINT) AS fact_version,
-      |       CAST(5 AS BIGINT) AS dim1_version,
-      |       CAST(4 AS BIGINT) AS dim2_version,
-      |       CAST(0 AS BIGINT) AS n_diff
-      |FROM m GROUP BY d2_zone, d1_region, uid
-      |ORDER BY d2_zone, d1_region, uid""".stripMargin
-
-  /** Driver-checked SNOWFLAKE MV (round 17): `fact ⋈ dim1 ⋈ dim2 GROUP BY
-    * (d2_zone, d1_region, uid)` — a CHAIN join (dim2 keys off dim1's
-    * `catk` column, not the fact) over distributed bucketed state, with
-    * one watermark per source and deltas composed in declaration order.
-    * Lifecycle: a fact tail-DELETE (dirty extremes recomputed through the
-    * full chain join, pruned), then BOTH dim updates land in ONE refresh
-    * window — the case the fixed composition order exists for (Δd1 joins
-    * d2@OLD, Δd2 joins d1@NEW) — shard-7 rows move region groups and
-    * every catk-1 shard's rows move zone groups, no rescan; finally a
-    * fact append against both evolved dims. The full group table plus
-    * lifecycle bookkeeping sits under the DuckDB hash gate.
-    */
-  def mvSnowflakeReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvsn", Seq("graft_mvsn"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
-    // base tables (e1–e3, d1–d4, f1–f3) from the JVM-shared snowflake
-    // fixture — identical commits/versions to the inline build (round 19)
-    SinkLifecycles.snowInto(s, root.getPath, "dim2_mvsn", "dim1_mvsn", "fact_mvsn")
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi).withColumn("uid", (col("doc_id") % 150L).cast("long"))
-        .writeTo("graft_mvsn.fact_mvsn").append()
-    val factDir = new java.io.File(root, "fact_mvsn").getPath
-    val d1Dir = new java.io.File(root, "dim1_mvsn").getPath
-    val d2Dir = new java.io.File(root, "dim2_mvsn").getPath
-    val mvDir = factDir + ".mvsn"
-    createSnowflake(s, factDir, mvDir,
-      Seq(
-        SnowDim(d1Dir, fk = "shard", pk = "doc_id", pfx = "d1_"),
-        SnowDim(d2Dir, fk = "d1_catk", pk = "doc_id", pfx = "d2_")),
-      groups = Seq("d2_zone", "d1_region", "uid"), aggs = Seq(
-        MvAgg("n_docs", "count"),
-        MvAgg("sum_ids", "sum", "doc_id"),
-        MvAgg("xor_ids", "xor", "doc_id"),
-        MvAgg("max_doc", "max", "doc_id")), buckets = 8)
-    s.sql("DELETE FROM graft_mvsn.fact_mvsn WHERE doc_id >= 900") // f4
-    val r1 = refresh(s, factDir, mvDir)
-    // BOTH dim windows fold in ONE refresh, composed in order
-    s.sql("UPDATE graft_mvsn.dim1_mvsn SET region = 'rX' WHERE doc_id = 7") // d5
-    s.sql("UPDATE graft_mvsn.dim2_mvsn SET zone = 'zX' WHERE doc_id = 1") // e4
-    val r2 = refresh(s, factDir, mvDir)
-    ingest(1200L, 1400L) // f5
-    val r3 = refresh(s, factDir, mvDir)
-    val stats = Seq(r1, r2, r3)
-    val (fv, dvs) = lastSourceVersionsAll(mvDir)
-    read(s, mvDir)
-      .withColumn("n_refreshes", lit(stats.count(_.applied).toLong))
-      .withColumn("change_rows", lit(stats.map(_.changeRows).sum))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("fact_version", lit(fv))
-      .withColumn("dim1_version", lit(dvs.head))
-      .withColumn("dim2_version", lit(dvs(1)))
-      .orderBy("d2_zone", "d1_region", "uid")
-  }
-
-  /** DuckDB re-derivation: live fact rows are `doc_id < 900 OR 1200 <=
-    * doc_id < 1400`; uid = doc % 150; shard s = doc % 16 maps region rX
-    * for 7 else r(s % 3), and zone zX for catk s % 4 = 1 else
-    * z((s % 4) % 2). Constants: 3 refreshes; change rows 300 (tail
-    * delete through the chain) + 562 in the one double-dim window (the
-    * d1 update: 56 live shard-7 rows × ±, joined against d2@OLD; the d2
-    * update: live catk-1 rows — shards 1/5/9/13 → 57+56+56+56 = 225 —
-    * × ±, joined against d1@NEW) + 200 (append) = 1062; MV v4 = create
-    * + 3; fact v5; dim1 v5 (bootstrap + 2 ALTERs + map + update); dim2
-    * v4 (bootstrap + ALTER + map + update).
-    */
-  val mvSnowflakeReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, doc_id % 150 AS uid, doc_id % 16 AS s
-      |  FROM range(0, 1400) t(doc_id)
-      |  WHERE doc_id < 900 OR doc_id >= 1200),
-      |m AS (
-      |  SELECT doc_id, uid,
-      |         CASE WHEN s = 7 THEN 'rX' ELSE 'r' || CAST(s % 3 AS VARCHAR) END AS d1_region,
-      |         CASE WHEN s % 4 = 1 THEN 'zX' ELSE 'z' || CAST((s % 4) % 2 AS VARCHAR) END AS d2_zone
-      |  FROM g)
-      |SELECT d2_zone, d1_region, uid, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(doc_id) AS xor_ids,
-      |       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-      |       CAST(3 AS BIGINT) AS n_refreshes,
-      |       CAST(1062 AS BIGINT) AS change_rows,
-      |       CAST(4 AS BIGINT) AS mv_version,
-      |       CAST(5 AS BIGINT) AS fact_version,
-      |       CAST(5 AS BIGINT) AS dim1_version,
-      |       CAST(4 AS BIGINT) AS dim2_version
-      |FROM m GROUP BY d2_zone, d1_region, uid
-      |ORDER BY d2_zone, d1_region, uid""".stripMargin
-
   /** A single-table MV definition + raw slot-level state, consumed by the
     * automatic query-rewrite rule ([[SinkMvRewrite]]): the distributed
     * state frame carries the group columns plus, per aggregate i, its
@@ -1505,69 +1018,6 @@ object SinkMvDist {
       Some(n)
     } else None
   }
-
-  /** Driver-checked AUTO-REBUCKET (round 17): a per-doc-grain MV born
-    * with 2 buckets outgrows them through two ingest windows; the policy
-    * triggers ONE metadata-driven rebucket (mean bucket bytes over
-    * target → next power of two), after which the view answers
-    * identically (asOf time travel across the flip is part of the
-    * gate: n_diff compares the pre-rebucket version against the current
-    * read). A second policy call is a recorded non-trigger.
-    */
-  def mvAutoRebucketReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvar")
-    val dir = new java.io.File(root, "docs_mvar").getPath
-    val mvDir = dir + ".mvd"
-    def append(lo: Long, hi: Long): Unit =
-      SinkLifecycles.appendTo(SinkLifecycles.docs(s, 2400, 2, lo, hi), dir)
-    append(0L, 400L) // v1: small enough for 2 buckets
-    create(s, dir, mvDir, Seq("doc_id"), Seq(
-      MvAgg("n_docs", "count"),
-      MvAgg("sum_len", "sum", "length(body)")), buckets = 2)
-    append(400L, 2400L) // v2: 6x growth
-    refresh(s, dir, mvDir) // MV v2
-    val before = bucketStats(mvDir)
-    val vBefore = currentVersion(mvDir)
-    // ~2400 rows × ~15 TSV bytes ≫ 2 × 4 KiB → the growth trigger fires
-    val triggered = autoRebucket(s, mvDir, targetBytesPerBucket = 4096L)
-    val after = bucketStats(mvDir)
-    val again = autoRebucket(s, mvDir, targetBytesPerBucket = 4096L)
-    val pre = read(s, mvDir, asOf = Some(vBefore))
-    val cur = read(s, mvDir)
-    val nDiff = cur.exceptAll(pre).union(pre.exceptAll(cur)).count()
-    cur
-      .groupBy((col("doc_id") % 16L).as("shard"))
-      .agg(count(lit(1)).as("n_groups"), sum("n_docs").as("n_docs"),
-        sum("sum_len").as("sum_len"))
-      .withColumn("buckets_before", lit(before.map(_._1).toSet.size.toLong))
-      .withColumn("rebucketed", lit(if (triggered.isDefined) 1L else 0L))
-      .withColumn("buckets_after_ge8",
-        lit(if (after.map(_._1).toSet.size >= 8) 1L else 0L))
-      .withColumn("retriggered", lit(if (again.isDefined) 1L else 0L))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("n_diff", lit(nDiff))
-      .orderBy("shard")
-  }
-
-  /** DuckDB re-derivation: 2400 per-doc groups (count 1, 32-char bodies)
-    * rolled up per doc % 16. Constants: 2 populated buckets before; the
-    * policy triggers once (2400 × ~15 B ≫ 2 × 4 KiB) to ≥ 8 buckets and
-    * does NOT re-trigger at the new layout; MV v3 = create + refresh +
-    * rebucket; time travel across the flip shows 0 row diff.
-    */
-  val mvAutoRebucketReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, doc_id % 16 AS shard FROM range(0, 2400) t(doc_id))
-      |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_groups,
-      |       CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(COUNT(*) * 32 AS BIGINT) AS sum_len,
-      |       CAST(2 AS BIGINT) AS buckets_before,
-      |       CAST(1 AS BIGINT) AS rebucketed,
-      |       CAST(1 AS BIGINT) AS buckets_after_ge8,
-      |       CAST(0 AS BIGINT) AS retriggered,
-      |       CAST(3 AS BIGINT) AS mv_version,
-      |       CAST(0 AS BIGINT) AS n_diff
-      |FROM g GROUP BY shard ORDER BY shard""".stripMargin
 
   /** Sweep superseded headers and every state segment no RETAINED header
     * references, plus aged staging/tmp litter from crashed flips. Carried

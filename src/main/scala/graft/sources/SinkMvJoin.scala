@@ -1,10 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import SinkLifecycles.{MorCdf, scratch}
 
 /** MATERIALIZED VIEWS OVER A JOIN (round 16) — the star-schema rollup a
   * reporting MV actually materializes:
@@ -353,99 +351,4 @@ object SinkMvJoin {
       olderThanMillis: Long = 7L * 24 * 3600 * 1000L): Seq[String] =
     SinkMatView.sweepStateLadder(mvDir, currentVersion(mvDir), retainVersions,
       olderThanMillis, { case StateV(n) => n.toLong }, "_mvj.tmp-")
-
-  // ---- driver-checked query -----------------------------------------------------
-
-  /** Driver-checked JOIN MV (round 16): a per-`d_region` rollup of a
-    * 2000-doc fact over a 15-key dim, maintained through all four delta
-    * classes:
-    *   1. fact DELETE (tail) → every region's max removed → the pruned
-    *      dirty recompute runs as a JOIN (3 dirty groups),
-    *   2. dim UPDATE (key 7 moves to region r9) → fact rows MOVE between
-    *      groups with no rescan — and the vacated group's extreme stays
-    *      derivable, the update FAST-PATH (0 dirty),
-    *   3. dim INSERT (key 15) → previously-unjoined fact rows enter the
-    *      view (inner-join semantics),
-    *   4. fact APPEND against the evolved dim → extremes extend clean.
-    * The final per-region view plus the refresh bookkeeping sits under
-    * the DuckDB hash gate against a from-scratch join recompute.
-    */
-  def mvJoinReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvj", Seq("graft_mvj"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
-    // the DIM: keys 0..14 (15 deliberately missing), region = 'r'||k%3
-    docs(0L, 0L).writeTo("graft_mvj.dim_mvj").append() // d1: bootstrap
-    s.sql("ALTER TABLE graft_mvj.dim_mvj ADD COLUMN region STRING") // d2
-    docs(0L, 15L)
-      .withColumn("region", concat(lit("r"), (col("doc_id") % 3).cast("string")))
-      .writeTo("graft_mvj.dim_mvj").append() // d3
-    // the FACT: 2000 docs, fk = shard (0..15; shard-15 rows unjoined)
-    docs(0L, 800L).writeTo("graft_mvj.fact_mvj").append() // f1
-    docs(800L, 2000L).writeTo("graft_mvj.fact_mvj").append() // f2
-    val factDir = new java.io.File(root, "fact_mvj").getPath
-    val dimDir = new java.io.File(root, "dim_mvj").getPath
-    val mvDir = factDir + ".mvj"
-    create(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
-      groups = Seq("d_region"), aggs = Seq(
-        MvAgg("n_docs", "count"),
-        MvAgg("sum_ids", "sum", "doc_id"),
-        MvAgg("xor_ids", "xor", "doc_id"),
-        MvAgg("max_doc", "max", "doc_id")))
-    // f3: tail delete — every region's recorded max is in the tail → the
-    // dirty recompute path, executed as a pruned fact⋈dim join
-    s.sql("DELETE FROM graft_mvj.fact_mvj WHERE doc_id >= 1500")
-    val r1 = refresh(s, mvDir)
-    // d4: dim update — shard 7 moves r1 → r9; the moved rows' max (1495)
-    // sits BELOW r1's surviving max (1498): clean fast-path, 0 dirty
-    s.sql("UPDATE graft_mvj.dim_mvj SET region = 'r9' WHERE doc_id = 7")
-    // d5: dim insert — key 15 joins shard-15 fact rows INTO the view
-    docs(15L, 16L)
-      .withColumn("region", lit("r0"))
-      .writeTo("graft_mvj.dim_mvj").append()
-    // ONE refresh covers BOTH dim commits — group-move and join-in fold
-    // in the same [Δd ⋈ f] pass
-    val r2 = refresh(s, mvDir)
-    // f4: late fact append against the NOW-COMPLETE dim
-    docs(2000L, 2400L).writeTo("graft_mvj.fact_mvj").append()
-    val r3 = refresh(s, mvDir)
-    val stats = Seq(r1, r2, r3)
-    val (fv, dv) = lastSourceVersions(mvDir)
-    read(s, mvDir)
-      .withColumn("n_refreshes", lit(stats.count(_.applied).toLong))
-      .withColumn("change_rows", lit(stats.map(_.changeRows).sum))
-      .withColumn("dirty_groups", lit(stats.map(_.dirtyGroups).sum))
-      .withColumn("mv_version", lit(currentVersion(mvDir)))
-      .withColumn("fact_version", lit(fv))
-      .withColumn("dim_version", lit(dv))
-      .orderBy("d_region")
-  }
-
-  /** DuckDB re-derivation: live fact rows are `doc_id < 1500 OR doc_id
-    * >= 2000`; the final region of shard s is r9 for 7, r0 for 15 (the
-    * late insert), else r(s%3). Constants: 3 refreshes; contribution
-    * rows 468 (500 tail-deletes minus the 32 unjoined shard-15 rows) +
-    * 281 (one dim window: 94 shard-7 rows × ± for the update plus the
-    * 93 shard-15 rows the insert joins in) + 400 (append, fully joined)
-    * = 1149; 3 dirty groups (every region's max in the deleted tail —
-    * the dim window stays clean); MV v4 = create + 3; fact v4, dim v5.
-    */
-  val mvJoinReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id,
-      |         CASE WHEN doc_id % 16 = 7 THEN 'r9'
-      |              WHEN doc_id % 16 = 15 THEN 'r0'
-      |              ELSE 'r' || CAST((doc_id % 16) % 3 AS VARCHAR) END AS d_region
-      |  FROM range(0, 2400) t(doc_id)
-      |  WHERE doc_id < 1500 OR doc_id >= 2000)
-      |SELECT d_region, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(doc_id) AS xor_ids,
-      |       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-      |       CAST(3 AS BIGINT) AS n_refreshes,
-      |       CAST(1149 AS BIGINT) AS change_rows,
-      |       CAST(3 AS BIGINT) AS dirty_groups,
-      |       CAST(4 AS BIGINT) AS mv_version,
-      |       CAST(4 AS BIGINT) AS fact_version,
-      |       CAST(5 AS BIGINT) AS dim_version
-      |FROM g GROUP BY d_region ORDER BY d_region""".stripMargin
 }

@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
-import SinkLifecycles.{MorCdf, scratch}
 
 /** MV-AWARE AUTOMATIC QUERY REWRITE (rounds 17–18) — the capability gap
   * between "has MVs" and "uses MVs": a user writing the plain
@@ -23,8 +22,7 @@ import SinkLifecycles.{MorCdf, scratch}
   * a registered distributed MV's state plus the change-feed tail of any
   * commits past the MV watermark(s) — the base tables' data files are
   * never opened for state-covered rows (spec-pinned by the data-file read
-  * counter). Same `Rule[LogicalPlan]` rung as
-  * [[graft.plans.DotProductFusion]]: wire it per-session via
+  * counter). A `Rule[LogicalPlan]`: wire it per-session via
   * `spark.experimental.extraOptimizations` (or an extensions
   * `injectOptimizerRule`).
   *
@@ -1352,803 +1350,4 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
       Some(Project(proj, sub))
     } finally inRewrite.set(java.lang.Boolean.FALSE)
   }
-
-  // ---- driver-checked queries ------------------------------------------------
-
-  /** Driver-checked MV-AWARE REWRITE (rounds 17–18): three MVs over an
-    * appending-then-churned table, registered for rewrite; the user's
-    * PLAIN GROUP BYs are answered from MV state across six legs —
-    *   q1: STALE watermark, linear aggregates compensated through the
-    *       append tail's change feed;
-    *   q4: the round-18 DERIVED aggregates — avg(doc_id) from the sum
-    *       slot and its non-null counter, count(score) from the dsum
-    *       slot's counter, sum(score) from the exact-decimal dsum slot —
-    *       all through the same stale tail;
-    *   q6: the round-19 TYPED extremes — max(score) from the dmax
-    *       (DOUBLE) slot and min(body) from the smin (STRING) slot,
-    *       over the same stale insert-only tail (declarative extension,
-    *       no retraction probe);
-    *   q2: AFTER a refresh — the full rewrite including the extreme,
-    *       with ZERO base data files opened (the counter delta is an
-    *       output column under the hash gate);
-    *   q3: the predicate MV — a semantically-equal WHERE routes to it,
-    *       stale-compensated under the predicate;
-    *   g:  the GLOBAL aggregate — the empty group set re-rolls the
-    *       shard MV's partials to one row;
-    *   q5: the round-18 HYBRID EXTREME — after compaction (shard-pure
-    *       layout) a MoR DELETE retracts part of shard 5, and the max
-    *       query rewrites anyway: linear slots fold state ∪ tail, the
-    *       ONE dirty shard's extreme is recomputed by a shard-pruned
-    *       base read (q5_files_opened pins how few files that took).
-    * All six results, the rewrite count and both file-open counters are
-    * re-derived by DuckDB.
-    */
-  def mvRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvrw", Seq("graft_mvrw"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 1200, 2, lo, hi)
-    docs(0L, 0L).writeTo("graft_mvrw.docs_mvrw").append() // v1: bootstrap
-    s.sql("ALTER TABLE graft_mvrw.docs_mvrw ADD COLUMN score DOUBLE") // v2
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi)
-        .withColumn("score", when(col("doc_id") % 5L === 0L, lit(null).cast("double"))
-          .otherwise(col("doc_id") / lit(4.0)))
-        .writeTo("graft_mvrw.docs_mvrw").append()
-    ingest(0L, 800L) // v3
-    val dir = new java.io.File(root.getPath, "docs_mvrw").getPath
-    val mvDir = dir + ".mvd"
-    SinkMvDist.create(s, dir, mvDir, Seq("shard"), Seq(
-      SinkMatView.MvAgg("n_docs", "count"),
-      SinkMatView.MvAgg("sum_ids", "sum", "doc_id"),
-      SinkMatView.MvAgg("xor_ids", "xor", "doc_id"),
-      SinkMatView.MvAgg("max_doc", "max", "doc_id")), buckets = 8)
-    val mvDirP = dir + ".mvdp"
-    SinkMvDist.create(s, dir, mvDirP, Seq("shard"), Seq(
-      SinkMatView.MvAgg("q3_n", "count"),
-      SinkMatView.MvAgg("q3_sum", "sum", "doc_id")),
-      // % 3, not % 2: shard = doc % 16 makes doc-parity shard-correlated
-      // (even docs land only on even shards), and the gate wants every
-      // shard to carry a q3 row
-      where = "doc_id % 3 = 0", buckets = 8)
-    val mvDirD = dir + ".mvdd"
-    SinkMvDist.create(s, dir, mvDirD, Seq("shard"), Seq(
-      SinkMatView.MvAgg("d_n", "count"),
-      SinkMatView.MvAgg("d_sum", "sum", "doc_id"),
-      SinkMatView.MvAgg("d_ds", "dsum", "score"),
-      // round-19 TYPED extremes: a DOUBLE max and a STRING min slot
-      SinkMatView.MvAgg("d_mx", "dmax", "score"),
-      SinkMatView.MvAgg("d_mnb", "smin", "body")), buckets = 8)
-    register(dir, mvDir)
-    register(dir, mvDirP)
-    register(dir, mvDirD)
-    try {
-      s.experimental.extraOptimizations = Seq(SinkMvRewrite)
-      def base = s.read.format("graft.sources.ShardSinkSource")
-        .option("path", dir).load()
-      val r0 = rewrites.get()
-      ingest(800L, 1000L) // v4: the un-refreshed tail
-      // q1 — STALE-watermark linear aggregates compensate via the tail
-      val q1 = base.groupBy(col("shard"))
-        .agg(count(lit(1)).as("q1_n"), sum("doc_id").as("q1_sum"),
-          expr("bit_xor(doc_id)").as("q1_xor"))
-      val got1 = q1.collect().map(r =>
-        (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      // q4 — DERIVED aggregates (avg / count(col) / sum(double)) route to
-      // the dsum-bearing MV, also stale-compensated
-      val q4 = base.groupBy(col("shard"))
-        .agg(avg("doc_id").as("d_avg"), count(col("score")).as("d_nscore"),
-          sum("score").as("d_sscore"))
-      val got4 = q4.collect().map(r =>
-        (r.getInt(0), r.getDouble(1), r.getLong(2), r.getDouble(3)))
-      // q6 — the round-19 TYPED extremes, over the same stale insert-only
-      // tail: max(score) routes to the dmax slot, min(body) to the smin
-      // slot; inserts extend both declaratively (no retraction → no probe)
-      val q6 = base.groupBy(col("shard"))
-        .agg(max("score").as("d_mx"), min("body").as("d_mnb"))
-      val got6 = q6.collect().map(r => (r.getInt(0), r.getDouble(1), r.getString(2)))
-      SinkMvDist.refresh(s, dir, mvDir) // MV → v4
-      // q2 — CURRENT-watermark full rewrite incl. the extreme; base data
-      // files must stay closed
-      val q2 = base.groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
-          expr("bit_xor(doc_id)").as("xor_ids"), max("doc_id").as("max_doc"))
-      val c0 = ShardSink.dataFileReadCount.get()
-      val got2 = q2.collect().map(r =>
-        (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      val q2Files = ShardSink.dataFileReadCount.get() - c0
-      // q3 — the predicate-MV leg: the semantically-equal WHERE routes to
-      // the second MV, stale-compensated under the predicate
-      val q3 = base.where(expr("doc_id % 3 = 0")).groupBy(col("shard"))
-        .agg(count(lit(1)).as("q3_n"), sum("doc_id").as("q3_sum"))
-      val got3 = q3.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      // g — GLOBAL aggregate: the empty group set is a subset of every
-      // MV's, so the shard MV's partials re-roll to one row
-      val g = base.agg(count(lit(1)).as("g_n"), sum("doc_id").as("g_sum"))
-        .collect().head
-      // q5 — HYBRID EXTREME over a retracting tail: compact first (the
-      // MV must be refreshed over the no-data commit — compaction is the
-      // CDF retention horizon), then a MoR DELETE retracts shard 5's top
-      ShardSink.compact(dir) // v5: no-data, shard-pure layout
-      SinkMvDist.refresh(s, dir, mvDir) // fast-forward; MV srcV → v5
-      s.sql("DELETE FROM graft_mvrw.docs_mvrw WHERE shard = 5 AND doc_id >= 500") // v6
-      val q5 = base.groupBy(col("shard"))
-        .agg(count(lit(1)).as("q5_n"), sum("doc_id").as("q5_sum"),
-          max("doc_id").as("q5_max"))
-      val c1 = ShardSink.dataFileReadCount.get()
-      val got5 = q5.collect().map(r =>
-        (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val q5Files = ShardSink.dataFileReadCount.get() - c1
-      val nRewrites = rewrites.get() - r0 // q1 q4 q6 q2 q3 g q5 = 7
-      import s.implicits._
-      val df1 = got1.toSeq.toDF("shard", "q1_n", "q1_sum", "q1_xor")
-      val df3 = got3.toSeq.toDF("shard", "q3_n", "q3_sum")
-      val df4 = got4.toSeq.toDF("shard", "d_avg", "d_nscore", "d_sscore")
-      val df5 = got5.toSeq.toDF("shard", "q5_n", "q5_sum", "q5_max")
-      val df6 = got6.toSeq.toDF("shard", "d_mx", "d_mnb")
-      got2.toSeq.toDF("shard", "n_docs", "sum_ids", "xor_ids", "max_doc")
-        .join(df1, "shard").join(df3, "shard").join(df4, "shard").join(df5, "shard")
-        .join(df6, "shard")
-        .withColumn("g_n", lit(g.getLong(0)))
-        .withColumn("g_sum", lit(g.getLong(1)))
-        .withColumn("n_rewrites", lit(nRewrites))
-        .withColumn("q2_files_opened", lit(q2Files))
-        .withColumn("q5_files_opened", lit(q5Files))
-        .orderBy("shard")
-    } finally {
-      unregister(dir)
-      s.experimental.extraOptimizations = Nil
-    }
-  }
-
-  /** DuckDB re-derivation: q1/q2/q3/q4/q6 and the global leg aggregate
-    * docs 0..999 per shard (score = doc/4, NULL on multiples of five;
-    * body = md5 of the decimal id); q5 aggregates the post-DELETE live
-    * set (shard-5 docs ≥ 500 removed). Constants: 7 rewrites (one per
-    * leg — the refreshes' own internal scans are version-pinned and
-    * never rewrite); q2 opened 0 base data files; q5 opened 3 — the
-    * retraction probe and the spliced tail each read the DELETE's
-    * vector-diffed shard-5 file, and the dirty recompute's shard-pruned
-    * scan reads it once more (every other shard's file stays closed).
-    */
-  val mvRewriteReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, CAST(doc_id % 16 AS INT) AS shard,
-      |         CASE WHEN doc_id % 5 = 0 THEN NULL ELSE doc_id / 4.0 END AS score,
-      |         md5(CAST(doc_id AS VARCHAR)) AS body
-      |  FROM range(0, 1000) t(doc_id)),
-      |l AS (
-      |  SELECT * FROM g WHERE NOT (shard = 5 AND doc_id >= 500))
-      |SELECT g.shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(g.doc_id) AS BIGINT) AS sum_ids,
-      |       bit_xor(g.doc_id) AS xor_ids,
-      |       CAST(MAX(g.doc_id) AS BIGINT) AS max_doc,
-      |       CAST(COUNT(*) AS BIGINT) AS q1_n,
-      |       CAST(SUM(g.doc_id) AS BIGINT) AS q1_sum,
-      |       bit_xor(g.doc_id) AS q1_xor,
-      |       CAST(COUNT(*) FILTER (WHERE g.doc_id % 3 = 0) AS BIGINT) AS q3_n,
-      |       CAST(SUM(g.doc_id) FILTER (WHERE g.doc_id % 3 = 0) AS BIGINT) AS q3_sum,
-      |       CAST(SUM(g.doc_id) AS DOUBLE) / CAST(COUNT(g.doc_id) AS DOUBLE) AS d_avg,
-      |       CAST(COUNT(g.score) AS BIGINT) AS d_nscore,
-      |       CAST(SUM(CAST(g.score AS DECIMAL(24,6))) AS DOUBLE) AS d_sscore,
-      |       CAST(MAX(g.score) AS DOUBLE) AS d_mx,
-      |       MIN(g.body) AS d_mnb,
-      |       (SELECT CAST(COUNT(*) AS BIGINT) FROM l WHERE l.shard = g.shard) AS q5_n,
-      |       (SELECT CAST(SUM(l.doc_id) AS BIGINT) FROM l WHERE l.shard = g.shard) AS q5_sum,
-      |       (SELECT CAST(MAX(l.doc_id) AS BIGINT) FROM l WHERE l.shard = g.shard) AS q5_max,
-      |       (SELECT CAST(COUNT(*) AS BIGINT) FROM g) AS g_n,
-      |       (SELECT CAST(SUM(doc_id) AS BIGINT) FROM g) AS g_sum,
-      |       CAST(7 AS BIGINT) AS n_rewrites,
-      |       CAST(0 AS BIGINT) AS q2_files_opened,
-      |       CAST(3 AS BIGINT) AS q5_files_opened
-      |FROM g GROUP BY g.shard ORDER BY g.shard""".stripMargin
-
-  /** Driver-checked FILTERED-ROLLUP REWRITE (round 19): the single most
-    * common dashboard query — a group-column WHERE over a plain rollup —
-    * answered from MV state in every disguise the plan can take:
-    *   f1: `WHERE shard IN (3, 5) GROUP BY shard` on the mixed-shard
-    *       layout — the filter stays a residual Filter over a
-    *       file-pruned scan; rewritten with ZERO base data files
-    *       (f1_files pins it);
-    *   f2: the same query over a STALE watermark — the residual applies
-    *       to the state read AND the compensating tail;
-    *   f3: predicate IMPLICATION — `WHERE doc_id % 3 = 0 AND shard = 5`
-    *       routes to the predicate MV (pred = `doc_id % 3 = 0`): the MV
-    *       conjuncts match and `shard = 5` is the group-column leftover,
-    *       applied to the predicate MV's state; zero files (f3_files);
-    *   f4: the GLOBAL aggregate under a group filter —
-    *       `WHERE shard < 4` with no GROUP BY re-rolls filtered state
-    *       partials to one row;
-    *   f5: the FALLBACK pin — `WHERE doc_id < 100` references a
-    *       non-group column, so the query must NOT rewrite (n_rewrites
-    *       excludes it) and the base scan answers;
-    *   f6: the CONSUMED-filter path — after OPTIMIZE the layout is
-    *       shard-pure, so `shard IN (3, 5)` is consumed into file-exact
-    *       pruning and NO Filter node remains; the scan's consumed-set
-    *       testimony reconstructs the predicate and the rewrite still
-    *       fires with zero files (f6_files).
-    * All six legs' values, the rewrite count and the three file counters
-    * sit under the DuckDB hash gate.
-    */
-  def mvFilterRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvfr", Seq("graft_mvfr"), MorCdf)
-    def ingest(lo: Long, hi: Long): Unit =
-      SinkLifecycles.docs(s, 1200, 2, lo, hi)
-        .writeTo("graft_mvfr.docs_mvfr").append()
-    ingest(0L, 1000L) // v1
-    val dir = new java.io.File(root.getPath, "docs_mvfr").getPath
-    val mvA = dir + ".mvfa"
-    SinkMvDist.create(s, dir, mvA, Seq("shard"), Seq(
-      SinkMatView.MvAgg("n_docs", "count"),
-      SinkMatView.MvAgg("sum_ids", "sum", "doc_id")), buckets = 8)
-    val mvP = dir + ".mvfp"
-    SinkMvDist.create(s, dir, mvP, Seq("shard"), Seq(
-      SinkMatView.MvAgg("p_n", "count"),
-      SinkMatView.MvAgg("p_sum", "sum", "doc_id")),
-      where = "doc_id % 3 = 0", buckets = 8)
-    register(dir, mvA)
-    register(dir, mvP)
-    try {
-      s.experimental.extraOptimizations = Seq(SinkMvRewrite)
-      def base = s.read.format("graft.sources.ShardSinkSource")
-        .option("path", dir).load()
-      def shardQ = base.where(col("shard").isin(3, 5)).groupBy(col("shard"))
-        .agg(count(lit(1)).as("q_n"), sum("doc_id").as("q_sum"))
-      val r0 = rewrites.get()
-      // f1 — residual Filter over a file-pruned scan, current watermark
-      val c1 = ShardSink.dataFileReadCount.get()
-      val got1 = shardQ.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      val f1Files = ShardSink.dataFileReadCount.get() - c1
-      // f2 — same query across a stale watermark: residual + tail
-      ingest(1000L, 1200L) // v2
-      val got2 = shardQ.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      SinkMvDist.refresh(s, dir, mvA)
-      SinkMvDist.refresh(s, dir, mvP)
-      // f3 — predicate implication: MV pred ∧ group-column leftover
-      val q3 = base.where(expr("doc_id % 3 = 0 AND shard = 5")).groupBy(col("shard"))
-        .agg(count(lit(1)).as("p_qn"), sum("doc_id").as("p_qsum"))
-      val c3 = ShardSink.dataFileReadCount.get()
-      val got3 = q3.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).head
-      val f3Files = ShardSink.dataFileReadCount.get() - c3
-      // f4 — the global aggregate under a group filter
-      val got4 = base.where(col("shard") < 4)
-        .agg(count(lit(1)).as("g_n"), sum("doc_id").as("g_sum")).collect().head
-      // f5 — non-group residual: MUST fall back to the base scan
-      val r5 = rewrites.get()
-      val got5 = base.where(col("doc_id") < 100).groupBy(col("shard"))
-        .agg(count(lit(1)).as("n")).collect()
-      val f5NoRewrite = rewrites.get() - r5 // 0
-      // f6 — compacted shard-pure layout: the filter is CONSUMED into
-      // file-exact pruning (no Filter node remains) and the scan's
-      // consumed-set testimony still rewrites
-      ShardSink.compact(dir) // v3: no-data commit
-      SinkMvDist.refresh(s, dir, mvA) // fast-forward watermarks
-      SinkMvDist.refresh(s, dir, mvP)
-      val c6 = ShardSink.dataFileReadCount.get()
-      val got6 = shardQ.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      val f6Files = ShardSink.dataFileReadCount.get() - c6
-      val nRewrites = rewrites.get() - r0 // f1 f2 f3 f4 f6 = 5
-      import s.implicits._
-      val df1 = got1.toSeq.toDF("shard", "f1_n", "f1_sum")
-      val df2 = got2.toSeq.toDF("shard", "f2_n", "f2_sum")
-      val df6 = got6.toSeq.toDF("shard", "f6_n", "f6_sum")
-      df1.join(df2, "shard").join(df6, "shard")
-        .withColumn("f3_n", lit(got3._2))
-        .withColumn("f3_sum", lit(got3._3))
-        .withColumn("f4_n", lit(got4.getLong(0)))
-        .withColumn("f4_sum", lit(got4.getLong(1)))
-        .withColumn("f5_rows", lit(got5.length.toLong))
-        .withColumn("f5_total", lit(got5.map(_.getLong(1)).sum))
-        .withColumn("f5_extra_rewrites", lit(f5NoRewrite))
-        .withColumn("n_rewrites", lit(nRewrites))
-        .withColumn("f1_files_opened", lit(f1Files))
-        .withColumn("f3_files_opened", lit(f3Files))
-        .withColumn("f6_files_opened", lit(f6Files))
-        .orderBy("shard")
-    } finally {
-      unregister(dir)
-      s.experimental.extraOptimizations = Nil
-    }
-  }
-
-  /** DuckDB re-derivation: docs 0..999 at f1, 0..1199 from f2 on, shard
-    * = doc % 16, no deletes. Constants: 5 rewrites (f1, f2, f3, f4, f6 —
-    * f5's non-group residual falls back, pinned separately as 0 extra
-    * rewrites); f1/f3/f6 each opened 0 base data files (f2's tail
-    * legitimately reads the appended commit's files); f5 returns one row
-    * per shard (16) totalling the 100 filtered docs.
-    */
-  val mvFilterRewriteReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, CAST(doc_id % 16 AS INT) AS shard
-      |  FROM range(0, 1200) t(doc_id)),
-      |g1 AS (SELECT * FROM g WHERE doc_id < 1000)
-      |SELECT s.shard,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g1 WHERE g1.shard = s.shard) AS f1_n,
-      |  (SELECT CAST(SUM(doc_id) AS BIGINT) FROM g1 WHERE g1.shard = s.shard) AS f1_sum,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE g.shard = s.shard) AS f2_n,
-      |  (SELECT CAST(SUM(doc_id) AS BIGINT) FROM g WHERE g.shard = s.shard) AS f2_sum,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE g.shard = s.shard) AS f6_n,
-      |  (SELECT CAST(SUM(doc_id) AS BIGINT) FROM g WHERE g.shard = s.shard) AS f6_sum,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE g.shard = 5 AND doc_id % 3 = 0) AS f3_n,
-      |  (SELECT CAST(SUM(doc_id) AS BIGINT) FROM g WHERE g.shard = 5 AND doc_id % 3 = 0) AS f3_sum,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE g.shard < 4) AS f4_n,
-      |  (SELECT CAST(SUM(doc_id) AS BIGINT) FROM g WHERE g.shard < 4) AS f4_sum,
-      |  CAST(16 AS BIGINT) AS f5_rows,
-      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM g WHERE doc_id < 100) AS f5_total,
-      |  CAST(0 AS BIGINT) AS f5_extra_rewrites,
-      |  CAST(5 AS BIGINT) AS n_rewrites,
-      |  CAST(0 AS BIGINT) AS f1_files_opened,
-      |  CAST(0 AS BIGINT) AS f3_files_opened,
-      |  CAST(0 AS BIGINT) AS f6_files_opened
-      |FROM (VALUES (3), (5)) s(shard) ORDER BY s.shard""".stripMargin
-
-  /** Driver-checked COUNT-DISTINCT REWRITE (round 19): `count(DISTINCT
-    * uid)` — a real user's second dashboard query — answered from an MV
-    * grouped at the FINE grain `(shard, uid)`:
-    *   d1: `SELECT shard, count(*), count(DISTINCT uid), sum(doc_id)
-    *        GROUP BY shard` at a current watermark — live fine groups
-    *        per shard ARE the distinct uids; ZERO base files (d1_files);
-    *   d2: the same query over a STALE watermark — the tail folds at the
-    *       fine grain first, so new/retracted uids surface exactly;
-    *   d3: the GLOBAL `count(DISTINCT uid)`;
-    *   d4: composed with the round-19 group filter —
-    *       `WHERE shard IN (3, 5)` — both features in one plan, zero
-    *       files (d4_files);
-    *   d5: the FALLBACK pin — `count(DISTINCT doc_id)` has no MV whose
-    *       group set contains doc_id, so the query must NOT rewrite.
-    * NULL uids (every 7th doc) pin count_distinct's null exclusion
-    * through the fine-group path. All values + counters are re-derived
-    * by DuckDB.
-    */
-  def mvDistinctRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvdr", Seq("graft_mvdr"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 1200, 2, lo, hi)
-    docs(0L, 0L).writeTo("graft_mvdr.docs_mvdr").append() // v1: bootstrap
-    s.sql("ALTER TABLE graft_mvdr.docs_mvdr ADD COLUMN uid BIGINT") // v2
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi)
-        .withColumn("uid", when(col("doc_id") % 7L === 0L, lit(null).cast("long"))
-          .otherwise(col("doc_id") % 50L))
-        .writeTo("graft_mvdr.docs_mvdr").append()
-    ingest(0L, 1000L) // v3
-    val dir = new java.io.File(root.getPath, "docs_mvdr").getPath
-    val mvD = dir + ".mvdu"
-    SinkMvDist.create(s, dir, mvD, Seq("shard", "uid"), Seq(
-      SinkMatView.MvAgg("n_rows", "count"),
-      SinkMatView.MvAgg("s_ids", "sum", "doc_id")), buckets = 8)
-    register(dir, mvD)
-    try {
-      s.experimental.extraOptimizations = Seq(SinkMvRewrite)
-      def base = s.read.format("graft.sources.ShardSinkSource")
-        .option("path", dir).load()
-      def shardQ = base.groupBy(col("shard"))
-        .agg(count(lit(1)).as("q_n"), count_distinct(col("uid")).as("q_du"),
-          sum("doc_id").as("q_sum"))
-      val r0 = rewrites.get()
-      // d1 — current watermark, zero base files
-      val c1 = ShardSink.dataFileReadCount.get()
-      val got1 = shardQ.collect().map(r =>
-        (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val d1Files = ShardSink.dataFileReadCount.get() - c1
-      // d2 — stale watermark: the tail folds at the fine grain first
-      ingest(1000L, 1200L) // v4
-      val got2 = shardQ.collect().map(r =>
-        (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      SinkMvDist.refresh(s, dir, mvD)
-      // d3 — the global distinct
-      val gDu = base.agg(count_distinct(col("uid")).as("g_du"))
-        .collect().head.getLong(0)
-      // d4 — distinct + group-column residual composed; zero files
-      val c4 = ShardSink.dataFileReadCount.get()
-      val got4 = base.where(col("shard").isin(3, 5)).groupBy(col("shard"))
-        .agg(count_distinct(col("uid")).as("f_du"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      val d4Files = ShardSink.dataFileReadCount.get() - c4
-      // d5 — no MV's grain carries doc_id: MUST fall back
-      val r5 = rewrites.get()
-      val got5 = base.groupBy(col("shard"))
-        .agg(count_distinct(col("doc_id")).as("n")).collect()
-      val d5NoRewrite = rewrites.get() - r5 // 0
-      val nRewrites = rewrites.get() - r0 // d1 d2 d3 d4 = 4
-      import s.implicits._
-      val df1 = got1.toSeq.toDF("shard", "d1_n", "d1_du", "d1_sum")
-      val df2 = got2.toSeq.toDF("shard", "d2_n", "d2_du", "d2_sum")
-      df1.join(df2, "shard")
-        .withColumn("g_du", lit(gDu))
-        .withColumn("d4_du3", lit(got4.head._2))
-        .withColumn("d4_du5", lit(got4(1)._2))
-        .withColumn("d5_rows", lit(got5.length.toLong))
-        .withColumn("d5_total", lit(got5.map(_.getLong(1)).sum))
-        .withColumn("d5_extra_rewrites", lit(d5NoRewrite))
-        .withColumn("n_rewrites", lit(nRewrites))
-        .withColumn("d1_files_opened", lit(d1Files))
-        .withColumn("d4_files_opened", lit(d4Files))
-        .orderBy("shard")
-    } finally {
-      unregister(dir)
-      s.experimental.extraOptimizations = Nil
-    }
-  }
-
-  /** DuckDB re-derivation: docs 0..999 at d1, 0..1199 from d2 on; shard
-    * = doc % 16; uid = doc % 50, NULL on multiples of seven. Constants:
-    * 4 rewrites (d1–d4; d5's doc_id grain is unregistered and falls
-    * back — 0 extra rewrites); d1 and d4 opened 0 base data files; d5
-    * answers 16 shard rows totalling 1200 distinct doc_ids.
-    */
-  val mvDistinctRewriteReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, CAST(doc_id % 16 AS INT) AS shard,
-      |         CASE WHEN doc_id % 7 = 0 THEN NULL ELSE doc_id % 50 END AS uid
-      |  FROM range(0, 1200) t(doc_id)),
-      |g1 AS (SELECT * FROM g WHERE doc_id < 1000)
-      |SELECT a.shard,
-      |  a.d1_n, a.d1_du, a.d1_sum, b.d2_n, b.d2_du, b.d2_sum,
-      |  (SELECT CAST(COUNT(DISTINCT uid) AS BIGINT) FROM g) AS g_du,
-      |  (SELECT CAST(COUNT(DISTINCT uid) AS BIGINT) FROM g WHERE shard = 3) AS d4_du3,
-      |  (SELECT CAST(COUNT(DISTINCT uid) AS BIGINT) FROM g WHERE shard = 5) AS d4_du5,
-      |  CAST(16 AS BIGINT) AS d5_rows,
-      |  CAST(1200 AS BIGINT) AS d5_total,
-      |  CAST(0 AS BIGINT) AS d5_extra_rewrites,
-      |  CAST(4 AS BIGINT) AS n_rewrites,
-      |  CAST(0 AS BIGINT) AS d1_files_opened,
-      |  CAST(0 AS BIGINT) AS d4_files_opened
-      |FROM (SELECT shard, CAST(COUNT(*) AS BIGINT) AS d1_n,
-      |             CAST(COUNT(DISTINCT uid) AS BIGINT) AS d1_du,
-      |             CAST(SUM(doc_id) AS BIGINT) AS d1_sum
-      |      FROM g1 GROUP BY shard) a
-      |JOIN (SELECT shard, CAST(COUNT(*) AS BIGINT) AS d2_n,
-      |             CAST(COUNT(DISTINCT uid) AS BIGINT) AS d2_du,
-      |             CAST(SUM(doc_id) AS BIGINT) AS d2_sum
-      |      FROM g GROUP BY shard) b USING (shard)
-      |ORDER BY a.shard""".stripMargin
-
-  /** Driver-checked JOIN-MV REWRITE (round 18): a fact ⋈ dim GROUP BY
-    * (the reference's own flagship query shape) over a registered join
-    * MV, exercised through four legs —
-    *   A: both watermarks current → rewritten; NEITHER table's data
-    *      files open (a_files pins 0);
-    *   B: a fact append tail → rewritten through [Δf ⋈ d@new], the one
-    *      delta-join part a fact tail needs;
-    *   C: a dim UPDATE tail → the [Δd ⋈ f@old] part would rescan the
-    *      whole fact, so the round-18 COST GUARD refuses (cost_fallbacks
-    *      pins exactly one refusal) and the base join answers;
-    *   D: after a refresh folds the dim move → rewritten again with
-    *      zero data files (d_files pins 0), the rX group move visible.
-    * The final per-(region, uid) table and all counters sit under the
-    * DuckDB hash gate.
-    */
-  def mvJoinRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvjr", Seq("graft_mvjr"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
-    // base tables (d1–d3, f1–f3) from the JVM-shared star fixture —
-    // identical commits/versions to the inline build (round 19)
-    SinkLifecycles.starInto(s, root.getPath, "dim_mvjr", "fact_mvjr")
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi).withColumn("uid", (col("doc_id") % 300L).cast("long"))
-        .writeTo("graft_mvjr.fact_mvjr").append()
-    val factDir = new java.io.File(root.getPath, "fact_mvjr").getPath
-    val dimDir = new java.io.File(root.getPath, "dim_mvjr").getPath
-    val mvDir = factDir + ".mvjr"
-    SinkMvDist.createJoin(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
-      groups = Seq("d_region", "uid"), aggs = Seq(
-        SinkMatView.MvAgg("n_docs", "count"),
-        SinkMatView.MvAgg("sum_ids", "sum", "doc_id")), buckets = 8)
-    register(factDir, mvDir)
-    try {
-      s.experimental.extraOptimizations = Seq(SinkMvRewrite)
-      def q = s.read.format("graft.sources.ShardSinkSource")
-        .option("path", factDir).load()
-        .join(s.read.format("graft.sources.ShardSinkSource")
-          .option("path", dimDir).load()
-          .select(col("doc_id").as("dk"), col("region")),
-          col("shard") === col("dk"), "inner")
-        .groupBy(col("region"), col("uid"))
-        .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"))
-      val r0 = rewrites.get()
-      val cf0 = costFallbacks.get()
-      // leg A: current watermarks — zero data files on EITHER table
-      val cA = ShardSink.dataFileReadCount.get()
-      q.collect()
-      val aFiles = ShardSink.dataFileReadCount.get() - cA
-      // leg B: fact tail — compensates through [Δf ⋈ d@new]
-      ingest(1200L, 1500L) // f4
-      q.collect()
-      val bRewrites = rewrites.get() - r0 // A + B = 2
-      SinkMvDist.refresh(s, factDir, mvDir) // fold f4
-      // leg C: dim tail — the cost guard must refuse ([Δd ⋈ f@old]
-      // rescans the whole fact) and the base join answers correctly
-      s.sql("UPDATE graft_mvjr.dim_mvjr SET region = 'rX' WHERE doc_id = 5") // d4
-      q.collect()
-      val cRewrites = rewrites.get() - r0 // still 2
-      val cFallbacks = costFallbacks.get() - cf0 // exactly 1
-      SinkMvDist.refresh(s, factDir, mvDir) // fold the dim move
-      // leg D: current again — rewritten, group move visible, zero files
-      val cD = ShardSink.dataFileReadCount.get()
-      val gotD = q.collect().map(r =>
-        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val dFiles = ShardSink.dataFileReadCount.get() - cD
-      val nRewrites = rewrites.get() - r0 // 3
-      import s.implicits._
-      gotD.toSeq.toDF("d_region", "uid", "n_docs", "sum_ids")
-        .withColumn("n_rewrites", lit(nRewrites))
-        .withColumn("b_rewrites", lit(bRewrites))
-        .withColumn("c_rewrites", lit(cRewrites))
-        .withColumn("cost_fallbacks", lit(cFallbacks))
-        .withColumn("a_files_opened", lit(aFiles))
-        .withColumn("d_files_opened", lit(dFiles))
-        .orderBy("d_region", "uid")
-    } finally {
-      unregister(factDir)
-      s.experimental.extraOptimizations = Nil
-    }
-  }
-
-  /** DuckDB re-derivation: live fact rows are docs 0..1499 with
-    * uid = doc % 300; the region of shard s = doc % 16 is rX for 5 (the
-    * dim update, folded before leg D) else r(s % 3). Constants: 3
-    * rewrites total (A, B, D), 2 after leg B, still 2 after the refused
-    * leg C, exactly 1 cost fallback (leg C's [Δd ⋈ f@old] rescan loses
-    * to the base join), and 0 data files opened by legs A and D.
-    */
-  val mvJoinRewriteReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, doc_id % 300 AS uid,
-      |         CASE WHEN doc_id % 16 = 5 THEN 'rX'
-      |              ELSE 'r' || CAST((doc_id % 16) % 3 AS VARCHAR) END AS d_region
-      |  FROM range(0, 1500) t(doc_id))
-      |SELECT d_region, uid, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       CAST(3 AS BIGINT) AS n_rewrites,
-      |       CAST(2 AS BIGINT) AS b_rewrites,
-      |       CAST(2 AS BIGINT) AS c_rewrites,
-      |       CAST(1 AS BIGINT) AS cost_fallbacks,
-      |       CAST(0 AS BIGINT) AS a_files_opened,
-      |       CAST(0 AS BIGINT) AS d_files_opened
-      |FROM g GROUP BY d_region, uid ORDER BY d_region, uid""".stripMargin
-
-  /** Driver-checked DIM-TAIL COMPENSATION (round 19): the join-MV
-    * rewrite across a MOVED dim with no fact rescan — the MV's grain
-    * includes the fk (`shard`), so state rows are key-addressable:
-    *   A: both watermarks current → rewritten, zero files (a_files);
-    *   B: a dim attribute UPDATE (region of key 5 → 'rX') → the changed
-    *      key's state rows REMAP to the post-image group at query time;
-    *      the rewrite fires (no cost refusal) reading ONLY dim-side
-    *      files — the arriving-key probe (feed + old-snapshot keys),
-    *      the uniqueness probe (dim@new), and the remap (feed +
-    *      dim@new) open 8 small dim files in total (b_files_opened pins
-    *      the exact count) while the 16-file compacted fact stays
-    *      closed (the spec pins the plan carries no fact scan);
-    *   C: a dim INSERT (genuinely key-changing) → the plan-time probe
-    *      DISQUALIFIES the compensation and the base join answers
-    *      (c_extra_rewrites pins 0; cost_fallbacks unchanged — this is
-    *      a derivability refusal, not a cost one);
-    *   D: after a refresh folds both dim commits → rewritten, zero
-    *      files;
-    *   E: a dim key DELETE (key 9) → compensation DROPS the key's state
-    *      rows — the final table excludes shard 9 and is the hash-gated
-    *      output (B ≡ D row-set equality rides as bd_equal).
-    */
-  def mvDimTailRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvdt", Seq("graft_mvdt"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 1200, 2, lo, hi)
-    // base tables (d1–d3, f1–f3) from the JVM-shared star fixture —
-    // identical commits/versions to the inline build (round 19)
-    SinkLifecycles.starInto(s, root.getPath, "dim_mvdt", "fact_mvdt")
-    val factDir = new java.io.File(root.getPath, "fact_mvdt").getPath
-    val dimDir = new java.io.File(root.getPath, "dim_mvdt").getPath
-    ShardSink.compact(factDir) // f4: shard-pure 16-file layout
-    val mvDir = factDir + ".mvdt"
-    // the FINE grain: fk (shard) rides the group set — the compensation's
-    // addressability condition
-    SinkMvDist.createJoin(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
-      groups = Seq("shard", "d_region", "uid"), aggs = Seq(
-        SinkMatView.MvAgg("n_docs", "count"),
-        SinkMatView.MvAgg("sum_ids", "sum", "doc_id")), buckets = 8)
-    register(factDir, mvDir)
-    try {
-      s.experimental.extraOptimizations = Seq(SinkMvRewrite)
-      def q = s.read.format("graft.sources.ShardSinkSource")
-        .option("path", factDir).load()
-        .join(s.read.format("graft.sources.ShardSinkSource")
-          .option("path", dimDir).load()
-          .select(col("doc_id").as("dk"), col("region")),
-          col("shard") === col("dk"), "inner")
-        .groupBy(col("region"), col("uid"))
-        .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"))
-      def canon(rows: Array[org.apache.spark.sql.Row]) =
-        rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val r0 = rewrites.get()
-      val cf0 = costFallbacks.get()
-      // A — current watermarks
-      val cA = ShardSink.dataFileReadCount.get()
-      val gotA = q.collect()
-      val aFiles = ShardSink.dataFileReadCount.get() - cA
-      val aTotal = gotA.map(_.getLong(3)).sum
-      // B — attribute-only dim move: compensated, fact never rescanned
-      s.sql("UPDATE graft_mvdt.dim_mvdt SET region = 'rX' WHERE doc_id = 5") // d4
-      val cB = ShardSink.dataFileReadCount.get()
-      val gotB = canon(q.collect())
-      val bFiles = ShardSink.dataFileReadCount.get() - cB
-      val bRewrites = rewrites.get() - r0 // A + B = 2
-      // C — a key-CHANGING dim commit: the probe refuses, base answers
-      docs(16L, 18L).withColumn("region", lit("r9"))
-        .writeTo("graft_mvdt.dim_mvdt").append() // d5
-      q.collect()
-      val cExtra = rewrites.get() - r0 - bRewrites // 0
-      SinkMvDist.refresh(s, factDir, mvDir) // fold d4 + d5
-      // D — current again
-      val cD = ShardSink.dataFileReadCount.get()
-      val gotD = canon(q.collect())
-      val dFiles = ShardSink.dataFileReadCount.get() - cD
-      // E — a dim key DELETE: compensation drops shard-9 state rows
-      s.sql("DELETE FROM graft_mvdt.dim_mvdt WHERE doc_id = 9") // d6
-      val gotE = q.collect().map(r =>
-        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val nRewrites = rewrites.get() - r0 // A B D E = 4
-      val cfDelta = costFallbacks.get() - cf0 // 0
-      import s.implicits._
-      gotE.toSeq.toDF("d_region", "uid", "n_docs", "sum_ids")
-        .withColumn("a_rows", lit(gotA.length.toLong))
-        .withColumn("a_total", lit(aTotal))
-        .withColumn("bd_equal", lit(if (gotB.toSet == gotD.toSet) 1L else 0L))
-        .withColumn("n_rewrites", lit(nRewrites))
-        .withColumn("b_rewrites", lit(bRewrites))
-        .withColumn("c_extra_rewrites", lit(cExtra))
-        .withColumn("cost_fallbacks", lit(cfDelta))
-        .withColumn("a_files_opened", lit(aFiles))
-        .withColumn("d_files_opened", lit(dFiles))
-        .withColumn("b_files_opened", lit(bFiles))
-        .orderBy("d_region", "uid")
-    } finally {
-      unregister(factDir)
-      s.experimental.extraOptimizations = Nil
-    }
-  }
-
-  /** DuckDB re-derivation: fact rows are docs 0..1199, uid = doc % 300,
-    * shard s = doc % 16; the final (leg-E) region map is rX for 5 (the
-    * compensated move) else r(s % 3), with shard 9 EXCLUDED (the
-    * compensated key delete); legs B and D must agree row-for-row
-    * (bd_equal). Constants: 4 rewrites (A, B, D, E — C's key-changing
-    * window is a derivability refusal: 0 extra rewrites AND 0 cost
-    * fallbacks); A and D opened 0 data files; B opened exactly 8 —
-    * all dim-side (probe feed + dim@old keys, uniqueness dim@new,
-    * remap feed + dim@new) — while the 16-file compacted fact stayed
-    * closed.
-    */
-  val mvDimTailRewriteReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, doc_id % 300 AS uid, CAST(doc_id % 16 AS INT) AS s
-      |  FROM range(0, 1200) t(doc_id)),
-      |m AS (
-      |  SELECT doc_id, uid,
-      |         CASE WHEN s = 5 THEN 'rX' ELSE 'r' || CAST(s % 3 AS VARCHAR) END AS d_region
-      |  FROM g WHERE s <> 9)
-      |SELECT d_region, uid, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       (SELECT CAST(COUNT(*) AS BIGINT) FROM (
-      |          SELECT DISTINCT 'r' || CAST(s % 3 AS VARCHAR), uid FROM g)) AS a_rows,
-      |       (SELECT CAST(SUM(doc_id) AS BIGINT) FROM g) AS a_total,
-      |       CAST(1 AS BIGINT) AS bd_equal,
-      |       CAST(4 AS BIGINT) AS n_rewrites,
-      |       CAST(2 AS BIGINT) AS b_rewrites,
-      |       CAST(0 AS BIGINT) AS c_extra_rewrites,
-      |       CAST(0 AS BIGINT) AS cost_fallbacks,
-      |       CAST(0 AS BIGINT) AS a_files_opened,
-      |       CAST(0 AS BIGINT) AS d_files_opened,
-      |       CAST(8 AS BIGINT) AS b_files_opened
-      |FROM m GROUP BY d_region, uid ORDER BY d_region, uid""".stripMargin
-
-  /** Driver-checked SNOWFLAKE-MV REWRITE (round 18): the full chain
-    * query — `fact ⋈ dim1 ⋈ dim2 GROUP BY (zone, region, uid)`, dim2
-    * keyed off dim1's `catk` column — answered from the snowflake MV
-    * through four legs:
-    *   A: all three watermarks current → rewritten; NO table's data
-    *      files open (a_files pins 0);
-    *   B: a fact append tail → rewritten through [Δf ⋈ d1@new ⋈ d2@new];
-    *   C: a dim1 UPDATE tail → the [Δd1 ⋈ f@old ⋈ d2@old] part would
-    *      rescan the whole fact, so the cost guard refuses
-    *      (cost_fallbacks pins exactly one) and the base chain answers;
-    *   D: after a refresh folds the region move → rewritten again with
-    *      zero data files, the rX group move visible.
-    */
-  def mvSnowRewriteReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val (s, root) = scratch(spark, sfDir, "sinkmvsr", Seq("graft_mvsr"), MorCdf)
-    def docs(lo: Long, hi: Long) = SinkLifecycles.docs(s, 2400, 2, lo, hi)
-    // base tables (e1–e3, d1–d4, f1–f3) from the JVM-shared snowflake
-    // fixture — identical commits/versions to the inline build (round 19)
-    SinkLifecycles.snowInto(s, root.getPath, "dim2_mvsr", "dim1_mvsr", "fact_mvsr")
-    def ingest(lo: Long, hi: Long): Unit =
-      docs(lo, hi).withColumn("uid", (col("doc_id") % 150L).cast("long"))
-        .writeTo("graft_mvsr.fact_mvsr").append()
-    val factDir = new java.io.File(root.getPath, "fact_mvsr").getPath
-    val d1Dir = new java.io.File(root.getPath, "dim1_mvsr").getPath
-    val d2Dir = new java.io.File(root.getPath, "dim2_mvsr").getPath
-    val mvDir = factDir + ".mvsr"
-    SinkMvDist.createSnowflake(s, factDir, mvDir,
-      Seq(
-        SinkMvDist.SnowDim(d1Dir, fk = "shard", pk = "doc_id", pfx = "d1_"),
-        SinkMvDist.SnowDim(d2Dir, fk = "d1_catk", pk = "doc_id", pfx = "d2_")),
-      groups = Seq("d2_zone", "d1_region", "uid"), aggs = Seq(
-        SinkMatView.MvAgg("n_docs", "count"),
-        SinkMatView.MvAgg("sum_ids", "sum", "doc_id")), buckets = 8)
-    register(factDir, mvDir)
-    try {
-      s.experimental.extraOptimizations = Seq(SinkMvRewrite)
-      def q = s.read.format("graft.sources.ShardSinkSource")
-        .option("path", factDir).load()
-        .join(s.read.format("graft.sources.ShardSinkSource")
-          .option("path", d1Dir).load()
-          .select(col("doc_id").as("d1k"), col("region"), col("catk")),
-          col("shard") === col("d1k"), "inner")
-        .join(s.read.format("graft.sources.ShardSinkSource")
-          .option("path", d2Dir).load()
-          .select(col("doc_id").as("d2k"), col("zone")),
-          col("catk") === col("d2k"), "inner")
-        .groupBy(col("zone"), col("region"), col("uid"))
-        .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"))
-      val r0 = rewrites.get()
-      val cf0 = costFallbacks.get()
-      // leg A: every watermark current — zero data files on ALL tables
-      val cA = ShardSink.dataFileReadCount.get()
-      q.collect()
-      val aFiles = ShardSink.dataFileReadCount.get() - cA
-      // leg B: fact tail — the [Δf ⋈ d1@new ⋈ d2@new] part compensates
-      ingest(1200L, 1400L) // f4
-      q.collect()
-      val bRewrites = rewrites.get() - r0 // A + B = 2
-      SinkMvDist.refresh(s, factDir, mvDir) // fold f4
-      // leg C: dim1 tail — [Δd1 ⋈ f@old ⋈ d2@old] rescans the fact; the
-      // cost guard refuses and the base chain answers
-      s.sql("UPDATE graft_mvsr.dim1_mvsr SET region = 'rX' WHERE doc_id = 7") // d5
-      q.collect()
-      val cRewrites = rewrites.get() - r0 // still 2
-      val cFallbacks = costFallbacks.get() - cf0 // exactly 1
-      SinkMvDist.refresh(s, factDir, mvDir) // fold the region move
-      // leg D: current again — rewritten, the group move visible
-      val cD = ShardSink.dataFileReadCount.get()
-      val gotD = q.collect().map(r =>
-        (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      val dFiles = ShardSink.dataFileReadCount.get() - cD
-      val nRewrites = rewrites.get() - r0 // 3
-      import s.implicits._
-      gotD.toSeq.toDF("zone", "region", "uid", "n_docs", "sum_ids")
-        .withColumn("n_rewrites", lit(nRewrites))
-        .withColumn("b_rewrites", lit(bRewrites))
-        .withColumn("c_rewrites", lit(cRewrites))
-        .withColumn("cost_fallbacks", lit(cFallbacks))
-        .withColumn("a_files_opened", lit(aFiles))
-        .withColumn("d_files_opened", lit(dFiles))
-        .orderBy("zone", "region", "uid")
-    } finally {
-      unregister(factDir)
-      s.experimental.extraOptimizations = Nil
-    }
-  }
-
-  /** DuckDB re-derivation: live fact rows are docs 0..1399 with
-    * uid = doc % 150; shard s = doc % 16 maps region rX for 7 (the dim1
-    * update, folded before leg D) else r(s % 3), and zone z((s % 4) % 2)
-    * through the catk chain. Constants: 3 rewrites (A, B, D), 2 after
-    * leg B, still 2 after the refused leg C, exactly 1 cost fallback,
-    * 0 data files opened by legs A and D.
-    */
-  val mvSnowRewriteReportSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, doc_id % 150 AS uid, doc_id % 16 AS s
-      |  FROM range(0, 1400) t(doc_id)),
-      |m AS (
-      |  SELECT doc_id, uid,
-      |         CASE WHEN s = 7 THEN 'rX' ELSE 'r' || CAST(s % 3 AS VARCHAR) END AS region,
-      |         'z' || CAST((s % 4) % 2 AS VARCHAR) AS zone
-      |  FROM g)
-      |SELECT zone, region, uid, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |       CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-      |       CAST(3 AS BIGINT) AS n_rewrites,
-      |       CAST(2 AS BIGINT) AS b_rewrites,
-      |       CAST(2 AS BIGINT) AS c_rewrites,
-      |       CAST(1 AS BIGINT) AS cost_fallbacks,
-      |       CAST(0 AS BIGINT) AS a_files_opened,
-      |       CAST(0 AS BIGINT) AS d_files_opened
-      |FROM m GROUP BY zone, region, uid ORDER BY zone, region, uid""".stripMargin
 }

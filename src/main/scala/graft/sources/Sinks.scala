@@ -159,7 +159,10 @@ object Sinks {
     Seq("csv", "json", "orc").map(audit).mkString("", "\nUNION ALL\n", "\nORDER BY format")
   }
 
-  /** Every checked query of this module: its plan and its DuckDB twin. */
+  /** Every checked query of this module: its plan and its DuckDB twin.
+    * The lakehouse lifecycles are [[SinkLifecycles]]'s, the materialized
+    * view and column-stat ones [[SinkMvLifecycles]]'s.
+    */
   private val checked: Map[String, ((SparkSession, String) => DataFrame, String)] = Map(
     "q_format_roundtrip" -> (formatRoundtrip _, formatRoundtripSql),
     "q_bucketed_join" -> (bucketedJoin _, bucketedJoinSql),
@@ -208,27 +211,27 @@ object Sinks {
     "q_dsv2_bloom_lookup" -> (SinkLifecycles.bloomLookupReport _, SinkLifecycles.bloomLookupReportSql),
     "q_dsv2_optimize_binpack" -> (SinkLifecycles.binPackReport _, SinkLifecycles.binPackReportSql),
     "q_dsv2_auto_compact" -> (SinkLifecycles.autoCompactReport _, SinkLifecycles.autoCompactReportSql),
-    "q_dsv2_mv_refresh" -> (SinkMatView.mvRefreshReport _, SinkMatView.mvRefreshReportSql),
-    "q_dsv2_col_skipping" -> (SinkColStats.colSkippingReport _, SinkColStats.colSkippingReportSql),
-    "s_mv_stream_parity" -> (SinkMatView.mvStreamParity _, SinkMatView.mvStreamParitySql),
-    "q_dsv2_mv_groups" -> (SinkMatView.mvGroupsReport _, SinkMatView.mvGroupsReportSql),
-    "q_dsv2_mv_dist" -> (SinkMvDist.mvDistReport _, SinkMvDist.mvDistReportSql),
-    "q_dsv2_mv_join" -> (SinkMvJoin.mvJoinReport _, SinkMvJoin.mvJoinReportSql),
-    "q_dsv2_mv_restore" -> (SinkMatView.mvRestoreReport _, SinkMatView.mvRestoreReportSql),
-    "q_dsv2_mv_join_dist" -> (SinkMvDist.mvJoinDistReport _, SinkMvDist.mvJoinDistReportSql),
-    "s_mvjoin_stream_parity" -> (SinkMvDist.mvJoinStreamParity _, SinkMvDist.mvJoinStreamParitySql),
-    "q_dsv2_mv_snowflake" -> (SinkMvDist.mvSnowflakeReport _, SinkMvDist.mvSnowflakeReportSql),
-    "s_mvsnow_stream_parity" -> (SinkMvDist.mvSnowflakeStreamParity _, SinkMvDist.mvSnowflakeStreamParitySql),
-    "q_dsv2_mv_rewrite" -> (SinkMvRewrite.mvRewriteReport _, SinkMvRewrite.mvRewriteReportSql),
-    "q_dsv2_mv_filter_rewrite" -> (SinkMvRewrite.mvFilterRewriteReport _, SinkMvRewrite.mvFilterRewriteReportSql),
-    "q_dsv2_mv_distinct_rewrite" -> (SinkMvRewrite.mvDistinctRewriteReport _, SinkMvRewrite.mvDistinctRewriteReportSql),
-    "q_dsv2_mv_sql_ddl" -> (SinkMvDdl.mvSqlDdlReport _, SinkMvDdl.mvSqlDdlReportSql),
-    "q_dsv2_mv_dimtail_rewrite" -> (SinkMvRewrite.mvDimTailRewriteReport _, SinkMvRewrite.mvDimTailRewriteReportSql),
-    "q_dsv2_mv_join_rewrite" -> (SinkMvRewrite.mvJoinRewriteReport _, SinkMvRewrite.mvJoinRewriteReportSql),
-    "q_dsv2_mv_snow_rewrite" -> (SinkMvRewrite.mvSnowRewriteReport _, SinkMvRewrite.mvSnowRewriteReportSql),
-    "q_dsv2_mv_auto_rebucket" -> (SinkMvDist.mvAutoRebucketReport _, SinkMvDist.mvAutoRebucketReportSql),
-    "q_dsv2_zorder_cols" -> (SinkColStats.zorderColsReport _, SinkColStats.zorderColsReportSql),
-    "q_dsv2_meta_col_minmax" -> (SinkColStats.metaColMinMaxReport _, SinkColStats.metaColMinMaxReportSql),
+    "q_dsv2_mv_refresh" -> (SinkMvLifecycles.mvRefreshReport _, SinkMvLifecycles.mvRefreshReportSql),
+    "q_dsv2_col_skipping" -> (SinkMvLifecycles.colSkippingReport _, SinkMvLifecycles.colSkippingReportSql),
+    "s_mv_stream_parity" -> (SinkMvLifecycles.mvStreamParity _, SinkMvLifecycles.mvStreamParitySql),
+    "q_dsv2_mv_groups" -> (SinkMvLifecycles.mvGroupsReport _, SinkMvLifecycles.mvGroupsReportSql),
+    "q_dsv2_mv_dist" -> (SinkMvLifecycles.mvDistReport _, SinkMvLifecycles.mvDistReportSql),
+    "q_dsv2_mv_join" -> (SinkMvLifecycles.mvJoinReport _, SinkMvLifecycles.mvJoinReportSql),
+    "q_dsv2_mv_restore" -> (SinkMvLifecycles.mvRestoreReport _, SinkMvLifecycles.mvRestoreReportSql),
+    "q_dsv2_mv_join_dist" -> (SinkMvLifecycles.mvJoinDistReport _, SinkMvLifecycles.mvJoinDistReportSql),
+    "s_mvjoin_stream_parity" -> (SinkMvLifecycles.mvJoinStreamParity _, SinkMvLifecycles.mvJoinStreamParitySql),
+    "q_dsv2_mv_snowflake" -> (SinkMvLifecycles.mvSnowflakeReport _, SinkMvLifecycles.mvSnowflakeReportSql),
+    "s_mvsnow_stream_parity" -> (SinkMvLifecycles.mvSnowflakeStreamParity _, SinkMvLifecycles.mvSnowflakeStreamParitySql),
+    "q_dsv2_mv_rewrite" -> (SinkMvLifecycles.mvRewriteReport _, SinkMvLifecycles.mvRewriteReportSql),
+    "q_dsv2_mv_filter_rewrite" -> (SinkMvLifecycles.mvFilterRewriteReport _, SinkMvLifecycles.mvFilterRewriteReportSql),
+    "q_dsv2_mv_distinct_rewrite" -> (SinkMvLifecycles.mvDistinctRewriteReport _, SinkMvLifecycles.mvDistinctRewriteReportSql),
+    "q_dsv2_mv_sql_ddl" -> (SinkMvLifecycles.mvSqlDdlReport _, SinkMvLifecycles.mvSqlDdlReportSql),
+    "q_dsv2_mv_dimtail_rewrite" -> (SinkMvLifecycles.mvDimTailRewriteReport _, SinkMvLifecycles.mvDimTailRewriteReportSql),
+    "q_dsv2_mv_join_rewrite" -> (SinkMvLifecycles.mvJoinRewriteReport _, SinkMvLifecycles.mvJoinRewriteReportSql),
+    "q_dsv2_mv_snow_rewrite" -> (SinkMvLifecycles.mvSnowRewriteReport _, SinkMvLifecycles.mvSnowRewriteReportSql),
+    "q_dsv2_mv_auto_rebucket" -> (SinkMvLifecycles.mvAutoRebucketReport _, SinkMvLifecycles.mvAutoRebucketReportSql),
+    "q_dsv2_zorder_cols" -> (SinkMvLifecycles.zorderColsReport _, SinkMvLifecycles.zorderColsReportSql),
+    "q_dsv2_meta_col_minmax" -> (SinkMvLifecycles.metaColMinMaxReport _, SinkMvLifecycles.metaColMinMaxReportSql),
     "q_dsv2_restore" -> (SinkLifecycles.restoreReport _, SinkLifecycles.restoreReportSql),
     "q_dsv2_replace_where" -> (SinkLifecycles.replaceWhereReport _, SinkLifecycles.replaceWhereReportSql),
     "q_dsv2_vacuum" -> (SinkLifecycles.vacuumReport _, SinkLifecycles.vacuumReportSql),

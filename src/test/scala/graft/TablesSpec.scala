@@ -68,6 +68,15 @@ class TablesSpec extends SparkSpec {
     assert(Tables.readParquet(spark, dir.toString).count() === 3L)
   }
 
+  test("after Bench.warmUp, building every table's DataFrame starts no Spark job") {
+    // a fresh session: its own schema resolutions, the nanos conf unset
+    val s = spark.newSession()
+    Bench.warmUp(s, sf001)
+    val (_, jobs) = Probe.withJobLog(s.sparkContext)(log =>
+      log(Tables.AllTables.foreach(Tables.load(s, sf001, _))))
+    assert(jobs.isEmpty, jobs.map(_.site).mkString("; "))
+  }
+
   test("flipping the nanos-as-long conf resolves events again") {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val old = spark.conf.getOption(key)

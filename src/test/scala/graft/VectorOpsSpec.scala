@@ -222,34 +222,12 @@ class VectorOpsSpec extends SparkSpec {
       err.getMessage.toLowerCase.contains("literal"), err.getMessage)
   }
 
-  test("DotProductFusion rewrites the HOF composition into graft_dot on a real scan") {
-    spark.experimental.extraOptimizations = Seq(graft.plans.DotProductFusion)
-    try {
-      // parquet scan (not a literal LocalRelation, which constant-folds away
-      // before the plan can be inspected); elements are containsNull=true
-      // there — the fused expression carries the null-element check
-      val emb = graft.model.Tables.embeddings(spark, sf001)
-        .select($"embedding".cast("array<double>").as("e"))
-      val df = emb.select(VectorOps.dotHof($"e", $"e").as("d"))
-      assert(df.queryExecution.optimizedPlan.toString.contains("graft_dot"),
-        "rule must fuse aggregate(zip_with(...)) into the native expression")
-      val fused = df.orderBy("d").collect().map(_.getDouble(0)).toSeq
-      spark.experimental.extraOptimizations = Nil
-      val plain = emb.select(VectorOps.dotHof($"e", $"e").as("d"))
-        .orderBy("d").collect().map(_.getDouble(0)).toSeq
-      assert(fused === plain) // bit-identical results
-    } finally spark.experimental.extraOptimizations = Nil
-  }
-
   test("null-element arrays: fused and HOF dot both null the whole sum") {
-    spark.experimental.extraOptimizations = Seq(graft.plans.DotProductFusion)
-    try {
-      val df = Seq((Seq(Option(1.0), Option(2.0)), Seq(Option(3.0), Option.empty[Double])))
-        .toDF("a", "b")
-      assert(df.select(VectorOps.dotHof($"a", $"b")).head().isNullAt(0))
-      assert(df.select(VectorOps.dot($"a", $"b")).head().isNullAt(0))
-      assert(df.select(VectorOps.cosine($"a", $"b")).head().isNullAt(0))
-    } finally spark.experimental.extraOptimizations = Nil
+    val df = Seq((Seq(Option(1.0), Option(2.0)), Seq(Option(3.0), Option.empty[Double])))
+      .toDF("a", "b")
+    assert(df.select(VectorOps.dotHof($"a", $"b")).head().isNullAt(0))
+    assert(df.select(VectorOps.dot($"a", $"b")).head().isNullAt(0))
+    assert(df.select(VectorOps.cosine($"a", $"b")).head().isNullAt(0))
   }
 
   test("cosine of orthogonal vectors is 0") {
