@@ -78,15 +78,13 @@ object SinkMvLifecycles {
   }
 
   /** Tails `dir`'s change feed into the view at `mvDir` until it has
-    * caught up: one `foreachBatch` fold per delivered commit, through the
-    * distributed engine when `mvDir` holds distributed state and the blob
-    * engine otherwise. Returns the batches applied and the ones recorded
+    * caught up: one `foreachBatch` call of the engine's `fold` per
+    * delivered commit. Returns the batches applied and the ones recorded
     * as already covered.
     */
-  private def drainChangeFeed(s: SparkSession, dir: String, mvDir: String): (Long, Long) = {
-    val fold: (SparkSession, String, String, DataFrame, Long) => RefreshStats =
-      if (SinkMvDist.currentVersion(mvDir) > 0L) SinkMvDist.refreshFromChanges
-      else SinkMatView.refreshFromChanges
+  private def drainChangeFeed(
+      s: SparkSession, dir: String, mvDir: String,
+      fold: (SparkSession, String, String, DataFrame, Long) => RefreshStats): (Long, Long) = {
     val applied = new java.util.concurrent.atomic.AtomicLong(0L)
     val skipped = new java.util.concurrent.atomic.AtomicLong(0L)
     val q = s.readStream.format("graft.sources.ShardSinkSource")
@@ -111,15 +109,19 @@ object SinkMvLifecycles {
     a.exceptAll(b).union(b.exceptAll(a)).count()
 
   /** Runs `body` with the table's MVs registered for [[SinkMvRewrite]]
-    * and the rule installed on `s`; afterwards, also when `body` fails,
-    * unregisters every MV of the table and uninstalls the rule.
+    * and the rule installed on `s`, and returns its value with the
+    * counter deltas of the whole body: a fixture's rewrite and fallback
+    * totals then cover every step between its query legs too — the
+    * refreshes, compactions and DML, whose own scans must never rewrite.
+    * Afterwards, also when `body` fails, unregisters every MV of the
+    * table and uninstalls the rule.
     */
-  private def withRewrite[T](s: SparkSession, mvs: (String, Seq[String]))(body: => T): T = {
+  private def withRewrite[T](s: SparkSession, mvs: (String, Seq[String]))(body: => T): Probed[T] = {
     val (src, dirs) = mvs
     dirs.foreach(SinkMvRewrite.register(src, _))
     try {
       s.experimental.extraOptimizations = Seq(SinkMvRewrite)
-      body
+      probe(body)
     } finally {
       SinkMvRewrite.unregister(src)
       s.experimental.extraOptimizations = Nil
@@ -212,50 +214,22 @@ object SinkMvLifecycles {
       root.getPath
     }
 
-  /** Recursive file copy of one table directory into a consumer's
-    * catalog root under its per-query name.
+  /** Copies tables of a memoized base into `root`, each file by file
+    * under its base name plus `suffix`; returns their dirs in order.
     */
-  private def copyTable(baseDir: String, destDir: String): Unit = {
-    val src = java.nio.file.Paths.get(baseDir)
-    val dst = java.nio.file.Paths.get(destDir)
-    java.nio.file.Files.createDirectories(dst)
-    java.nio.file.Files.walk(src).forEach { p =>
-      val rel = src.relativize(p)
-      val t = dst.resolve(rel)
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
+  private def copyBase(
+      base: String, root: java.io.File, suffix: String, tables: String*): Seq[String] =
+    tables.map { table =>
+      val src = java.nio.file.Paths.get(base, table)
+      val dst = new java.io.File(root, table + suffix).toPath
+      java.nio.file.Files.walk(src).forEach { p =>
+        val t = dst.resolve(src.relativize(p))
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+        else java.nio.file.Files.copy(p, t, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        ()
+      }
+      dst.toString
     }
-  }
-
-  /** Copy the star base's tables into `root` as (dimName, factName);
-    * returns their dirs, fact first.
-    */
-  private def starInto(
-      spark: SparkSession, root: java.io.File, dimName: String, factName: String)
-      : (String, String) = {
-    val base = starBase(spark)
-    val Seq(dim, fact) = Seq(dimName, factName).map(new java.io.File(root, _).getPath)
-    copyTable(s"$base/dim", dim)
-    copyTable(s"$base/fact", fact)
-    (fact, dim)
-  }
-
-  /** Copy the snowflake base's tables into `root`; returns their dirs as
-    * (fact, dim1, dim2).
-    */
-  private def snowInto(
-      spark: SparkSession, root: java.io.File,
-      dim2Name: String, dim1Name: String, factName: String): (String, String, String) = {
-    val base = snowBase(spark)
-    val Seq(d2, d1, fact) =
-      Seq(dim2Name, dim1Name, factName).map(new java.io.File(root, _).getPath)
-    copyTable(s"$base/dim2", d2)
-    copyTable(s"$base/dim1", d1)
-    copyTable(s"$base/fact", fact)
-    (fact, d1, d2)
-  }
 
   /** Bootstraps the empty catalog `table` and adds the column `name` of
     * SQL type `ddlType` (two commits); returns its ingest of docs
@@ -463,7 +437,7 @@ object SinkMvLifecycles {
     s.sql("DELETE FROM graft_mvs.docs_mvs WHERE doc_id >= 1500") // v4
     s.sql("DELETE FROM graft_mvs.docs_mvs WHERE shard = 3") // v5
     append(2000L, 2400L) // v6
-    val (applied, skipped) = drainChangeFeed(s, dir, mvDir)
+    val (applied, skipped) = drainChangeFeed(s, dir, mvDir, SinkMatView.refreshFromChanges)
     val mv = SinkMatView.read(s, mvDir)
     cells(mv, "n_applied" -> applied, "n_skipped" -> skipped,
       "mv_version" -> SinkMatView.currentVersion(mvDir),
@@ -684,7 +658,7 @@ object SinkMvLifecycles {
     // base tables (d1–d3: the 16-key region dim; f1–f3: the 1200-doc
     // uid-grain fact) copied from the JVM-shared star fixture — same
     // commits, versions and content as the inline build (round 19)
-    val (factDir, dimDir) = starInto(s, root, "dim_mvjd", "fact_mvjd")
+    val Seq(dimDir, factDir) = copyBase(starBase(s), root, "_mvjd", "dim", "fact")
     val mvDir = factDir + ".mvjd"
     SinkMvDist.createJoin(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
       groups = Seq("d_region", "uid"), aggs = WithMax, buckets = 8)
@@ -746,7 +720,7 @@ object SinkMvLifecycles {
     val (s, root) = scratch(spark, sfDir, "sinkmvjs", Seq("graft_mvjs"), MorCdf, streaming = true)
     // base tables (d1–d3, f1–f3) from the JVM-shared star fixture —
     // identical commits/versions to the inline build (round 19)
-    val (factDir, dimDir) = starInto(s, root, "dim_mvjs", "fact_mvjs")
+    val Seq(dimDir, factDir) = copyBase(starBase(s), root, "_mvjs", "dim", "fact")
     val mvDir = factDir + ".mvjs"
     SinkMvDist.createJoin(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
       groups = Seq("d_region", "uid"), aggs = WithMax, buckets = 8)
@@ -761,7 +735,8 @@ object SinkMvLifecycles {
     // one stream per SOURCE, drained sequentially (fact first) so the
     // lifecycle constants are deterministic; each batch carries ONE
     // commit of its own feed and folds under that source's watermark
-    val drains = Seq(factDir, dimDir).map(drainChangeFeed(s, _, mvDir))
+    val drains =
+      Seq(factDir, dimDir).map(drainChangeFeed(s, _, mvDir, SinkMvDist.refreshFromChanges))
     val (fv, dv) = SinkMvDist.lastSourceVersions(mvDir)
     val d = SinkMatView.srcAt(s, dimDir, dv)
       .select(col("doc_id").as("_pk"), col("region").as("d_region"))
@@ -828,8 +803,7 @@ object SinkMvLifecycles {
     // base tables (e1–e3: zone dim2; d1–d4: region/catk dim1; f1–f3: the
     // 1200-doc uid-grain fact) from the JVM-shared snowflake fixture —
     // identical commits/versions to the inline build (round 19)
-    val (factDir, d1Dir, d2Dir) =
-      snowInto(s, root, "dim2_mvss", "dim1_mvss", "fact_mvss")
+    val Seq(d2Dir, d1Dir, factDir) = copyBase(snowBase(s), root, "_mvss", "dim2", "dim1", "fact")
     val mvDir = factDir + ".mvss"
     SinkMvDist.createSnowflake(s, factDir, mvDir,
       Seq(
@@ -847,7 +821,8 @@ object SinkMvLifecycles {
     // chain order) so the lifecycle constants are deterministic; each
     // batch carries ONE commit of its own feed and folds with every
     // OTHER source pinned at its header watermark
-    val drains = Seq(factDir, d1Dir, d2Dir).map(drainChangeFeed(s, _, mvDir))
+    val drains =
+      Seq(factDir, d1Dir, d2Dir).map(drainChangeFeed(s, _, mvDir, SinkMvDist.refreshFromChanges))
     val (fv, dvs) = SinkMvDist.lastSourceVersionsAll(mvDir)
     val full = SinkMatView.filtered(
       SinkMvJoin.joinedAt(s, factDir, fv, Seq(
@@ -913,8 +888,7 @@ object SinkMvLifecycles {
     val (s, root) = scratch(spark, sfDir, "sinkmvsn", Seq("graft_mvsn"), MorCdf)
     // base tables (e1–e3, d1–d4, f1–f3) from the JVM-shared snowflake
     // fixture — identical commits/versions to the inline build (round 19)
-    val (factDir, d1Dir, d2Dir) =
-      snowInto(s, root, "dim2_mvsn", "dim1_mvsn", "fact_mvsn")
+    val Seq(d2Dir, d1Dir, factDir) = copyBase(snowBase(s), root, "_mvsn", "dim2", "dim1", "fact")
     val mvDir = factDir + ".mvsn"
     SinkMvDist.createSnowflake(s, factDir, mvDir,
       Seq(
@@ -1055,61 +1029,65 @@ object SinkMvLifecycles {
         .writeTo("graft_mvsq.docs_mvsq").append()
     ingest(0L, 900L) // v1
     val dir = new java.io.File(root.getPath, "docs_mvsq").getPath
-    // the DDL below registers the view; the bracket unregisters the table
-    withRewrite(s, dir -> Nil) {
-      // c — CREATE via property DDL (the definition reuses the header's
-      // field grammar; the create is version-neutral on the table)
-      s.sql("""ALTER TABLE graft_mvsq.docs_mvsq SET TBLPROPERTIES ('graft.mv.rollup' =
+    // the DDL below registers the view; the bracket unregisters the table.
+    // Its window opens before the CREATE, which must add no rewrite: no
+    // view of the table is registered until the create lands
+    val Probed((s1, s2, s3, d, mvs, detached, nMvsAfter), _, nRewrites, _) =
+      withRewrite(s, dir -> Nil) {
+        // c — CREATE via property DDL (the definition reuses the header's
+        // field grammar; the create is version-neutral on the table)
+        s.sql("""ALTER TABLE graft_mvsq.docs_mvsq SET TBLPROPERTIES ('graft.mv.rollup' =
         '{"group":"shard","buckets":8,"aggs":[{"n":"n_docs","k":"count","e":""},{"n":"sum_ids","k":"sum","e":"doc_id"}]}')""")
-      def q = s.sql(
-        """SELECT shard, count(*) AS n_docs, sum(doc_id) AS sum_ids
-          |FROM graft_mvsq.docs_mvsq GROUP BY shard""".stripMargin)
-      // s1 — the SQL rollup answers from state, zero base files
-      val s1 = probe(leg(q).toDF("shard", "s1_n", "s1_sum"))
-      // s2 — append a tail, refresh through the SQL key, re-query
-      ingest(900L, 1200L) // v2
-      s.sql("ALTER TABLE graft_mvsq.docs_mvsq SET TBLPROPERTIES ('graft.mv.refresh' = 'rollup')")
-      val s2 = probe(leg(q).toDF("shard", "s2_n", "s2_sum"))
-      // m — the census
-      val mvs = s.sql(
-        """SELECT name, group_cols, aggs, buckets, src_version, mv_version,
-          |       n_segments, watermark_current, registered
-          |FROM graft_mvsq.docs_mvsq.mvs""".stripMargin).collect()
-      val m = mvs.head
-      // r — a JVM restart loses the IN-MEMORY registration while the
-      // state dir survives: simulate the detach, observe the census
-      // showing it, RE-ATTACH through SQL, and the rewrite resumes on
-      // the existing state (s3, zero files — no rebuild)
-      SinkMvRewrite.unregister(dir, SinkMvDdl.mvDirFor(dir, "rollup"))
-      val detached = s.sql(
-        "SELECT registered FROM graft_mvsq.docs_mvsq.mvs").collect().head.getBoolean(0)
-      s.sql("ALTER TABLE graft_mvsq.docs_mvsq SET TBLPROPERTIES ('graft.mv.attach' = 'rollup')")
-      val s3 = probe(q.collect())
-      // d — DROP via UNSET: the query falls back and the census empties
-      s.sql("ALTER TABLE graft_mvsq.docs_mvsq UNSET TBLPROPERTIES ('graft.mv.rollup')")
-      val d = probe(leg(q).toDF("shard", "d_n", "d_sum"))
-      val nMvsAfter = s.sql("SELECT * FROM graft_mvsq.docs_mvsq.mvs").count()
-      s1.value.join(s2.value, "shard").join(d.value, "shard")
-        .withColumn("mv_name", lit(m.getString(0)))
-        .withColumn("mv_groups", lit(m.getString(1)))
-        .withColumn("mv_aggs", lit(m.getString(2)))
-        .withColumn("mv_buckets", lit(m.getLong(3)))
-        .withColumn("mv_src_version", lit(m.getLong(4)))
-        .withColumn("mv_version", lit(m.getLong(5)))
-        .withColumn("seg_ge1", lit(if (m.getLong(6) >= 1L) 1L else 0L))
-        .withColumn("mv_current", lit(if (m.getBoolean(7)) 1L else 0L))
-        .withColumn("mv_registered", lit(if (m.getBoolean(8)) 1L else 0L))
-        .withColumn("r_detached", lit(if (!detached) 1L else 0L))
-        .withColumn("s3_files_opened", lit(s3.files))
-        .withColumn("n_mvs_before", lit(mvs.length.toLong))
-        .withColumn("n_mvs_after", lit(nMvsAfter))
-        .withColumn("d_extra_rewrites", lit(d.rewrites)) // 0
-        // s1 + s2 + s3 = 3
-        .withColumn("n_rewrites", lit(Seq(s1, s2, s3, d).map(_.rewrites).sum))
-        .withColumn("s1_files_opened", lit(s1.files))
-        .withColumn("s2_files_opened", lit(s2.files))
-        .orderBy("shard")
-    }
+        def q = s.sql(
+          """SELECT shard, count(*) AS n_docs, sum(doc_id) AS sum_ids
+            |FROM graft_mvsq.docs_mvsq GROUP BY shard""".stripMargin)
+        // s1 — the SQL rollup answers from state, zero base files
+        val s1 = probe(leg(q).toDF("shard", "s1_n", "s1_sum"))
+        // s2 — append a tail, refresh through the SQL key, re-query
+        ingest(900L, 1200L) // v2
+        s.sql("ALTER TABLE graft_mvsq.docs_mvsq SET TBLPROPERTIES ('graft.mv.refresh' = 'rollup')")
+        val s2 = probe(leg(q).toDF("shard", "s2_n", "s2_sum"))
+        // m — the census
+        val mvs = s.sql(
+          """SELECT name, group_cols, aggs, buckets, src_version, mv_version,
+            |       n_segments, watermark_current, registered
+            |FROM graft_mvsq.docs_mvsq.mvs""".stripMargin).collect()
+        // r — a JVM restart loses the IN-MEMORY registration while the
+        // state dir survives: simulate the detach, observe the census
+        // showing it, RE-ATTACH through SQL, and the rewrite resumes on
+        // the existing state (s3, zero files — no rebuild)
+        SinkMvRewrite.unregister(dir, SinkMvDdl.mvDirFor(dir, "rollup"))
+        val detached = s.sql(
+          "SELECT registered FROM graft_mvsq.docs_mvsq.mvs").collect().head.getBoolean(0)
+        s.sql("ALTER TABLE graft_mvsq.docs_mvsq SET TBLPROPERTIES ('graft.mv.attach' = 'rollup')")
+        val s3 = probe(q.collect())
+        // d — DROP via UNSET: the query falls back and the census empties
+        s.sql("ALTER TABLE graft_mvsq.docs_mvsq UNSET TBLPROPERTIES ('graft.mv.rollup')")
+        val d = probe(leg(q).toDF("shard", "d_n", "d_sum"))
+        val nMvsAfter = s.sql("SELECT * FROM graft_mvsq.docs_mvsq.mvs").count()
+        (s1, s2, s3, d, mvs, detached, nMvsAfter)
+      }
+    val m = mvs.head
+    s1.value.join(s2.value, "shard").join(d.value, "shard")
+      .withColumn("mv_name", lit(m.getString(0)))
+      .withColumn("mv_groups", lit(m.getString(1)))
+      .withColumn("mv_aggs", lit(m.getString(2)))
+      .withColumn("mv_buckets", lit(m.getLong(3)))
+      .withColumn("mv_src_version", lit(m.getLong(4)))
+      .withColumn("mv_version", lit(m.getLong(5)))
+      .withColumn("seg_ge1", lit(if (m.getLong(6) >= 1L) 1L else 0L))
+      .withColumn("mv_current", lit(if (m.getBoolean(7)) 1L else 0L))
+      .withColumn("mv_registered", lit(if (m.getBoolean(8)) 1L else 0L))
+      .withColumn("r_detached", lit(if (!detached) 1L else 0L))
+      .withColumn("s3_files_opened", lit(s3.files))
+      .withColumn("n_mvs_before", lit(mvs.length.toLong))
+      .withColumn("n_mvs_after", lit(nMvsAfter))
+      .withColumn("d_extra_rewrites", lit(d.rewrites)) // 0
+      // s1 + s2 + s3 = 3
+      .withColumn("n_rewrites", lit(nRewrites))
+      .withColumn("s1_files_opened", lit(s1.files))
+      .withColumn("s2_files_opened", lit(s2.files))
+      .orderBy("shard")
   }
 
   /** DuckDB re-derivation: docs 0..899 at s1, 0..1199 from s2 on (s3
@@ -1208,53 +1186,53 @@ object SinkMvLifecycles {
       // round-19 TYPED extremes: a DOUBLE max and a STRING min slot
       MvAgg("d_mx", "dmax", "score"),
       MvAgg("d_mnb", "smin", "body")), buckets = 8)
-    withRewrite(s, dir -> Seq(mvDir, mvDirP, mvDirD)) {
-      def base = readPath(s, dir)
-      ingest(800L, 1000L) // v4: the un-refreshed tail
-      // q1 — STALE-watermark linear aggregates compensate via the tail
-      val q1 = probe(leg(base.groupBy(col("shard"))
-        .agg(count(lit(1)).as("q1_n"), sum("doc_id").as("q1_sum"),
-          expr("bit_xor(doc_id)").as("q1_xor"))))
-      // q4 — DERIVED aggregates (avg / count(col) / sum(double)) route to
-      // the dsum-bearing MV, also stale-compensated
-      val q4 = probe(leg(base.groupBy(col("shard"))
-        .agg(avg("doc_id").as("d_avg"), count(col("score")).as("d_nscore"),
-          sum("score").as("d_sscore"))))
-      // q6 — the round-19 TYPED extremes, over the same stale insert-only
-      // tail: max(score) routes to the dmax slot, min(body) to the smin
-      // slot; inserts extend both declaratively (no retraction → no probe)
-      val q6 = probe(leg(base.groupBy(col("shard"))
-        .agg(max("score").as("d_mx"), min("body").as("d_mnb"))))
-      SinkMvDist.refresh(s, dir, mvDir) // MV → v4
-      // q2 — CURRENT-watermark full rewrite incl. the extreme; base data
-      // files must stay closed
-      val q2 = probe(leg(aggregated(base, Seq("shard"), WithMax)))
-      // q3 — the predicate-MV leg: the semantically-equal WHERE routes to
-      // the second MV, stale-compensated under the predicate
-      val q3 = probe(leg(base.where(expr("doc_id % 3 = 0")).groupBy(col("shard"))
-        .agg(count(lit(1)).as("q3_n"), sum("doc_id").as("q3_sum"))))
-      // g — GLOBAL aggregate: the empty group set is a subset of every
-      // MV's, so the shard MV's partials re-roll to one row
-      val g = probe(base.agg(count(lit(1)).as("g_n"), sum("doc_id").as("g_sum"))
-        .collect().head)
-      // q5 — HYBRID EXTREME over a retracting tail: compact first (the
-      // MV must be refreshed over the no-data commit — compaction is the
-      // CDF retention horizon), then a MoR DELETE retracts shard 5's top
-      ShardSink.compact(dir) // v5: no-data, shard-pure layout
-      SinkMvDist.refresh(s, dir, mvDir) // fast-forward; MV srcV → v5
-      s.sql("DELETE FROM graft_mvrw.docs_mvrw WHERE shard = 5 AND doc_id >= 500") // v6
-      val q5 = probe(leg(base.groupBy(col("shard"))
-        .agg(count(lit(1)).as("q5_n"), sum("doc_id").as("q5_sum"),
-          max("doc_id").as("q5_max"))))
-      Seq(q1, q3, q4, q5, q6).foldLeft(q2.value)((acc, l) => acc.join(l.value, "shard"))
-        .withColumn("g_n", lit(g.value.getLong(0)))
-        .withColumn("g_sum", lit(g.value.getLong(1)))
-        // q1 q4 q6 q2 q3 g q5 = 7
-        .withColumn("n_rewrites", lit(Seq(q1, q4, q6, q2, q3, g, q5).map(_.rewrites).sum))
-        .withColumn("q2_files_opened", lit(q2.files))
-        .withColumn("q5_files_opened", lit(q5.files))
-        .orderBy("shard")
-    }
+    val Probed((q1, q2, q3, q4, q5, q6, g), _, nRewrites, _) =
+      withRewrite(s, dir -> Seq(mvDir, mvDirP, mvDirD)) {
+        def base = readPath(s, dir)
+        ingest(800L, 1000L) // v4: the un-refreshed tail
+        // q1 — STALE-watermark linear aggregates compensate via the tail
+        val q1 = leg(base.groupBy(col("shard"))
+          .agg(count(lit(1)).as("q1_n"), sum("doc_id").as("q1_sum"),
+            expr("bit_xor(doc_id)").as("q1_xor")))
+        // q4 — DERIVED aggregates (avg / count(col) / sum(double)) route to
+        // the dsum-bearing MV, also stale-compensated
+        val q4 = leg(base.groupBy(col("shard"))
+          .agg(avg("doc_id").as("d_avg"), count(col("score")).as("d_nscore"),
+            sum("score").as("d_sscore")))
+        // q6 — the round-19 TYPED extremes, over the same stale insert-only
+        // tail: max(score) routes to the dmax slot, min(body) to the smin
+        // slot; inserts extend both declaratively (no retraction → no probe)
+        val q6 = leg(base.groupBy(col("shard"))
+          .agg(max("score").as("d_mx"), min("body").as("d_mnb")))
+        SinkMvDist.refresh(s, dir, mvDir) // MV → v4
+        // q2 — CURRENT-watermark full rewrite incl. the extreme; base data
+        // files must stay closed
+        val q2 = probe(leg(aggregated(base, Seq("shard"), WithMax)))
+        // q3 — the predicate-MV leg: the semantically-equal WHERE routes to
+        // the second MV, stale-compensated under the predicate
+        val q3 = leg(base.where(expr("doc_id % 3 = 0")).groupBy(col("shard"))
+          .agg(count(lit(1)).as("q3_n"), sum("doc_id").as("q3_sum")))
+        // g — GLOBAL aggregate: the empty group set is a subset of every
+        // MV's, so the shard MV's partials re-roll to one row
+        val g = base.agg(count(lit(1)).as("g_n"), sum("doc_id").as("g_sum")).collect().head
+        // q5 — HYBRID EXTREME over a retracting tail: compact first (the
+        // MV must be refreshed over the no-data commit — compaction is the
+        // CDF retention horizon), then a MoR DELETE retracts shard 5's top
+        ShardSink.compact(dir) // v5: no-data, shard-pure layout
+        SinkMvDist.refresh(s, dir, mvDir) // fast-forward; MV srcV → v5
+        s.sql("DELETE FROM graft_mvrw.docs_mvrw WHERE shard = 5 AND doc_id >= 500") // v6
+        val q5 = probe(leg(base.groupBy(col("shard"))
+          .agg(count(lit(1)).as("q5_n"), sum("doc_id").as("q5_sum"),
+            max("doc_id").as("q5_max"))))
+        (q1, q2, q3, q4, q5, q6, g)
+      }
+    Seq(q1, q3, q4, q5.value, q6).foldLeft(q2.value)(_.join(_, "shard"))
+      .withColumn("g_n", lit(g.getLong(0)))
+      .withColumn("g_sum", lit(g.getLong(1)))
+      .withColumn("n_rewrites", lit(nRewrites)) // q1 q4 q6 q2 q3 g q5 = 7
+      .withColumn("q2_files_opened", lit(q2.files))
+      .withColumn("q5_files_opened", lit(q5.files))
+      .orderBy("shard")
   }
 
   /** DuckDB re-derivation: q1/q2/q3/q4/q6 and the global leg aggregate
@@ -1340,7 +1318,7 @@ object SinkMvLifecycles {
       MvAgg("p_n", "count"),
       MvAgg("p_sum", "sum", "doc_id")),
       where = "doc_id % 3 = 0", buckets = 8)
-    withRewrite(s, dir -> Seq(mvA, mvP)) {
+    val Probed((f1, f2, f3, f4, f5, f6), _, nRewrites, _) = withRewrite(s, dir -> Seq(mvA, mvP)) {
       def base = readPath(s, dir)
       def shardQ = base.where(col("shard").isin(3, 5)).groupBy(col("shard"))
         .agg(count(lit(1)).as("q_n"), sum("doc_id").as("q_sum"))
@@ -1348,15 +1326,15 @@ object SinkMvLifecycles {
       val f1 = probe(leg(shardQ).toDF("shard", "f1_n", "f1_sum"))
       // f2 — same query across a stale watermark: residual + tail
       ingest(1000L, 1200L) // v2
-      val f2 = probe(leg(shardQ).toDF("shard", "f2_n", "f2_sum"))
+      val f2 = leg(shardQ).toDF("shard", "f2_n", "f2_sum")
       SinkMvDist.refresh(s, dir, mvA)
       SinkMvDist.refresh(s, dir, mvP)
       // f3 — predicate implication: MV pred ∧ group-column leftover
       val f3 = probe(base.where(expr("doc_id % 3 = 0 AND shard = 5")).groupBy(col("shard"))
         .agg(count(lit(1)).as("p_qn"), sum("doc_id").as("p_qsum")).collect().head)
       // f4 — the global aggregate under a group filter
-      val f4 = probe(base.where(col("shard") < 4)
-        .agg(count(lit(1)).as("g_n"), sum("doc_id").as("g_sum")).collect().head)
+      val f4 = base.where(col("shard") < 4)
+        .agg(count(lit(1)).as("g_n"), sum("doc_id").as("g_sum")).collect().head
       // f5 — non-group residual: MUST fall back to the base scan
       val f5 = probe(base.where(col("doc_id") < 100).groupBy(col("shard"))
         .agg(count(lit(1)).as("n")).collect())
@@ -1367,22 +1345,23 @@ object SinkMvLifecycles {
       SinkMvDist.refresh(s, dir, mvA) // fast-forward watermarks
       SinkMvDist.refresh(s, dir, mvP)
       val f6 = probe(leg(shardQ).toDF("shard", "f6_n", "f6_sum"))
-      f1.value.join(f2.value, "shard").join(f6.value, "shard")
-        .withColumn("f3_n", lit(f3.value.getLong(1)))
-        .withColumn("f3_sum", lit(f3.value.getLong(2)))
-        .withColumn("f4_n", lit(f4.value.getLong(0)))
-        .withColumn("f4_sum", lit(f4.value.getLong(1)))
-        .withColumn("f5_rows", lit(f5.value.length.toLong))
-        .withColumn("f5_total", lit(f5.value.map(_.getLong(1)).sum))
-        .withColumn("f5_extra_rewrites", lit(f5.rewrites)) // 0
-        // f1 f2 f3 f4 f6 = 5
-        .withColumn("n_rewrites", lit(Seq(f1, f2, f3, f4, f5, f6).map(_.rewrites).sum))
-        .withColumn("f1_files_opened", lit(f1.files))
-        .withColumn("f3_files_opened", lit(f3.files))
-        .withColumn("f6_files_opened", lit(f6.files))
-        .orderBy("shard")
+      (f1, f2, f3, f4, f5, f6)
     }
+    f1.value.join(f2, "shard").join(f6.value, "shard")
+      .withColumn("f3_n", lit(f3.value.getLong(1)))
+      .withColumn("f3_sum", lit(f3.value.getLong(2)))
+      .withColumn("f4_n", lit(f4.getLong(0)))
+      .withColumn("f4_sum", lit(f4.getLong(1)))
+      .withColumn("f5_rows", lit(f5.value.length.toLong))
+      .withColumn("f5_total", lit(f5.value.map(_.getLong(1)).sum))
+      .withColumn("f5_extra_rewrites", lit(f5.rewrites)) // 0
+      .withColumn("n_rewrites", lit(nRewrites)) // f1 f2 f3 f4 f6 = 5
+      .withColumn("f1_files_opened", lit(f1.files))
+      .withColumn("f3_files_opened", lit(f3.files))
+      .withColumn("f6_files_opened", lit(f6.files))
+      .orderBy("shard")
   }
+
 
   /** DuckDB re-derivation: docs 0..999 at f1, 0..1199 from f2 on, shard
     * = doc % 16, no deletes. Constants: 5 rewrites (f1, f2, f3, f4, f6 —
@@ -1445,7 +1424,7 @@ object SinkMvLifecycles {
     SinkMvDist.create(s, dir, mvD, Seq("shard", "uid"), Seq(
       MvAgg("n_rows", "count"),
       MvAgg("s_ids", "sum", "doc_id")), buckets = 8)
-    withRewrite(s, dir -> Seq(mvD)) {
+    val Probed((d1, d2, d3, d4, d5), _, nRewrites, _) = withRewrite(s, dir -> Seq(mvD)) {
       def base = readPath(s, dir)
       def shardQ = base.groupBy(col("shard"))
         .agg(count(lit(1)).as("q_n"), count_distinct(col("uid")).as("q_du"),
@@ -1454,11 +1433,10 @@ object SinkMvLifecycles {
       val d1 = probe(leg(shardQ).toDF("shard", "d1_n", "d1_du", "d1_sum"))
       // d2 — stale watermark: the tail folds at the fine grain first
       ingest(1000L, 1200L) // v4
-      val d2 = probe(leg(shardQ).toDF("shard", "d2_n", "d2_du", "d2_sum"))
+      val d2 = leg(shardQ).toDF("shard", "d2_n", "d2_du", "d2_sum")
       SinkMvDist.refresh(s, dir, mvD)
       // d3 — the global distinct
-      val d3 = probe(base.agg(count_distinct(col("uid")).as("g_du"))
-        .collect().head.getLong(0))
+      val d3 = base.agg(count_distinct(col("uid")).as("g_du")).collect().head.getLong(0)
       // d4 — distinct + group-column residual composed; zero files
       val d4 = probe(base.where(col("shard").isin(3, 5)).groupBy(col("shard"))
         .agg(count_distinct(col("uid")).as("f_du"))
@@ -1466,20 +1444,21 @@ object SinkMvLifecycles {
       // d5 — no MV's grain carries doc_id: MUST fall back
       val d5 = probe(base.groupBy(col("shard"))
         .agg(count_distinct(col("doc_id")).as("n")).collect())
-      d1.value.join(d2.value, "shard")
-        .withColumn("g_du", lit(d3.value))
-        .withColumn("d4_du3", lit(d4.value.head._2))
-        .withColumn("d4_du5", lit(d4.value(1)._2))
-        .withColumn("d5_rows", lit(d5.value.length.toLong))
-        .withColumn("d5_total", lit(d5.value.map(_.getLong(1)).sum))
-        .withColumn("d5_extra_rewrites", lit(d5.rewrites)) // 0
-        // d1 d2 d3 d4 = 4
-        .withColumn("n_rewrites", lit(Seq(d1, d2, d3, d4, d5).map(_.rewrites).sum))
-        .withColumn("d1_files_opened", lit(d1.files))
-        .withColumn("d4_files_opened", lit(d4.files))
-        .orderBy("shard")
+      (d1, d2, d3, d4, d5)
     }
+    d1.value.join(d2, "shard")
+      .withColumn("g_du", lit(d3))
+      .withColumn("d4_du3", lit(d4.value.head._2))
+      .withColumn("d4_du5", lit(d4.value(1)._2))
+      .withColumn("d5_rows", lit(d5.value.length.toLong))
+      .withColumn("d5_total", lit(d5.value.map(_.getLong(1)).sum))
+      .withColumn("d5_extra_rewrites", lit(d5.rewrites)) // 0
+      .withColumn("n_rewrites", lit(nRewrites)) // d1 d2 d3 d4 = 4
+      .withColumn("d1_files_opened", lit(d1.files))
+      .withColumn("d4_files_opened", lit(d4.files))
+      .orderBy("shard")
   }
+
 
   /** DuckDB re-derivation: docs 0..999 at d1, 0..1199 from d2 on; shard
     * = doc % 16; uid = doc % 50, NULL on multiples of seven. Constants:
@@ -1533,36 +1512,45 @@ object SinkMvLifecycles {
     val (s, root) = scratch(spark, sfDir, "sinkmvjr", Seq("graft_mvjr"), MorCdf)
     // base tables (d1–d3, f1–f3) from the JVM-shared star fixture —
     // identical commits/versions to the inline build (round 19)
-    val (factDir, dimDir) = starInto(s, root, "dim_mvjr", "fact_mvjr")
+    val Seq(dimDir, factDir) = copyBase(starBase(s), root, "_mvjr", "dim", "fact")
     val mvDir = factDir + ".mvjr"
     SinkMvDist.createJoin(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
       groups = Seq("d_region", "uid"), aggs = CountSum, buckets = 8)
-    withRewrite(s, factDir -> Seq(mvDir)) {
+    val Probed((throughC, d), _, nRewrites, _) = withRewrite(s, factDir -> Seq(mvDir)) {
       def q = pathJoin(s, factDir, Seq(PathDim(dimDir, "shard", "dk", Seq("region"))),
         Seq("region", "uid"))
-      // leg A: current watermarks — zero data files on EITHER table
-      val a = probe(q.collect())
-      // leg B: fact tail — compensates through [Δf ⋈ d@new]
-      appendFact(s, "graft_mvjr.fact_mvjr", 300L, 1200L, 1500L) // f4
-      val b = probe(q.collect())
-      SinkMvDist.refresh(s, factDir, mvDir) // fold f4
-      // leg C: dim tail — the cost guard must refuse ([Δd ⋈ f@old]
-      // rescans the whole fact) and the base join answers correctly
-      s.sql("UPDATE graft_mvjr.dim_mvjr SET region = 'rX' WHERE doc_id = 5") // d4
-      val c = probe(q.collect())
+      // b_rewrites and c_rewrites count from leg A on, the steps between
+      // the legs included, as n_rewrites does
+      val throughC = probe {
+        val throughB = probe {
+          // leg A: current watermarks — zero data files on EITHER table
+          val aFiles = probe(q.collect()).files
+          // leg B: fact tail — compensates through [Δf ⋈ d@new]
+          appendFact(s, "graft_mvjr.fact_mvjr", 300L, 1200L, 1500L) // f4
+          q.collect()
+          aFiles
+        }
+        SinkMvDist.refresh(s, factDir, mvDir) // fold f4
+        // leg C: dim tail — the cost guard must refuse ([Δd ⋈ f@old]
+        // rescans the whole fact) and the base join answers correctly
+        s.sql("UPDATE graft_mvjr.dim_mvjr SET region = 'rX' WHERE doc_id = 5") // d4
+        q.collect()
+        throughB
+      }
       SinkMvDist.refresh(s, factDir, mvDir) // fold the dim move
       // leg D: current again — rewritten, group move visible, zero files
-      val d = probe(leg(q))
-      d.value.toDF("d_region", "uid", "n_docs", "sum_ids")
-        .withColumn("n_rewrites", lit(Seq(a, b, c, d).map(_.rewrites).sum)) // 3
-        .withColumn("b_rewrites", lit(a.rewrites + b.rewrites)) // A + B = 2
-        .withColumn("c_rewrites", lit(Seq(a, b, c).map(_.rewrites).sum)) // still 2
-        .withColumn("cost_fallbacks", lit(Seq(a, b, c).map(_.fallbacks).sum)) // exactly 1
-        .withColumn("a_files_opened", lit(a.files))
-        .withColumn("d_files_opened", lit(d.files))
-        .orderBy("d_region", "uid")
+      (throughC, probe(leg(q)))
     }
+    d.value.toDF("d_region", "uid", "n_docs", "sum_ids")
+      .withColumn("n_rewrites", lit(nRewrites)) // 3
+      .withColumn("b_rewrites", lit(throughC.value.rewrites)) // A + B = 2
+      .withColumn("c_rewrites", lit(throughC.rewrites)) // still 2
+      .withColumn("cost_fallbacks", lit(throughC.fallbacks)) // exactly 1
+      .withColumn("a_files_opened", lit(throughC.value.value))
+      .withColumn("d_files_opened", lit(d.files))
+      .orderBy("d_region", "uid")
   }
+
 
   /** DuckDB re-derivation: live fact rows are docs 0..1499 with
     * uid = doc % 300; the region of shard s = doc % 16 is rX for 5 (the
@@ -1613,46 +1601,52 @@ object SinkMvLifecycles {
     val (s, root) = scratch(spark, sfDir, "sinkmvdt", Seq("graft_mvdt"), MorCdf)
     // base tables (d1–d3, f1–f3) from the JVM-shared star fixture —
     // identical commits/versions to the inline build (round 19)
-    val (factDir, dimDir) = starInto(s, root, "dim_mvdt", "fact_mvdt")
+    val Seq(dimDir, factDir) = copyBase(starBase(s), root, "_mvdt", "dim", "fact")
     ShardSink.compact(factDir) // f4: shard-pure 16-file layout
     val mvDir = factDir + ".mvdt"
     // the FINE grain: fk (shard) rides the group set — the compensation's
     // addressability condition
     SinkMvDist.createJoin(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
       groups = Seq("shard", "d_region", "uid"), aggs = CountSum, buckets = 8)
-    withRewrite(s, factDir -> Seq(mvDir)) {
-      def q = pathJoin(s, factDir, Seq(PathDim(dimDir, "shard", "dk", Seq("region"))),
-        Seq("region", "uid"))
-      // A — current watermarks
-      val a = probe(q.collect())
-      // B — attribute-only dim move: compensated, fact never rescanned
-      s.sql("UPDATE graft_mvdt.dim_mvdt SET region = 'rX' WHERE doc_id = 5") // d4
-      val b = probe(q.collect())
-      // C — a key-CHANGING dim commit: the probe refuses, base answers
-      docs(s, 1200, 2, 16L, 18L).withColumn("region", lit("r9"))
-        .writeTo("graft_mvdt.dim_mvdt").append() // d5
-      val c = probe(q.collect())
-      SinkMvDist.refresh(s, factDir, mvDir) // fold d4 + d5
-      // D — current again
-      val d = probe(q.collect())
-      // E — a dim key DELETE: compensation drops shard-9 state rows
-      s.sql("DELETE FROM graft_mvdt.dim_mvdt WHERE doc_id = 9") // d6
-      val e = probe(leg(q))
-      val legs = Seq(a, b, c, d, e)
-      e.value.toDF("d_region", "uid", "n_docs", "sum_ids")
-        .withColumn("a_rows", lit(a.value.length.toLong))
-        .withColumn("a_total", lit(a.value.map(_.getLong(3)).sum))
-        .withColumn("bd_equal", lit(if (b.value.toSet == d.value.toSet) 1L else 0L))
-        .withColumn("n_rewrites", lit(legs.map(_.rewrites).sum)) // A B D E = 4
-        .withColumn("b_rewrites", lit(a.rewrites + b.rewrites)) // A + B = 2
-        .withColumn("c_extra_rewrites", lit(c.rewrites)) // 0
-        .withColumn("cost_fallbacks", lit(legs.map(_.fallbacks).sum)) // 0
-        .withColumn("a_files_opened", lit(a.files))
-        .withColumn("d_files_opened", lit(d.files))
-        .withColumn("b_files_opened", lit(b.files))
-        .orderBy("d_region", "uid")
-    }
+    val Probed((throughB, c, d, e), _, nRewrites, fallbacks) =
+      withRewrite(s, factDir -> Seq(mvDir)) {
+        def q = pathJoin(s, factDir, Seq(PathDim(dimDir, "shard", "dk", Seq("region"))),
+          Seq("region", "uid"))
+        val throughB = probe {
+          // A — current watermarks
+          val a = probe(q.collect())
+          // B — attribute-only dim move: compensated, fact never rescanned
+          s.sql("UPDATE graft_mvdt.dim_mvdt SET region = 'rX' WHERE doc_id = 5") // d4
+          (a, probe(q.collect()))
+        }
+        // C — a key-CHANGING dim commit: the probe refuses, base answers
+        val c = probe {
+          docs(s, 1200, 2, 16L, 18L).withColumn("region", lit("r9"))
+            .writeTo("graft_mvdt.dim_mvdt").append() // d5
+          q.collect()
+        }
+        SinkMvDist.refresh(s, factDir, mvDir) // fold d4 + d5
+        // D — current again
+        val d = probe(q.collect())
+        // E — a dim key DELETE: compensation drops shard-9 state rows
+        s.sql("DELETE FROM graft_mvdt.dim_mvdt WHERE doc_id = 9") // d6
+        (throughB, c, d, leg(q))
+      }
+    val (a, b) = throughB.value
+    e.toDF("d_region", "uid", "n_docs", "sum_ids")
+      .withColumn("a_rows", lit(a.value.length.toLong))
+      .withColumn("a_total", lit(a.value.map(_.getLong(3)).sum))
+      .withColumn("bd_equal", lit(if (b.value.toSet == d.value.toSet) 1L else 0L))
+      .withColumn("n_rewrites", lit(nRewrites)) // A B D E = 4
+      .withColumn("b_rewrites", lit(throughB.rewrites)) // A + B = 2
+      .withColumn("c_extra_rewrites", lit(c.rewrites)) // 0
+      .withColumn("cost_fallbacks", lit(fallbacks)) // 0
+      .withColumn("a_files_opened", lit(a.files))
+      .withColumn("d_files_opened", lit(d.files))
+      .withColumn("b_files_opened", lit(b.files))
+      .orderBy("d_region", "uid")
   }
+
 
   /** DuckDB re-derivation: fact rows are docs 0..1199, uid = doc % 300,
     * shard s = doc % 16; the final (leg-E) region map is rX for 5 (the
@@ -1705,41 +1699,49 @@ object SinkMvLifecycles {
     val (s, root) = scratch(spark, sfDir, "sinkmvsr", Seq("graft_mvsr"), MorCdf)
     // base tables (e1–e3, d1–d4, f1–f3) from the JVM-shared snowflake
     // fixture — identical commits/versions to the inline build (round 19)
-    val (factDir, d1Dir, d2Dir) =
-      snowInto(s, root, "dim2_mvsr", "dim1_mvsr", "fact_mvsr")
+    val Seq(d2Dir, d1Dir, factDir) = copyBase(snowBase(s), root, "_mvsr", "dim2", "dim1", "fact")
     val mvDir = factDir + ".mvsr"
     SinkMvDist.createSnowflake(s, factDir, mvDir,
       Seq(
         SinkMvDist.SnowDim(d1Dir, fk = "shard", pk = "doc_id", pfx = "d1_"),
         SinkMvDist.SnowDim(d2Dir, fk = "d1_catk", pk = "doc_id", pfx = "d2_")),
       groups = Seq("d2_zone", "d1_region", "uid"), aggs = CountSum, buckets = 8)
-    withRewrite(s, factDir -> Seq(mvDir)) {
+    val Probed((throughC, d), _, nRewrites, _) = withRewrite(s, factDir -> Seq(mvDir)) {
       def q = pathJoin(s, factDir, Seq(
         PathDim(d1Dir, "shard", "d1k", Seq("region", "catk")),
         PathDim(d2Dir, "catk", "d2k", Seq("zone"))), Seq("zone", "region", "uid"))
-      // leg A: every watermark current — zero data files on ALL tables
-      val a = probe(q.collect())
-      // leg B: fact tail — the [Δf ⋈ d1@new ⋈ d2@new] part compensates
-      appendFact(s, "graft_mvsr.fact_mvsr", 150L, 1200L, 1400L) // f4
-      val b = probe(q.collect())
-      SinkMvDist.refresh(s, factDir, mvDir) // fold f4
-      // leg C: dim1 tail — [Δd1 ⋈ f@old ⋈ d2@old] rescans the fact; the
-      // cost guard refuses and the base chain answers
-      s.sql("UPDATE graft_mvsr.dim1_mvsr SET region = 'rX' WHERE doc_id = 7") // d5
-      val c = probe(q.collect())
+      // b_rewrites and c_rewrites count from leg A on, the steps between
+      // the legs included, as n_rewrites does
+      val throughC = probe {
+        val throughB = probe {
+          // leg A: every watermark current — zero data files on ALL tables
+          val aFiles = probe(q.collect()).files
+          // leg B: fact tail — the [Δf ⋈ d1@new ⋈ d2@new] part compensates
+          appendFact(s, "graft_mvsr.fact_mvsr", 150L, 1200L, 1400L) // f4
+          q.collect()
+          aFiles
+        }
+        SinkMvDist.refresh(s, factDir, mvDir) // fold f4
+        // leg C: dim1 tail — [Δd1 ⋈ f@old ⋈ d2@old] rescans the fact; the
+        // cost guard refuses and the base chain answers
+        s.sql("UPDATE graft_mvsr.dim1_mvsr SET region = 'rX' WHERE doc_id = 7") // d5
+        q.collect()
+        throughB
+      }
       SinkMvDist.refresh(s, factDir, mvDir) // fold the region move
       // leg D: current again — rewritten, the group move visible
-      val d = probe(leg(q))
-      d.value
-        .withColumn("n_rewrites", lit(Seq(a, b, c, d).map(_.rewrites).sum)) // 3
-        .withColumn("b_rewrites", lit(a.rewrites + b.rewrites)) // A + B = 2
-        .withColumn("c_rewrites", lit(Seq(a, b, c).map(_.rewrites).sum)) // still 2
-        .withColumn("cost_fallbacks", lit(Seq(a, b, c).map(_.fallbacks).sum)) // exactly 1
-        .withColumn("a_files_opened", lit(a.files))
-        .withColumn("d_files_opened", lit(d.files))
-        .orderBy("zone", "region", "uid")
+      (throughC, probe(leg(q)))
     }
+    d.value
+      .withColumn("n_rewrites", lit(nRewrites)) // 3
+      .withColumn("b_rewrites", lit(throughC.value.rewrites)) // A + B = 2
+      .withColumn("c_rewrites", lit(throughC.rewrites)) // still 2
+      .withColumn("cost_fallbacks", lit(throughC.fallbacks)) // exactly 1
+      .withColumn("a_files_opened", lit(throughC.value.value))
+      .withColumn("d_files_opened", lit(d.files))
+      .orderBy("zone", "region", "uid")
   }
+
 
   /** DuckDB re-derivation: live fact rows are docs 0..1399 with
     * uid = doc % 150; shard s = doc % 16 maps region rX for 7 (the dim1
