@@ -21,6 +21,12 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *    run and CPU ms, callsite) and the driver gap, wall minus the sum of the
   *    jobs (planning, manifest and commit IO, result collection). The
   *    per-query minimum over reps is the number comparable to the bench.
+  *    Each rep times `count()`, as [[Bench]] does, and Catalyst prunes a
+  *    count's sorts and unused windows, so a query can start fewer jobs
+  *    here than under the `collect()` that perfbench and `ScaleGuardSpec`'s
+  *    job budgets run: before broadcast-sized windows ran as one task,
+  *    `q_window_frames` and `q_session_counts` showed 1 job here and 3 on
+  *    collect. The job count follows the action, not the scale factor.
   *  - `--plan-only`: DataFrame build plus physical planning, not run.
   *  - `--census`: each query's shuffle-exchange count with AQE off, the
   *    audit behind `ScaleGuardSpec`'s shuffle budget.

@@ -756,7 +756,6 @@ case class GraftBandKeys(sig: Expression, uniq: Expression, numHashes: Int, band
     val gen = "org.apache.spark.sql.catalyst.util.GenericArrayData"
     val u8 = "org.apache.spark.unsafe.types.UTF8String"
     val out = ctx.freshName("out")
-    val a = ctx.freshName("a")
     val len = ctx.freshName("len")
     val sb = ctx.freshName("sb")
     val d = ctx.freshName("d")

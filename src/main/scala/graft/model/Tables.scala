@@ -1,42 +1,58 @@
 package graft.model
 
+import java.lang.ref.SoftReference
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver testdata (TESTDATA.md / FIXTURES.md §B).
   *
   * All queries read through here so the scan layer stays in one place:
-  * `spark.read.parquet` gives us the vectorized reader, column pruning and
-  * predicate pushdown for free — at 100 TB the same call pattern works over a
-  * partitioned table root (Spark splits files into `maxPartitionBytes` tasks).
+  * Spark's parquet relation gives us the vectorized reader, column pruning
+  * and predicate pushdown for free — at 100 TB the same call pattern works
+  * over a partitioned table root (Spark splits files into
+  * `maxPartitionBytes` tasks).
   *
-  * Schema resolution. Inferring a parquet schema starts a Spark job that
-  * reads the footers (79–98 ms on a warm 4-core JVM, against 7–11 ms for
-  * the same read with the schema given), and every DataFrame a query builds
-  * would pay it once per table. [[schemaOf]] resolves each path's schema
-  * once per (session, path, file stamp, `spark.sql.legacy.parquet
-  * .nanosAsLong`) and [[readParquet]] reads with `spark.read.schema(s)`.
-  * The stamp is the path's data files with their lengths and modification
-  * times, taken on every read: a rewritten file has a new stamp and is
-  * inferred again. This is catalog metadata, not a result cache — every read
-  * still lists and scans its files. Sessions key the map weakly, because
-  * session confs (timestamp inference, binary-as-string) shape the schema.
+  * Relation resolution. Resolving a parquet path — inferring its schema
+  * from the footers (a Spark job, 79–98 ms on a warm 4-core JVM), then
+  * resolving the data source and listing its files into a new file index
+  * — is fixed cost that small warm queries would pay per table on every
+  * DataFrame they build: 28 ms a read even with the schema known, against
+  * about 1 ms for a DataFrame over an already-resolved relation.
+  * [[readParquet]] resolves each path once per (session, path, file stamp,
+  * `spark.sql.legacy.parquet.nanosAsLong`) and builds each DataFrame over
+  * that relation; [[schemaOf]] reads the schema from the same entry. The
+  * stamp is the path's data files with their lengths and modification
+  * times, taken on every read with `listStatus`, which looks up no file
+  * permissions (`listFiles` does, and on a local file system without
+  * native Hadoop each lookup forks a shell). A rewritten file has a new
+  * stamp, and its entry is resolved again in place. This is catalog
+  * metadata, not a result cache — every read still checks the stamp and
+  * scans its files. Sessions key the map weakly, because session confs
+  * (timestamp inference, binary-as-string) shape the schema and a relation
+  * belongs to its session.
   *
   * Planner strategy. The first read in a session also installs
   * [[graft.plans.OnePartition]] on the session's extra strategies
   * (idempotent, the install-on-use pattern of `AsOfJoinPlan`), so the
-  * queries built over these tables sort and aggregate broadcast-sized
-  * reads in one task instead of shuffling them.
+  * queries built over these tables join, aggregate, window and sort
+  * broadcast-sized inputs in one task instead of shuffling them.
   */
 object Tables {
-  private final case class SchemaKey(
-      path: String, stamp: Seq[(String, Long, Long)], nanosAsLong: String)
+  private type Stamp = Seq[(String, Long, Long)]
 
-  private val schemas =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[SchemaKey, StructType]]()
+  /** A path's resolution at one stamp. The relation holds its session,
+    * which keys [[resolved]] weakly, so it is held softly: a collected
+    * relation is rebuilt from the kept schema, without inference.
+    */
+  private final case class Resolved(
+      stamp: Stamp, schema: StructType, relation: SoftReference[HadoopFsRelation])
+
+  private val resolved =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[(String, String), Resolved]]()
 
   private val NanosAsLongConf = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -44,46 +60,68 @@ object Tables {
     * the file itself, or a directory's non-hidden leaf files (Spark skips
     * names starting with `_` or `.`). Empty when nothing is there.
     */
-  private def stampOf(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+  private def stampOf(spark: SparkSession, path: String): Stamp = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // qualified, so the prefix strip below leaves only names under `path`
-    val p = fs.makeQualified(new Path(path))
-    if (!fs.exists(p)) Nil
-    else {
-      val files = fs.listFiles(p, true)
-      val out = Seq.newBuilder[(String, Long, Long)]
-      while (files.hasNext) {
-        val f = files.next()
-        val rel = f.getPath.toUri.getPath.stripPrefix(p.toUri.getPath)
-        if (!rel.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
-          out += ((rel, f.getLen, f.getModificationTime))
+    def leaves(st: FileStatus, rel: String): Stamp =
+      if (!st.isDirectory) Seq((rel, st.getLen, st.getModificationTime))
+      else fs.listStatus(st.getPath).toSeq.flatMap { c =>
+        val name = c.getPath.getName
+        if (name.startsWith("_") || name.startsWith(".")) Nil else leaves(c, s"$rel/$name")
       }
-      out.result().sortBy(_._1)
+    val p = new Path(path)
+    if (!fs.exists(p)) Nil else leaves(fs.getFileStatus(p), "").sortBy(_._1)
+  }
+
+  /** The parquet relation Spark resolves for `path`, over `schema` when
+    * one is given.
+    */
+  private def relationOf(
+      spark: SparkSession, path: String, schema: Option[StructType]): HadoopFsRelation = {
+    val read = schema.fold(spark.read)(spark.read.schema).parquet(path)
+    read.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+    }.get
+  }
+
+  /** The schema and relation of `path` at its current stamp (see the object
+    * doc); `None` for a missing or empty path, which is not pinned.
+    */
+  private def resolve(spark: SparkSession, path: String): Option[(StructType, HadoopFsRelation)] = {
+    val stamp = stampOf(spark, path)
+    if (stamp.isEmpty) None
+    else {
+      val bySession = resolved.synchronized {
+        resolved.computeIfAbsent(spark, _ => new ConcurrentHashMap[(String, String), Resolved]())
+      }
+      var relation: HadoopFsRelation = null
+      val entry = bySession.compute((path, spark.conf.get(NanosAsLongConf, "false")), (_, old) => {
+        val kept = Option(old).filter(_.stamp == stamp)
+        relation = kept.map(_.relation.get).orNull
+        if (relation != null) old
+        else {
+          relation = relationOf(spark, path, kept.map(_.schema))
+          Resolved(stamp, kept.fold(relation.schema)(_.schema), new SoftReference(relation))
+        }
+      })
+      Some((entry.schema, relation))
     }
   }
 
   /** The parquet schema at `path`, inferred once per file stamp (see the
-    * object doc). A missing or empty path is not pinned: inference runs and
-    * raises Spark's own error for it.
+    * object doc). A missing or empty path raises Spark's own error.
     */
-  def schemaOf(spark: SparkSession, path: String): StructType = {
-    val stamp = stampOf(spark, path)
-    if (stamp.isEmpty) spark.read.parquet(path).schema
-    else {
-      val bySession = schemas.synchronized {
-        schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[SchemaKey, StructType]())
-      }
-      val key = SchemaKey(path, stamp, spark.conf.get(NanosAsLongConf, "false"))
-      bySession.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
-    }
-  }
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    resolve(spark, path).fold(spark.read.parquet(path).schema)(_._1)
 
-  /** A parquet read over the resolved schema; installs the session's
+  /** A parquet read over the path's resolved relation, with fresh attribute
+    * ids, so two reads of one table self-join; installs the session's
     * planner strategy on first use.
     */
   def readParquet(spark: SparkSession, path: String): DataFrame = {
     graft.plans.OnePartition.install(spark)
-    spark.read.schema(schemaOf(spark, path)).parquet(path)
+    resolve(spark, path).fold(spark.read.parquet(path)) { case (_, rel) =>
+      spark.baseRelationToDataFrame(rel)
+    }
   }
 
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =

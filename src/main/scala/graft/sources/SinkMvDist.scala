@@ -117,7 +117,7 @@ object SinkMvDist {
     */
   private def cellCol(c: Column): Column =
     coalesce(c.cast(StringType), lit(""))
-  private def uncellCol(c: Column, dt: DataType = LongType): Column =
+  private def uncellCol(c: Column, dt: DataType): Column =
     when(c === "", lit(null).cast(StringType)).otherwise(c).cast(dt)
 
   /** The deterministic group→bucket map, computable on ANY frame carrying

@@ -119,7 +119,7 @@ object Dedup {
     */
   private def jaccardInterFromHashed(
       hashedRows: DataFrame,
-      maxShingleDf: Long = MaxShingleDf): DataFrame = {
+      maxShingleDf: Long): DataFrame = {
     val sh = hashedRows.select(col("doc_id"), col("h")).distinct()
     val hot = sh.groupBy("h").agg(count(lit(1)).as("df"))
       .where(col("df") > maxShingleDf)
@@ -485,7 +485,7 @@ object Dedup {
   private def minhashPairsFromPerDoc(
       perDoc: DataFrame,
       threshold: Double,
-      maxBucketSize: Int = MaxBandBucket,
+      maxBucketSize: Int,
       ordered: Boolean = true): DataFrame = {
     // bucket join on ids only (NOT the hs arrays — 8 bands would shuffle 8
     // copies of every doc's shingle hashes); arrays are fetched afterwards,

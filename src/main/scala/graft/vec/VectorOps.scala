@@ -822,8 +822,6 @@ object VectorOps {
       s"(CASE WHEN list_dot_product(CAST($ref.embedding AS DOUBLE[]), ${sqlDoubleList(p)}) > 0 THEN ${1 << j} ELSE 0 END)"
     }.mkString("\n      + ")
 
-  private def sigSqlExpr(ref: String): String = sigSqlExprOf(hyperplanes(EmbDim), ref)
-
   /** Decimal-exact label-0 centroid CTE shared by the knn oracle SQLs. */
   private val qvecCte: String =
     """q AS (

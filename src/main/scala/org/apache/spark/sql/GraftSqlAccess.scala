@@ -39,4 +39,11 @@ object GraftSqlAccess {
     // normalize() is a no-op (returns its input) when the type carries no
     // float/double anywhere, so no pre-check is needed
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** Whether `t` is the table a DELETE, UPDATE or MERGE reads its target
+    * through (graft.plans.OnePartition leaves those plans to Spark); the
+    * class is `private[sql]`.
+    */
+  def isRowLevelOperationTable(t: org.apache.spark.sql.connector.catalog.Table): Boolean =
+    t.isInstanceOf[org.apache.spark.sql.connector.write.RowLevelOperationTable]
 }

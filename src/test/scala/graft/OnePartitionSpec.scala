@@ -3,16 +3,19 @@ package graft
 import graft.model.Tables
 import graft.plans.OnePartition
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The plan shapes of [[graft.plans.OnePartition]]: broadcast-sized reads
-  * under an aggregate or a global sort run as one task with no exchange;
-  * other sorts keep `Gather` over their parallel child; UDFs,
-  * nondeterministic expressions, streaming plans, a threshold of −1 and
+/** The plan shapes of [[graft.plans.OnePartition]]: broadcast-sized
+  * joins, aggregates, windows, rollups, explodes and global sorts run as
+  * one task with no exchange and no broadcast, with Spark's rows; UDFs,
+  * typed `MapPartitions`, nondeterministic expressions, dynamic partition
+  * pruning, row-level commits, streaming plans, a threshold of −1 and
   * inputs above the threshold keep Spark's plan; every ShardSink session
   * gets the strategy once.
   */
@@ -34,7 +37,10 @@ class OnePartitionSpec extends SparkSpec {
   private def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] =
     plan(df).collect { case e: ShuffleExchangeExec => e }
   private def coalesces(df: DataFrame): Int = plan(df).collect { case c: CoalesceExec => c }.size
-  private def gathers(df: DataFrame): Int = plan(df).collect { case g: OnePartition.Gather => g }.size
+  private def broadcasts(df: DataFrame): Int =
+    plan(df).collect { case b: BroadcastExchangeExec => b }.size
+  private def hashJoins(df: DataFrame): Int =
+    plan(df).collect { case j: ShuffledHashJoinExec => j }.size
   private def rowSet(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
   private def freshRoot(): String =
@@ -148,21 +154,138 @@ class OnePartitionSpec extends SparkSpec {
     assert(seen.get() === 200L)
   }
 
-  test("a broadcast-sized sort over a join, or over an aggregate of a join, keeps Gather") {
+  test("a broadcast-sized sort over a join, or over an aggregate of a join, runs as one task") {
     noAqe {
-      // a join's size estimate is the product of its sides' sizes: two
-      // tiny dimensions keep it under the threshold
+      // a join's size estimate is the product of its sides' sizes; its
+      // leaves' bytes, what the one task reads, are their sum
       val joined = () => Tables.nation(spark, sf001)
         .join(Tables.region(spark, sf001), col("n_regionkey") === col("r_regionkey"))
-      val overJoin = joined().select("n_name", "r_name").orderBy("n_name")
-      assert(gathers(overJoin) === 1 && coalesces(overJoin) === 0, plan(overJoin).toString)
-      assert(exchanges(overJoin).map(_.outputPartitioning) === Seq(SinglePartition),
-        plan(overJoin).toString)
-      val overAgg = joined().groupBy("r_name").count().orderBy("r_name")
-      assert(gathers(overAgg) === 1 && coalesces(overAgg) === 0, plan(overAgg).toString)
-      assert(exchanges(overAgg).exists(_.outputPartitioning.isInstanceOf[HashPartitioning]),
-        "the aggregate of a join keeps its parallel stage")
+      val cases: Seq[(String, () => DataFrame)] = Seq(
+        "sort over a join" -> (() => joined().select("n_name", "r_name").orderBy("n_name")),
+        "sort over an aggregate of a join" -> (() =>
+          joined().groupBy("r_name").count().orderBy("r_name")))
+      for ((what, q) <- cases) {
+        val df = q()
+        assert(exchanges(df).isEmpty && broadcasts(df) === 0, s"$what:\n${plan(df)}")
+        assert(hashJoins(df) === 1 && coalesces(df) >= 2, s"$what:\n${plan(df)}")
+        val sparks = withConfs(Threshold -> "-1")(q().collect().toSeq.map(_.toString))
+        assert(sparks.nonEmpty && df.collect().toSeq.map(_.toString) === sparks, what)
+      }
     }
+  }
+
+  test("a two-read join, a nested join, a window, a rollup and an explode run as one task") {
+    val orders = () => Tables.orders(spark, sf001)
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      "join with a broadcast hint" -> (() => orders()
+        .join(broadcast(Tables.customer(spark, sf001)), col("o_custkey") === col("c_custkey"))
+        .select("o_orderkey", "c_name")),
+      "left anti join" -> (() => orders().join(Tables.customer(spark, sf001)
+        .where(col("c_custkey") % 3 === 0), col("o_custkey") === col("c_custkey"), "left_anti")
+        .select("o_orderkey")),
+      "nested join (the reference top-10)" -> (() =>
+        SparkEntry.queries("q_flagship_top10")(spark, sf001)),
+      "window" -> (() => orders().where(col("o_custkey") < 50).select(col("o_orderkey"),
+        row_number().over(Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey"))
+          .as("seq"))),
+      "rollup" -> (() => orders().rollup("o_orderstatus", "o_orderpriority").count()),
+      "explode" -> (() => Tables.documents(spark, sf001)
+        .select(explode(split(col("text"), " ")).as("token")).groupBy("token").count()))
+    noAqe {
+      for ((what, q) <- cases) {
+        val df = q()
+        assert(exchanges(df).isEmpty && broadcasts(df) === 0, s"$what:\n${plan(df)}")
+        val sparks = withConfs(Threshold -> "-1") {
+          val viaSpark = q()
+          assert(exchanges(viaSpark).size + broadcasts(viaSpark) > 0,
+            s"$what without the strategy:\n${plan(viaSpark)}")
+          rowSet(viaSpark)
+        }
+        assert(sparks.nonEmpty && rowSet(df) === sparks, what)
+      }
+    }
+    // one Spark job each, AQE on as in the engine session
+    val (_, jobs) = Probe.withJobLog(spark.sparkContext)(log => log(cases.foreach(_._2().collect())))
+    assert(jobs.size === cases.size, jobs.map(_.site).mkString("; "))
+  }
+
+  test("over the threshold, with a UDF, with MapPartitions or with DPP a join keeps Spark's plan") {
+    import spark.implicits._
+    val plusOne = udf((x: Long) => x + 1L)
+    val orders = () => Tables.orders(spark, sf001)
+    val customer = () => Tables.customer(spark, sf001)
+    val dppDir = freshRoot() + "/parts"
+    orders().select(col("o_orderkey"), (col("o_custkey") % 8).as("part"))
+      .write.partitionBy("part").parquet(dppDir)
+    val cases: Seq[(String, String, () => DataFrame)] = Seq(
+      ("over the threshold", "1", () =>
+        orders().join(customer(), col("o_custkey") === col("c_custkey"))),
+      ("udf", "10485760", () => orders().select(plusOne(col("o_custkey")).as("k"))
+        .join(customer(), col("k") === col("c_custkey"))),
+      ("mapPartitions", "10485760", () => orders().select("o_custkey").as[Long]
+        .mapPartitions(_.map(_ + 1L)).toDF("k").join(customer(), col("k") === col("c_custkey"))),
+      ("dpp", "10485760", () => spark.read.parquet(dppDir)
+        .join(Tables.nation(spark, sf001).where(col("n_name") === "NATION_3"),
+          col("part") === col("n_nationkey"))))
+    noAqe {
+      for ((what, threshold, q) <- cases) withConfs(Threshold -> threshold) {
+        val ours = q()
+        val unplanned = q()
+        val extra = spark.experimental.extraStrategies
+        val sparks =
+          try {
+            spark.experimental.extraStrategies = extra.filterNot(_ == OnePartition.Strategy)
+            plan(unplanned)
+          } finally spark.experimental.extraStrategies = extra
+        assert(plan(ours).canonicalized === sparks.canonicalized, s"$what:\n${plan(ours)}")
+        assert(hashJoins(ours) === 0 && coalesces(ours) === 0, s"$what:\n${plan(ours)}")
+        if (what == "dpp") assert(plan(ours).toString.contains("dynamicpruning"), plan(ours))
+      }
+    }
+  }
+
+  test("ShardSink MERGE and UPDATE commits keep Spark's plan") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    // merge-on-read: an UPDATE's semi-join carries no nondeterministic row
+    // id (a MERGE's target side does), so only the row-level read keeps it
+    Seq("" -> classOf[graft.sources.ShardSinkCatalog].getName, ".root" -> freshRoot(),
+      ".delete.mode" -> "merge-on-read", ".rlo.mode" -> "merge-on-read")
+      .foreach { case (k, v) => s.conf.set(s"spark.sql.catalog.onepmg$k", v) }
+    docs(s, 400).writeTo("onepmg.t").append()
+    // a source with a size estimate, so the join is broadcast-sized
+    s.range(300L, 500L).select(col("id").as("doc_id"), (col("id") % 16).cast("int").as("shard"),
+      upper(md5(col("id").cast("string"))).as("body")).createOrReplaceTempView("onepmg_src")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      s.sql("""MERGE INTO onepmg.t t USING onepmg_src src ON t.doc_id = src.doc_id
+              |WHEN MATCHED THEN UPDATE SET body = src.body
+              |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      s.sql("UPDATE onepmg.t SET body = 'x' " +
+        "WHERE doc_id IN (SELECT doc_id FROM onepmg_src WHERE doc_id < 320)")
+      org.apache.spark.ListenerBusAccess.drain(s.sparkContext)
+    } finally s.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val commits = plans.asScala.toSeq
+    assert(commits.size === 2)
+    for (p <- commits) {
+      val joins = p.collectWithSubqueries {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }
+      assert(joins.nonEmpty && !joins.exists(_.isInstanceOf[ShuffledHashJoinExec]), p.toString)
+      assert(p.collectWithSubqueries { case c: CoalesceExec => c }.isEmpty, p.toString)
+    }
+    val rows = s.table("onepmg.t")
+    assert(rows.count() === 500L)
+    assert(rows.where(col("body") === "x").count() === 20L)
+    assert(rows.where(col("doc_id") >= 320 && col("body") =!= upper(col("body"))).count() === 0L)
   }
 
   test("a read with a UDF or a nondeterministic expression keeps its exchange") {

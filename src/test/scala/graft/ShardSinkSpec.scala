@@ -1135,9 +1135,12 @@ class ShardSinkSpec extends SparkSpec {
 
   test("reported statistics flip the optimizer's broadcast decision with the pushed filter") {
     import org.apache.spark.sql.functions._
-    def docgen = spark.read.format("graft.sources.DocGenSource")
+    // a session without graft.plans.OnePartition, which plans a join whose
+    // leaves sum under the threshold as one task instead of broadcasting
+    val s = spark.newSession()
+    def docgen = s.read.format("graft.sources.DocGenSource")
       .option("numDocs", "60000").load()
-    val big = spark.range(500000).select(col("id").as("k"))
+    val big = s.range(500000).select(col("id").as("k"))
     // tightly filtered docgen (100 rows ≈ 6 KB reported) → broadcast side
     val small = docgen.where(col("doc_id") < 100L)
       .join(big, col("doc_id") === col("k"))
