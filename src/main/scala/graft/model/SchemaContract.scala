@@ -100,13 +100,4 @@ object SchemaContract {
     case ArrayType(e, _) => ArrayType(normalize(e))
     case other           => other
   }
-
-  /** Throws with the full named diff when `sfDir` is out of contract. */
-  def assertTestdata(spark: SparkSession, sfDir: String): Unit = {
-    val d = diff(spark, sfDir)
-    if (d.nonEmpty)
-      throw new IllegalStateException(
-        s"testdata at $sfDir violates the schema contract (FIXTURES.md §B):\n  " +
-          d.mkString("\n  "))
-  }
 }

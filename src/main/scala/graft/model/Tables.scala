@@ -196,10 +196,4 @@ object Tables {
   /** One testdata table by name, events through its nanos-safe reader. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir) else read(spark, sfDir, name)
-
-  /** Register every testdata table as a temp view — the one-call catalog
-    * for `spark.sql` sessions.
-    */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    AllTables.foreach(t => load(spark, sfDir, t).createOrReplaceTempView(t))
 }

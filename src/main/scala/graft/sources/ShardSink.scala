@@ -4741,12 +4741,14 @@ class ShardSinkDeltaWrite(path: String, info: LogicalWriteInfo, cdf: Boolean = f
     val idSchema = info.rowIdSchema().orElseThrow(() =>
       new IllegalStateException("delta write without a rowId schema"))
     val table = ShardSink.tableSchema(path)
+    val data = info.schema()
     ShardSinkDeltaWriterFactory(
       path, info.queryId(),
       idSchema.fieldIndex("_file"), idSchema.fieldIndex("_pos"),
-      // table column i → its physical position in the incoming data row
-      table.fields.map(f => info.schema().fieldIndex(f.name)), table, cdf,
-      pinnedCks)
+      // table column i → its physical position in the incoming data row;
+      // a delete-only write carries row ids and no data row at all
+      if (data.isEmpty) Array.empty[Int] else table.fields.map(f => data.fieldIndex(f.name)),
+      table, cdf, pinnedCks)
   }
 
   /** Driver commit: union each file's deleted positions into its (new)

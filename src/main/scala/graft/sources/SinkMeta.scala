@@ -61,9 +61,8 @@ case class SinkEntry(
   * Records: the table manifest list ([[Manifest]], `_manifest.v<N>.json`),
   * its inline [[SinkEntry]] and [[SegmentRef]] elements, a manifest
   * segment file ([[SegmentFile]]), a tag ([[Tag]]), the header line of
-  * each materialized-view state blob ([[MvHeader]] `_mv.v<N>.json`,
-  * [[MvjHeader]] `_mvj.v<N>.json`, [[MvdHeader]] `_mvd.v<N>.json`) and
-  * the `graft.mv.<name>` DDL definition ([[MvDef]]).
+  * a materialized view's state version ([[MvdHeader]] `_mvd.v<N>.json`)
+  * and the `graft.mv.<name>` DDL definition ([[MvDef]]).
   *
   * The writer is compact, keeps a fixed key order and omits absent
   * optional keys, so its bytes are a function of the record alone.
@@ -108,27 +107,16 @@ object SinkMeta {
   /** A tag file `_tag.<name>`: the pinned version. */
   final case class Tag(v: Long)
 
-  /** Header of a [[SinkMatView]] state blob (TSV group rows follow it). */
-  final case class MvHeader(
-      src: String, group: Seq[String], gtype: Seq[String], pred: String,
-      srcV: Long, aggs: Seq[MvAgg])
-
-  /** Header of a [[SinkMvJoin]] state blob: two source watermarks. */
-  final case class MvjHeader(
-      fact: String, dim: String, fk: String, pk: String,
-      group: Seq[String], gtype: Seq[String], pred: String,
-      factV: Long, dimV: Long, aggs: Seq[MvAgg])
-
   /** A JOIN definition (round 16): the MV materializes
-    * `fact ⋈ dim ON fk = pk` with dim columns under the `pfx` prefix —
-    * [[SinkMvJoin]]'s delta-join decomposition over [[SinkMvDist]]'s
-    * distributed bucketed state, so a per-user-grain star-schema rollup
-    * needs neither a driver-resident view nor a full rescan.
+    * `fact ⋈ dim ON fk = pk` with dim columns under the `pfx` prefix,
+    * kept by the delta-join decomposition
+    * ([[SinkMatView.contributionStream]]) over [[SinkMvDist]]'s bucketed
+    * state, so a per-user-grain star-schema rollup needs no full rescan.
     */
   final case class MvdJoin(
       dim: String, fk: String, pk: String, dimV: Long, pfx: String = "d_")
 
-  /** Header of a [[SinkMvDist]] state blob ((bucket, file) refs follow
+  /** Header of a [[SinkMvDist]] state version ((bucket, file) refs follow
     * it). The written `"hashv":2` names the group→bucket hash INPUT (key
     * cells joined with a TAB); a header without it does not decode.
     */
@@ -323,34 +311,6 @@ object SinkMeta {
     def read(n: JsonNode): MvAgg = MvAgg(str(n, "n"), str(n, "k"), str(n, "e"))
   }
 
-  /** The definition keys every MV header carries. */
-  private def defn(group: Seq[String], gtype: Seq[String], pred: String): Seq[(String, String)] =
-    Seq("group" -> group.mkString(","), "gtype" -> gtype.mkString(","), "pred" -> pred)
-
-  implicit object MvHeaderCodec extends Codec[MvHeader]("MV state header") {
-    def fields(g: JsonGenerator, h: MvHeader): Unit = {
-      strs(g, ("src" -> h.src) +: defn(h.group, h.gtype, h.pred): _*)
-      longs(g, "srcV" -> h.srcV)
-      writeArr(g, "aggs", h.aggs)
-    }
-    def read(n: JsonNode): MvHeader = MvHeader(
-      str(n, "src"), list(n, "group"), list(n, "gtype"), str(n, "pred"),
-      long(n, "srcV"), arr[MvAgg](n, "aggs"))
-  }
-
-  implicit object MvjHeaderCodec extends Codec[MvjHeader]("join-MV state header") {
-    def fields(g: JsonGenerator, h: MvjHeader): Unit = {
-      strs(g, Seq("fact" -> h.fact, "dim" -> h.dim, "fk" -> h.fk, "pk" -> h.pk) ++
-        defn(h.group, h.gtype, h.pred): _*)
-      longs(g, "factV" -> h.factV, "dimV" -> h.dimV)
-      writeArr(g, "aggs", h.aggs)
-    }
-    def read(n: JsonNode): MvjHeader = MvjHeader(
-      str(n, "fact"), str(n, "dim"), str(n, "fk"), str(n, "pk"),
-      list(n, "group"), list(n, "gtype"), str(n, "pred"),
-      long(n, "factV"), long(n, "dimV"), arr[MvAgg](n, "aggs"))
-  }
-
   implicit object MvdJoinCodec extends Codec[MvdJoin]("MV join dim") {
     def fields(g: JsonGenerator, j: MvdJoin): Unit = {
       strs(g, "dim" -> j.dim, "fk" -> j.fk, "pk" -> j.pk, "pfx" -> j.pfx)
@@ -362,7 +322,8 @@ object SinkMeta {
 
   implicit object MvdHeaderCodec extends Codec[MvdHeader]("distributed-MV header") {
     def fields(g: JsonGenerator, h: MvdHeader): Unit = {
-      strs(g, ("src" -> h.src) +: defn(h.group, h.gtype, h.pred): _*)
+      strs(g, "src" -> h.src, "group" -> h.group.mkString(","),
+        "gtype" -> h.gtype.mkString(","), "pred" -> h.pred)
       longs(g, "srcV" -> h.srcV, "buckets" -> h.buckets.toLong, "hashv" -> 2L)
       if (h.dims.nonEmpty) writeArr(g, "dims", h.dims)
       writeArr(g, "aggs", h.aggs)

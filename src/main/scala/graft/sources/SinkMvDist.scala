@@ -1,16 +1,16 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** DISTRIBUTED materialized-view state (round 16) — the scale rung above
-  * [[SinkMatView]]'s driver-resident blob. Same definition surface
-  * (`SELECT g1..gk, count/sum/xor/min/max… FROM t [WHERE pred] GROUP BY`),
-  * same change-feed-driven incremental fold, same signed net-grain
-  * extreme math — but the state lives as BUCKETED TSV SEGMENTS in the
-  * MV directory and every refresh is a DISTRIBUTED plan:
+/** The MATERIALIZED-VIEW engine (round 16): `SELECT g1..gk,
+  * count/sum/xor/min/max… FROM t [WHERE pred] GROUP BY`, or the same over
+  * a fact⋈dim join or a snowflake chain, kept incrementally from the
+  * sources' change feeds with [[SinkMatView]]'s definition surface and
+  * change algebra. The state lives as BUCKETED TSV SEGMENTS in the MV
+  * directory and every refresh is a DISTRIBUTED plan:
   *
   *   state(touched buckets)  FULL OUTER JOIN (null-safe)  Δ(change feed)
   *     → fold columns (count/sum/xor linear; min/max clean-or-dirty)
@@ -21,18 +21,17 @@ import org.apache.spark.sql.types._
   * Driver involvement per refresh is O(buckets), never O(groups): the
   * only rows ever collected are the ≤ `buckets` distinct bucket ids the
   * delta touches (pinned by [[driverRowsCollected]] and its spec). A
-  * per-user or per-document grain MV over a 100 TB events table — the
-  * case the blob design could not serve — keeps its millions of groups
-  * on the executors end to end; the driver moves a handful of files and
-  * flips a header whose size is O(segment files).
+  * per-user or per-document grain MV over a 100 TB events table keeps its
+  * millions of groups on the executors end to end; the driver moves a
+  * handful of files and flips a header whose size is O(segment files).
+  * A small rollup takes `buckets = 1`: one segment per version.
   *
   * Commit protocol: segment files are written under job-unique names
   * FIRST, then the tiny versioned header `_mvd.v<N>.json` (definition +
   * watermark + file refs) flips with the same fresh-name election the
-  * table manifest uses — a crash leaves the previous version intact plus
-  * sweepable orphans, a lost race retries against the winner's state
-  * ([[SinkMatView.MvConflict]] semantics). Exactness inherits the change
-  * feed's contract, identically to the blob MV.
+  * table manifest uses ([[SinkFs.moveFresh]]) — a crash leaves the
+  * previous version intact plus sweepable orphans, a lost race surfaces
+  * as [[SinkMatView.MvConflict]] and retries against the winner's state.
   */
 object SinkMvDist {
   import SinkMatView.{MvAgg, MvConflict, RefreshStats}
@@ -65,25 +64,47 @@ object SinkMvDist {
       srcV: Long, buckets: Int, aggs: Seq[MvAgg], refs: Seq[(Int, String)],
       joins: Seq[MvdJoin] = Nil) {
     /** Each dim's refresh/recompute window view (fromV = its watermark). */
-    def windows(tos: Seq[Long]): Seq[SinkMvJoin.DimWindow] =
+    def windows(tos: Seq[Long]): Seq[SinkMatView.DimWindow] =
       joins.zip(tos).map { case (j, to) =>
-        SinkMvJoin.DimWindow(j.dim, j.fk, j.pk, j.pfx, j.dimV, to)
+        SinkMatView.DimWindow(j.dim, j.fk, j.pk, j.pfx, j.dimV, to)
       }
   }
 
   // ---- header ------------------------------------------------------------
 
-  private def writeHeader(mvDir: String, version: Long, st: MvdState): Unit =
-    SinkMatView.flipState(mvDir, "_mvd", version,
-      SinkMeta.encode(SinkMeta.MvdHeader(st.src, st.groups, st.gtypes, st.pred,
-        st.srcV, st.buckets, st.joins, st.aggs)),
-      st.refs.sortBy(r => (r._1, r._2)).map { case (b, f) => s"$b\t$f" })
+  /** The header record line, then one `bucket<TAB>file` ref per line, go
+    * to a tmp name; the SAME fresh-name election the table's manifest
+    * commit uses moves them to `_mvd.v<version>.json`, and a lost race
+    * surfaces as [[MvConflict]].
+    */
+  private def writeHeader(mvDir: String, version: Long, st: MvdState): Unit = {
+    val header = SinkMeta.encode(SinkMeta.MvdHeader(st.src, st.groups, st.gtypes, st.pred,
+      st.srcV, st.buckets, st.joins, st.aggs))
+    val body = st.refs.sortBy(r => (r._1, r._2)).map { case (b, f) => s"$b\t$f" }
+    val tmp = new Path(mvDir, s"_mvd.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    val w = SinkFs.create(tmp)
+    try (header +: body).foreach { l => w.write(l); w.write("\n") } finally w.close()
+    try SinkFs.moveFresh(tmp, new Path(mvDir, s"_mvd.v$version.json"))
+    catch {
+      case e: IllegalArgumentException =>
+        SinkFs.delete(tmp)
+        throw MvConflict(mvDir, version, e.getMessage)
+    }
+  }
 
-  def currentVersion(mvDir: String): Long = SinkMatView.ladderVersion(mvDir, StateV)
+  /** Highest committed header version, 0 when the MV does not exist. The
+    * MV directory holds one header per refresh plus its segments — a
+    * listing is fine.
+    */
+  def currentVersion(mvDir: String): Long =
+    SinkFs.listFileNames(new Path(mvDir)).collect { case StateV(n) => n.toLong }
+      .foldLeft(0L)(math.max)
 
   private def readHeaderAt(mvDir: String, v: Long): MvdState = {
-    val (h, body) = SinkMatView.readStateFile[SinkMeta.MvdHeader](mvDir, "_mvd", v)
-    val refs = body.map(_.split("\t", 2) match { case Array(b, f) => (b.toInt, f) })
+    val name = s"_mvd.v$v.json"
+    val lines = SinkFs.readLines(new Path(mvDir, name))
+    val h = SinkMeta.decode[SinkMeta.MvdHeader](lines.head, s"$mvDir/$name")
+    val refs = lines.tail.map(_.split("\t", 2) match { case Array(b, f) => (b.toInt, f) })
     MvdState(h.src, h.group, h.gtype, h.pred, h.srcV, h.buckets, h.aggs, refs, h.dims)
   }
 
@@ -100,17 +121,35 @@ object SinkMvDist {
   def stateFiles(mvDir: String, v: Long): Seq[(Int, String)] =
     readHeaderAt(mvDir, v).refs
 
-  // ---- row codec (Spark-expression twins of the blob's escape/gcell) ------
+  // ---- row codec ---------------------------------------------------------
+
+  /** A group column's declared type: the header's `gtype` cell. */
+  private def gtypeOf(dt: DataType): String = dt match {
+    case IntegerType => "int"
+    case LongType => "long"
+    case StringType => "string"
+    case other =>
+      throw new IllegalArgumentException(
+        s"unsupported MV group column type $other (int/long/string)")
+  }
+  private def gdt(gtype: String): DataType = gtype match {
+    case "int" => IntegerType
+    case "long" => LongType
+    case _ => StringType
+  }
 
   private def escCol(c: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(c, "%", "%25"), "\t", "%09"), "\n", "%0A")
   private def unescCol(c: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(c, "%09", "\t"), "%0A", "\n"), "%25", "%")
+  /** Group cells: the value with `%`, TAB and newline escaped, or the
+    * unambiguous null marker "%N" (a literal '%' is written "%25").
+    */
   private def gcellCol(c: Column): Column =
     when(c.isNull, lit("%N")).otherwise(escCol(c.cast(StringType)))
   private def ungcellCol(c: Column, gtype: String): Column =
     when(c === "%N", lit(null).cast(StringType)).otherwise(unescCol(c))
-      .cast(SinkMatView.gdt(gtype))
+      .cast(gdt(gtype))
   /** Value-or-empty cell, ANSI-safe in both directions. Decimal cells
     * round-trip exactly: cast-to-string renders the full scale
     * ("12.340000") and the typed cast parses it back bit-for-bit.
@@ -148,7 +187,7 @@ object SinkMvDist {
   private def stateSchema(st: MvdState): StructType =
     StructType(
       st.groups.zip(st.gtypes).map { case (n, t) =>
-        StructField(n, SinkMatView.gdt(t), nullable = true)
+        StructField(n, gdt(t), nullable = true)
       } ++ st.aggs.zipWithIndex.flatMap { case (a, i) => Seq(
         StructField(slotV(i), slotType(a), nullable = true),
         StructField(slotC(i), LongType, nullable = true)) })
@@ -280,9 +319,11 @@ object SinkMvDist {
 
   // ---- create --------------------------------------------------------------
 
-  /** Full-scan creation pinned at the source's current version — the
-    * blob MV's contract, but the aggregation result is WRITTEN
-    * DISTRIBUTED, never collected.
+  /** Full-scan creation pinned at the source's CURRENT manifest version
+    * (the scan reads `versionAsOf` that pin, so commits racing the create
+    * are excluded and picked up by the first refresh). The aggregation
+    * result is WRITTEN DISTRIBUTED, never collected. NULL group values
+    * form their own group, SQL-style. Returns the pinned source version.
     */
   def create(
       spark: SparkSession, srcDir: String, mvDir: String,
@@ -297,7 +338,7 @@ object SinkMvDist {
     val schema = ShardSink.schemaAtVersion(srcDir, srcV)
     groups.foreach(g => require(schema.fieldNames.contains(g),
       s"group column '$g' not in ${schema.fieldNames.mkString(",")}"))
-    val gtypes = groups.map(g => SinkMatView.gtypeOf(schema(g).dataType))
+    val gtypes = groups.map(g => gtypeOf(schema(g).dataType))
     val st = MvdState(srcDir, groups, gtypes, where, srcV, buckets, aggs, Nil)
     val (aggCols, nnCols) = aggSlots(aggs)
     val full = SinkMatView.filtered(SinkMatView.srcAt(spark, srcDir, srcV), where)
@@ -310,9 +351,10 @@ object SinkMvDist {
 
   /** JOIN-MV creation over DISTRIBUTED state: `SELECT groups, aggs FROM
     * fact ⋈ dim ON fk = pk [WHERE pred] GROUP BY`, dim columns under the
-    * `d_` prefix ([[SinkMvJoin]]'s definition surface, this object's
-    * bucketed-segment state) — the per-user-grain star-schema rollup
-    * neither feature alone could serve. Returns (factV, dimV).
+    * `d_` prefix (`d_region`). Group columns resolve against the fact
+    * schema, or the dim schema under the prefix; aggregates and the
+    * predicate may reference both sides the same way. The dim key must
+    * be unique. Returns (factV, dimV).
     */
   def createJoin(
       spark: SparkSession, factDir: String, dimDir: String, mvDir: String,
@@ -369,13 +411,13 @@ object SinkMvDist {
     val gtypes = resolveSnowGtypes(fSchema, dims.map(_.pfx).zip(dSchemas), groups)
     dims.zip(dimVs).foreach { case (d, v) =>
       val dim = SinkMatView.srcAt(spark, d.dim, v)
-      SinkMvJoin.requireUniqueKeys(dim, d.pk, dim.select(col(d.pk)))
+      SinkMatView.requireUniqueKeys(dim, d.pk, dim.select(col(d.pk)))
     }
     val joins = dims.zip(dimVs).map { case (d, v) => MvdJoin(d.dim, d.fk, d.pk, v, d.pfx) }
     val st = MvdState(factDir, groups, gtypes, where, factV, buckets, aggs, Nil, joins)
     val (aggCols, nnCols) = aggSlots(aggs)
     val full = SinkMatView.filtered(
-      SinkMvJoin.joinedAt(spark, factDir, factV, st.windows(dimVs)), where)
+      SinkMatView.joinedAt(spark, factDir, factV, st.windows(dimVs)), where)
       .groupBy(groups.map(col): _*)
       .agg(aggCols.head, aggCols.tail ++ nnCols: _*)
     val refs = writeSegments(mvDir, 1L, st, full)
@@ -393,12 +435,12 @@ object SinkMvDist {
     groups.map { g =>
       dims.collectFirst {
         case (pfx, sch) if g.startsWith(pfx) && sch.fieldNames.contains(g.stripPrefix(pfx)) =>
-          SinkMatView.gtypeOf(sch(g.stripPrefix(pfx)).dataType)
+          gtypeOf(sch(g.stripPrefix(pfx)).dataType)
       }.getOrElse {
         require(fSchema.fieldNames.contains(g),
           s"group column '$g' resolves in neither fact (${fSchema.fieldNames.mkString(",")}) " +
             s"nor any dim prefix (${dims.map(_._1).mkString(",")})")
-        SinkMatView.gtypeOf(fSchema(g).dataType)
+        gtypeOf(fSchema(g).dataType)
       }
     }
 
@@ -459,9 +501,23 @@ object SinkMvDist {
     l.join(rr, cond, how)
   }
 
-  /** STREAMING maintenance for the distributed MV — the `foreachBatch`
-    * body, exactly-once by the header watermark like the blob MV's:
-    * replayed batches are recorded no-ops, a gap fast-forwards only
+  /** Every dirty key satisfies this filter: per group column, the
+    * [min, max] range of the dirty keys, or NULL when a dirty key holds
+    * NULL there. `hull` is the dirty-key aggregate row: the count, then
+    * per column its min, its max and whether any value is NULL.
+    */
+  private def hullFilter(keys: Seq[String], hull: Row): Column =
+    keys.zipWithIndex.map { case (k, i) =>
+      val inRange =
+        if (hull.isNullAt(1 + 3 * i)) lit(false)
+        else col(k).between(lit(hull.get(1 + 3 * i)), lit(hull.get(2 + 3 * i)))
+      if (hull.getInt(3 + 3 * i) == 1) inRange || col(k).isNull else inRange
+    }.reduce(_ && _)
+
+  /** STREAMING maintenance: apply ONE micro-batch of change rows (the
+    * CDF stream delivers one commit per trigger) — the `foreachBatch`
+    * body, exactly-once by the header watermark: replayed batches (at or
+    * below the watermark) are recorded no-ops, a gap fast-forwards only
     * after the skipped window is PROVEN change-free (no-data commits:
     * OPTIMIZE/ZORDER/ALTER), and a gap hiding a data commit fails
     * loudly. The fold itself is the batch refresh's distributed plan.
@@ -513,7 +569,7 @@ object SinkMvDist {
       // source's delta override — the streaming path shares every line of
       // the join algebra (telescoping order, uniqueness guard, prefix
       // handling) with the batch refresh.
-      val signed = ch.withColumn("_sign", SinkMvJoin.signOf(col("_change_type")))
+      val signed = ch.withColumn("_sign", SinkMatView.signOf(col("_change_type")))
       val (contrib, recompute, nextSt) =
         if (st.joins.isEmpty)
           (signed.drop("_change_type", "_commit_version"),
@@ -522,18 +578,18 @@ object SinkMvDist {
         else {
           val wins = st.joins.zipWithIndex.map { case (jj, k) =>
             if (isDim && k == dimIdx)
-              SinkMvJoin.DimWindow(jj.dim, jj.fk, jj.pk, jj.pfx, fromV, toV,
+              SinkMatView.DimWindow(jj.dim, jj.fk, jj.pk, jj.pfx, fromV, toV,
                 delta = Some(signed))
-            else SinkMvJoin.DimWindow(jj.dim, jj.fk, jj.pk, jj.pfx, jj.dimV, jj.dimV)
+            else SinkMatView.DimWindow(jj.dim, jj.fk, jj.pk, jj.pfx, jj.dimV, jj.dimV)
           }
           val factTo = if (isDim) st.srcV else toV
           val nextJoins =
             if (isDim) st.joins.updated(dimIdx, st.joins(dimIdx).copy(dimV = toV))
             else st.joins
-          (SinkMvJoin.contributionStream(spark, st.src, st.srcV, factTo, wins,
+          (SinkMatView.contributionStream(spark, st.src, st.srcV, factTo, wins,
             factDelta = if (isDim) None else Some(signed)),
             () => SinkMatView.filtered(
-              SinkMvJoin.joinedAt(spark, st.src, factTo, wins), st.pred),
+              SinkMatView.joinedAt(spark, st.src, factTo, wins), st.pred),
             st.copy(srcV = factTo, joins = nextJoins))
         }
       val cached = contrib.persist()
@@ -556,7 +612,7 @@ object SinkMvDist {
       st: MvdState, stateV: Long, toV: Long): RefreshStats = {
     val ch = SinkMatView.changes(spark, srcDir, st.srcV, toV).persist()
     try foldBatch(spark, mvDir, st, stateV, ch,
-      SinkMvJoin.signOf(col("_change_type")),
+      SinkMatView.signOf(col("_change_type")),
       () => SinkMatView.filtered(SinkMatView.srcAt(spark, srcDir, toV), st.pred),
       st.copy(srcV = toV), st.srcV, toV)
     finally { ch.unpersist(); () }
@@ -564,19 +620,19 @@ object SinkMvDist {
 
   /** The JOIN refresh: the delta-join decomposition — one signed window
     * per changed source, composed in declaration order — feeding the
-    * DISTRIBUTED fold ([[SinkMvJoin.contributionStream]]: one core, two
-    * state backends, any dim-chain length); the dirty recompute is the
-    * full fact⋈dims join at the target versions. Uniqueness of changed
-    * dim keys is re-checked per window, as in the blob join MV.
+    * DISTRIBUTED fold ([[SinkMatView.contributionStream]], any dim-chain
+    * length); the dirty recompute is the full fact⋈dims join at the
+    * target versions. Uniqueness of changed dim keys is re-checked per
+    * window.
     */
   private def joinRefreshOnce(
       spark: SparkSession, mvDir: String, st: MvdState,
       stateV: Long, factTo: Long, dimTos: Seq[Long]): RefreshStats = {
     val wins = st.windows(dimTos)
-    val ch = SinkMvJoin.contributionStream(spark, st.src, st.srcV, factTo, wins).persist()
+    val ch = SinkMatView.contributionStream(spark, st.src, st.srcV, factTo, wins).persist()
     try foldBatch(spark, mvDir, st, stateV, ch, col("_sign"),
       () => SinkMatView.filtered(
-        SinkMvJoin.joinedAt(spark, st.src, factTo, wins), st.pred),
+        SinkMatView.joinedAt(spark, st.src, factTo, wins), st.pred),
       st.copy(srcV = factTo,
         joins = st.joins.zip(dimTos).map { case (j, dv) => j.copy(dimV = dv) }),
       st.srcV, factTo)
@@ -682,8 +738,7 @@ object SinkMvDist {
           a.kind match {
             case "count" =>
               val n = coalesce(sv, lit(0L)) + coalesce(j(s"_d$i"), lit(0L))
-              // the blob fold's incomplete-feed sentinel, distributed:
-              // a negative count means retractions for rows the state
+              // the incomplete-feed sentinel: a negative count means retractions for rows the state
               // never saw — fail the refresh, never write the drift
               foldCols += when(n < 0L, expr(
                 "raise_error('MV fold drove a group count negative: change feed incomplete?')")
@@ -719,7 +774,17 @@ object SinkMvDist {
               val clean = if (isMin) least(sv, pos) else greatest(sv, pos)
               def touches(s: Column, n: Column) = if (isMin) n <= s else n >= s
               def covers(p: Column, n: Column) = if (isMin) p <= n else p >= n
-              // the blob's foldExtreme decision table, column-for-column
+              // the extreme-fold decision table over NET-grain window
+              // extremes (pos = best net-added value, neg = best
+              // net-removed one). Min shown; max is the mirror:
+              //   - a group the state never held: pos is exact, clean
+              //   - no net removal, or one strictly above the recorded
+              //     floor: min(state, pos) stays exact
+              //   - a net removal at or below the floor that a net
+              //     addition re-covers (pos ≤ neg): min = pos, exact
+              //   - otherwise (or an all-null state losing rows) the
+              //     floor is unknowable from aggregates alone → DIRTY,
+              //     recomputed by the pruned per-group scan below
               val dirty = had && (
                 (sv.isNotNull && neg.isNotNull && touches(sv, neg) &&
                   !(pos.isNotNull && covers(pos, neg))) ||
@@ -744,20 +809,27 @@ object SinkMvDist {
             if (dirtyAggIdx.isEmpty) lit(false)
             else dirtyAggIdx.map(i => col(s"_dirty$i")).reduce(_ || _)
           val dirtyKeys = folded.where(anyDirty).select(keys.map(col): _*)
-          // an extreme-less MV can never dirty — skip the count job
-          // entirely (one Spark job per fold across every sum/count-only
-          // lifecycle; round-19 harness hygiene)
-          val nDirty =
-            if (dirtyAggIdx.isEmpty) 0L
-            else { driverRowsCollected.incrementAndGet(); dirtyKeys.count() }
-          // ---- dirty extremes: ONE pruned recompute join at toV — the
-          // source scan keeps its file skipping (the dirty keys arrive as
-          // a join side, typically broadcast), and only dirty groups
-          // re-aggregate
+          // the dirty groups' count and key hull in ONE job and ONE
+          // collected row; an extreme-less MV can never dirty — skip the
+          // job entirely (one Spark job per fold across every
+          // sum/count-only lifecycle; round-19 harness hygiene)
+          val dirtyHull: Option[Row] =
+            if (dirtyAggIdx.isEmpty) None
+            else {
+              driverRowsCollected.incrementAndGet()
+              Some(dirtyKeys.agg(count(lit(1)), keys.flatMap(k => Seq(
+                min(col(k)), max(col(k)), max(col(k).isNull.cast(IntegerType)))): _*)
+                .collect().head)
+            }
+          val nDirty = dirtyHull.fold(0L)(_.getLong(0))
+          // ---- dirty extremes: ONE recompute join at toV; only dirty
+          // groups re-aggregate. The hull filter bounds the source scan
+          // by literals, so its file skipping (shard ranges, column
+          // envelopes) engages — the join alone prunes no file
           val fixed: Option[DataFrame] =
             if (nDirty == 0L) None
             else {
-              val src = recomputeSrc()
+              val src = recomputeSrc().where(hullFilter(keys, dirtyHull.get))
               val jj = nsJoin(src, dirtyKeys.distinct(), keys, "inner")
               Some(jj
                 .groupBy(keys.map(jj(_)): _*)
@@ -785,7 +857,7 @@ object SinkMvDist {
                   (0 until na).map(i => jf(slotC(i)).as(slotC(i)))): _*)
           }
           // one-shot interleave for the concurrency spec — the window a
-          // competing refresh can win (same hook as the blob MV's)
+          // competing refresh can win
           val barrier = refreshBarrier.getAndSet(null)
           if (barrier != null) barrier()
           // ---- write touched buckets, carry the rest by reference
@@ -824,7 +896,6 @@ object SinkMvDist {
       * and only the candidate it answers from reads the state.
       */
     lazy val state: DataFrame = stateOf()
-    def isJoin: Boolean = joins.nonEmpty
     def slotValue(i: Int): String = slotV(i)
     def slotCounter(i: Int): String = slotC(i)
   }
@@ -871,7 +942,7 @@ object SinkMvDist {
         s"lookup key for group column '$n' expects $t, got ${v.getClass.getSimpleName}: $v")
     }
     val keySchema = StructType(st.groups.zip(st.gtypes).map { case (n, t) =>
-      StructField(n, SinkMatView.gdt(t), nullable = true)
+      StructField(n, gdt(t), nullable = true)
     })
     val keyDf = spark.createDataFrame(
       java.util.Collections.singletonList(org.apache.spark.sql.Row.fromSeq(coerced)),

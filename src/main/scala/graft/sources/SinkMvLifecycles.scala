@@ -13,8 +13,8 @@ import SinkMatView.{MvAgg, RefreshStats}
   * private lakehouse, drives one MV or data-skipping lifecycle through the
   * public surface and reports a rollup whose DuckDB twin (`*Sql`)
   * re-derives it from `range()`. They are registered in [[Sinks.queries]];
-  * the engines ([[SinkMatView]], [[SinkMvJoin]], [[SinkMvDist]],
-  * [[SinkMvDdl]], the rule [[SinkMvRewrite]] and [[SinkColStats]]) carry
+  * the engine ([[SinkMvDist]] over [[SinkMatView]]'s definitions),
+  * [[SinkMvDdl]], the rule [[SinkMvRewrite]] and [[SinkColStats]] carry
   * none of them.
   *
   * The steps the fixtures share are the plain helpers below, and each
@@ -250,7 +250,7 @@ object SinkMvLifecycles {
     docs(s, 2400, 2, lo, hi).withColumn("uid", (col("doc_id") % uidMod).cast("long"))
       .writeTo(table).append()
 
-  // ---- blob-state single-table MVs (SinkMatView) --------------------------
+  // ---- single-table MV lifecycles over one bucket --------------------------
 
   /** Oracle-checked INCREMENTAL MV REFRESH (round 15): create a per-shard
     * rollup MV (count / sum / xor / min / max of doc_id, sum of body
@@ -271,24 +271,24 @@ object SinkMvLifecycles {
       docs(s, 2400, 2, lo, hi)
         .writeTo("graft_mv.docs_mv").append()
     val dir = new java.io.File(root, "docs_mv").getPath
-    val mvDir = SinkMatView.mvDirOf(dir)
+    val mvDir = dir + ".mv"
     append(0L, 800L) // v1
     append(800L, 2000L) // v2
-    SinkMatView.create(s, dir, mvDir, "shard", WithExtremes :+ SumLen)
+    SinkMvDist.create(s, dir, mvDir, Seq("shard"), WithExtremes :+ SumLen, buckets = 1)
     // v3: in-place update (600 change rows, 0 dirty — doc_id unchanged)
     s.sql("UPDATE graft_mv.docs_mv SET body = concat(body, '!') WHERE doc_id < 300")
-    val r1 = SinkMatView.refresh(s, dir, mvDir)
+    val r1 = SinkMvDist.refresh(s, dir, mvDir)
     // v4: tail delete (500 rows) — every shard's max is in [1500,2000) → 16 dirty
     s.sql("DELETE FROM graft_mv.docs_mv WHERE doc_id >= 1500")
-    val r2 = SinkMatView.refresh(s, dir, mvDir)
+    val r2 = SinkMvDist.refresh(s, dir, mvDir)
     // v5: whole-shard delete — shard 3 empties and leaves the view
     s.sql("DELETE FROM graft_mv.docs_mv WHERE shard = 3")
-    val r3 = SinkMatView.refresh(s, dir, mvDir)
+    val r3 = SinkMvDist.refresh(s, dir, mvDir)
     // v6: late append — maxes extend in-place, shard 3 resurrects
     append(2000L, 2400L)
-    val r4 = SinkMatView.refresh(s, dir, mvDir)
-    refreshReport(SinkMatView.read(s, mvDir), Seq(r1, r2, r3, r4), dirty = true,
-      SinkMatView.currentVersion(mvDir), "src_version" -> SinkMatView.lastSourceVersion(mvDir))
+    val r4 = SinkMvDist.refresh(s, dir, mvDir)
+    refreshReport(SinkMvDist.read(s, mvDir), Seq(r1, r2, r3, r4), dirty = true,
+      SinkMvDist.currentVersion(mvDir), "src_version" -> SinkMvDist.lastSourceVersion(mvDir))
       .orderBy("shard")
   }
 
@@ -307,17 +307,17 @@ object SinkMvLifecycles {
     def src = docs(s, 1200, 2)
     src.writeTo("graft_mvr.docs_mvr").append() // v1
     val dir = new java.io.File(root, "docs_mvr").getPath
-    val mvDir = SinkMatView.mvDirOf(dir)
-    SinkMatView.create(s, dir, mvDir, "shard", WithExtremes)
+    val mvDir = dir + ".mv"
+    SinkMvDist.create(s, dir, mvDir, Seq("shard"), WithExtremes, buckets = 1)
     s.sql("DELETE FROM graft_mvr.docs_mvr WHERE doc_id >= 900") // v2
-    val r1 = SinkMatView.refresh(s, dir, mvDir)
+    val r1 = SinkMvDist.refresh(s, dir, mvDir)
     s.sql("ALTER TABLE graft_mvr.docs_mvr SET TBLPROPERTIES ('graft.restore' = '1')") // v3
-    val r2 = SinkMatView.refresh(s, dir, mvDir)
+    val r2 = SinkMvDist.refresh(s, dir, mvDir)
     src.where(col("shard") === 3 && ((col("doc_id") - 3L) / 16L) % 3L === 0L)
       .writeTo("graft_mvr.docs_mvr").overwrite(col("shard") === 3) // v4
-    val r3 = SinkMatView.refresh(s, dir, mvDir)
-    refreshReport(SinkMatView.read(s, mvDir), Seq(r1, r2, r3), dirty = true,
-      SinkMatView.currentVersion(mvDir), "src_version" -> SinkMatView.lastSourceVersion(mvDir))
+    val r3 = SinkMvDist.refresh(s, dir, mvDir)
+    refreshReport(SinkMvDist.read(s, mvDir), Seq(r1, r2, r3), dirty = true,
+      SinkMvDist.currentVersion(mvDir), "src_version" -> SinkMvDist.lastSourceVersion(mvDir))
       .orderBy("shard")
   }
 
@@ -364,20 +364,21 @@ object SinkMvLifecycles {
     ingest(0L, 800L)
     ingest(800L, 2000L)
     val dir = new java.io.File(root, "docs_mvg").getPath
-    val mvDir = SinkMatView.mvDirOf(dir)
-    SinkMatView.create(s, dir, mvDir, Seq("lang", "shard"), WithMax, where = "length(body) = 32")
+    val mvDir = dir + ".mv"
+    SinkMvDist.create(s, dir, mvDir, Seq("lang", "shard"), WithMax, where = "length(body) = 32",
+      buckets = 1)
     // predicate-crossing update: rows stay in the TABLE, leave the VIEW
     s.sql("UPDATE graft_mvg.docs_mvg SET body = concat(body, '!') WHERE doc_id < 300")
-    val r1 = SinkMatView.refresh(s, dir, mvDir)
+    val r1 = SinkMvDist.refresh(s, dir, mvDir)
     s.sql("DELETE FROM graft_mvg.docs_mvg WHERE doc_id >= 1500")
-    val r2 = SinkMatView.refresh(s, dir, mvDir)
-    val perLang = SinkMatView.read(s, mvDir)
+    val r2 = SinkMvDist.refresh(s, dir, mvDir)
+    val perLang = SinkMvDist.read(s, mvDir)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_groups"), sum(col("n_docs")).as("n_docs"),
         sum(col("sum_ids")).as("sum_ids"), expr("bit_xor(xor_ids)").as("xor_ids"),
         max(col("max_doc")).as("max_doc"))
-    val current = SinkMatView.lastSourceVersion(mvDir) == ShardSink.currentManifestVersion(dir)
-    refreshReport(perLang, Seq(r1, r2), dirty = true, SinkMatView.currentVersion(mvDir),
+    val current = SinkMvDist.lastSourceVersion(mvDir) == ShardSink.currentManifestVersion(dir)
+    refreshReport(perLang, Seq(r1, r2), dirty = true, SinkMvDist.currentVersion(mvDir),
       "watermark_current" -> (if (current) 1L else 0L))
       .orderBy("lang")
   }
@@ -413,7 +414,7 @@ object SinkMvLifecycles {
   /** Oracle-checked STREAMING MV MAINTENANCE (round 15): the same
     * 6-commit lifecycle, maintained CONTINUOUSLY — the change feed is
     * tailed one commit per trigger and every micro-batch lands through
-    * [[SinkMatView.refreshFromChanges]] in a `foreachBatch` loop, the recipe Delta
+    * [[SinkMvDist.refreshFromChanges]] in a `foreachBatch` loop, the recipe Delta
     * documents for streaming aggregate maintenance. The create-time
     * watermark (source v2) makes the first two streamed commits recorded
     * NO-OPS (already covered by the full build) — the exactly-once
@@ -429,19 +430,19 @@ object SinkMvLifecycles {
       docs(s, 2400, 2, lo, hi)
         .writeTo("graft_mvs.docs_mvs").append()
     val dir = new java.io.File(root, "docs_mvs").getPath
-    val mvDir = SinkMatView.mvDirOf(dir)
+    val mvDir = dir + ".mv"
     append(0L, 800L) // v1
     append(800L, 2000L) // v2
-    SinkMatView.create(s, dir, mvDir, "shard", WithExtremes)
+    SinkMvDist.create(s, dir, mvDir, Seq("shard"), WithExtremes, buckets = 1)
     s.sql("UPDATE graft_mvs.docs_mvs SET body = concat(body, '!') WHERE doc_id < 300") // v3
     s.sql("DELETE FROM graft_mvs.docs_mvs WHERE doc_id >= 1500") // v4
     s.sql("DELETE FROM graft_mvs.docs_mvs WHERE shard = 3") // v5
     append(2000L, 2400L) // v6
-    val (applied, skipped) = drainChangeFeed(s, dir, mvDir, SinkMatView.refreshFromChanges)
-    val mv = SinkMatView.read(s, mvDir)
+    val (applied, skipped) = drainChangeFeed(s, dir, mvDir, SinkMvDist.refreshFromChanges)
+    val mv = SinkMvDist.read(s, mvDir)
     cells(mv, "n_applied" -> applied, "n_skipped" -> skipped,
-      "mv_version" -> SinkMatView.currentVersion(mvDir),
-      "src_version" -> SinkMatView.lastSourceVersion(mvDir),
+      "mv_version" -> SinkMvDist.currentVersion(mvDir),
+      "src_version" -> SinkMvDist.lastSourceVersion(mvDir),
       "n_diff" -> rowDiff(mv, aggregated(readPath(s, dir), Seq("shard"), WithExtremes)))
       .orderBy("shard")
   }
@@ -490,7 +491,7 @@ object SinkMvLifecycles {
       |       CAST(6 AS BIGINT) AS src_version
       |FROM g GROUP BY shard ORDER BY shard""".stripMargin
 
-  // ---- join MVs (SinkMvJoin) ----------------------------------------------
+  // ---- join MV lifecycle over one bucket ----------------------------------
 
   /** Oracle-checked JOIN MV (round 16): a per-`d_region` rollup of a
     * 2000-doc fact over a 15-key dim, maintained through all four delta
@@ -521,12 +522,12 @@ object SinkMvLifecycles {
     val factDir = new java.io.File(root, "fact_mvj").getPath
     val dimDir = new java.io.File(root, "dim_mvj").getPath
     val mvDir = factDir + ".mvj"
-    SinkMvJoin.create(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
-      groups = Seq("d_region"), aggs = WithMax)
+    SinkMvDist.createJoin(s, factDir, dimDir, mvDir, fk = "shard", pk = "doc_id",
+      groups = Seq("d_region"), aggs = WithMax, buckets = 1)
     // f3: tail delete — every region's recorded max is in the tail → the
     // dirty recompute path, executed as a pruned fact⋈dim join
     s.sql("DELETE FROM graft_mvj.fact_mvj WHERE doc_id >= 1500")
-    val r1 = SinkMvJoin.refresh(s, mvDir)
+    val r1 = SinkMvDist.refresh(s, factDir, mvDir)
     // d4: dim update — shard 7 moves r1 → r9; the moved rows' max (1495)
     // sits BELOW r1's surviving max (1498): clean fast-path, 0 dirty
     s.sql("UPDATE graft_mvj.dim_mvj SET region = 'r9' WHERE doc_id = 7")
@@ -536,13 +537,13 @@ object SinkMvLifecycles {
       .writeTo("graft_mvj.dim_mvj").append()
     // ONE refresh covers BOTH dim commits — group-move and join-in fold
     // in the same [Δd ⋈ f] pass
-    val r2 = SinkMvJoin.refresh(s, mvDir)
+    val r2 = SinkMvDist.refresh(s, factDir, mvDir)
     // f4: late fact append against the NOW-COMPLETE dim
     docs(2000L, 2400L).writeTo("graft_mvj.fact_mvj").append()
-    val r3 = SinkMvJoin.refresh(s, mvDir)
-    val (fv, dv) = SinkMvJoin.lastSourceVersions(mvDir)
-    refreshReport(SinkMvJoin.read(s, mvDir), Seq(r1, r2, r3), dirty = true,
-      SinkMvJoin.currentVersion(mvDir), "fact_version" -> fv, "dim_version" -> dv)
+    val r3 = SinkMvDist.refresh(s, factDir, mvDir)
+    val (fv, dv) = SinkMvDist.lastSourceVersions(mvDir)
+    refreshReport(SinkMvDist.read(s, mvDir), Seq(r1, r2, r3), dirty = true,
+      SinkMvDist.currentVersion(mvDir), "fact_version" -> fv, "dim_version" -> dv)
       .orderBy("d_region")
   }
 
@@ -578,9 +579,8 @@ object SinkMvLifecycles {
   // ---- distributed MVs (SinkMvDist) ---------------------------------------
 
   /** Oracle-checked DISTRIBUTED MV STATE (round 16): a per-`uid` grain
-    * rollup (1200 groups — the cardinality class the blob MV keeps on
-    * the driver; here every group lives in bucketed state segments and
-    * the driver only ever collects bucket ids). Lifecycle: two ingests,
+    * rollup (1200 groups over 16 buckets: every group lives in bucketed
+    * state segments and the driver only ever collects bucket ids). Lifecycle: two ingests,
     * create, an in-place UPDATE whose net extremes dirty every updated
     * group's `min_len` (300-group distributed recompute), a tail DELETE
     * that removes 500 groups' recorded `max_doc` (500 more), and a late
@@ -824,10 +824,9 @@ object SinkMvLifecycles {
     val drains =
       Seq(factDir, d1Dir, d2Dir).map(drainChangeFeed(s, _, mvDir, SinkMvDist.refreshFromChanges))
     val (fv, dvs) = SinkMvDist.lastSourceVersionsAll(mvDir)
-    val full = SinkMatView.filtered(
-      SinkMvJoin.joinedAt(s, factDir, fv, Seq(
-        SinkMvJoin.DimWindow(d1Dir, "shard", "doc_id", "d1_", dvs.head, dvs.head),
-        SinkMvJoin.DimWindow(d2Dir, "d1_catk", "doc_id", "d2_", dvs(1), dvs(1)))), "")
+    val full = SinkMatView.joinedAt(s, factDir, fv, Seq(
+      SinkMatView.DimWindow(d1Dir, "shard", "doc_id", "d1_", dvs.head, dvs.head),
+      SinkMatView.DimWindow(d2Dir, "d1_catk", "doc_id", "d2_", dvs(1), dvs(1))))
     val mv = SinkMvDist.read(s, mvDir)
     cells(mv, "n_applied" -> drains.map(_._1).sum, "n_skipped" -> drains.map(_._2).sum,
       "mv_version" -> SinkMvDist.currentVersion(mvDir), "fact_version" -> fv,

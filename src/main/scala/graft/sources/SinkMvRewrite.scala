@@ -1038,8 +1038,8 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     // remap brought the MV to — the telescoping holds
     val windows = joins.zip(dimTos).zipWithIndex.map { case ((j, dv), i) =>
       if (compQualified && dimTails(i))
-        SinkMvJoin.DimWindow(j.dim, j.fk, j.pk, j.pfx, dv, dv)
-      else SinkMvJoin.DimWindow(j.dim, j.fk, j.pk, j.pfx, j.dimV, dv)
+        SinkMatView.DimWindow(j.dim, j.fk, j.pk, j.pfx, dv, dv)
+      else SinkMatView.DimWindow(j.dim, j.fk, j.pk, j.pfx, j.dimV, dv)
     }
     val comp: Seq[CompDim] =
       if (compQualified) movedIdx.map { i =>
@@ -1059,7 +1059,7 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     */
   private def buildPlan(
       spark: SparkSession, agg: Aggregate, mv: SinkMvDist.MvSlots,
-      tableDir: String, windows: Seq[SinkMvJoin.DimWindow], toV: Long,
+      tableDir: String, windows: Seq[SinkMatView.DimWindow], toV: Long,
       hasTail: Boolean,
       factParts: Seq[org.apache.spark.sql.connector.read.InputPartition],
       outs: Seq[Out], queryGroups: Seq[(String, String)],
@@ -1109,7 +1109,7 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
               if (newKeys > 0L) java.lang.Boolean.FALSE
               else {
                 try {
-                  SinkMvJoin.requireUniqueKeys(
+                  SinkMatView.requireUniqueKeys(
                     SinkMatView.srcAt(spark, d.dim, d.toV), d.pk,
                     feed.select(col(d.pk)).distinct())
                   java.lang.Boolean.TRUE
@@ -1161,14 +1161,14 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
         else if (windows.isEmpty)
           Some(withResid(SinkMatView.filtered(
             SinkMatView.changes(spark, tableDir, mv.srcV, toV), mv.pred)
-            .withColumn("_sign", SinkMvJoin.signOf(col("_change_type")))))
+            .withColumn("_sign", SinkMatView.signOf(col("_change_type")))))
         else
           // the delta-join decomposition, one window per source (dims in
           // declaration order — unmoved sources carry fromV == toV), via
           // the SAME core the refresh folds through; dim-key uniqueness
           // is re-proven per moved window inside
           Some(withResid(
-            SinkMvJoin.contributionStream(spark, mv.src, mv.srcV, toV, windows)))
+            SinkMatView.contributionStream(spark, mv.src, mv.srcV, toV, windows)))
 
       // ---- hybrid extremes: which result-grain groups did the tail
       // retract from? (single-table only — collected from the TAIL FEED,
@@ -1191,10 +1191,9 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
             rs
           }
         }
-      // typed OR-of-conjunctions through the SAME groupFilter helper the
-      // refresh's dirty recompute uses (typed literals keep source
-      // pruning engaged; NULL group values match via isNull) — review
-      // fix: this was a hand-rolled duplicate
+      // typed OR-of-conjunctions through the shared groupFilter helper
+      // (typed literals keep source pruning engaged; NULL group values
+      // match via isNull)
       val typeOf = mv.groups.zip(mv.gtypes).toMap
       val dirtyPred: Option[Column] =
         if (dirtyRows.isEmpty) None

@@ -271,15 +271,6 @@ object EventStreaming {
       .trigger(trigger)
       .start()
 
-  /** Output-mode helper for the windowed plan (update mode + watermark). */
-  def startWindowedQuery(events: DataFrame, checkpointDir: String, sinkTable: String) =
-    windowedCounts(events).writeStream
-      .outputMode(OutputMode.Update())
-      .format("memory")
-      .queryName(sinkTable)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
   /** Driver-visible [[sessionize]] parity, HASH-checked — the events-side
     * streaming family's batch-twin gate (the corpus side has
     * [[CorpusStreaming.streamBatchParity]]). The bounded user slice is

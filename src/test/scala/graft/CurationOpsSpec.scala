@@ -1,7 +1,6 @@
 package graft
 
 import graft.text.CurationOps
-import org.apache.spark.sql.functions._
 
 /** Unit checks for the curation-signal operators (repetition, TF-IDF
   * top-terms, PII scrub) on hand-computable corpora; the driver

@@ -12,7 +12,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 class PropertySpec extends SparkSpec {
   import spark.implicits._
 
-  private def check(p: Prop, trials: Int = 30): Unit = {
+  private def check(p: Prop, trials: Int): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(trials), p)
     assert(res.passed, res.status.toString)
   }

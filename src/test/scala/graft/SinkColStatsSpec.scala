@@ -385,7 +385,6 @@ class SinkColStatsSpec extends SparkSpec {
       .option("numDocs", "400").option("numPartitions", "2").load()
       .withColumn("lang", lit("pt"))
       .writeTo(s"graft_csr.t_$sfx").append()
-    val dir = new java.io.File(root, s"t_$sfx").getPath
     s.sql(s"ALTER TABLE graft_csr.t_$sfx RENAME COLUMN lang TO lang_old")
     s.sql(s"ALTER TABLE graft_csr.t_$sfx ADD COLUMN lang STRING")
     // the NEW lang is all-null: stale envelopes must not answer for it —
@@ -429,7 +428,6 @@ class SinkColStatsSpec extends SparkSpec {
     val opened = ShardSink.dataFileReadCount.get() - before
     assert(opened < census.toLong,
       s"the UPDATE's rewrite read opened $opened of $census files — payload pruning missing")
-    import s.implicits._
     val upd = s.read.table(s"graft_cs.t_$sfx")
       .where(col("body") =!= lower(col("body"))).count()
     assert(upd === 600L)

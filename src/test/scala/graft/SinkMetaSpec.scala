@@ -85,19 +85,6 @@ class SinkMetaSpec extends AnyFunSuite {
   test("round trip: segment file") { roundTrips(Gen.listOf(entry).map(es => SegmentFile(es))) }
   test("round trip: tag") { roundTrips(natLong.map(Tag(_))) }
 
-  test("round trip: MV state header") {
-    roundTrips(for {
-      src <- text; g <- items; t <- items; pred <- text; v <- natLong; as <- aggs
-    } yield MvHeader(src, g, t, pred, v, as))
-  }
-
-  test("round trip: join-MV state header") {
-    roundTrips(for {
-      f <- text; d <- text; fk <- text; pk <- text; g <- items; t <- items
-      pred <- text; fv <- natLong; dv <- natLong; as <- aggs
-    } yield MvjHeader(f, d, fk, pk, g, t, pred, fv, dv, as))
-  }
-
   test("round trip: distributed-MV header (no dims, one dim, several)") {
     roundTrips(for {
       src <- text; g <- items; t <- items; pred <- text; v <- natLong
@@ -164,17 +151,6 @@ class SinkMetaSpec extends AnyFunSuite {
     golden(Tag(7L), """{"v":7}""")
   }
 
-  test("golden: MV and join-MV state headers") {
-    golden(MvHeader("/tmp/t", Seq("shard", "lang"), Seq("int", "string"), "doc_id > 5", 4L,
-      Seq(count, sumIds)),
-      """{"src":"/tmp/t","group":"shard,lang","gtype":"int,string","pred":"doc_id > 5",""" +
-        s""""srcV":4,$aggsJson}""")
-    golden(MvjHeader("/f", "/d", "doc_id", "doc_id", Seq("d_shard"), Seq("int"), "", 3L, 2L,
-      Seq(count, sumIds)),
-      """{"fact":"/f","dim":"/d","fk":"doc_id","pk":"doc_id","group":"d_shard",""" +
-        s""""gtype":"int","pred":"","factV":3,"dimV":2,$aggsJson}""")
-  }
-
   test("golden: distributed-MV header, plain and with a dims array") {
     golden(MvdHeader("/t", Seq("doc_id"), Seq("long"), "", 1L, 4, Nil, Seq(count, sumIds)),
       """{"src":"/t","group":"doc_id","gtype":"long","pred":"","srcV":1,"buckets":4,""" +
@@ -221,8 +197,12 @@ class SinkMetaSpec extends AnyFunSuite {
     bad[SegmentFile]("""{"files":[{"file":"a.tsv"}]}""")
     bad[MvdHeader]("""{"src":"/t","group":"g","gtype":"long","pred":"","srcV":1,""" +
       """"buckets":4,"aggs":[{"n":"n","k":"count","e":""}]}""") // no hash version
-    bad[MvHeader]("""{"src":"/t","group":"g","gtype":"long","pred":"","srcV":1,""" +
-      """"aggs":[{"n":"n","k":7,"e":""}]}""")
+    bad[MvdHeader]("""{"src":"/t","group":"g","gtype":"long","pred":"","srcV":1,""" +
+      """"buckets":4,"hashv":2,"aggs":[{"n":"n","k":7,"e":""}]}""") // malformed agg
+    bad[MvdHeader]("""{"src":"/t","group":"g","gtype":"long","pred":"","srcV":1,""" +
+      """"buckets":4,"hashv":2,"dims":[{"dim":"/d","fk":"a","pk":"b","pfx":"d_"}],""" +
+      """"aggs":[{"n":"n","k":"count","e":""}]}""") // a dim without its watermark
+    bad[MvDef]("""{"group":"g","buckets":"8","aggs":[]}""") // wrong type
     bad[Tag]("""{"v":-}""")
   }
 }

@@ -1,18 +1,16 @@
 package graft
 
-import graft.sources.{ShardSink, SinkMatView, SinkMvDist, SinkTestAccess}
+import graft.sources.{ShardSink, SinkMvDist, SinkTestAccess}
 import graft.sources.SinkMatView.MvAgg
 import org.apache.spark.sql.functions._
 
-/** Round-16 DISTRIBUTED MV STATE ([[SinkMvDist]]): the same incremental
-  * fold as the blob MV, but state lives as bucketed segment files and
-  * every refresh is a distributed plan. The contract under test, beyond
-  * fold exactness: driver materialization is bounded by the BUCKET
-  * count, never the group count (the scale property the blob design
-  * could not offer), untouched buckets carry forward by reference, and
-  * vacuum keeps every segment a retained version still lists. The
-  * end-to-end lifecycle also sits under the driver's hash gate as
-  * `q_dsv2_mv_dist`.
+/** Round-16 DISTRIBUTED MV STATE ([[SinkMvDist]]): state lives as
+  * bucketed segment files and every refresh is a distributed plan. The
+  * contract under test, beyond fold exactness: driver materialization is
+  * bounded by the BUCKET count, never the group count, untouched buckets
+  * carry forward by reference, and vacuum keeps every segment a retained
+  * version still lists. The end-to-end lifecycle also sits under the
+  * driver's hash gate as `q_dsv2_mv_dist`.
   */
 class SinkMvDistSpec extends SparkSpec {
 

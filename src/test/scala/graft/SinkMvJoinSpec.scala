@@ -1,16 +1,18 @@
 package graft
 
-import graft.sources.{ShardSink, SinkMvJoin, SinkTestAccess}
+import graft.sources.{ShardSink, SinkMvDist, SinkTestAccess}
 import graft.sources.SinkMatView.MvAgg
 import org.apache.spark.sql.functions._
 
-/** Round-16 JOIN MVs ([[SinkMvJoin]]): fact⋈dim GROUP BY maintained from
-  * BOTH change feeds via the delta-join decomposition. Pinned here: the
-  * refresh reads ONLY the delta (read counter, not claimed), a dim
-  * update moves fact rows between groups with no rescan, a dim insert
-  * pulls previously-unjoined fact rows into the view, and a duplicate
-  * dim key fails the refresh loudly. The full lifecycle also sits under
-  * the driver's hash gate as `q_dsv2_mv_join`.
+/** Round-16 JOIN MVs: fact⋈dim GROUP BY maintained from BOTH change feeds
+  * via the delta-join decomposition ([[graft.sources.SinkMatView]]'s
+  * `contributionStream`), driven through the MV engine ([[SinkMvDist]])
+  * at ONE bucket, as `q_dsv2_mv_join` runs it. Pinned here: the refresh
+  * reads ONLY the delta (read counter, not claimed), a dim update moves
+  * fact rows between groups with no rescan, a dim insert pulls
+  * previously-unjoined fact rows into the view, and a duplicate dim key
+  * fails the refresh loudly. The full lifecycle also sits under the
+  * driver's hash gate as `q_dsv2_mv_join`.
   */
 class SinkMvJoinSpec extends SparkSpec {
 
@@ -40,6 +42,15 @@ class SinkMvJoinSpec extends SparkSpec {
     (s, new java.io.File(root, "fact").getPath, new java.io.File(root, "dim").getPath, tag)
   }
 
+  /** A one-bucket `d_`-prefixed join MV of `factDir` ⋈ `dimDir` on
+    * shard = doc_id.
+    */
+  private def create(
+      s: org.apache.spark.sql.SparkSession, factDir: String, dimDir: String, mvDir: String,
+      groups: Seq[String], aggs: Seq[MvAgg]): (Long, Long) =
+    SinkMvDist.createJoin(s, factDir, dimDir, mvDir, "shard", "doc_id", groups, aggs,
+      buckets = 1)
+
   private val aggs = Seq(
     MvAgg("n", "count"), MvAgg("s", "sum", "doc_id"), MvAgg("hi", "max", "doc_id"))
 
@@ -55,25 +66,25 @@ class SinkMvJoinSpec extends SparkSpec {
   }
 
   private def mvRollup(s: org.apache.spark.sql.SparkSession, mvDir: String): Set[(String, Long, Long, Long)] =
-    SinkMvJoin.read(s, mvDir).collect()
+    SinkMvDist.read(s, mvDir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
 
   test("join fold equals full join recompute; dim updates move groups with no rescan") {
     val (s, factDir, dimDir, tag) = fixture("move")
     val mvDir = factDir + ".mvj"
-    SinkMvJoin.create(s, factDir, dimDir, mvDir, "shard", "doc_id", Seq("d_region"), aggs)
+    create(s, factDir, dimDir, mvDir, Seq("d_region"), aggs)
     assert(mvRollup(s, mvDir) === joinRollup(s, factDir, dimDir))
     // dim update: shard 5's rows move r2 → rX; the vacated group's max
     // (largest shard∈{2,8,11,14} doc) survives → fast-path, 0 dirty
     s.sql(s"UPDATE mvj_$tag.dim SET region = 'rX' WHERE doc_id = 5")
-    val r1 = SinkMvJoin.refresh(s, mvDir)
+    val r1 = SinkMvDist.refresh(s, factDir, mvDir)
     assert(r1.applied)
     assert(mvRollup(s, mvDir) === joinRollup(s, factDir, dimDir))
     assert(mvRollup(s, mvDir).exists(_._1 == "rX"))
     // fact tail delete: every group's max dies → dirty recompute as a
     // pruned JOIN; parity again
     s.sql(s"DELETE FROM mvj_$tag.fact WHERE doc_id >= 900")
-    val r2 = SinkMvJoin.refresh(s, mvDir)
+    val r2 = SinkMvDist.refresh(s, factDir, mvDir)
     assert(r2.dirtyGroups === 4L, r2.toString) // r0 r1 r2 rX
     assert(mvRollup(s, mvDir) === joinRollup(s, factDir, dimDir))
     // dim insert: key 15 pulls the previously-unjoined shard-15 rows in
@@ -82,18 +93,18 @@ class SinkMvJoinSpec extends SparkSpec {
       .where(col("doc_id") === 15L)
       .withColumn("region", lit("r0"))
       .writeTo(s"mvj_$tag.dim").append()
-    SinkMvJoin.refresh(s, mvDir)
+    SinkMvDist.refresh(s, factDir, mvDir)
     assert(mvRollup(s, mvDir) === joinRollup(s, factDir, dimDir))
-    val (fv, dv) = SinkMvJoin.lastSourceVersions(mvDir)
+    val (fv, dv) = SinkMvDist.lastSourceVersions(mvDir)
     assert(fv === 2L && dv === 5L)
     // no-op refresh
-    assert(!SinkMvJoin.refresh(s, mvDir).applied)
+    assert(!SinkMvDist.refresh(s, factDir, mvDir).applied)
   }
 
   test("refresh IO is delta-only: a fact append opens the new commit plus the dim") {
     val (s, factDir, dimDir, tag) = fixture("io")
     val mvDir = factDir + ".mvj"
-    SinkMvJoin.create(s, factDir, dimDir, mvDir, "shard", "doc_id", Seq("d_region"), aggs)
+    create(s, factDir, dimDir, mvDir, Seq("d_region"), aggs)
     val factFilesBefore = SinkTestAccess.resolveBase(factDir)._2.length
     val dimFiles = SinkTestAccess.resolveBase(dimDir)._2.length
     s.read.format("graft.sources.DocGenSource")
@@ -103,7 +114,7 @@ class SinkMvJoinSpec extends SparkSpec {
     val newFactFiles = SinkTestAccess.resolveBase(factDir)._2.length - factFilesBefore
     assert(newFactFiles >= 1)
     val c0 = ShardSink.dataFileReadCount.get()
-    val st = SinkMvJoin.refresh(s, mvDir)
+    val st = SinkMvDist.refresh(s, factDir, mvDir)
     val opened = ShardSink.dataFileReadCount.get() - c0
     assert(st.applied && st.dirtyGroups === 0L)
     // Δf ⋈ d': the fact side reads ONLY the appended commit's files; the
@@ -118,28 +129,28 @@ class SinkMvJoinSpec extends SparkSpec {
     val (s, _, dimDir, tag) = fixture("dup")
     val factDir = new java.io.File(new java.io.File(dimDir).getParent, "fact").getPath
     val mvDir = factDir + ".mvj"
-    SinkMvJoin.create(s, factDir, dimDir, mvDir, "shard", "doc_id", Seq("d_region"), aggs)
+    create(s, factDir, dimDir, mvDir, Seq("d_region"), aggs)
     // a second dim row for key 3 — the uniqueness the decomposition needs
     s.read.format("graft.sources.DocGenSource")
       .option("numDocs", "2400").option("numPartitions", "1").load()
       .where(col("doc_id") === 3L)
       .withColumn("region", lit("rDUP"))
       .writeTo(s"mvj_$tag.dim").append()
-    val e = intercept[IllegalArgumentException](SinkMvJoin.refresh(s, mvDir))
+    val e = intercept[IllegalArgumentException](SinkMvDist.refresh(s, factDir, mvDir))
     assert(e.getMessage.contains("not unique"), e.getMessage)
   }
 
   test("fact schema evolution inside a dim window does not wedge the refresh") {
     val (s, factDir, dimDir, tag) = fixture("evo")
     val mvDir = factDir + ".mvj"
-    SinkMvJoin.create(s, factDir, dimDir, mvDir, "shard", "doc_id", Seq("d_region"), aggs)
+    create(s, factDir, dimDir, mvDir, Seq("d_region"), aggs)
     // fact evolves (no-data commit) while a dim change is in flight: the
     // dim-delta part joins the fact snapshot PINNED BEFORE the ALTER —
     // a fixed newest-schema column list failed to resolve there and
     // wedged the refresh forever (review fix: parts union by name)
     s.sql(s"ALTER TABLE mvj_$tag.fact ADD COLUMN score BIGINT")
     s.sql(s"UPDATE mvj_$tag.dim SET region = 'rY' WHERE doc_id = 2")
-    val st = SinkMvJoin.refresh(s, mvDir)
+    val st = SinkMvDist.refresh(s, factDir, mvDir)
     assert(st.applied)
     assert(mvRollup(s, mvDir) === joinRollup(s, factDir, dimDir))
     assert(mvRollup(s, mvDir).exists(_._1 == "rY"))
@@ -148,21 +159,22 @@ class SinkMvJoinSpec extends SparkSpec {
   test("join-MV vacuum: superseded states sweep, the current state survives") {
     val (s, factDir, dimDir, tag) = fixture("vac")
     val mvDir = factDir + ".mvj"
-    SinkMvJoin.create(s, factDir, dimDir, mvDir, "shard", "doc_id", Seq("d_region"), aggs)
+    create(s, factDir, dimDir, mvDir, Seq("d_region"), aggs)
     s.sql(s"DELETE FROM mvj_$tag.fact WHERE doc_id >= 1000")
-    SinkMvJoin.refresh(s, mvDir)
-    assert(SinkMvJoin.currentVersion(mvDir) === 2L)
-    val swept = SinkMvJoin.vacuum(mvDir, retainVersions = 1, olderThanMillis = 0L)
-    assert(swept === Seq("_mvj.v1.json"))
+    SinkMvDist.refresh(s, factDir, mvDir)
+    assert(SinkMvDist.currentVersion(mvDir) === 2L)
+    val live = SinkMvDist.stateFiles(mvDir, 2L).map(_._2)
+    val swept = SinkMvDist.vacuum(mvDir, retainVersions = 1, olderThanMillis = 0L)
+    assert(swept.contains("_mvd.v1.json") && !swept.exists(live.contains), swept.toString)
+    live.foreach(f => assert(new java.io.File(mvDir, f).exists(), s"vacuum swept live $f"))
     assert(mvRollup(s, mvDir) === joinRollup(s, factDir, dimDir))
-    intercept[Exception](SinkMvJoin.read(s, mvDir, asOf = Some(1L)))
+    intercept[Exception](SinkMvDist.read(s, mvDir, asOf = Some(1L)))
   }
 
   test("create rejects unresolvable group columns and duplicate dim keys") {
     val (s, factDir, dimDir, _) = fixture("val")
     val e1 = intercept[IllegalArgumentException](
-      SinkMvJoin.create(s, factDir, dimDir, factDir + ".x", "shard", "doc_id",
-        Seq("nope"), aggs))
+      create(s, factDir, dimDir, factDir + ".x", Seq("nope"), aggs))
     assert(e1.getMessage.contains("resolves in neither"), e1.getMessage)
   }
 
@@ -175,8 +187,8 @@ class SinkMvJoinSpec extends SparkSpec {
     s.sql(s"ALTER TABLE mvj_$tag.dim ADD COLUMN _tier STRING")
     s.sql(s"UPDATE mvj_$tag.dim SET _tier = concat('t', CAST(doc_id % 2 AS STRING))")
     val mvDir = factDir + ".mvju"
-    SinkMvJoin.create(s, factDir, dimDir, mvDir, "shard", "doc_id",
-      Seq("d__tier"), Seq(MvAgg("n", "count"), MvAgg("s", "sum", "doc_id")))
+    create(s, factDir, dimDir, mvDir, Seq("d__tier"),
+      Seq(MvAgg("n", "count"), MvAgg("s", "sum", "doc_id")))
     def want: Set[(String, Long, Long)] = {
       val f = s.read.format("graft.sources.ShardSinkSource").option("path", factDir).load()
       val d = s.read.format("graft.sources.ShardSinkSource").option("path", dimDir).load()
@@ -186,19 +198,19 @@ class SinkMvJoinSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum("doc_id").as("s"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     }
-    def got: Set[(String, Long, Long)] = SinkMvJoin.read(s, mvDir).collect()
+    def got: Set[(String, Long, Long)] = SinkMvDist.read(s, mvDir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === want)
     // both delta paths keep resolving the underscore column: a dim update
     // moves groups, a fact append folds against the evolved dim
     s.sql(s"UPDATE mvj_$tag.dim SET _tier = 'tX' WHERE doc_id = 3")
-    SinkMvJoin.refresh(s, mvDir)
+    SinkMvDist.refresh(s, factDir, mvDir)
     assert(got === want)
     s.read.format("graft.sources.DocGenSource")
       .option("numDocs", "2400").option("numPartitions", "2").load()
       .where(col("doc_id") >= 1200L && col("doc_id") < 1400L)
       .writeTo(s"mvj_$tag.fact").append()
-    SinkMvJoin.refresh(s, mvDir)
+    SinkMvDist.refresh(s, factDir, mvDir)
     assert(got === want)
     assert(got.exists(_._1 == "tX"))
   }

@@ -89,11 +89,8 @@ object SinkTestAccess {
       : Option[(Long, Int) => Boolean] = ShardSink.deletePredicate(fs)
 
   /** One-shot interleave for the MV concurrency spec: `f` runs inside the
-    * next refresh, after its delta is derived but before the state flip.
+    * next refresh, after its fold is derived but before the state flip.
     */
-  def onNextMvFlip(f: () => Unit): Unit = SinkMatView.refreshBarrier.set(f)
-
-  /** Same interleave for the DISTRIBUTED MV's refresh. */
   def onNextMvdFlip(f: () => Unit): Unit = SinkMvDist.refreshBarrier.set(f)
 
   /** Direct drive of the distributed MV's per-task segment writer, so the
