@@ -937,6 +937,29 @@ private[sources] object SinkFs {
   * manifests (`_manifest.v<N>.json`) are read; a directory without one
   * holds no committed data. The oracle-checked lifecycle fixtures that
   * drive this engine end to end live in [[SinkLifecycles]].
+  *
+  * Every version is published by ONE commit loop, [[commit]]: it pins a
+  * [[Base]], flips to exactly base+1 and, when a concurrent commit took
+  * that version first, applies the commit's conflict rule:
+  *   - blind appends and stream epochs re-base always ([[Commutes]]):
+  *     their files are new and job-unique, so no commit can conflict
+  *     with them (Delta's append-only rule);
+  *   - compaction re-bases iff every entry it pinned is still present
+  *     byte-identical — the winner only added files, which it carries
+  *     forward verbatim ([[rebasesIfIntact]]);
+  *   - copy-on-write and merge-on-read DELETE and replaceWhere re-base
+  *     iff, in addition, manifest statistics prove every added file
+  *     disjoint from the predicate ([[rebasesIfDisjoint]]): the serial
+  *     order would have left those rows untouched;
+  *   - everything else aborts ([[Aborts]]): truncate, ALTER, CHECK
+  *     constraint DDL, restore, clone and the copy-on-write and delta
+  *     row-level operations, whose content was derived from the pinned
+  *     base.
+  * Re-bases stop after 20 attempts. Independently of the rule, a commit
+  * aborts on any base that gained a CHECK constraint after its rows were
+  * validated, or — for a schema-evolving write — whose schema moved off
+  * the one its target was derived from ([[Pins]]). An aborted commit
+  * says which version won and why, and the winner stays intact.
   */
 object ShardSink {
   import org.apache.hadoop.fs.Path
@@ -1164,18 +1187,7 @@ object ShardSink {
         val nf =
           if (chunks.size == 1) s"part-c$gen-s$shard.tsv"
           else s"part-c$gen-s$shard-$k.tsv"
-        val tmp = new Path(dir, s"_tmp/$nf")
-        val w = SinkFs.create(tmp)
-        val bloom = DocBloom.empty()
-        val csAcc = new SinkColStats.LineAcc(csTable)
-        try chunk.foreach { case (d, l) =>
-          DocBloom.insert(bloom, d); csAcc.addLine(l); w.write(l); w.write("\n")
-        }
-        finally w.close()
-        SinkFs.moveOver(tmp, new Path(dir, nf))
-        SinkEntry(nf, chunk.size.toLong, shard, shard, "",
-          chunk.head._1, chunk.last._1, bf = DocBloom.encode(bloom),
-          cs = csAcc.encode())
+        writeDataFile(dir, nf, chunk.map(_._2), csTable)
       }
     }
     // priorEntries = the FULL pinned base: the re-base intact check must
@@ -1185,86 +1197,37 @@ object ShardSink {
     publishCompaction(dir, base, kept ++ newEntries, gen, retainVersions)
   }
 
-  /** Deterministic interleave hook for the re-base specs: runs ONCE just
-    * before the publish flip (after inputs were read and rewritten) —
-    * the window a concurrent commit would land in on a real deployment,
-    * impossible to schedule reliably with threads alone.
-    */
-  private[sources] val compactBarrier =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
-
-  /** The shared publish tail of [[compact]] and [[compactZOrder]]: flip
-    * the consolidated entries in with the moved horizon, then sweep ONLY
-    * what no retained version references — data files, delete vectors
-    * and change sidecars of versions at-or-above the horizon all
+  /** The shared publish tail of [[compact]] and the z-order rewrites:
+    * flip the consolidated entries in with the moved horizon, then sweep
+    * ONLY what no retained version references — data files, delete
+    * vectors and change sidecars of versions at-or-above the horizon all
     * survive, so every promised snapshot/feed range stays exactly
     * readable (expiry below the horizon is enforced by the readers).
     *
-    * CONFLICT RE-BASE (round 15): at 100 TB a compaction runs minutes to
-    * hours — aborting it because a blind append landed mid-flight would
-    * make maintenance unschedulable, so a lost flip race resolves like
-    * Iceberg/Delta commit conflicts: re-read the current census, and if
-    * every pinned INPUT entry is still present byte-identical (no DML
-    * touched what this rewrite consolidated), the interloper commits are
-    * pure additions — carry their entries forward verbatim and retry the
-    * flip one version up. Anything that changed an input (vector growth,
-    * CoW rewrite, truncate, restore, another compaction) still aborts
-    * loudly: the consolidated files were derived from a snapshot that no
-    * longer tells the truth. Data wins; maintenance adapts.
+    * A compaction runs minutes to hours at 100 TB, so a lost race
+    * re-bases over pure additions ([[rebasesIfIntact]]) instead of
+    * aborting — data wins, maintenance adapts.
     */
   private def publishCompaction(
       dir: String, base: Base, newEntries: Seq[SinkEntry], gen: Long,
       retainVersions: Int, opName: String = "compact"): Unit = {
-    Option(compactBarrier.getAndSet(null)).foreach(_.apply())
-    val (baseV, priorEntries) = (base.v, base.entries)
+    val priorEntries = base.entries
     val oldHz = horizonIn(base.m)
     // tags HOLD the horizon (Iceberg refs pin snapshots against
     // expiration): the horizon never moves past the oldest tagged
     // version, so tagged snapshots stay readable until dropped
     val tagFloor = listTags(dir).map(_._2).minOption.getOrElse(Long.MaxValue)
-    val inputFiles = priorEntries.map(_.file).toSet
-    var curBase = base
-    var carried: Seq[SinkEntry] = Nil
-    var attempt = 0
-    var committed = false
-    var newV = 0L
-    var newHz = 0L
-    while (!committed) {
-      newV = curBase.v + 1
-      newHz = math.min(tagFloor,
-        math.max(horizonIn(curBase.m), math.max(1L, newV - retainVersions)))
-      try {
-        writeManifestAt(dir, newEntries ++ carried,
-          if (attempt == 0) s"c$gen" else s"c$gen-r$attempt", curBase,
-          horizon = Some(newHz), op = Some(opName))
-        committed = true
-      } catch {
-        case ShardSinkConflict(_, v) =>
-          attempt += 1
-          val next = resolveBase(dir)
-          val cur = next.entries
-          val curByFile = cur.map(e => e.file -> e).toMap
-          val inputsIntact =
-            priorEntries.forall(e => curByFile.get(e.file).contains(e))
-          if (!inputsIntact || attempt > 20)
-            throw new IllegalStateException(
-              s"ShardSink concurrent-writer conflict at $dir: version $v was " +
-                s"committed while this $opName (base version $baseV) was in " +
-                (if (!inputsIntact)
-                  "flight and changed the operation's input files; the " +
-                    "operation aborted loudly and the concurrent commit is " +
-                    "intact — re-run against the new table state"
-                 else "flight and kept conflicting through 20 re-base " +
-                   "attempts; aborted loudly — re-run"))
-          // pure additions: carry the interlopers' entries forward
-          carried = cur.filterNot(e => inputFiles.contains(e.file))
-          curBase = next
-      }
-    }
+    def horizonOn(b: Base): Long =
+      math.min(tagFloor, math.max(horizonIn(b.m), math.max(1L, b.v + 1 - retainVersions)))
+    val published = (b: Base) => newEntries ++ additions(base, b)
+    val curBase = commit(dir, base, opName, retryTag(s"c$gen"), rebasesIfIntact(),
+      horizon = b => Some(horizonOn(b)))(published)
+    val newV = curBase.v + 1
+    val newHz = horizonOn(curBase)
     // one manifest read per version: the kept range and the expired
     // range are disjoint, and the base and the new version come from the
     // records in hand
-    val newRefs = (newEntries ++ carried).flatMap(fileRefs)
+    val newRefs = published(curBase).flatMap(fileRefs)
     val baseRefs = curBase.entries.flatMap(fileRefs) ++ curBase.m.toSeq.flatMap(_.cdc)
     def refsOfVersion(v: Long): Seq[String] =
       if (v == newV) newRefs else if (v == curBase.v) baseRefs else refsAt(dir, v)
@@ -1335,21 +1298,7 @@ object ShardSink {
     val csTable = schemaIn(base.m)
     val sorted = rows.sortBy { case (d, s, _) => (morton(d, s), d) }
     val newEntries = sorted.grouped(math.max(1, rowsPerFile)).zipWithIndex.map {
-      case (chunk, i) =>
-        val nf = s"part-c$gen-z$i.tsv"
-        val tmp = new Path(dir, s"_tmp/$nf")
-        val w = SinkFs.create(tmp)
-        val bloom = DocBloom.empty()
-        val csAcc = new SinkColStats.LineAcc(csTable)
-        try chunk.foreach { case (d, _, l) =>
-          DocBloom.insert(bloom, d); csAcc.addLine(l); w.write(l); w.write("\n")
-        }
-        finally w.close()
-        SinkFs.moveOver(tmp, new Path(dir, nf))
-        SinkEntry(nf, chunk.size.toLong,
-          chunk.iterator.map(_._2).min, chunk.iterator.map(_._2).max, "",
-          chunk.iterator.map(_._1).min, chunk.iterator.map(_._1).max,
-          bf = DocBloom.encode(bloom), cs = csAcc.encode())
+      case (chunk, i) => writeDataFile(dir, s"part-c$gen-z$i.tsv", chunk.map(_._3), csTable)
     }.toSeq
     publishCompaction(dir, base, newEntries, gen, retainVersions, opName = "zorder")
   }
@@ -1427,22 +1376,7 @@ object ShardSink {
     // doc_id tie-break keeps the layout deterministic (ids are unique)
     val sorted = rows.sortBy { case (cells, _) => (zOf(cells), cells(0).toLong) }
     val newEntries = sorted.grouped(math.max(1, rowsPerFile)).zipWithIndex.map {
-      case (chunk, i) =>
-        val nf = s"part-c$gen-z$i.tsv"
-        val tmp = new Path(dir, s"_tmp/$nf")
-        val w = SinkFs.create(tmp)
-        val bloom = DocBloom.empty()
-        val csAcc = new SinkColStats.LineAcc(table)
-        try chunk.foreach { case (cells, l) =>
-          DocBloom.insert(bloom, cells(0).toLong); csAcc.addLine(l)
-          w.write(l); w.write("\n")
-        }
-        finally w.close()
-        SinkFs.moveOver(tmp, new Path(dir, nf))
-        SinkEntry(nf, chunk.size.toLong,
-          chunk.iterator.map(_._1(1).toInt).min, chunk.iterator.map(_._1(1).toInt).max, "",
-          chunk.iterator.map(_._1(0).toLong).min, chunk.iterator.map(_._1(0).toLong).max,
-          bf = DocBloom.encode(bloom), cs = csAcc.encode())
+      case (chunk, i) => writeDataFile(dir, s"part-c$gen-z$i.tsv", chunk.map(_._2), table)
     }.toSeq
     publishCompaction(dir, base, newEntries, gen, retainVersions, opName = "zorder")
   }
@@ -1769,10 +1703,7 @@ object ShardSink {
   }
 
   /** A lost manifest-version race: some other commit renamed `version`
-    * into place first. Blind appends catch this and retry on a re-read
-    * base (they commute with every commit — Delta's append-only conflict
-    * rule); read-modify-write commits (DML, truncate, compaction) abort
-    * loudly instead, because their read set may no longer hold.
+    * into place first. [[commit]] answers it with the commit's rule.
     */
   private[sources] final case class ShardSinkConflict(dir: String, version: Long)
     extends RuntimeException(
@@ -1797,9 +1728,8 @@ object ShardSink {
     */
   private[sources] def writeManifestAt(
       dir: String, files: Seq[SinkEntry], tag: String, base: Base,
-      cdc: Option[String] = None, horizon: Option[Long] = None,
-      schema: Option[String] = None, op: Option[String] = None,
-      constraints: Option[Seq[(String, String)]] = None): Unit = {
+      cdc: Option[String], horizon: Option[Long], schema: Option[String],
+      op: Option[String], constraints: Option[Seq[(String, String)]]): Unit = {
     val version = base.v + 1
     val mTmp = new Path(dir, s"_manifest.$tag.tmp")
     // `op` is a per-commit marker (NOT table state — never carried
@@ -1846,123 +1776,162 @@ object ShardSink {
     writeHint(dir, version)
   }
 
-  /** Read-modify-write flip for callers that pinned their base with
-    * [[resolveBase]]: renames to exactly base+1 and converts a lost race
-    * into a loud abort — the conservative default for DML, truncate and
-    * compaction, whose rewritten content was derived from the pinned
-    * base and may be stale under the interloper's version. No files are
-    * lost either way: the interloper's commit is untouched, and this
-    * commit's artifacts stay invisible (never manifested).
+  /** How a commit answers a lost manifest race: given the base it pinned
+    * and the winner's base, `None` re-runs it on the winner's base (the
+    * commits commute), `Some(why)` aborts it. The rules are described
+    * once, in the [[ShardSink]] scaladoc.
     */
-  private[sources] def flipFromBase(
-      dir: String, base: Base, files: Seq[SinkEntry], tag: String,
-      cdc: Option[String] = None, horizon: Option[Long] = None,
-      schema: Option[String] = None, op: Option[String] = None,
-      constraints: Option[Seq[(String, String)]] = None): Unit =
-    try writeManifestAt(dir, files, tag, base, cdc, horizon, schema, op, constraints)
-    catch {
-      case ShardSinkConflict(_, v) =>
-        throw new IllegalStateException(
-          s"ShardSink concurrent-writer conflict at $dir: version $v was " +
-            s"committed while this operation (base version ${base.v}) was " +
-            "in flight; the operation aborted loudly and the concurrent " +
-            "commit is intact — re-run against the new table state")
-    }
+  private[sources] type OnConflict = (Base, Base) => Option[String]
 
-  /** Deterministic interleave hook for the DML re-base specs: runs ONCE
-    * just before the flip attempt — same pattern as [[compactBarrier]].
+  /** Blind appends and stream epochs: their files are new and job-unique
+    * and no other commit can have read them, so they commute with every
+    * commit (Delta's append-only rule).
     */
-  private[sources] val dmlBarrier =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
+  private[sources] val Commutes: OnConflict = (_, _) => None
 
-  /** DML CONFLICT RE-BASE (round 15): the row-level twin of
-    * [[publishCompaction]]'s resolution — Delta/Iceberg conflict
-    * semantics for copy-on-write DELETE, merge-on-read DELETE and
-    * filtered OVERWRITE. A lost flip race re-reads the census and
-    * commits one version up iff the interleaved commits provably
-    * commute with this operation:
-    *
-    *   1. every pinned BASE entry is still present byte-identical (no
-    *      interloper touched a file this operation read, kept, rewrote
-    *      or vectored — a vector on a kept file would be silently
-    *      resurrected by the carried entry otherwise);
-    *   2. every ADDED entry is PROVABLY DISJOINT from the DML predicate
-    *      by manifest statistics — its shard range, doc envelope or
-    *      doc-id bloom rules out every row the predicate matches (the
-    *      same sound-superset derivations the read-side prune uses, so
-    *      "pruned" ⇒ "no row matches"). A serial execution (append
-    *      first, then this DML) would have left the appended rows
-    *      untouched, so carrying them forward verbatim IS the serial
-    *      result. Stats-less or possibly-matching files abort loudly:
-    *      the appended rows might have been deleted in the serial
-    *      order, and silently keeping them would un-serialize history;
-    *   3. the CHECK-constraint set is unchanged (a constraint added
-    *      mid-flight validated existing rows only — rows this commit
-    *      lands escaped both that scan and this writer's pinned
-    *      enforcement) and, when this commit carries a schema change,
-    *      nobody else changed the schema meanwhile.
-    *
-    * Anything else aborts loudly with the conservative message — data
-    * wins, the DML re-runs against the new state.
+  /** Read-modify-write commits whose content is derived from the pinned
+    * base and not re-derivable on another one (truncate, ALTER, CHECK
+    * constraints, restore, clone, copy-on-write and delta row-level
+    * operations).
     */
-  private[sources] def flipDmlRebase(
-      dir: String, base: Base, out: Seq[SinkEntry], tag: String, filters: Array[Filter],
-      cdc: Option[String] = None, op: Option[String] = None,
-      schema: Option[String] = None): Unit = {
-    Option(dmlBarrier.getAndSet(null)).foreach(_.apply())
-    val (baseV, baseEntries) = (base.v, base.entries)
+  private[sources] val Aborts: OnConflict =
+    (_, _) => Some("its result was derived from the base version")
+
+  /** Compaction and DML: re-base iff every pinned entry is still present
+    * byte-identical in the winner (no interloper touched a file this
+    * operation read, kept, rewrote or vectored — a vector on a kept file
+    * would otherwise be silently dropped by the carried entry) and
+    * `admit` accepts the winner's [[additions]].
+    */
+  private[sources] def rebasesIfIntact(
+      admit: Seq[SinkEntry] => Option[String] = _ => None): OnConflict = (pinned, winner) => {
+    val now = winner.entries.map(e => e.file -> e).toMap
+    if (!pinned.entries.forall(e => now.get(e.file).contains(e)))
+      Some("changed the operation's input files")
+    else admit(additions(pinned, winner))
+  }
+
+  /** The DML rule: besides intact inputs, every added entry must be
+    * PROVABLY DISJOINT from the DML predicate by manifest statistics —
+    * its shard range, doc envelope or doc-id bloom rules out every row
+    * the predicate matches (the same sound-superset derivations the
+    * read-side prune uses). A serial execution (append first, then this
+    * DML) would have left those rows untouched, so carrying them forward
+    * verbatim IS the serial result; a stats-less or possibly-matching
+    * file might have lost rows in the serial order, so it aborts.
+    */
+  private[sources] def rebasesIfDisjoint(filters: Array[Filter]): OnConflict = {
     val ps = shardPruneSet(filters)
     val pd = docPruneRange(filters)
     val pp = docPointSet(filters)
-    val baseFiles = baseEntries.map(_.file).toSet
-    var curBase = base
-    var carried: Seq[SinkEntry] = Nil
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      try {
-        writeManifestAt(dir, out ++ carried,
-          if (attempt == 0) tag else s"$tag-r$attempt", curBase,
-          cdc, schema = schema, op = op)
-        committed = true
-      } catch {
-        case ShardSinkConflict(_, v) =>
-          attempt += 1
-          val next = resolveBase(dir)
-          val cur = next.entries
-          val curByFile = cur.map(e => e.file -> e).toMap
-          val inputsIntact =
-            baseEntries.forall(e => curByFile.get(e.file).contains(e))
-          val added = cur.filterNot(e => baseFiles.contains(e.file))
-          // disjointness must be PROVEN per added file; an entry no
-          // dimension can rule out may hold matching rows — abort
-          val disjoint = added.forall(e =>
-            ps.exists(ss => !e.mayContainShard(ss)) ||
-              pd.exists { case (lo, hi) => !e.mayContainDocRange(lo, hi) } ||
-              pp.exists(s => !e.mayContainDocPoints(s)))
-          val ckSame = constraintsIn(next.m) == constraintsIn(base.m)
-          val schemaSafe = schema.isEmpty ||
-            next.m.flatMap(_.schema) == base.m.flatMap(_.schema)
-          if (!inputsIntact || !disjoint || !ckSame || !schemaSafe || attempt > 20)
-            throw new IllegalStateException(
-              s"ShardSink concurrent-writer conflict at $dir: version $v was " +
-                s"committed while this ${op.getOrElse("DML")} (base version " +
-                s"$baseV) was in flight and " +
-                (if (!inputsIntact) "changed the operation's input files"
-                 else if (!disjoint)
-                   "added files that may match the operation's predicate " +
-                     "(manifest statistics cannot prove them disjoint)"
-                 else if (!ckSame) "changed the table's CHECK constraints"
-                 else if (!schemaSafe) "changed the table schema"
-                 else "kept conflicting through 20 re-base attempts") +
-                "; the operation aborted loudly and the concurrent commit " +
-                "is intact — re-run against the new table state")
-          carried = added
-          curBase = next
+    rebasesIfIntact { added =>
+      val disjoint = added.forall(e =>
+        ps.exists(ss => !e.mayContainShard(ss)) ||
+          pd.exists { case (lo, hi) => !e.mayContainDocRange(lo, hi) } ||
+          pp.exists(s => !e.mayContainDocPoints(s)))
+      if (disjoint) None
+      else Some("added files that may match the operation's predicate " +
+        "(manifest statistics cannot prove them disjoint)")
+    }
+  }
+
+  /** The entries of `b` the pinned base did not hold: what a re-based
+    * commit carries forward verbatim.
+    */
+  private[sources] def additions(pinned: Base, b: Base): Seq[SinkEntry] =
+    if (b eq pinned) Nil
+    else {
+      val files = pinned.entries.iterator.map(_.file).toSet
+      b.entries.filterNot(e => files.contains(e.file))
+    }
+
+  /** The per-attempt manifest tag of a commit named `tag`: the tag itself,
+    * then `<tag>-r<n>` for the n-th re-base.
+    */
+  private[sources] def retryTag(tag: String): Int => String =
+    n => if (n == 0) tag else s"$tag-r$n"
+
+  /** What a commit pinned when it derived its rows: the CHECK constraints
+    * its rows were validated against, and — for a schema-changing write —
+    * the schema it derived its target from. Every base the commit lands
+    * on is checked: a constraint added since then never saw the landed
+    * rows, and overwriting a concurrently changed schema would silently
+    * revert that evolution (Delta resolves both as transaction
+    * conflicts).
+    */
+  private[sources] final case class Pins(
+      constraints: Option[Seq[(String, String)]] = None, schema: Option[String] = None) {
+    def check(dir: String, op: String, b: Base): Unit = {
+      constraints.foreach { pinned =>
+        val added = constraintsIn(b.m).filterNot(pinned.contains)
+        if (added.nonEmpty)
+          throw new IllegalStateException(
+            s"ShardSink $op at $dir conflicts with a concurrent ADD CONSTRAINT " +
+              s"(${added.map(_._1).mkString(", ")}): the rows it lands were not " +
+              "validated against these CHECK constraints; aborted loudly — re-run")
+      }
+      schema.foreach { pinned =>
+        val cur = schemaString(schemaIn(b.m))
+        if (cur != pinned)
+          throw new IllegalStateException(
+            s"ShardSink schema-evolving $op at $dir conflicts with a concurrent " +
+              s"schema change ($pinned -> $cur); aborted loudly — re-run")
       }
     }
   }
 
+  /** Deterministic interleave hook for the concurrency specs: runs ONCE at
+    * the start of the next [[commit]] — after the commit pinned its base
+    * and derived its content, before its first flip: the window a
+    * concurrent commit lands in on a real deployment, impossible to
+    * schedule reliably with threads alone.
+    */
+  private[sources] val beforeFlip =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
+
+  /** THE commit loop: every manifest version is published here. Flips
+    * `publish(b)` onto `b` = the `pinned` base (renaming to exactly
+    * base+1, so any interleaved commit collides, [[writeManifestAt]]);
+    * on a lost race `onConflict` either re-runs the flip on the winner's
+    * base or aborts loudly, naming the version that won and why — at most
+    * 20 re-bases. The `pins` guard is checked on every base the commit
+    * lands on. Returns the base the commit landed on. No files are lost
+    * either way: the winner's commit is untouched, and an aborted
+    * commit's artifacts stay invisible (never manifested).
+    */
+  private[sources] def commit(
+      dir: String, pinned: Base, op: String, tag: Int => String, onConflict: OnConflict,
+      pins: Pins = Pins(), cdc: Option[String] = None, schema: Option[String] = None,
+      constraints: Option[Seq[(String, String)]] = None,
+      horizon: Base => Option[Long] = _ => None)(publish: Base => Seq[SinkEntry]): Base = {
+    Option(beforeFlip.getAndSet(null)).foreach(_.apply())
+    @scala.annotation.tailrec
+    def attempt(n: Int, b: Base): Base = {
+      pins.check(dir, op, b)
+      val lost =
+        try {
+          writeManifestAt(dir, publish(b), tag(n), b, cdc, horizon(b), schema, Some(op),
+            constraints)
+          None
+        } catch { case c: ShardSinkConflict => Some(c.version) }
+      lost match {
+        case None => b
+        case Some(v) =>
+          val next = resolveBase(dir)
+          onConflict(pinned, next)
+            .orElse(if (n >= 20) Some("kept conflicting through 20 re-base attempts") else None)
+            .foreach { why =>
+              throw new IllegalStateException(
+                s"ShardSink concurrent-writer conflict at $dir: version $v was " +
+                  s"committed while this $op (base version ${pinned.v}) was in flight " +
+                  s"and $why; the operation aborted loudly and the concurrent commit " +
+                  "is intact — re-run against the new table state")
+            }
+          attempt(n + 1, next)
+      }
+    }
+    attempt(0, pinned)
+  }
 
   /** The committed file entries AS OF a specific manifest version (0 =
     * before any commit). Versions are retained (see [[writeManifestAt]]),
@@ -2053,16 +2022,16 @@ object ShardSink {
       require(violations == 0L,
         s"cannot add CHECK constraint $name: existing rows violate ($pred)")
     }
-    flipFromBase(dir, base, entries, s"ckadd${alterCounter.incrementAndGet()}",
-      constraints = Some(cur :+ ((name, pred))), op = Some("addConstraint"))
+    commit(dir, base, "addConstraint", retryTag(s"ckadd${alterCounter.incrementAndGet()}"),
+      Aborts, constraints = Some(cur :+ ((name, pred))))(_ => entries)
   }
 
   private[sources] def dropConstraint(dir: String, name: String): Unit = {
     val base = resolveBase(dir)
     val cur = constraintsIn(base.m)
     require(cur.exists(_._1 == name), s"no CHECK constraint $name on $dir")
-    flipFromBase(dir, base, base.entries, s"ckdrop${alterCounter.incrementAndGet()}",
-      constraints = Some(cur.filterNot(_._1 == name)), op = Some("dropConstraint"))
+    commit(dir, base, "dropConstraint", retryTag(s"ckdrop${alterCounter.incrementAndGet()}"),
+      Aborts, constraints = Some(cur.filterNot(_._1 == name)))(_ => base.entries)
   }
 
   private def typeNameOf(dt: org.apache.spark.sql.types.DataType): String = dt match {
@@ -2194,8 +2163,7 @@ object ShardSink {
     // column's envelopes: the new column is all-null for existing rows
     val scrubbed = base.entries.map(e =>
       if (e.cs.isEmpty) e else e.copy(cs = SinkColStats.dropIn(e.cs, name)))
-    flipFromBase(dir, base, scrubbed, s"alter${alterCounter.incrementAndGet()}",
-      op = Some("alter"), schema = Some(schemaString(cur.add(name, dt, nullable = true))))
+    alter(dir, base, scrubbed, cur.add(name, dt, nullable = true))
   }
 
   /** Widen an ADDED column's type (pure metadata): int→bigint,
@@ -2220,8 +2188,7 @@ object ShardSink {
       s"unsupported type change for $name: ${cur.fields(idx).dataType.simpleString} -> " +
         s"${to.simpleString} (only widenings int->bigint, int/bigint->double)")
     val widened = StructType(cur.fields.updated(idx, cur.fields(idx).copy(dataType = to)))
-    flipFromBase(dir, base, base.entries, s"alter${alterCounter.incrementAndGet()}",
-      op = Some("alter"), schema = Some(schemaString(widened)))
+    alter(dir, base, base.entries, widened)
   }
 
   /** Rename an ADDED column (pure metadata; positional mapping
@@ -2247,8 +2214,13 @@ object ShardSink {
     // renamed column keeps pruning and the old name carries nothing
     val carried = base.entries.map(e =>
       if (e.cs.isEmpty) e else e.copy(cs = SinkColStats.renameIn(e.cs, from, to)))
-    flipFromBase(dir, base, carried, s"alter${alterCounter.incrementAndGet()}",
-      op = Some("alter"), schema = Some(schemaString(renamed)))
+    alter(dir, base, carried, renamed)
+  }
+
+  /** The schema flip every column DDL ends in: same files, new schema. */
+  private def alter(dir: String, base: Base, entries: Seq[SinkEntry], to: StructType): Unit = {
+    commit(dir, base, "alter", retryTag(s"alter${alterCounter.incrementAndGet()}"), Aborts,
+      schema = Some(schemaString(to)))(_ => entries)
   }
 
   private val restoreCounter = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -2284,13 +2256,12 @@ object ShardSink {
       s"cannot restore $dir to version $toVersion: ${missing.sorted.mkString(", ")} " +
         "released by a later rewrite or compaction (compact with retainVersions " +
         "to keep snapshots restorable)")
-    flipFromBase(dir, base, entries, s"restore${restoreCounter.incrementAndGet()}",
-      schema = Some(schemaString(schemaIn(target))),
-      op = Some("restore"),
+    commit(dir, base, "restore", retryTag(s"restore${restoreCounter.incrementAndGet()}"),
+      Aborts, schema = Some(schemaString(schemaIn(target))),
       // Delta RESTORE reverts table METADATA with the data: the CHECK
       // constraint set becomes the target version's (an empty set writes
       // the empty-list override, not a carry-forward of the pre-restore set)
-      constraints = Some(constraintsIn(target)))
+      constraints = Some(constraintsIn(target)))(_ => entries)
   }
 
   /** A manifest entry naming a file OUTSIDE this table's directory — the
@@ -2413,9 +2384,9 @@ object ShardSink {
         file = new Path(src, e.file).toString,
         dv = if (e.hasDeletes) new Path(src, e.dv).toString else "")
     }
-    writeManifestAt(dst, cloned, s"clone${cloneCounter.incrementAndGet()}", NoBase,
-      schema = Some(schemaString(schemaIn(srcM))), constraints = Some(constraintsIn(srcM)),
-      op = Some("clone"))
+    commit(dst, NoBase, "clone", retryTag(s"clone${cloneCounter.incrementAndGet()}"), Aborts,
+      schema = Some(schemaString(schemaIn(srcM))),
+      constraints = Some(constraintsIn(srcM)))(_ => cloned)
   }
 
   /** TAGS (round 14) — Iceberg's named snapshot refs: a tag is an
@@ -2594,33 +2565,20 @@ object ShardSink {
       s"snapshot versionAsOf=$asOf expired: compaction removed ${missing.mkString(", ")}")
   }
 
-  /** Scan a TSV file to rebuild its manifest entry (recovery / rewrite
-    * paths — the rare cases where stats must be recomputed from data).
+  /** Write `lines` as the data file `name` — to a temp name, then one
+    * rename into place — and return its entry, statistics derived under
+    * `table` ([[FileStats]]): the driver-side twin of the task writers,
+    * used by compaction and copy-on-write rewrites.
     */
-  private[sources] def entryFromLines(
-      file: String, lines: Seq[String],
-      table: Option[StructType] = None): SinkEntry = {
-    var (mn, mx) = (Int.MaxValue, -1)
-    var (dn, dx) = (Long.MaxValue, -1L)
-    val bloom = DocBloom.empty() // rewrites keep point-lookup skipping
-    // per-column envelopes only when the caller KNOWS the lines' schema —
-    // stats computed against a guessed schema would prune unsoundly
-    val csAcc = table.map(t => new SinkColStats.LineAcc(t))
-    lines.foreach { l =>
-      val c = l.split("\t", 3)
-      val s = c(1).toInt
-      if (s < mn) mn = s
-      if (s > mx) mx = s
-      val d = c(0).toLong
-      if (d < dn) dn = d
-      if (d > dx) dx = d
-      DocBloom.insert(bloom, d)
-      csAcc.foreach(_.addLine(l))
-    }
-    SinkEntry(file, lines.size.toLong, if (mx < 0) -1 else mn, mx, "",
-      if (dx < 0L) -1L else dn, dx,
-      bf = if (lines.isEmpty) "" else DocBloom.encode(bloom),
-      cs = if (lines.isEmpty) "" else csAcc.map(_.encode()).getOrElse(""))
+  private[sources] def writeDataFile(
+      dir: String, name: String, lines: Iterable[String], table: StructType): SinkEntry = {
+    val tmp = new Path(dir, s"_tmp/$name")
+    val out = new DataFileOut(tmp, table)
+    val stats =
+      try { lines.foreach(out.writeLine); out.close() }
+      catch { case t: Throwable => out.abort(); throw t }
+    SinkFs.moveOver(tmp, new Path(dir, name))
+    stats.copy(file = name)
   }
 
   /** Compile a conjunctive source-Filter array over the (doc_id, shard)
@@ -2667,15 +2625,31 @@ object ShardSink {
 
   private val deleteCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Drop zero-row task messages at commit (deleting their temp files):
-    * a clustered write can leave empty shuffle partitions, and an empty
-    * committed file is manifest noise every later operation re-reads.
+  /** Driver side of the task-file protocol, shared by the batch, epoch,
+    * row-level and delta writes: a zero-row task file is dropped (a
+    * clustered write can leave empty shuffle partitions, and an empty
+    * committed file is manifest noise every later operation re-reads);
+    * the rest rename from their attempt-unique temps to the job-unique
+    * final names `name(i)` and become entries.
     */
-  private[sources] def nonEmpty(messages: Array[WriterCommitMessage]): Array[WriterCommitMessage] =
-    messages.filter {
-      case c: ShardSinkCommit if c.rows == 0L =>
-        SinkFs.delete(new Path(c.tempPath)); false
-      case _ => true
+  private[sources] def landTaskFiles(
+      dir: String, messages: Array[WriterCommitMessage], name: Int => String): Seq[SinkEntry] = {
+    val (empty, written) =
+      messages.toSeq.collect { case c: TaskFileCommit => c }.partition(_.file.rows == 0L)
+    empty.foreach(c => SinkFs.delete(new Path(c.tempPath)))
+    written.zipWithIndex.map { case (c, i) =>
+      SinkFs.moveOver(new Path(c.tempPath), new Path(dir, name(i)))
+      c.file.copy(file = name(i))
+    }
+  }
+
+  /** Job abort of every write: the task files' temps go, nothing else
+    * was ever visible.
+    */
+  private[sources] def abortTaskFiles(messages: Array[WriterCommitMessage]): Unit =
+    messages.foreach {
+      case c: TaskFileCommit => SinkFs.delete(new Path(c.tempPath))
+      case _ =>
     }
 
   /** The set of `shard` values a single filter could match, when the
@@ -2823,9 +2797,10 @@ object ShardSink {
     val (entries, obsolete, removed) =
       cowDrop(dir, base.entries, filters, recordRemoved = cdf)
     val gen = deleteCounter.incrementAndGet()
-    flipDmlRebase(dir, base, entries, s"d$gen", filters,
-      cdc = if (cdf) writeCdcSidecar(dir, s"d$gen", removed) else None,
-      op = Some("delete"))
+    commit(dir, base, "delete", retryTag(s"d$gen"), rebasesIfDisjoint(filters),
+      Pins(Some(constraintsIn(base.m))),
+      cdc = if (cdf) writeCdcSidecar(dir, s"d$gen", removed) else None)(
+      b => entries ++ additions(base, b))
     // physical cleanup AFTER the flip, same as truncate; cloned-in files
     // stay on the source's disk
     deleteOwned(dir, obsolete)
@@ -2848,7 +2823,7 @@ object ShardSink {
         s"unsupported predicate for shard sink: ${filters.mkString(", ")}"))
     // rewritten survivors re-derive per-column envelopes under the
     // CURRENT schema (the lines' physical layout: evolution only appends)
-    val csTable = Some(tableSchema(dir))
+    val csTable = tableSchema(dir)
     // shard-stats fast path: a pure-shard predicate can skip READING any
     // file whose recorded shard range cannot match (the metadata-only
     // case the clustered layout exists for)
@@ -2871,14 +2846,9 @@ object ShardSink {
         else if (kept.isEmpty) {
           obsolete += e.file; if (e.hasDeletes) obsolete += e.dv; None
         } else {
-          val nf = s"part-d${deleteCounter.incrementAndGet()}.tsv"
-          val tmp = new Path(dir, s"_tmp/$nf")
-          val w = SinkFs.create(tmp)
-          try kept.foreach { l => w.write(l); w.write("\n") } finally w.close()
-          SinkFs.moveOver(tmp, new Path(dir, nf))
           obsolete += e.file
           if (e.hasDeletes) obsolete += e.dv
-          Some(entryFromLines(nf, kept, csTable))
+          Some(writeDataFile(dir, s"part-d${deleteCounter.incrementAndGet()}.tsv", kept, csTable))
         }
       }
     }
@@ -3109,73 +3079,157 @@ object ShardSink {
     // conjunct, none satisfies the whole conjunction
     val prune = shardPruneSet(filters)
     val gen = morCounter.incrementAndGet()
-    var k = 0
-    // base pinned at read; lost race → loud abort (read-modify-write)
+    // base pinned at read; a lost race re-bases over disjoint additions
     val base = resolveBase(dir)
     // DML over a clone reads foreign files: same named error as reads
     requireForeignLive(dir, base.entries)
-    val entries = base.entries.flatMap { e =>
-      if (prune.exists(ss => !e.mayContainShard(ss))) Some(e) // untouched, unread
-      else {
-        val all = SinkFs.readLines(new Path(dir, e.file))
-        val dead: Set[Int] =
-          if (e.hasDeletes) readDeleteVector(new Path(dir, e.dv)) else Set.empty
-        val hit = all.zipWithIndex.collect {
-          case (l, i) if !dead.contains(i) && {
-            val c = l.split("\t", 3); drop(c(0).toLong, c(1).toInt)
-          } => i
-        }
-        if (hit.isEmpty) Some(e)
-        else if (dead.size + hit.size == all.size) None // fully dead: drop entry, keep file
-        else {
-          k += 1
-          val nv = s"del-m$gen-$k.pos"
-          writeDeleteVector(dir, nv, (dead ++ hit).toSeq)
-          Some(e.copy(rows = e.rows - hit.size, dv = nv))
-        }
-      }
+    val entries = foldDeletes(dir, gen, base.entries) { e =>
+      if (prune.exists(ss => !e.mayContainShard(ss))) Set.empty // untouched, unread
+      else SinkFs.readLines(new Path(dir, e.file)).iterator.zipWithIndex.collect {
+        case (l, i) if { val c = l.split("\t", 3); drop(c(0).toLong, c(1).toInt) } => i
+      }.toSet
     }
-    flipDmlRebase(dir, base, entries, s"m$gen", filters, op = Some("delete"))
+    commit(dir, base, "delete", retryTag(s"m$gen"), rebasesIfDisjoint(filters),
+      Pins(Some(constraintsIn(base.m))))(b => entries ++ additions(base, b))
     // no physical cleanup: MOR leaves every data file (and superseded
     // vector) in place — prior snapshots keep reading their exact rows
   }
-}
 
-/** Task-commit message: temp path, row count, and the file's observed
-  * shard range (−1/−1 when empty) — the per-file statistics the manifest
-  * records so group-scoped operations can prune files without reading
-  * them.
-  */
-case class ShardSinkCommit(
-    tempPath: String, rows: Long, shardMin: Int = -1, shardMax: Int = -1,
-    docMin: Long = -1L, docMax: Long = -1L, bf: String = "", cs: String = "")
-  extends WriterCommitMessage {
-  def toEntry(name: String): SinkEntry =
-    SinkEntry(name, rows, shardMin, shardMax, "", docMin, docMax, bf, cs)
-}
-
-class ShardSinkWrite(
-    path: String, queryId: String, truncate: Boolean = false,
-    tableSchema: StructType = DocGen.schema,
-    replaceFilters: Option[Array[org.apache.spark.sql.sources.Filter]] = None,
-    cdf: Boolean = false,
-    colMap: Array[Int] = null,
-    evolveTo: Option[String] = None,
-    basisSchema: String = null,
-    autoCompact: Option[Long] = None)
-  extends Write with BatchWrite with StreamingWrite
-  with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-
-  /** [[org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering]]:
-    * the sink DECLARES clustered-by-shard distribution + (shard, doc_id)
-    * ordering, so Spark inserts exactly one exchange (plus a local sort)
-    * before the write and every committed file is shard-whole — no shard
-    * straddles two files, and rows within a file arrive id-ordered. At
-    * 100 TB this is the difference between a landing zone a bucketed
-    * reader can consume in place and one that needs a full re-shuffle on
-    * first read. Partition COUNT is left to Spark (0 = no requirement):
-    * several shards may share one task's file, but never the reverse.
+  /** The merge-on-read delete write, shared by [[morDeleteImpl]] and the
+    * delta commit: folds each entry's `deleted` physical positions into
+    * its delete vector. An entry none of whose positions is newly dead
+    * stays as it is; one whose every live row died drops (its data file
+    * stays — earlier snapshots keep reading it); otherwise the union
+    * vector is written under the fresh name `del-m<gen>-<k>.pos` and the
+    * entry's live row count shrinks.
     */
+  private[sources] def foldDeletes(dir: String, gen: Long, entries: Seq[SinkEntry])(
+      deleted: SinkEntry => Set[Int]): Seq[SinkEntry] = {
+    var k = 0
+    entries.flatMap { e =>
+      val hit = deleted(e)
+      val dead: Set[Int] =
+        if (hit.isEmpty || !e.hasDeletes) Set.empty else readDeleteVector(new Path(dir, e.dv))
+      val fresh = hit -- dead
+      if (fresh.isEmpty) Some(e)
+      else if (fresh.size >= e.rows) None
+      else {
+        k += 1
+        val nv = s"del-m$gen-$k.pos"
+        writeDeleteVector(dir, nv, (dead ++ fresh).toSeq)
+        Some(e.copy(rows = e.rows - fresh.size, dv = nv))
+      }
+    }
+  }
+}
+
+/** The statistics of one data file, accumulated line by line as it is
+  * written or re-read: row count, shard and doc_id ranges (−1 when
+  * unknown), the doc_id bloom (manifest-level point-lookup skipping) and
+  * — only when the lines' schema is KNOWN, since envelopes computed
+  * against a guessed schema would prune unsoundly — the per-column
+  * envelopes ([[SinkColStats]]). The one builder of every data-derived
+  * [[SinkEntry]]: task writers, compaction chunks, copy-on-write
+  * survivors and recovered epochs.
+  */
+private[sources] final class FileStats(table: Option[StructType]) {
+  private var rows = 0L
+  private var sMin = Int.MaxValue
+  private var sMax = -1
+  private var dMin = Long.MaxValue
+  private var dMax = -1L
+  private val bloom = DocBloom.empty()
+  private val cols = table.map(new SinkColStats.LineAcc(_))
+
+  /** One line whose doc_id and shard the caller already holds. */
+  def add(doc: Long, shard: Int, line: String): Unit = {
+    note(doc, shard)
+    cols.foreach(_.addLine(line))
+  }
+
+  /** One TSV line, parsed here. */
+  def addLine(line: String): Unit = {
+    val cells = line.split("\t", -1)
+    note(cells(0).toLong, cells(1).toInt)
+    cols.foreach(_.add(cells))
+  }
+
+  private def note(doc: Long, shard: Int): Unit = {
+    if (shard < sMin) sMin = shard
+    if (shard > sMax) sMax = shard
+    if (doc < dMin) dMin = doc
+    if (doc > dMax) dMax = doc
+    DocBloom.insert(bloom, doc)
+    rows += 1
+  }
+
+  def entry(file: String): SinkEntry =
+    SinkEntry(file, rows, if (sMax < 0) -1 else sMin, sMax, "",
+      if (dMax < 0L) -1L else dMin, dMax,
+      bf = if (rows == 0L) "" else DocBloom.encode(bloom),
+      cs = if (rows == 0L) "" else cols.map(_.encode()).getOrElse(""))
+}
+
+/** One data file being written: lines stream to `tmp` (created with the
+  * first line — an empty task leaves no file) and feed its
+  * [[FileStats]] under the writer's pinned table schema. `close` returns
+  * the file's entry (named at landing); `abort` leaves nothing.
+  */
+private[sources] final class DataFileOut(tmp: org.apache.hadoop.fs.Path, table: StructType) {
+  private var out: java.io.BufferedWriter = null
+  private val stats = new FileStats(Some(table))
+
+  private def put(line: String): Unit = {
+    if (out == null) out = SinkFs.create(tmp)
+    out.write(line)
+    out.write("\n")
+  }
+
+  def write(doc: Long, shard: Int, line: String): Unit = {
+    stats.add(doc, shard, line)
+    put(line)
+  }
+
+  def writeLine(line: String): Unit = {
+    stats.addLine(line)
+    put(line)
+  }
+
+  def close(): SinkEntry = {
+    if (out != null) out.close()
+    stats.entry("")
+  }
+
+  def abort(): Unit = {
+    if (out != null) { try out.close() catch { case _: Throwable => () } }
+    SinkFs.delete(tmp)
+  }
+}
+
+/** Task-commit message of a task that wrote a data file: its temp path
+  * and its statistics (`file.file` is empty until the driver lands it
+  * under its final name, [[ShardSink.landTaskFiles]]).
+  */
+sealed trait TaskFileCommit extends WriterCommitMessage {
+  def tempPath: String
+  def file: SinkEntry
+}
+
+case class ShardSinkCommit(tempPath: String, file: SinkEntry) extends TaskFileCommit
+
+/** [[org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering]]
+  * of the writes that land whole files: clustered-by-shard distribution
+  * plus (shard, doc_id) ordering, so Spark inserts exactly one exchange
+  * (plus a local sort) before the write and every committed file is
+  * shard-whole — no shard straddles two files, and rows within a file
+  * arrive id-ordered. At 100 TB this is the difference between a landing
+  * zone a bucketed reader can consume in place and one that needs a full
+  * re-shuffle on first read. Partition COUNT is left to Spark (0 = no
+  * requirement): several shards may share one task's file, but never the
+  * reverse.
+  */
+trait ShardClusteredWrite
+  extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
   override def requiredDistribution()
       : org.apache.spark.sql.connector.distributions.Distribution =
     org.apache.spark.sql.connector.distributions.Distributions.clustered(
@@ -3189,6 +3243,19 @@ class ShardSinkWrite(
       Expressions.sort(
         Expressions.column("doc_id"),
         org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
+}
+
+/** The write [[ShardSinkTable.newWriteBuilder]] builds: append, truncate,
+  * filtered overwrite (replaceWhere) and streaming epochs. `evolveTo` is
+  * the schema this write persists in its own commit (a mergeSchema write
+  * or a staged REPLACE), derived from `basisSchema`.
+  */
+class ShardSinkWrite(
+    path: String, queryId: String, truncate: Boolean, tableSchema: StructType,
+    replaceFilters: Option[Array[org.apache.spark.sql.sources.Filter]], cdf: Boolean,
+    colMap: Array[Int], evolveTo: Option[String], basisSchema: String,
+    autoCompact: Option[Long])
+  extends Write with BatchWrite with StreamingWrite with ShardClusteredWrite {
 
   override def toBatch: BatchWrite = this
   override def toStreaming: StreamingWrite = this
@@ -3197,40 +3264,12 @@ class ShardSinkWrite(
   override def useCommitCoordinator(): Boolean = true
 
   // CHECK constraints pinned at write-build (driver): every task enforces
-  // this set per row. If an ADD CONSTRAINT lands between build and commit,
-  // the commit-side guard aborts rather than flip rows that were never
-  // validated against the newcomer (Delta resolves the same race as a
-  // transaction conflict).
+  // this set per row, and the commit aborts if one was added since
   private val pinnedCks = ShardSink.currentConstraints(path)
-
-  private def requireNoNewConstraints(base: ShardSink.Base): Unit = {
-    val added = ShardSink.constraintsIn(base.m).filterNot(pinnedCks.contains)
-    if (added.nonEmpty)
-      throw new IllegalStateException(
-        s"ShardSink write at $path conflicts with a concurrent ADD CONSTRAINT " +
-          s"(${added.map(_._1).mkString(", ")}): written rows were not validated " +
-          "against it; aborted loudly — re-run")
-  }
-
-  // an EVOLVING commit pins the schema it derived its target from: if a
-  // concurrent ALTER landed a different shape in between, overwriting the
-  // schema key would silently drop that evolution — abort loudly instead
-  private val pinnedSchema =
-    if (evolveTo.isDefined)
-      // the schema the write target was DERIVED from — never a re-read
-      // (review fix: re-reading here raced a concurrent ALTER past the
-      // guard); null basis only on legacy constructions, which never
-      // evolve
-      Option(basisSchema).getOrElse(ShardSink.schemaString(ShardSink.tableSchema(path)))
-    else null
-  private def requireSchemaUnchanged(base: ShardSink.Base): Unit =
-    if (evolveTo.isDefined) {
-      val cur = ShardSink.schemaString(ShardSink.schemaIn(base.m))
-      if (cur != pinnedSchema)
-        throw new IllegalStateException(
-          s"ShardSink schema-evolving write at $path conflicts with a concurrent " +
-            s"schema change ($pinnedSchema -> $cur); aborted loudly — re-run")
-    }
+  // an EVOLVING commit also pins the schema it derived its target from —
+  // never a re-read (review fix: re-reading raced a concurrent ALTER
+  // past the guard)
+  private val pins = ShardSink.Pins(Some(pinnedCks), evolveTo.map(_ => basisSchema))
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new ShardSinkWriterFactory(path, queryId, table = tableSchema,
@@ -3250,39 +3289,16 @@ class ShardSinkWrite(
   import org.apache.hadoop.fs.Path
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    // zero-row task files are dropped at commit (a clustered replacement
-    // can leave empty shuffle partitions): delete the temp, manifest nothing
-    val epochFiles = ShardSink.nonEmpty(messages).zipWithIndex.map { case (m, i) =>
-      val c = m.asInstanceOf[ShardSinkCommit]
-      val dest = new Path(path, s"part-e$epochId-$i.tsv")
-      SinkFs.moveOver(new Path(c.tempPath), dest)
-      c.toEntry(dest.getName)
-    }
-    // replace-then-append keyed on the epoch prefix = replay idempotence.
-    // Same optimistic protocol as the batch Append: pin the base, flip to
-    // base+1, and on a lost race re-apply the epoch transform on the
-    // winner's manifest (the transform is idempotent, so re-application
-    // is exactly correct — a concurrent appender's files are preserved).
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val base = ShardSink.resolveBase(path)
-      requireNoNewConstraints(base)
+    val epochFiles = ShardSink.landTaskFiles(path, messages, i => s"part-e$epochId-$i.tsv")
+    // replace-then-append keyed on the epoch prefix = replay idempotence;
+    // the transform is idempotent, so re-applying it on a race winner's
+    // base is exactly correct (a concurrent appender's files are kept)
+    ShardSink.commit(path, ShardSink.resolveBase(path), "streamingUpdate",
+      n => s"$queryId-e$epochId-a$n", ShardSink.Commutes, ShardSink.Pins(Some(pinnedCks))) { b =>
       val kept =
-        if (base.entries.nonEmpty) base.entries.filterNot(_.file.startsWith(s"part-e$epochId-"))
+        if (b.entries.nonEmpty) b.entries.filterNot(_.file.startsWith(s"part-e$epochId-"))
         else recoverPriorEpochs(epochId)
-      try {
-        ShardSink.writeManifestAt(
-          path, kept ++ epochFiles, s"$queryId-e$epochId-a$attempt", base,
-          op = Some("streamingUpdate"))
-        committed = true
-      } catch {
-        case ShardSink.ShardSinkConflict(_, _) if attempt < 20 => attempt += 1
-        case c: ShardSink.ShardSinkConflict =>
-          throw new IllegalStateException(
-            s"ShardSink epoch $epochId commit at $path lost the manifest race " +
-              s"$attempt times (last: version ${c.version}); giving up loudly", c)
-      }
+      kept ++ epochFiles
     }
   }
 
@@ -3295,16 +3311,18 @@ class ShardSinkWrite(
     * recover from disk: their names are deterministic
     * (`part-e<epoch>-<i>.tsv`) and every one was fully renamed BEFORE any
     * manifest flip was attempted, so we rebuild prior epochs' entries
-    * from the directory listing (recounting rows). The replayed epoch's
-    * own files are excluded: its fresh commit replaces them. Batch
-    * (`part-b*`) files stay unrecovered — a batch job with no manifest
-    * never committed.
+    * from the directory listing (recounting rows; no column envelopes —
+    * the files' schema is unknown). The replayed epoch's own files are
+    * excluded: its fresh commit replaces them. Batch (`part-b*`) files
+    * stay unrecovered — a batch job with no manifest never committed.
     */
   private def recoverPriorEpochs(replayEpoch: Long): Seq[SinkEntry] = {
     val EpochFile = """part-e(\d+)-\d+\.tsv""".r
     SinkFs.listFileNames(new Path(path)).sorted.flatMap {
       case f @ EpochFile(e) if e.toLong != replayEpoch =>
-        Some(ShardSink.entryFromLines(f, SinkFs.readLines(new Path(path, f))))
+        val stats = new FileStats(None)
+        SinkFs.readLines(new Path(path, f)).foreach(stats.addLine)
+        Some(stats.entry(f))
       case _ => None
     }
   }
@@ -3318,33 +3336,17 @@ class ShardSinkWrite(
     // the old manifest keeps a consistent view right through the commit
     // (the `b` prefix also keeps the namespace disjoint from the
     // streaming path's `part-e<epoch>-<i>.tsv`)
-    val finals = ShardSink.nonEmpty(messages).zipWithIndex.map { case (m, i) =>
-      val c = m.asInstanceOf[ShardSinkCommit]
-      val dest = new Path(path, s"part-b$queryId-$i.tsv")
-      SinkFs.moveOver(new Path(c.tempPath), dest)
-      c.toEntry(dest.getName)
-    }
-    // manifest LAST, written to a temp name then renamed to the next
-    // fresh version: the job becomes visible as one rename or not at all.
-    //
-    // CONCURRENCY (optimistic, Delta's append-only rule): a blind Append
-    // commutes with EVERY other commit — its files are brand-new and
-    // job-unique, and no concurrent operation can have read them — so a
-    // lost version race is not a conflict: re-read the winner's manifest
-    // as the new base, merge, and flip at the next version. The pin-at-
-    // read + rename-to-base+1 protocol guarantees the loser of any
-    // interleaving is detected (no re-list between resolve and rename),
-    // so no interleaved commit's files can ever be silently dropped.
-    // Truncate is read-modify-write (it REPLACES the table): it pins its
-    // base once and aborts loudly on a lost race.
+    val finals = ShardSink.landTaskFiles(path, messages, i => s"part-b$queryId-$i.tsv")
+    // manifest LAST: the job becomes visible as one rename or not at all.
+    // A blind Append commutes with every commit; truncate and the
+    // filtered overwrite are read-modify-write (see the ShardSink
+    // scaladoc's conflict rules). A pending/merged schema flips IN the
+    // commit — the one atomic publication a staged REPLACE or mergeSchema
+    // write gets.
     if (truncate) {
       val base = ShardSink.resolveBase(path)
-      requireNoNewConstraints(base)
-      requireSchemaUnchanged(base)
-      // a pending/merged schema flips IN this commit — the one atomic
-      // publication a staged REPLACE (or mergeSchema overwrite) gets
-      ShardSink.flipFromBase(path, base, finals, queryId, op = Some("truncate"),
-        schema = evolveTo)
+      ShardSink.commit(path, base, "truncate", ShardSink.retryTag(queryId), ShardSink.Aborts,
+        pins, schema = evolveTo)(_ => finals)
       // cleanup AFTER the flip: old files are already invisible;
       // deleting them can race nothing
       ShardSink.deleteOwned(path,
@@ -3353,8 +3355,7 @@ class ShardSinkWrite(
       // FILTERED OVERWRITE (replaceWhere): ONE commit that drops the
       // rows matching the predicate (DELETE WHERE's copy-on-write core —
       // metadata-only for shard-aligned predicates) and lands the new
-      // files. Read-modify-write: base pinned once, flip to base+1,
-      // loud abort on a lost race.
+      // files, re-basing over disjoint additions like DELETE
       val filters = replaceFilters.get
       val drop = ShardSink.deletePredicate(filters).get // validated at build()
       // Delta's replaceWhere constraint: every INSERTED row must fall
@@ -3376,8 +3377,6 @@ class ShardSinkWrite(
           throw t
       }
       val base = ShardSink.resolveBase(path)
-      requireNoNewConstraints(base)
-      requireSchemaUnchanged(base)
       val (kept, obsolete, removed) = ShardSink.cowDrop(path, base.entries, filters,
         recordRemoved = cdf)
       // change record only when the table opted into CDF: the dropped
@@ -3390,29 +3389,14 @@ class ShardSinkWrite(
           SinkFs.readLines(new Path(path, e.file)).map(("insert", _)))
         ShardSink.writeCdcSidecar(path, s"o$queryId", removed ++ inserted)
       }
-      ShardSink.flipDmlRebase(path, base, kept ++ finals, s"o$queryId",
-        filters, cdc = cdc, op = Some("replaceWhere"), schema = evolveTo)
+      ShardSink.commit(path, base, "replaceWhere", ShardSink.retryTag(s"o$queryId"),
+        ShardSink.rebasesIfDisjoint(filters), pins, cdc = cdc, schema = evolveTo)(
+        b => kept ++ finals ++ ShardSink.additions(base, b))
       // physical cleanup AFTER the flip, same as DELETE
       ShardSink.deleteOwned(path, obsolete)
     } else {
-      var attempt = 0
-      var committed = false
-      while (!committed) {
-        val base = ShardSink.resolveBase(path)
-        requireNoNewConstraints(base)
-        requireSchemaUnchanged(base)
-        try {
-          ShardSink.writeManifestAt(path, base.entries ++ finals, s"$queryId-a$attempt",
-            base, op = Some("append"), schema = evolveTo)
-          committed = true
-        } catch {
-          case ShardSink.ShardSinkConflict(_, _) if attempt < 20 => attempt += 1
-          case c: ShardSink.ShardSinkConflict =>
-            throw new IllegalStateException(
-              s"ShardSink append at $path lost the manifest race $attempt times " +
-                s"(last: version ${c.version}); giving up loudly", c)
-        }
-      }
+      ShardSink.commit(path, ShardSink.resolveBase(path), "append", n => s"$queryId-a$n",
+        ShardSink.Commutes, pins, schema = evolveTo)(_.entries ++ finals)
       // AUTO-COMPACT (Delta autoOptimize, round 15): the append itself is
       // already durable — this maintenance pass runs binPack AFTER it, a
       // no-op when everything is in band. A lost race with concurrent DML
@@ -3425,10 +3409,7 @@ class ShardSinkWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case c: ShardSinkCommit => SinkFs.delete(new Path(c.tempPath))
-      case _ =>
-    }
+    ShardSink.abortTaskFiles(messages)
 }
 
 /** Standalone (serializable) streaming factory — must not capture the
@@ -3479,18 +3460,7 @@ class ShardSinkDataWriter(
   // file; only the committed attempt's message reaches driver commit
   private val tmp =
     new org.apache.hadoop.fs.Path(path, s"_tmp/$queryId-p$partitionId-a$taskId.tsv")
-  private val out = SinkFs.create(tmp)
-  private var rows = 0L
-  private var sMin = Int.MaxValue
-  private var sMax = -1
-  private var dMin = Long.MaxValue
-  private var dMax = -1L
-  // per-file doc_id bloom — manifest-level point-lookup skipping
-  private val bloom = DocBloom.empty()
-  // per-column min/max envelopes over the file's payload columns — the
-  // generic data-skipping stats ([[SinkColStats]]); fed the SERIALIZED
-  // line, whose cell layout IS this write's pinned table schema
-  private val csAcc = new SinkColStats.LineAcc(table)
+  private val out = new DataFileOut(tmp, table)
   // row width is fixed per write job: the column mapping is computed once
   private var colIdx: Array[Int] = null
 
@@ -3506,33 +3476,14 @@ class ShardSinkDataWriter(
           Array.tabulate(table.length)(base + _)
         }
     }
-    val shard = row.getInt(colIdx(1))
-    if (shard < sMin) sMin = shard
-    if (shard > sMax) sMax = shard
-    val doc = row.getLong(colIdx(0))
-    if (doc < dMin) dMin = doc
-    if (doc > dMax) dMax = doc
-    DocBloom.insert(bloom, doc)
     checkRow(row, colIdx)
-    val line = ShardSink.serializeRow(row, colIdx, table)
-    csAcc.addLine(line)
-    out.write(line)
-    out.write("\n")
-    rows += 1
+    out.write(row.getLong(colIdx(0)), row.getInt(colIdx(1)),
+      ShardSink.serializeRow(row, colIdx, table))
   }
 
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    ShardSinkCommit(tmp.toString, rows, if (sMax < 0) -1 else sMin, sMax,
-      if (dMax < 0L) -1L else dMin, dMax,
-      if (rows == 0L) "" else DocBloom.encode(bloom),
-      cs = if (rows == 0L) "" else csAcc.encode())
-  }
+  override def commit(): WriterCommitMessage = ShardSinkCommit(tmp.toString, out.close())
 
-  override def abort(): Unit = {
-    try out.close() catch { case _: Throwable => () }
-    SinkFs.delete(tmp) // a failed attempt leaves nothing
-  }
+  override def abort(): Unit = out.abort() // a failed attempt leaves nothing
 
   override def close(): Unit = ()
 }
@@ -4549,23 +4500,8 @@ class ShardSinkRowLevelScan(path: String, op: ShardSinkRowLevelOperation)
   */
 class ShardSinkReplaceDataWrite(
     path: String, queryId: String, affected: () => Seq[String], cdf: Boolean = false)
-  extends Write with BatchWrite
-  with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  extends Write with BatchWrite with ShardClusteredWrite {
   import org.apache.hadoop.fs.Path
-
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution =
-    org.apache.spark.sql.connector.distributions.Distributions.clustered(
-      Array(Expressions.identity("shard")))
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    Array(
-      Expressions.sort(
-        Expressions.column("shard"),
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING),
-      Expressions.sort(
-        Expressions.column("doc_id"),
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
 
   override def toBatch: BatchWrite = this
 
@@ -4579,25 +4515,14 @@ class ShardSinkReplaceDataWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val replaced = affected().toSet
-    val finals = ShardSink.nonEmpty(messages).zipWithIndex.map { case (m, i) =>
-      val c = m.asInstanceOf[ShardSinkCommit]
-      val dest = new Path(path, s"part-r$queryId-$i.tsv")
-      SinkFs.moveOver(new Path(c.tempPath), dest)
-      c.toEntry(dest.getName)
-    }
+    val finals = ShardSink.landTaskFiles(path, messages, i => s"part-r$queryId-$i.tsv")
     // base pinned at commit-read; additionally every file the operation
     // SCAN read must still be in the base — a concurrent DML/compaction
     // that rewrote one of them between scan and commit invalidates the
     // replacement rows, so this commit aborts loudly instead of
     // resurrecting superseded data
     val pinned = ShardSink.resolveBase(path)
-    val base = pinned.entries
-    val addedCks = ShardSink.constraintsIn(pinned.m).filterNot(pinnedCks.contains)
-    if (addedCks.nonEmpty)
-      throw new IllegalStateException(
-        s"ShardSink row-level operation at $path conflicts with a concurrent " +
-          s"ADD CONSTRAINT (${addedCks.map(_._1).mkString(", ")}); aborted loudly — re-run")
-    val (swapped, kept) = base.partition(e => replaced.contains(e.file))
+    val (swapped, kept) = pinned.entries.partition(e => replaced.contains(e.file))
     val vanished = replaced -- swapped.map(_.file).toSet
     if (vanished.nonEmpty)
       throw new IllegalStateException(
@@ -4631,18 +4556,15 @@ class ShardSinkReplaceDataWrite(
         .flatMap { case (l, n) => Iterator.fill(n)(("delete", l)) }.toSeq
       ShardSink.writeCdcSidecar(path, s"r$queryId", removed ++ inserted.toSeq)
     }
-    ShardSink.flipFromBase(path, pinned, kept ++ finals, s"r$queryId", cdc = cdc,
-      op = Some("rewrite"))
+    ShardSink.commit(path, pinned, "rewrite", ShardSink.retryTag(s"r$queryId"),
+      ShardSink.Aborts, ShardSink.Pins(Some(pinnedCks)), cdc = cdc)(_ => kept ++ finals)
     // replaced data files AND their (now folded-in) delete vectors;
     // cloned-in files are manifest-only removals (the source keeps them)
     ShardSink.deleteOwned(path, swapped.flatMap(ShardSink.fileRefs))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case c: ShardSinkCommit => SinkFs.delete(new Path(c.tempPath))
-      case _ =>
-    }
+    ShardSink.abortTaskFiles(messages)
 }
 
 /** DELTA-BASED row-level operations (round 13 — the merge-on-read rung
@@ -4718,16 +4640,14 @@ class ShardSinkDeltaOperation(
   */
 case class ShardSinkDeltaCommit(
     deletes: Map[String, Seq[Long]],
-    tempPath: String, rows: Long, shardMin: Int = -1, shardMax: Int = -1,
-    docMin: Long = -1L, docMax: Long = -1L, bf: String = "",
     // UPDATE operations: file → (physical position of the old row, the
     // new row's TSV line). The position also folds into the file's
     // delete vector; the line also landed in this task's appended file —
     // this pairing exists so the commit can record exact
     // update_preimage/update_postimage change events.
-    updates: Map[String, Seq[(Long, String)]] = Map.empty,
-    cs: String = "")
-  extends WriterCommitMessage
+    updates: Map[String, Seq[(Long, String)]],
+    tempPath: String, file: SinkEntry)
+  extends TaskFileCommit
 
 class ShardSinkDeltaWrite(path: String, info: LogicalWriteInfo, cdf: Boolean = false)
   extends Write with DeltaWrite with DeltaBatchWrite {
@@ -4771,50 +4691,21 @@ class ShardSinkDeltaWrite(path: String, info: LogicalWriteInfo, cdf: Boolean = f
     allUpd.foreach { case (f, us) =>
       allDel(f) = allDel.getOrElse(f, Set.empty) ++ us.map(_._1.toInt)
     }
-    val inserts = msgs.filter(_.rows > 0L).zipWithIndex.map { case (m, i) =>
-      val dest = new Path(path, s"part-u${info.queryId()}-$i.tsv")
-      SinkFs.moveOver(new Path(m.tempPath), dest)
-      SinkEntry(dest.getName, m.rows, m.shardMin, m.shardMax, "", m.docMin, m.docMax,
-        bf = m.bf, cs = m.cs)
-    }
-    msgs.filter(_.rows == 0L).foreach(m => SinkFs.delete(new Path(m.tempPath)))
+    val inserts = ShardSink.landTaskFiles(path, messages, i => s"part-u${info.queryId()}-$i.tsv")
     val gen = ShardSink.nextMorGen()
-    var k = 0
     // base pinned at commit-read; a delete targeting a file no longer in
     // the base means a concurrent commit rewrote rows this operation's
     // positions were resolved against — positional deletes against the
     // rewritten layout would hit the WRONG rows, so abort loudly
     val pinned = ShardSink.resolveBase(path)
-    val base = pinned.entries
-    val addedCks = ShardSink.constraintsIn(pinned.m).filterNot(pinnedCks.contains)
-    if (addedCks.nonEmpty)
-      throw new IllegalStateException(
-        s"ShardSink delta commit at $path conflicts with a concurrent " +
-          s"ADD CONSTRAINT (${addedCks.map(_._1).mkString(", ")}); aborted loudly — re-run")
-    val vanished = allDel.keySet -- base.map(_.file).toSet
+    val vanished = allDel.keySet -- pinned.entries.map(_.file).toSet
     if (vanished.nonEmpty)
       throw new IllegalStateException(
         s"ShardSink delta commit at $path conflicts with a concurrent commit: " +
           s"positional deletes target files no longer current " +
           s"(${vanished.toSeq.sorted.mkString(", ")}); aborted loudly — re-run")
-    val updated = base.flatMap { e =>
-      allDel.get(e.file) match {
-        case None => Some(e)
-        case Some(ps) =>
-          val dead: Set[Int] =
-            if (e.hasDeletes) ShardSink.readDeleteVector(new Path(path, e.dv))
-            else Set.empty
-          val fresh = ps -- dead
-          if (fresh.isEmpty) Some(e)
-          else if (fresh.size >= e.rows) None // all live rows died: entry drops, file stays
-          else {
-            k += 1
-            val nv = s"del-m$gen-$k.pos"
-            ShardSink.writeDeleteVector(path, nv, (dead ++ fresh).toSeq)
-            Some(e.copy(rows = e.rows - fresh.size, dv = nv))
-          }
-      }
-    }
+    val updated = ShardSink.foldDeletes(path, gen, pinned.entries)(
+      e => allDel.getOrElse(e.file, Set.empty))
     // CHANGE RECORD, only when the table opted into CDF AND updates rode
     // this commit: a pure delete/insert delta derives exactly from the
     // manifest diff (vector growth / new part-u files — zero write
@@ -4847,15 +4738,12 @@ class ShardSinkDeltaWrite(path: String, info: LogicalWriteInfo, cdf: Boolean = f
       })
       ShardSink.writeCdcSidecar(path, s"u$gen", recs.toSeq)
     }
-    ShardSink.flipFromBase(path, pinned, updated ++ inserts, s"u$gen", cdc = cdc,
-      op = Some("delta"))
+    ShardSink.commit(path, pinned, "delta", ShardSink.retryTag(s"u$gen"), ShardSink.Aborts,
+      ShardSink.Pins(Some(pinnedCks)), cdc = cdc)(_ => updated ++ inserts)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case c: ShardSinkDeltaCommit => SinkFs.delete(new Path(c.tempPath))
-      case _ =>
-    }
+    ShardSink.abortTaskFiles(messages)
 }
 
 case class ShardSinkDeltaWriterFactory(
@@ -4884,16 +4772,7 @@ class ShardSinkDeltaWriter(
     scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
   private val tmp =
     new org.apache.hadoop.fs.Path(path, s"_tmp/delta-$queryId-p$partitionId-a$taskId.tsv")
-  private var out: java.io.BufferedWriter = null
-  private var rows = 0L
-  private var sMin = Int.MaxValue
-  private var sMax = -1
-  private var dMin = Long.MaxValue
-  private var dMax = -1L
-  // per-file doc_id bloom — manifest-level point-lookup skipping
-  private val bloom = DocBloom.empty()
-  // per-column envelopes for the appended file ([[SinkColStats]])
-  private val csAcc = new SinkColStats.LineAcc(table)
+  private val out = new DataFileOut(tmp, table)
 
   private val updates = scala.collection.mutable
     .Map.empty[String, scala.collection.mutable.ArrayBuffer[(Long, String)]]
@@ -4923,36 +4802,18 @@ class ShardSinkDeltaWriter(
 
   private def writeLine(row: InternalRow): String = {
     checkRow(row, colIdx)
-    val shard = row.getInt(colIdx(1))
-    if (shard < sMin) sMin = shard
-    if (shard > sMax) sMax = shard
-    val doc = row.getLong(colIdx(0))
-    if (doc < dMin) dMin = doc
-    if (doc > dMax) dMax = doc
-    DocBloom.insert(bloom, doc)
-    if (out == null) out = SinkFs.create(tmp)
     val line = ShardSink.serializeRow(row, colIdx, table)
-    csAcc.addLine(line)
-    out.write(line); out.write("\n")
-    rows += 1
+    out.write(row.getLong(colIdx(0)), row.getInt(colIdx(1)), line)
     line
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (out != null) out.close()
+  override def commit(): WriterCommitMessage =
     ShardSinkDeltaCommit(
       deletes.map { case (f, ps) => f -> ps.toSeq }.toMap,
-      tmp.toString, rows, if (sMax < 0) -1 else sMin, sMax,
-      if (dMax < 0L) -1L else dMin, dMax,
-      if (rows == 0L) "" else DocBloom.encode(bloom),
       updates.map { case (f, us) => f -> us.toSeq }.toMap,
-      cs = if (rows == 0L) "" else csAcc.encode())
-  }
+      tmp.toString, out.close())
 
-  override def abort(): Unit = {
-    if (out != null) { try out.close() catch { case _: Throwable => () } }
-    SinkFs.delete(tmp)
-  }
+  override def abort(): Unit = out.abort()
 
   override def close(): Unit = ()
 }

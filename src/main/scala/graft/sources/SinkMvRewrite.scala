@@ -261,11 +261,10 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     plan.transform {
       case agg @ Aggregate(groupExprs, aggExprs, child, _) =>
         try rewriteAggregate(agg, groupExprs, aggExprs, child).getOrElse(agg)
-        catch { case scala.util.control.NonFatal(e) =>
+        catch { case scala.util.control.NonFatal(_) =>
           // an optimizer rule must NEVER break the query: a stale
           // registration (renamed column, swept MV dir, corrupt header,
           // expired feed) bails to the base scan instead of escaping
-          if (sys.props.contains("graft.mvrw.debug")) e.printStackTrace()
           agg }
     }
   }
@@ -332,9 +331,7 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
     val screened: Seq[Screened] = shapes.flatMap { sh =>
       Option(registry.get(sh.fact.table.tableDir)).toSeq.flatten.map { mvDir =>
         try tryRewrite(agg, groupExprs, aggExprs, sh, mvDir)
-        catch { case scala.util.control.NonFatal(e) =>
-          if (sys.props.contains("graft.mvrw.debug")) e.printStackTrace()
-          NoMatch }
+        catch { case scala.util.control.NonFatal(_) => NoMatch }
       }
     }
     // cheapest-first: build lazily, fall to the next candidate on a
@@ -343,9 +340,7 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
       .sortBy(_.cost).iterator
       .map(m =>
         try m.build()
-        catch { case scala.util.control.NonFatal(e) =>
-          if (sys.props.contains("graft.mvrw.debug")) e.printStackTrace()
-          None })
+        catch { case scala.util.control.NonFatal(_) => None })
       .collectFirst { case Some(p) => p }
     built match {
       case Some(p) =>
@@ -1025,12 +1020,6 @@ object SinkMvRewrite extends Rule[LogicalPlan] {
       else 0L
     val cost = stateBytes + factFeed + dimFeed + compensation + hybridProbe
     val base = factBytes + dimBytes
-    if (sys.props.contains("graft.mvrw.debug"))
-      // scalastyle:off println
-      println(s"[mvrw] $mvDir cost=$cost (state=$stateBytes factFeed=$factFeed " +
-        s"dimFeed=$dimFeed comp=$compensation probe=$hybridProbe) " +
-        s"base=$base (fact=$factBytes dim=$dimBytes)")
-      // scalastyle:on println
     if (cost > base) return CostRefused
 
     // compensated dims enter the window list PINNED at their new version

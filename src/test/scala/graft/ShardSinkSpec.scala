@@ -100,7 +100,7 @@ class ShardSinkSpec extends SparkSpec {
     // replay idempotence at the protocol level: re-committing the SAME
     // epoch replaces its manifest entries instead of doubling them
     val dir = freshDir().getPath
-    val w = new graft.sources.ShardSinkWrite(dir, "qs")
+    val w = graft.sources.SinkTestAccess.plainWrite(dir, "qs")
     def epochMsg(id: Long, n: Int) = {
       val dw = new ShardSinkDataWriter(dir, s"qs-e$id", 0, id * 10 + n)
       (1 to n).foreach(i => dw.write(row(i.toLong)))
@@ -321,7 +321,7 @@ class ShardSinkSpec extends SparkSpec {
     atMostOnce("vacuum", manifestOpens(assert(ShardSink.vacuum(dir).isEmpty)), all)
     // the commit half of an append (the write was planned above the
     // counter reset): one read of its base version, nothing else
-    val w = new graft.sources.ShardSinkWrite(dir, "parseonce")
+    val w = graft.sources.SinkTestAccess.plainWrite(dir, "parseonce")
     atMostOnce("append commit", manifestOpens(w.commit(Array.empty)), Set("_manifest.v5.json"))
     assert(ShardSink.currentManifestVersion(dir) === 6L)
     assert(ShardSink.committedEntries(dir).map(_.rows).sum === 100L)
@@ -386,7 +386,7 @@ class ShardSinkSpec extends SparkSpec {
     // lands normally and a second replay does not double it.
     val local = freshDir().getPath
     val dir = "faultfs://" + local
-    val w = new graft.sources.ShardSinkWrite(dir, "qf")
+    val w = graft.sources.SinkTestAccess.plainWrite(dir, "qf")
     def epochMsg(id: Long, n: Int) = {
       val dw = new ShardSinkDataWriter(dir, s"qf-e$id", 0, id * 10 + n)
       (1 to n).foreach(i => dw.write(row(i.toLong)))
@@ -421,7 +421,7 @@ class ShardSinkSpec extends SparkSpec {
     // must rebuild prior epochs' entries from their part-e names instead
     // of silently dropping them
     val dir = freshDir().getPath
-    val w = new graft.sources.ShardSinkWrite(dir, "qr")
+    val w = graft.sources.SinkTestAccess.plainWrite(dir, "qr")
     def epochMsg(id: Long, n: Int) = {
       val dw = new ShardSinkDataWriter(dir, s"qr-e$id", 0, id * 10 + n)
       (1 to n).foreach(i => dw.write(row(i.toLong)))
@@ -2356,7 +2356,7 @@ class ShardSinkSpec extends SparkSpec {
       .write.format("graft.sources.ShardSinkSource")
       .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
     // a write pins its (empty) constraint set at construction...
-    val stale = new graft.sources.ShardSinkWrite(dir, "stalew")
+    val stale = graft.sources.SinkTestAccess.plainWrite(dir, "stalew")
     // ...an interloper's ADD CONSTRAINT lands (validating only EXISTING
     // rows — it cannot see the in-flight write's)...
     graft.sources.SinkTestAccess.addConstraint(dir, "neg_free", "doc_id >= 0")
@@ -2365,8 +2365,8 @@ class ShardSinkSpec extends SparkSpec {
     val w = graft.sources.SinkTestAccess.createFile(dir, "_tmp/stale-race.tsv")
     try { w.write("-7\t3\tunchecked\n") } finally w.close()
     val e = intercept[IllegalStateException](stale.commit(Array(
-      graft.sources.ShardSinkCommit(
-        new java.io.File(dir, "_tmp/stale-race.tsv").getPath, 1L, 3, 3, -7L, -7L))))
+      graft.sources.ShardSinkCommit(new java.io.File(dir, "_tmp/stale-race.tsv").getPath,
+        graft.sources.SinkEntry("", 1L, 3, 3, "", -7L, -7L)))))
     assert(e.getMessage.contains("concurrent ADD CONSTRAINT"), e.getMessage)
     assert(e.getMessage.contains("neg_free"), e.getMessage)
     // nothing flipped: the violating row is invisible

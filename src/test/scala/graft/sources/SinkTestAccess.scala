@@ -17,15 +17,29 @@ object SinkTestAccess {
     ShardSink.Base(version, ShardSink.manifestAt(dir, version), Nil)
 
   def writeManifestAt(dir: String, files: Seq[SinkEntry], tag: String, version: Long): Unit =
-    ShardSink.writeManifestAt(dir, files, tag, baseAt(dir, version - 1))
+    ShardSink.writeManifestAt(dir, files, tag, baseAt(dir, version - 1), None, None, None, None,
+      None)
 
+  /** A read-modify-write commit of `files` pinned at `baseVersion`. */
   def flipFromBase(dir: String, baseVersion: Long, files: Seq[SinkEntry], tag: String): Unit =
-    ShardSink.flipFromBase(dir, baseAt(dir, baseVersion), files, tag)
+    ShardSink.commit(dir, baseAt(dir, baseVersion), "write", ShardSink.retryTag(tag),
+      ShardSink.Aborts)(_ => files)
+
+  /** A plain append of the 3-column table, as `ShardSinkTable.newWriteBuilder`
+    * builds it.
+    */
+  def plainWrite(dir: String, queryId: String): ShardSinkWrite =
+    new ShardSinkWrite(dir, queryId, truncate = false, DocGen.schema, replaceFilters = None,
+      cdf = false, colMap = null, evolveTo = None,
+      basisSchema = ShardSink.schemaString(DocGen.schema), autoCompact = None)
 
   def isConflict(t: Throwable): Boolean = t.isInstanceOf[ShardSink.ShardSinkConflict]
 
   def widenColumn(dir: String, name: String, to: org.apache.spark.sql.types.DataType): Unit =
     ShardSink.widenColumn(dir, name, to)
+
+  def addColumn(dir: String, name: String, dt: org.apache.spark.sql.types.DataType): Unit =
+    ShardSink.addColumn(dir, name, dt)
 
   def createFile(dir: String, name: String): java.io.BufferedWriter =
     SinkFs.create(new org.apache.hadoop.fs.Path(dir, name))
@@ -58,18 +72,16 @@ object SinkTestAccess {
     ShardSink.morDeleteImpl(dir,
       Array(org.apache.spark.sql.sources.EqualTo("doc_id", docId)))
 
-  /** One-shot interleave: `f` runs inside the next compaction, after its
-    * inputs were read and rewritten but before the publish flip.
+  /** One-shot interleave: `f` runs inside the next commit, after it
+    * pinned its base and derived its content, before its first flip.
     */
-  def onNextCompactPublish(f: () => Unit): Unit =
-    ShardSink.compactBarrier.set(f)
+  def onNextFlip(f: () => Unit): Unit = ShardSink.beforeFlip.set(f)
 
-  /** One-shot interleave for the DML re-base specs: `f` runs inside the
-    * next copy-on-write/merge-on-read DML, after its rewrites/vectors
-    * were computed but before the manifest flip.
+  /** [[onNextFlip]], under the names the compaction and DML re-base
+    * specs use.
     */
-  def onNextDmlFlip(f: () => Unit): Unit =
-    ShardSink.dmlBarrier.set(f)
+  def onNextCompactPublish(f: () => Unit): Unit = onNextFlip(f)
+  def onNextDmlFlip(f: () => Unit): Unit = onNextFlip(f)
 
   def cowDelete(dir: String, filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
     ShardSink.deleteWhereImpl(dir, filters)
