@@ -7,9 +7,12 @@ import scala.collection.mutable
 import org.apache.spark.{ListenerBusAccess, SparkContext}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{
-  SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+  SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev tool: where named queries spend their time, on the session the bench
   * times ([[GraftSession]]).
@@ -18,7 +21,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *
   *  - default: for each rep, rows, wall and the JIT ms and janino compile
   *    deltas; then one line per Spark job (duration, stages, tasks, executor
-  *    run and CPU ms, callsite) and the driver gap, wall minus the sum of the
+  *    run and CPU ms, and the call site of the SQL action that started it,
+  *    else of its result stage) and the driver gap, wall minus the sum of the
   *    jobs (planning, manifest and commit IO, result collection). The
   *    per-query minimum over reps is the number comparable to the bench.
   *    Each rep times `count()`, as [[Bench]] does, and Catalyst prunes a
@@ -54,10 +58,24 @@ object Probe {
   final class JobLog(sc: SparkContext) extends SparkListener {
     private val jobs = mutable.LinkedHashMap.empty[Int, Job]
     private val jobOfStage = mutable.Map.empty[Int, Int]
+    private val sqlActions = mutable.Map.empty[String, String]
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        synchronized { sqlActions(s.executionId.toString) = s.description }
+      case _ => ()
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      // the result stage's name is the job's call site ("count at …")
-      val site = if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name
+      // A SQL action's jobs, AQE's stage jobs among them, carry its
+      // execution id, whose description is the action's call site
+      // ("collect at …"). Any other job is named by its result stage
+      // ("count at …").
+      val action = Option(e.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(sqlActions.get)
+      val site = action.getOrElse(
+        if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
       jobs(e.jobId) =
         Job(e.jobId, site, e.stageInfos.size, e.stageInfos.map(_.numTasks).sum, e.time)
       e.stageIds.foreach(jobOfStage(_) = e.jobId)
@@ -77,7 +95,7 @@ object Probe {
     /** `body`'s result and the jobs it started, in start order. */
     def apply[T](body: => T): (T, Seq[Job]) = {
       ListenerBusAccess.drain(sc)
-      synchronized { jobs.clear(); jobOfStage.clear() }
+      synchronized { jobs.clear(); jobOfStage.clear(); sqlActions.clear() }
       val out = body
       ListenerBusAccess.drain(sc)
       (out, synchronized(jobs.values.toList))

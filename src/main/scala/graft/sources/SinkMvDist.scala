@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,6 +26,16 @@ import org.apache.spark.sql.types._
   * millions of groups on the executors end to end; the driver moves a
   * handful of files and flips a header whose size is O(segment files).
   * A small rollup takes `buckets = 1`: one segment per version.
+  *
+  * Jobs and IO per refresh: each changed data file is opened ONCE — the
+  * change feed has one reader, the cached delta aggregate (an MV with
+  * min/max reads it twice, so there the change frame is cached too). A
+  * count/sum/xor refresh whose inputs are below the broadcast threshold
+  * runs in three Spark jobs: the delta's cache, the per-bucket rollup, and
+  * the segment write, whose fold `graft.plans.OnePartition` plans as one
+  * task. min/max adds the change-frame and fold caches, the dirty-key
+  * hull and, for dirty groups, their recompute. Above the threshold the
+  * fold is parallel and is clustered by bucket before its write.
   *
   * Commit protocol: segment files are written under job-unique names
   * FIRST, then the tiny versioned header `_mvd.v<N>.json` (definition +
@@ -234,11 +245,11 @@ object SinkMvDist {
       .select(gcols ++ vcols: _*)
   }
 
-  /** Write a state frame's rows as bucket-pure segment files: a
-    * partitioned text write to a job-unique staging dir, then a driver
-    * move of O(files) parts into the MV dir under version-unique names.
-    * Returns the (bucket, file) refs. The frame must carry the group
-    * columns and the 2×|aggs| slots.
+  /** Write a state frame's rows as bucket-pure segment files, each task
+    * writing its buckets' files straight into the MV dir under
+    * version-unique names ([[writeSegmentPartition]]). Returns the
+    * (bucket, file) refs. The frame must carry the group columns and the
+    * 2×|aggs| slots.
     */
   private def writeSegments(
       mvDir: String, version: Long, st: MvdState, state: DataFrame): Seq[(Int, String)] = {
@@ -257,20 +268,32 @@ object SinkMvDist {
     // full Spark dynamic-partition text write: the Hadoop committer costs
     // a staging tree, a per-file commit rename, a `.crc` sidecar and (no
     // native lib) a forked chmod per file+dir, every refresh, to land
-    // ≤ `buckets` tiny TSV files. One file per bucket per task either way.
+    // ≤ `buckets` tiny TSV files. One file per bucket per task either way,
+    // so a fold planned as one task (a broadcast-sized fold under
+    // `graft.plans.OnePartition`) skips the bucket shuffle: its one task
+    // writes every touched bucket's file. The rows come from the frame's
+    // own plan (`queryExecution.toRdd`); `Dataset.rdd` would analyze,
+    // optimize and plan the whole fold a second time.
     val mvDirStr = mvDir
-    val refs = state
+    val lines = state
       .withColumn("_b", bucketCol(st, st.groups.map(col)))
       .select(col("_b").cast(IntegerType), concat_ws("\t", lineCells: _*))
-      .repartition(math.max(1, st.buckets), col("_b"))
-      .rdd
+    // an adaptive plan reports no partitioning of its own; its initial
+    // plan (exchanges in place) does
+    val planned = lines.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val parallel = planned.outputPartitioning.numPartitions > 1
+    val clustered =
+      if (parallel) lines.repartition(math.max(1, st.buckets), col("_b")) else lines
+    clustered.queryExecution.toRdd
       .mapPartitionsWithIndex { (pid, rows) =>
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
         writeSegmentPartition(mvDirStr, version, nonce, pid, attempt,
-          rows.map(r => (r.getInt(0), r.getString(1))))
+          rows.map(r => (r.getInt(0), r.getUTF8String(1).toString)))
       }.collect().toSeq
-    refs
   }
 
   /** One task's direct segment writes: buffer each bucket's lines into an
@@ -592,31 +615,42 @@ object SinkMvDist {
               SinkMatView.joinedAt(spark, st.src, factTo, wins), st.pred),
             st.copy(srcV = factTo, joins = nextJoins))
         }
-      val cached = contrib.persist()
       // stats carry the MOVED source's (fromV, toV): a dim batch used to
       // report the unchanged fact watermark twice, so callers/monitoring
       // could not see which dim version the applied batch advanced to
       // (advice fix) — fact batches are unchanged
-      try return foldBatch(spark, mvDir, st, stateV, cached, col("_sign"),
-        recompute, nextSt, fromV, toV)
+      try return withChanges(st, contrib)(foldBatch(spark, mvDir, st, stateV, _,
+        col("_sign"), recompute, nextSt, fromV, toV))
       catch {
         case _: MvConflict if attempt < 5 => attempt += 1
         case c: MvConflict => throw c
-      } finally { cached.unpersist(); () }
+      }
     }
     sys.error("unreachable")
   }
 
+  private def hasExtremes(st: MvdState): Boolean =
+    st.aggs.exists(a => SinkMatView.isExtremeKind(a.kind))
+
+  /** `body` over a fold's change frame, persisted for the call only when
+    * the MV has min/max aggregates: their per-value deltas read the frame
+    * a second time. The linear delta alone reads it once, and a cache
+    * would cost a job of its own (one task per change partition).
+    */
+  private def withChanges[T](st: MvdState, ch: DataFrame)(body: DataFrame => T): T =
+    if (!hasExtremes(st)) body(ch)
+    else {
+      val cached = ch.persist()
+      try body(cached) finally { cached.unpersist(); () }
+    }
+
   private def refreshOnce(
       spark: SparkSession, srcDir: String, mvDir: String,
-      st: MvdState, stateV: Long, toV: Long): RefreshStats = {
-    val ch = SinkMatView.changes(spark, srcDir, st.srcV, toV).persist()
-    try foldBatch(spark, mvDir, st, stateV, ch,
-      SinkMatView.signOf(col("_change_type")),
+      st: MvdState, stateV: Long, toV: Long): RefreshStats =
+    withChanges(st, SinkMatView.changes(spark, srcDir, st.srcV, toV))(foldBatch(
+      spark, mvDir, st, stateV, _, SinkMatView.signOf(col("_change_type")),
       () => SinkMatView.filtered(SinkMatView.srcAt(spark, srcDir, toV), st.pred),
-      st.copy(srcV = toV), st.srcV, toV)
-    finally { ch.unpersist(); () }
-  }
+      st.copy(srcV = toV), st.srcV, toV))
 
   /** The JOIN refresh: the delta-join decomposition — one signed window
     * per changed source, composed in declaration order — feeding the
@@ -629,14 +663,13 @@ object SinkMvDist {
       spark: SparkSession, mvDir: String, st: MvdState,
       stateV: Long, factTo: Long, dimTos: Seq[Long]): RefreshStats = {
     val wins = st.windows(dimTos)
-    val ch = SinkMatView.contributionStream(spark, st.src, st.srcV, factTo, wins).persist()
-    try foldBatch(spark, mvDir, st, stateV, ch, col("_sign"),
-      () => SinkMatView.filtered(
-        SinkMatView.joinedAt(spark, st.src, factTo, wins), st.pred),
-      st.copy(srcV = factTo,
-        joins = st.joins.zip(dimTos).map { case (j, dv) => j.copy(dimV = dv) }),
-      st.srcV, factTo)
-    finally { ch.unpersist(); () }
+    withChanges(st, SinkMatView.contributionStream(spark, st.src, st.srcV, factTo, wins))(
+      foldBatch(spark, mvDir, st, stateV, _, col("_sign"),
+        () => SinkMatView.filtered(
+          SinkMatView.joinedAt(spark, st.src, factTo, wins), st.pred),
+        st.copy(srcV = factTo,
+          joins = st.joins.zip(dimTos).map { case (j, dv) => j.copy(dimV = dv) }),
+        st.srcV, factTo))
   }
 
   /** The distributed fold over ONE pre-signed change frame. `sign` and
@@ -695,15 +728,14 @@ object SinkMvDist {
           keys.map(joined(_)) ++ delta.columns.filterNot(keys.contains).map(joined(_)) ++
             Seq(s"_pmin$j", s"_pmax$j", s"_nmin$j", s"_nmax$j").map(joined(_)): _*)
       }
-      // coalesced to the bucket count before persisting: the aggregate
-      // materializes at spark.sql.shuffle.partitions (32 in the bench
-      // shape) and a CACHED plan is exempt from AQE partition coalescing
-      // (canChangeCachedPlanOutputPartitioning=false), so every downstream
-      // job over the delta — the per-bucket rollup, the fold join, the
-      // segment write — launched 32 map tasks for ≤ a few hundred rows,
-      // paying closure deserialization and a shuffle-index/checksum file
-      // per task (round-20 "not yet optimized" #2/#3). ≤ `buckets` tasks
-      // carry the same rows; partitioning is not part of any result.
+      // The delta is the one frame every fold caches: the per-bucket
+      // rollup and the fold join both read it, and the cache is what opens
+      // each changed data file once. A cached plan is exempt from AQE
+      // partition coalescing (canChangeCachedPlanOutputPartitioning=false),
+      // and the aggregate materializes at spark.sql.shuffle.partitions (32
+      // in the bench shape), so it is coalesced to the bucket count before
+      // it persists: ≤ `buckets` tasks carry the same ≤ a few hundred rows
+      // into every job over it. Partitioning is part of no result.
       val deltaC = delta.coalesce(math.max(1, st.buckets)).persist()
       try {
         // the ONLY driver materializations: per-bucket rollups (≤ buckets
@@ -797,11 +829,15 @@ object SinkMvDist {
         val folded0 = j.select(
           keys.zipWithIndex.map { case (k, i) => keyOut(k, i) } ++
             foldCols ++ dirtyFlags: _*)
-        // liveness: a group whose count reached zero leaves the view.
-        // Same bucket-count coalesce as deltaC: the full-outer fold join
-        // materializes at 32 shuffle partitions and feeds three more jobs.
-        val folded = folded0.where(col(slotV(countIdx)) > 0L)
-          .coalesce(math.max(1, st.buckets)).persist()
+        // liveness: a group whose count reached zero leaves the view
+        val live = folded0.where(col(slotV(countIdx)) > 0L)
+        // Only an MV with min/max reads the fold more than once (the dirty
+        // groups' hull, their recompute, the segment write), so only then
+        // is it cached, coalesced to the bucket count like deltaC. Else the
+        // segment write is its one reader, and a fold planned as one task
+        // is written in that job.
+        val rereads = hasExtremes(st)
+        val folded = if (rereads) live.coalesce(math.max(1, st.buckets)).persist() else live
         try {
           val dirtyAggIdx = st.aggs.zipWithIndex
             .filter { case (a, _) => SinkMatView.isExtremeKind(a.kind) }.map(_._2)
@@ -865,7 +901,7 @@ object SinkMvDist {
           val carried = st.refs.filterNot(r => touched.contains(r._1))
           writeHeader(mvDir, next, nextSt.copy(refs = written ++ carried))
           RefreshStats(fromV, toV, changeRows, nDirty, next, applied = true)
-        } finally { folded.unpersist(); () }
+        } finally { if (rereads) folded.unpersist(); () }
       } finally { deltaC.unpersist(); () }
     }
   }

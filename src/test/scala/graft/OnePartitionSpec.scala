@@ -263,6 +263,8 @@ class OnePartitionSpec extends SparkSpec {
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
+    // the setup append's execution-end event must not reach the listener
+    org.apache.spark.ListenerBusAccess.drain(s.sparkContext)
     s.listenerManager.register(listener)
     try {
       s.sql("""MERGE INTO onepmg.t t USING onepmg_src src ON t.doc_id = src.doc_id

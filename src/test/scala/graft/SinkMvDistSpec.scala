@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
   * driver's hash gate as `q_dsv2_mv_dist`.
   */
 class SinkMvDistSpec extends SparkSpec {
+  import SinkMvDistSpec.SmallRun
 
   private def freshDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -151,6 +152,76 @@ class SinkMvDistSpec extends SparkSpec {
     assert(large === small,
       s"driver materialization scaled with group count: $small -> $large")
     // and the per-doc MV itself is exact at both grains (spot: large)
+  }
+
+  /** One 8-bucket MV over `shard` at a broadcast threshold: created at v1,
+    * refreshed over an append window (v2, every shard) and over a
+    * merge-on-read delete of rows the state holds (v3, every shard).
+    */
+  private def smallRun(tag: String, aggs: Seq[MvAgg], threshold: String): SmallRun = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, threshold)
+    try {
+      val dir = freshDir(tag)
+      val mvDir = mvDirOf(dir)
+      def files = SinkTestAccess.resolveBase(dir)._2.length
+      append(dir, 0L, 800L) // v1
+      SinkMvDist.create(spark, dir, mvDir, Seq("shard"), aggs, buckets = 8)
+      val before = files
+      append(dir, 800L, 1200L) // v2
+      val appendFiles = files - before
+      def refresh(): (Int, Long, Long) = {
+        val (c0, d0) = (ShardSink.dataFileReadCount.get(), SinkMvDist.driverRowsCollected.get())
+        val (stats, jobs) = Probe.withJobLog(spark.sparkContext)(log =>
+          log(SinkMvDist.refresh(spark, dir, mvDir)))
+        assert(stats.applied, stats.toString)
+        (jobs.size, ShardSink.dataFileReadCount.get() - c0,
+          SinkMvDist.driverRowsCollected.get() - d0)
+      }
+      val (appendJobs, opened, appendRows) = refresh()
+      SinkTestAccess.morDeleteWhere(dir,
+        Array(org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 1000L))) // v3
+      val (deleteJobs, _, deleteRows) = refresh()
+      val segments = (1L to SinkMvDist.currentVersion(mvDir)).flatMap { v =>
+        SinkMvDist.stateFiles(mvDir, v).groupBy(_._1).values.map(_.size)
+      }
+      SmallRun(SinkMvDist.read(spark, mvDir).collect().map(_.toSeq).toSet,
+        Seq(appendJobs, deleteJobs), opened, appendFiles, Seq(appendRows, deleteRows),
+        segments.max)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The source's live doc ids after [[smallRun]]'s v3, by shard. */
+  private val live = (0L until 1000L).groupBy(id => (id % 16).toInt)
+
+  test("a broadcast-sized refresh runs in at most 3 Spark jobs and opens each changed file once") {
+    val aggs = Seq(MvAgg("n", "count"), MvAgg("s", "sum", "doc_id"), MvAgg("x", "xor", "doc_id"))
+    val small = smallRun("mvd_small", aggs, "10485760")
+    assert(small.jobs.forall(_ <= 3), s"Spark jobs per refresh: ${small.jobs}")
+    assert(small.appendFiles >= 1)
+    assert(small.appendOpened === small.appendFiles.toLong,
+      s"the refresh opened ${small.appendOpened} files; the window has ${small.appendFiles}")
+    assert(small.driverRows.forall(_ <= 8L), s"driver rows per refresh: ${small.driverRows}")
+    assert(small.maxSegmentsPerBucket === 1)
+    // without the broadcast threshold the fold is parallel and clusters
+    // by bucket before its write: the same view, one segment per bucket
+    val parallel = smallRun("mvd_small_par", aggs, "-1")
+    assert(parallel.rows === small.rows)
+    assert(parallel.maxSegmentsPerBucket === 1)
+    assert(small.rows === live.map { case (s, ids) =>
+      Seq(s, ids.size.toLong, ids.sum, ids.reduce(_ ^ _)) }.toSet)
+  }
+
+  test("a broadcast-sized dirty-extreme refresh folds as the parallel plan does") {
+    val small = smallRun("mvd_small_ext", rollupAggs, "10485760")
+    val parallel = smallRun("mvd_small_ext_par", rollupAggs, "-1")
+    assert(small.rows === parallel.rows)
+    assert(small.maxSegmentsPerBucket === 1 && parallel.maxSegmentsPerBucket === 1)
+    assert(small.appendOpened === small.appendFiles.toLong)
+    // every shard lost its recorded max at v3, so every group recomputed
+    assert(small.rows === live.map { case (s, ids) =>
+      Seq(s, ids.size.toLong, ids.sum, ids.min, ids.max) }.toSet)
   }
 
   test("per-doc grain: dirty recompute and parity at high cardinality") {
@@ -935,4 +1006,14 @@ class SinkMvDistSpec extends SparkSpec {
     // normal sweep pattern
     assert(!mvDir.listFiles().exists(_.getName.startsWith("_mvd.tmp-")))
   }
+}
+
+object SinkMvDistSpec {
+  /** What a [[SinkMvDistSpec]] small-MV lifecycle saw: the view's rows,
+    * Spark jobs, opened data files and driver rows per refresh, and the
+    * most segments any version holds for one bucket.
+    */
+  final case class SmallRun(
+      rows: Set[Seq[Any]], jobs: Seq[Int], appendOpened: Long, appendFiles: Int,
+      driverRows: Seq[Long], maxSegmentsPerBucket: Int)
 }
