@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -269,30 +269,28 @@ object SinkMvDist {
     // a staging tree, a per-file commit rename, a `.crc` sidecar and (no
     // native lib) a forked chmod per file+dir, every refresh, to land
     // ≤ `buckets` tiny TSV files. One file per bucket per task either way,
-    // so a fold planned as one task (a broadcast-sized fold under
-    // `graft.plans.OnePartition`) skips the bucket shuffle: its one task
-    // writes every touched bucket's file. The rows come from the frame's
-    // own plan (`queryExecution.toRdd`); `Dataset.rdd` would analyze,
-    // optimize and plan the whole fold a second time.
+    // so the rows are clustered by bucket only when the fold runs as more
+    // than one task; a one-task fold (a broadcast-sized fold under
+    // `graft.plans.OnePartition`) writes every touched bucket's file from
+    // that task. The rows come from the frame's own plan
+    // (`queryExecution.toRdd`), planned once; `Dataset.rdd`, or a
+    // Dataset-level repartition, would analyze, optimize and plan the
+    // whole fold a second time. The bucket id is already in [0, buckets),
+    // so the hash partitioner sends bucket b to partition b.
     val mvDirStr = mvDir
     val lines = state
       .withColumn("_b", bucketCol(st, st.groups.map(col)))
       .select(col("_b").cast(IntegerType), concat_ws("\t", lineCells: _*))
-    // an adaptive plan reports no partitioning of its own; its initial
-    // plan (exchanges in place) does
-    val planned = lines.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.initialPlan
-      case p => p
-    }
-    val parallel = planned.outputPartitioning.numPartitions > 1
+      .queryExecution.toRdd
+      .map(r => (r.getInt(0), r.getUTF8String(1).toString))
     val clustered =
-      if (parallel) lines.repartition(math.max(1, st.buckets), col("_b")) else lines
-    clustered.queryExecution.toRdd
+      if (lines.getNumPartitions <= 1) lines
+      else lines.partitionBy(new HashPartitioner(math.max(1, st.buckets)))
+    clustered
       .mapPartitionsWithIndex { (pid, rows) =>
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
-        writeSegmentPartition(mvDirStr, version, nonce, pid, attempt,
-          rows.map(r => (r.getInt(0), r.getUTF8String(1).toString)))
+        writeSegmentPartition(mvDirStr, version, nonce, pid, attempt, rows)
       }.collect().toSeq
   }
 
@@ -619,8 +617,8 @@ object SinkMvDist {
       // report the unchanged fact watermark twice, so callers/monitoring
       // could not see which dim version the applied batch advanced to
       // (advice fix) — fact batches are unchanged
-      try return withChanges(st, contrib)(foldBatch(spark, mvDir, st, stateV, _,
-        col("_sign"), recompute, nextSt, fromV, toV))
+      try return foldBatch(spark, mvDir, st, stateV, contrib, col("_sign"),
+        recompute, nextSt, fromV, toV)
       catch {
         case _: MvConflict if attempt < 5 => attempt += 1
         case c: MvConflict => throw c
@@ -629,28 +627,13 @@ object SinkMvDist {
     sys.error("unreachable")
   }
 
-  private def hasExtremes(st: MvdState): Boolean =
-    st.aggs.exists(a => SinkMatView.isExtremeKind(a.kind))
-
-  /** `body` over a fold's change frame, persisted for the call only when
-    * the MV has min/max aggregates: their per-value deltas read the frame
-    * a second time. The linear delta alone reads it once, and a cache
-    * would cost a job of its own (one task per change partition).
-    */
-  private def withChanges[T](st: MvdState, ch: DataFrame)(body: DataFrame => T): T =
-    if (!hasExtremes(st)) body(ch)
-    else {
-      val cached = ch.persist()
-      try body(cached) finally { cached.unpersist(); () }
-    }
-
   private def refreshOnce(
       spark: SparkSession, srcDir: String, mvDir: String,
       st: MvdState, stateV: Long, toV: Long): RefreshStats =
-    withChanges(st, SinkMatView.changes(spark, srcDir, st.srcV, toV))(foldBatch(
-      spark, mvDir, st, stateV, _, SinkMatView.signOf(col("_change_type")),
+    foldBatch(spark, mvDir, st, stateV, SinkMatView.changes(spark, srcDir, st.srcV, toV),
+      SinkMatView.signOf(col("_change_type")),
       () => SinkMatView.filtered(SinkMatView.srcAt(spark, srcDir, toV), st.pred),
-      st.copy(srcV = toV), st.srcV, toV))
+      st.copy(srcV = toV), st.srcV, toV)
 
   /** The JOIN refresh: the delta-join decomposition — one signed window
     * per changed source, composed in declaration order — feeding the
@@ -663,13 +646,13 @@ object SinkMvDist {
       spark: SparkSession, mvDir: String, st: MvdState,
       stateV: Long, factTo: Long, dimTos: Seq[Long]): RefreshStats = {
     val wins = st.windows(dimTos)
-    withChanges(st, SinkMatView.contributionStream(spark, st.src, st.srcV, factTo, wins))(
-      foldBatch(spark, mvDir, st, stateV, _, col("_sign"),
-        () => SinkMatView.filtered(
-          SinkMatView.joinedAt(spark, st.src, factTo, wins), st.pred),
-        st.copy(srcV = factTo,
-          joins = st.joins.zip(dimTos).map { case (j, dv) => j.copy(dimV = dv) }),
-        st.srcV, factTo))
+    foldBatch(spark, mvDir, st, stateV,
+      SinkMatView.contributionStream(spark, st.src, st.srcV, factTo, wins), col("_sign"),
+      () => SinkMatView.filtered(
+        SinkMatView.joinedAt(spark, st.src, factTo, wins), st.pred),
+      st.copy(srcV = factTo,
+        joins = st.joins.zip(dimTos).map { case (j, dv) => j.copy(dimV = dv) }),
+      st.srcV, factTo)
   }
 
   /** The distributed fold over ONE pre-signed change frame. `sign` and
@@ -686,8 +669,16 @@ object SinkMvDist {
     val na = st.aggs.length
     val keys = st.groups
     val next = stateV + 1L
-    locally {
-      val chF = SinkMatView.filtered(ch, st.pred)
+    // Only an MV with min/max reads the change frame and the fold more
+    // than once: the per-value extreme deltas read the change frame a
+    // second time, and the dirty groups' hull, their recompute and the
+    // segment write each read the fold. So only then are both cached.
+    // Otherwise the linear delta is the change frame's one reader and the
+    // segment write the fold's, and a cache would cost a job of its own.
+    val rereads = st.aggs.exists(a => SinkMatView.isExtremeKind(a.kind))
+    val chC = if (rereads) ch.persist() else ch
+    try {
+      val chF = SinkMatView.filtered(chC, st.pred)
       // ---- the linear (row-grain) delta: one distributed aggregation
       val deltaCols = st.aggs.zipWithIndex.flatMap { case (a, i) =>
         a.kind match {
@@ -829,14 +820,11 @@ object SinkMvDist {
         val folded0 = j.select(
           keys.zipWithIndex.map { case (k, i) => keyOut(k, i) } ++
             foldCols ++ dirtyFlags: _*)
-        // liveness: a group whose count reached zero leaves the view
+        // liveness: a group whose count reached zero leaves the view. A
+        // cached fold is coalesced to the bucket count like deltaC; an
+        // uncached one is written in the segment write's job, as one task
+        // when the fold is planned as one.
         val live = folded0.where(col(slotV(countIdx)) > 0L)
-        // Only an MV with min/max reads the fold more than once (the dirty
-        // groups' hull, their recompute, the segment write), so only then
-        // is it cached, coalesced to the bucket count like deltaC. Else the
-        // segment write is its one reader, and a fold planned as one task
-        // is written in that job.
-        val rereads = hasExtremes(st)
         val folded = if (rereads) live.coalesce(math.max(1, st.buckets)).persist() else live
         try {
           val dirtyAggIdx = st.aggs.zipWithIndex
@@ -903,7 +891,7 @@ object SinkMvDist {
           RefreshStats(fromV, toV, changeRows, nDirty, next, applied = true)
         } finally { if (rereads) folded.unpersist(); () }
       } finally { deltaC.unpersist(); () }
-    }
+    } finally { if (rereads) chC.unpersist(); () }
   }
 
   // ---- read / vacuum -------------------------------------------------------

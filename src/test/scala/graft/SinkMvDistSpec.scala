@@ -778,6 +778,17 @@ class SinkMvDistSpec extends SparkSpec {
     assert(SinkMvDist.currentVersion(mvDir) === vBefore, "no-op rebucket flipped a version")
     assert(SinkMvDist.read(spark, mvDir)
       .agg(sum("n")).collect().head.getLong(0) === 604L)
+    // file = bucket: growing and shrinking both leave ONE segment per
+    // bucket, whatever number of tasks read the old segments
+    def segmentsPerBucket(v: Long) =
+      SinkMvDist.stateFiles(mvDir, v).groupBy(_._1).values.map(_.size).toSet
+    assert(segmentsPerBucket(2L) === Set(1), "grow 2 → 16")
+    SinkMvDist.rebucket(spark, mvDir, 2)
+    val shrunk = SinkMvDist.currentVersion(mvDir)
+    assert(SinkMvDist.stateFiles(mvDir, shrunk).map(_._1).toSet === Set(0, 1))
+    assert(segmentsPerBucket(shrunk) === Set(1), "shrink 16 → 2")
+    assert(SinkMvDist.read(spark, mvDir)
+      .agg(sum("n")).collect().head.getLong(0) === 604L)
   }
 
   test("an MV header without the hash version is rejected, not read under another hash") {
